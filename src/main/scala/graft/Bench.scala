@@ -18,12 +18,20 @@ object Bench {
     // (the unpartitioned-window posture is already CI-audited in
     // WindowAuditSpec; the runtime warning adds nothing to a bench run).
     spark.sparkContext.setLogLevel("ERROR")
+    // A failed warm-up is recorded in the artifact ("warm_failed"), not
+    // only logged: its cost then lands in whichever query runs first.
+    val warmFailed = scala.collection.mutable.ArrayBuffer[String]()
+    def warmStep(name: String)(f: => Unit): Unit =
+      try f catch { case e: Throwable =>
+        warmFailed += name
+        System.err.println(s"[bench] warm-up $name failed (continuing): $e")
+      }
     // Warm the JVM/codegen/scan paths once so the first timed query doesn't
     // absorb session bring-up (~3-4s JIT + filesystem metadata), including a
     // collation comparison (fn_collation measured 13.5 s as the FIRST
     // collation-touching query in the driver's r4 run vs ~1 s warm — the
     // UTF8_LCASE comparator class-loads + JITs on first use).
-    try {
+    warmStep("engine") {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .selectExpr("sum(l_quantity)").collect()
@@ -36,42 +44,28 @@ object Bench {
         .write.format("graft.sources.StatsSink").option("run", "bench_warm")
         .mode("append").save()
       graft.sources.StatsSink.committed.remove("bench_warm")
-    } catch { case _: Throwable => }
+    }
     // local-iteration subset filter (comma-separated names); the driver sets
     // no env, so its invocation always times the full suite
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Pre-build the cross-query shared caches/layouts so per-query numbers
-    // are attribution-deterministic: whoever runs first no longer pays the
-    // shared build (map iteration order shifted numbers between rounds).
-    // Each warm is gated on the subset actually containing a consumer, so
-    // a dev subset run does not pay for caches it never reads.
+    val runSet = SparkEntry.queries.keySet.filter(n => only.forall(_(n)))
+    // Pre-build the shared indexes so per-query numbers are
+    // attribution-deterministic: whoever runs first no longer pays the
+    // shared build. An entry is warmed only when the run contains one of
+    // its declared consumers, so a dev subset run does not pay for indexes
+    // it never reads.
+    for (e <- SharedIndex.entries if e.consumers.exists(runSet))
+      warmStep(e.name)(e.warm(spark, sfDir))
+    // JIT/class-load warms and Scans' on-disk input staging, per family
     def wants(prefixes: String*): Boolean =
-      only.forall(names => prefixes.exists(p => names.exists(_.startsWith(p))))
-    try {
-      if (wants("graph_")) graft.operators.Graphs.warm(spark, sfDir)
-      if (wants("agg_perm_test", "agg_bh_fdr", "agg_holm"))
-        graft.operators.Aggregations.warm(spark, sfDir)
-      if (wants("dedup_", "text_novelty")) graft.llm.Dedup.warm(spark, sfDir)
-      if (wants("emb_top_eigvec", "emb_project_eigvec", "emb_pca2"))
-        graft.llm.Pipeline.warm(spark, sfDir)
-      if (wants("pipeline_bpe", "pipeline_tokenizer"))
-        graft.llm.Pipeline.warmBpe(spark, sfDir)
-      if (wants("scan_", "join_dpp", "sink_"))
-        graft.operators.Scans.warm(spark, sfDir)
-      if (wants("sim_i")) graft.llm.Similarity.warm(spark, sfDir)
-      if (wants("sim_knn", "emb_knn_label_purity"))
-        graft.llm.Similarity.warmKnn(spark, sfDir)
-      if (wants("dedup_embedding_ann"))
-        graft.llm.Similarity.warmAnnPairs(spark, sfDir)
-      if (wants("sim_pq")) graft.llm.Similarity.warmPq(spark, sfDir)
-      if (wants("sim_ivfpq")) graft.llm.Similarity.warmIvfPq(spark, sfDir)
-      if (wants("multimodal_phash")) graft.llm.Multimodal.warm(spark, sfDir)
-      else if (wants("multimodal_"))
-        graft.llm.Multimodal.warmAudio(spark)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warm-up failed (continuing): $e")
-    }
+      prefixes.exists(p => runSet.exists(_.startsWith(p)))
+    if (wants("graph_"))
+      warmStep("pagerankKernel")(graft.operators.Graphs.warmKernel(spark, sfDir))
+    if (wants("scan_", "join_dpp", "sink_"))
+      warmStep("scans")(graft.operators.Scans.warm(spark, sfDir))
+    if (wants("multimodal_"))
+      warmStep("audio")(graft.llm.Multimodal.warmAudio(spark))
     // a failed query must NOT pass as a fast timing: record it and surface
     // the failure list in the JSON (a plan-time crash is milliseconds and
     // would otherwise make a broken suite look faster than a working one)
@@ -117,7 +111,7 @@ object Bench {
     val loadStart = loadavg()
     val tStartMs = System.currentTimeMillis()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => runSet(name) }
       .map { case (name, fn) =>
       val laBefore = loadavg()(0)
       val stBefore = stealJiffies()
@@ -173,8 +167,10 @@ object Bench {
     }
     val total =
       if (medians.nonEmpty) medians.flatMap(_._2).sum else 0.0
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"median_of_$nRuns","queries":$qs,"runs":$runsJson,"load":$loadJson,"steal_jiffies":$stealJson,$loadEnv,"failed":$failedJson,"sf":"$sfDir"}"""
+    def strs(xs: Iterable[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = strs(failed)
+    val warmJson = strs(warmFailed)
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"median_of_$nRuns","queries":$qs,"runs":$runsJson,"load":$loadJson,"steal_jiffies":$stealJson,$loadEnv,"failed":$failedJson,"warm_failed":$warmJson,"sf":"$sfDir"}"""
     // The driver's stdout parse failed four rounds running ("parsed": null):
     // the ~10 KB per-query map gets truncated mid-JSON in the captured tail.
     // Contract fix: the FULL json goes only to stable files; stdout's final
@@ -190,7 +186,7 @@ object Bench {
         try w.println(full) finally w.close()
       } catch { case _: Throwable => }
     }
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"queries_file":"/tmp/graft_bench.json","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"warm_failed":$warmJson,"queries_file":"/tmp/graft_bench.json","sf":"$sfDir"}"""
     // stop FIRST, print LAST: the contract line must be the absolute tail
     // of stdout so the driver's tail-parse cannot lose it to shutdown logs
     spark.stop()

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * persist + 1-row max job, inherent to max-norm HITS in exact integers)
   * plus 3 scans of the 2.4M-row cached edge frame; not a posture bug.
   * r13 re-measure after the prCache + real-plan-warm fixes (the
-  * deg-joined edge frame builds once per JVM, and Graphs.warm compiles
+  * deg-joined edge frame builds once per JVM, and Graphs.warmKernel compiles
   * the REAL iteration plan): pagerank runs 2.67/2.59/2.44 s here and
   * ~0.6 s bench median at 4 threads — the per-call ~2 s frame rebuild
   * is gone (BASELINE.md round-13 notes). */
@@ -31,7 +31,7 @@ object PrProfile {
       val t0 = System.nanoTime(); val r = f
       println(f"[prof] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s"); r
     }
-    t("warm")(graft.operators.Graphs.warm(spark, sfDir))
+    t("warm")(graft.operators.Graphs.warmKernel(spark, sfDir))
     for (i <- 1 to 3)
       t(s"pagerank run $i")(
         graft.operators.Graphs.pagerankImpl(spark, sfDir, 1000000L).count())

@@ -130,9 +130,9 @@ object U {
     * IVF vector frame, a propagation label fixpoint) register it here; the
     * harness (Bench/Verify) calls [[releaseTracked]] after each query's
     * result materializes, so a long benchmark JVM does not accumulate dead
-    * cached blocks. Shared cross-query caches (shingle/pair frames) are NOT
-    * tracked — they are reused between queries by design and rebuilt per
-    * (session, sfDir). */
+    * cached blocks. Frames held by a [[SharedIndex]] entry are NOT tracked
+    * — they are reused between queries by design, and the registry
+    * unpersists them when a get for another (session, sfDir) rebuilds. */
   private val tracked = scala.collection.mutable.ListBuffer[DataFrame]()
   def track(df: DataFrame): DataFrame = synchronized { tracked += df; df }
   def releaseTracked(): Unit = synchronized {

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{OSQL, U}
+import graft.{OSQL, SharedIndex, U}
 import graft.llm.TextUtil._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -332,27 +332,22 @@ object Pipeline {
     * corpus token count after each round), `pipeline_bpe_apply` (final
     * encoded vocabulary) and `pipeline_bpe_doc_tokens` (per-doc encoded
     * lengths — the vocab keeps `w` through the merges for that join). */
-  private val bpeCache = scala.collection.mutable
-    .Map[String, (SparkSession, (Seq[DataFrame], DataFrame))]()
-  private def bpeRounds(s: SparkSession, d: String)
-      : (Seq[DataFrame], DataFrame) = bpeCache.synchronized {
-    bpeCache.get(d) match {
-      case Some((sess, t)) if sess eq s => t
-      case stale =>
-        stale.foreach { case (_, (_, old)) =>
-          try old.unpersist() catch { case _: Throwable => () } }
-        // four consumers (train / tokenizer report / apply / doc tokens)
-        // share the training loop — the permPvals lesson applied at birth:
-        // materialize once per (session, sfDir); tops are 1-row frames,
-        // the vocab is Heaps-law bounded (localCheckpoint cuts the
-        // 3-round crossJoin lineage so no consumer re-runs a pair agg)
-        val (tops, vocab) = bpeRoundsBuild(s, d)
-        val t = (tops.map(_.localCheckpoint()), vocab.persist())
-        t._2.count()
-        bpeCache(d) = (s, t)
-        t
-    }
+  private val bpeIndex = SharedIndex[(Seq[DataFrame], DataFrame)]("bpeRounds",
+      Seq("pipeline_bpe_apply", "pipeline_bpe_doc_tokens",
+        "pipeline_bpe_train", "pipeline_tokenizer_bpe"),
+      t => Seq(t._2)) { (s, d) =>
+    // four consumers (train / tokenizer report / apply / doc tokens)
+    // share the training loop — the permPvals lesson applied at birth:
+    // materialize once per (session, sfDir); tops are 1-row frames,
+    // the vocab is Heaps-law bounded (localCheckpoint cuts the
+    // 3-round crossJoin lineage so no consumer re-runs a pair agg)
+    val (tops, vocab) = bpeRoundsBuild(s, d)
+    val t = (tops.map(_.localCheckpoint()), vocab.persist())
+    t._2.count()
+    t
   }
+  private def bpeRounds(s: SparkSession, d: String)
+      : (Seq[DataFrame], DataFrame) = bpeIndex.get(s, d)
 
   private def bpeRoundsBuild(s: SparkSession, d: String)
       : (Seq[DataFrame], DataFrame) = {
@@ -686,23 +681,17 @@ object Pipeline {
     * the cached gram still costs >1 s of stage/broadcast latency per
     * MATERIALIZATION, and three queries (emb_top_eigvec,
     * emb_project_eigvec, emb_pca2) each evaluate it — so the 64-row
-    * result is computed once per JVM and served persisted (the gramCache
-    * idiom; measured 3.7 → ~1 s on the projection query). */
-  private val eigvecCache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
+    * result is computed once per session and served persisted (a
+    * [[graft.SharedIndex]] entry; measured 3.7 → ~1 s on the projection
+    * query). */
+  private val eigvecIndex = SharedIndex[DataFrame]("embTopEigvec", Seq(
+      "emb_pca2", "emb_project_eigvec", "emb_top_eigvec"), Seq(_)) { (s, d) =>
+    val df = embTopEigvecBuild(s, d).persist()
+    df.count()
+    df
+  }
   private[llm] def embTopEigvec(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      eigvecCache.get(d) match {
-        case Some((sess, df)) if sess eq s => df
-        case stale =>
-          stale.foreach { case (_, old) =>
-            try old.unpersist() catch { case _: Throwable => () } }
-          val df = embTopEigvecBuild(s, d).persist()
-          df.count()
-          eigvecCache(d) = (s, df)
-          df
-      }
-    }
+    eigvecIndex.get(s, d)
 
   private def embTopEigvecBuild(s: SparkSession, d: String): DataFrame = {
     val g = gram(s, d)
@@ -771,43 +760,24 @@ object Pipeline {
       .orderBy("dim")
   }
 
-  /** The dim²-cell Gram frame, cached per (session, sfDir) — shared by
-    * `emb_top_eigvec` and `emb_project_eigvec` (the iterations run on tiny
-    * (dim², dim) frames; only this corpus-sized build is worth sharing).
-    * Stale-session entries unpersist before rebuild, the same discipline
-    * as `Graphs.pairCache`; shared caches stay untracked by design. */
-  private val gramCache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
-  private[llm] def gram(s: SparkSession, d: String): DataFrame = synchronized {
-    gramCache.get(d) match {
-      case Some((sess, df)) if sess eq s => df
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try old.unpersist() catch { case _: Throwable => () } }
-        val fixed = U.tbl(s, d, "embeddings")
-          .select(transform(col("embedding"),
-            x => floor(x.cast(DoubleType) * lit(1000000.0)).cast(LongType))
-            .as("f"))
-        val df = fixed
-          .select(posexplode(col("f")).as(Seq("i", "x")), col("f"))
-          .select(col("i"), col("x"), posexplode(col("f")).as(Seq("j", "y")))
-          .groupBy(col("i"), col("j"))
-          .agg(expr("sum(x * y) DIV 1000000000").as("c")).persist()
-        gramCache(d) = (s, df)
-        df
-    }
+  /** The dim²-cell Gram frame, a [[graft.SharedIndex]] entry (the
+    * iterations run on tiny (dim², dim) frames; only this corpus-sized
+    * build is worth sharing). */
+  private val gramIndex = SharedIndex[DataFrame]("gram", Seq(
+      "emb_cka", "emb_pca2"), Seq(_)) { (s, d) =>
+    val fixed = U.tbl(s, d, "embeddings")
+      .select(transform(col("embedding"),
+        x => floor(x.cast(DoubleType) * lit(1000000.0)).cast(LongType))
+        .as("f"))
+    val df = fixed
+      .select(posexplode(col("f")).as(Seq("i", "x")), col("f"))
+      .select(col("i"), col("x"), posexplode(col("f")).as(Seq("j", "y")))
+      .groupBy(col("i"), col("j"))
+      .agg(expr("sum(x * y) DIV 1000000000").as("c")).persist()
+    df
   }
-
-  /** Bench warm-up: materialize the shared Gram AND eigvector caches so
-    * per-query numbers stop depending on which eigvector query runs
-    * first. */
-  private[graft] def warm(s: SparkSession, d: String): Unit =
-    { gram(s, d).count(); embTopEigvec(s, d); () }
-
-  /** Pre-builds the shared BPE training loop (4 consumers) so sorted
-    * bench order doesn't attribute the build to pipeline_bpe_apply. */
-  private[graft] def warmBpe(s: SparkSession, d: String): Unit =
-    { bpeRounds(s, d); () }
+  private[llm] def gram(s: SparkSession, d: String): DataFrame =
+    gramIndex.get(s, d)
 
   /** Projection of every embedding onto the top principal direction (the
     * PCA rung above [[embTopEigvec]]): proj = Σ fxᵢ·vᵢ DIV 1e6, then a

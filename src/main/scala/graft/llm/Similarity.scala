@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.U
+import graft.{SharedIndex, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -183,43 +183,13 @@ object Similarity {
     * which only ever sees verified cos>=0.4 pairs. Approximate recall
     * (boundary vectors can land in disjoint probe sets) => rows-only gate;
     * LlmSpec asserts subset-of-exact + recall against `dedup_embedding`. */
-  private def embeddingPairsAnn(s: SparkSession, d: String): DataFrame =
-    blockedPairsServe(annProbedCached(s, d))
-
-  /** Per-(session, sfDir) cache of the √n-cell nprobe=3 IVF assignment the
-    * blocked-pair kernel probes — an INDEX build cached within one JVM run
-    * (the knnCache / centroids16 / pqCache idiom, r15), NOT a result: the
-    * timed serving path below still runs the within-cell self-join, the
-    * exact cosine rerank, the distinct and the sort every invocation.
-    * r16 measured: the count + 2-step-Lloyd + 3-probe window build was
-    * ~1.1 s of dedup_embedding_ann's 1.7 s structural cost at sf0.1. */
-  private val annPairsCache = scala.collection.mutable.Map[
-    String, (SparkSession, (DataFrame, DataFrame))]()
-  private def annProbedCached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      annPairsCache.get(d) match {
-        case Some((sess, t)) if sess eq s => t._2
-        case stale =>
-          stale.foreach { case (_, (c, a)) =>
-            try { c.unpersist(); a.unpersist() }
-            catch { case _: Throwable => () } }
-          val emb = fixed(s, d)
-            .select(col("vec_id"), col("fx"), col("nrm")).persist()
-          val n = emb.count()
-          val k = math.max(4,
-            math.min(1024, math.round(math.sqrt(n.toDouble)).toInt))
-          val cent = ivfCentroids(emb, k)
-          val probed = assignN(emb, cent, 3).persist()
-          probed.count()
-          emb.unpersist()
-          annPairsCache(d) = (s, (cent, probed))
-          probed
-      }
-    }
-
-  /** Bench warm-up for the blocked-pair index (dedup_embedding_ann). */
-  private[graft] def warmAnnPairs(s: SparkSession, d: String): Unit =
-    { annProbedCached(s, d); () }
+  private def embeddingPairsAnn(s: SparkSession, d: String): DataFrame = {
+    // the √n-cell IVF build is this query's own work (its only consumer),
+    // so it runs inside the timed call like the serving half
+    val emb = U.track(
+      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    blockedPairs(emb, emb.count())
+  }
 
   /** The shared IVF-blocked pair kernel: `dedup_embedding_ann`'s whole body,
     * and `dedup_embedding`'s past-the-cap path. `emb` must be persisted. */
@@ -371,64 +341,41 @@ object Similarity {
     cent // persisted + materialized; caller decides track-vs-share lifetime
   }
 
-  /** Shared per-(session, sfDir) k=16 coarse quantizer: `sim_ivf_ann` and
-    * `sim_index_persist` both need the same deterministic index, so the
-    * 2-iteration Lloyd build runs ONCE per JVM and is served from cache
-    * (same idiom as [[Dedup.shingled]]) instead of each query re-running
-    * k-means — that duplicate build was a measured 1.8→3.3 s bench
-    * regression when the second consumer landed. Deliberately NOT
-    * U.track'd: shared caches outlive single queries by design. */
-  private val centCache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
-
-  /** Bench warm-up: pre-build the shared quantizer so per-query numbers
-    * stop depending on which consumer runs first (see [[Dedup.warm]]). */
-  private[graft] def warm(s: SparkSession, d: String): Unit =
-    { centroids16(s, d); assigned16Cached(s, d); () }
-
-  /** Bench warm-up for the PQ pair (separate gate: the IVF warm should
-    * not pay the PQ build when a subset run never reads it). */
-  private[graft] def warmPq(s: SparkSession, d: String): Unit =
-    { pqCodedCached(s, d); () }
-  private def centroids16(s: SparkSession, d: String): DataFrame = synchronized {
-    centCache.get(d) match {
-      case Some((sess, df)) if sess eq s => df
-      case stale =>
-        stale.foreach { case (_, old) =>
-          try old.unpersist() catch { case _: Throwable => () } }
-        val emb = fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist()
-        val c = ivfCentroids(emb, 16)
-        emb.unpersist() // c is materialized; the build input can go
-        centCache(d) = (s, c)
-        c
-    }
+  /** Shared k=16 coarse quantizer (a [[graft.SharedIndex]] entry): the
+    * IVF and IVF-PQ queries need the same deterministic index, so the
+    * 2-iteration Lloyd build runs ONCE per session instead of each query
+    * re-running k-means — that duplicate build was a measured 1.8→3.3 s
+    * bench regression when the second consumer landed. */
+  private val centIndex = SharedIndex[DataFrame]("centroids16", Seq(
+      "emb_ood_score", "sim_index_persist", "sim_ivf_ann", "sim_ivf_curve",
+      "sim_ivfpq_adc", "sim_ivfpq_recall", "sim_recall_at_k"),
+      Seq(_)) { (s, d) =>
+    val emb = fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist()
+    val c = ivfCentroids(emb, 16)
+    emb.unpersist() // c is materialized; the build input can go
+    c
   }
+  private def centroids16(s: SparkSession, d: String): DataFrame =
+    centIndex.get(s, d)
 
-  /** Per-(session, sfDir) cache of the k=16 nprobe=1 corpus assignment —
-    * the serving-side HALF of the shared IVF index that `sim_ivf_ann` and
-    * `sim_ivf_curve` both probed and each re-built per invocation (~0.4 s
-    * each at sf0.1). Same idiom and lifetime as [[centroids16]]; the
-    * probe windows, candidate joins, reranks and recall math stay timed.
+  /** The k=16 nprobe=1 corpus assignment — the serving-side HALF of the
+    * shared IVF index that `sim_ivf_ann` and `sim_ivf_curve` both probed
+    * and each re-built per invocation (~0.4 s each at sf0.1). A
+    * [[graft.SharedIndex]] entry like [[centroids16]]; the probe windows,
+    * candidate joins, reranks and recall math stay timed.
     * (`sim_index_persist` deliberately does NOT use it: re-assigning from
     * the file-loaded index is that query's point.) */
-  private val assigned16Cache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
+  private val assigned16Index = SharedIndex[DataFrame]("assigned16", Seq(
+      "sim_ivf_ann", "sim_ivf_curve", "sim_recall_at_k"), Seq(_)) { (s, d) =>
+    val emb = fixed(s, d)
+      .select(col("vec_id"), col("fx"), col("nrm")).persist()
+    val a = assignN(emb, centroids16(s, d), 1).persist()
+    a.count()
+    emb.unpersist()
+    a
+  }
   private def assigned16Cached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      assigned16Cache.get(d) match {
-        case Some((sess, df)) if sess eq s => df
-        case stale =>
-          stale.foreach { case (_, old) =>
-            try old.unpersist() catch { case _: Throwable => () } }
-          val emb = fixed(s, d)
-            .select(col("vec_id"), col("fx"), col("nrm")).persist()
-          val a = assignN(emb, centroids16(s, d), 1).persist()
-          a.count()
-          emb.unpersist()
-          assigned16Cache(d) = (s, a)
-          a
-      }
-    }
+    assigned16Index.get(s, d)
 
   private def ivfAnn(s: SparkSession, d: String): DataFrame = {
     val emb = U.track(
@@ -621,29 +568,22 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("adc_d2"), col("rank"))
   }
 
-  /** Shared per-(session, sfDir) PQ index: sim_pq_adc and sim_pq_recall
-    * both need the same deterministic codebook + codes, and the two
-    * assignment passes cost ~2 s each — so the build runs ONCE per JVM
-    * and is served persisted (the centroids16 idiom). Deliberately NOT
-    * U.track'd: shared caches outlive single queries by design. */
-  private val pqCache = scala.collection.mutable.Map[
-    String, (SparkSession, (DataFrame, DataFrame, DataFrame))]()
-  private def pqCodedCached(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = synchronized {
-    pqCache.get(d) match {
-      case Some((sess, t)) if sess eq s => t
-      case stale =>
-        stale.foreach { case (_, (a, _, c)) =>
-          try { a.unpersist(); c.unpersist() } catch { case _: Throwable => () } }
-        val emb = fixed(s, d).select(col("vec_id"), col("fx")).persist()
-        // pqCoded persists subsP/coded via U.track — untrack them into
-        // the shared cache by building outside the tracked path
-        val t = pqCodedUntracked(emb)
-        emb.unpersist()
-        pqCache(d) = (s, t)
-        t
-    }
+  /** Shared PQ index (a [[graft.SharedIndex]] entry): the PQ queries
+    * need the same deterministic codebook + codes, and the two assignment
+    * passes cost ~2 s each — so the build runs ONCE per session and is
+    * served persisted. */
+  private val pqIndex = SharedIndex[(DataFrame, DataFrame, DataFrame)](
+      "pqCoded", Seq("sim_pq_adc", "sim_pq_distortion", "sim_pq_recall"),
+      t => Seq(t._1, t._3)) { (s, d) =>
+    val emb = fixed(s, d).select(col("vec_id"), col("fx")).persist()
+    // pqCoded persists subsP/coded via U.track — untrack them into
+    // the shared cache by building outside the tracked path
+    val t = pqCodedUntracked(emb)
+    emb.unpersist()
+    t
   }
+  private def pqCodedCached(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = pqIndex.get(s, d)
   private def pqCodedUntracked(emb: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     val (subsP, cent1, coded) = pqCoded(emb)
@@ -678,8 +618,8 @@ object Similarity {
     *
     * Scale shape: the build is one coarse assign + two codebook assigns
     * (broadcast joins over one corpus stream each); serving is
-    * broadcast-LUT joins over the probed cells only. Shared per-JVM
-    * cache (the pqCache idiom) since the ADC query and its recall gate
+    * broadcast-LUT joins over the probed cells only. A shared
+    * [[graft.SharedIndex]] entry since the ADC query and its recall gate
     * need the identical index. */
   private[graft] def ivfPqOnEmb(emb: DataFrame, cent: DataFrame,
       nQueries: Int, nprobe: Int = 4, nShort: Int = 32, nSub: Int = 4,
@@ -807,31 +747,20 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("d2"), col("rank"))
   }
 
-  /** Shared per-(session, sfDir) IVF-PQ index (the pqCache idiom):
-    * sim_ivfpq_adc and sim_ivfpq_recall need the identical codes. */
-  private val ivfPqCache = scala.collection.mutable.Map[
-    String, (SparkSession, (DataFrame, DataFrame))]()
-  private def ivfPqCodedCached(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = synchronized {
-    ivfPqCache.get(d) match {
-      case Some((sess, t)) if sess eq s => t
-      case stale =>
-        stale.foreach { case (_, (a, b)) =>
-          try { a.unpersist(); b.unpersist() } catch { case _: Throwable => () } }
-        val emb = fixed(s, d).select(col("vec_id"), col("fx"), col("nrm"))
-          .persist()
-        val t = ivfPqCoded(emb, centroids16(s, d), nSub = 4, k = 16,
-          vecDim = 64, seedCut = -1L)
-        emb.unpersist()
-        ivfPqCache(d) = (s, t)
-        t
-    }
+  /** Shared IVF-PQ index (a [[graft.SharedIndex]] entry): sim_ivfpq_adc
+    * and sim_ivfpq_recall need the identical codes. */
+  private val ivfPqIndex = SharedIndex[(DataFrame, DataFrame)]("ivfPqCoded",
+      Seq("sim_ivfpq_adc", "sim_ivfpq_recall"),
+      t => Seq(t._1, t._2)) { (s, d) =>
+    val emb = fixed(s, d).select(col("vec_id"), col("fx"), col("nrm"))
+      .persist()
+    val t = ivfPqCoded(emb, centroids16(s, d), nSub = 4, k = 16,
+      vecDim = 64, seedCut = -1L)
+    emb.unpersist()
+    t
   }
-
-  /** Bench warm-up for the IVF-PQ pair (builds atop the shared k=16
-    * coarse quantizer). */
-  private[graft] def warmIvfPq(s: SparkSession, d: String): Unit =
-    { ivfPqCodedCached(s, d); () }
+  private def ivfPqCodedCached(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = ivfPqIndex.get(s, d)
 
   private def ivfPqTop(s: SparkSession, d: String): DataFrame = {
     val emb = U.track(
@@ -915,43 +844,28 @@ object Similarity {
     * quantifies elsewhere. Deterministic quantizer + exact fixed-point
     * cosine + (cos DESC, id) tiebreaks = the full 3n-row graph
     * hash-matches the nested-Lloyd SQL mirror. */
-  /** Shared per-(session, sfDir) √n-cell quantizer ASSIGNMENT for the
-    * corpus kNN graph (r15, the centroids16 / pqCache idiom): three
-    * declared queries consume the identical index — `sim_knn_graph`,
-    * `sim_knn_recall` (the gate on it) and `emb_knn_label_purity` (the
-    * screen built on it) — and each invocation re-ran the count + 2-step
-    * Lloyd + assign build (~0.7 s of the trio's per-query time at
-    * sf0.1). Build once per JVM, serve the persisted assignment;
-    * deliberately NOT U.track'd (shared caches outlive single queries
-    * by design), stale-session entries unpersisted on rebuild. */
-  private val knnCache = scala.collection.mutable.Map[
-    String, (SparkSession, (DataFrame, DataFrame))]()
+  /** Shared √n-cell quantizer ASSIGNMENT for the corpus kNN graph (a
+    * [[graft.SharedIndex]] entry): the kNN-graph queries and the screen
+    * built on it consume the identical index, and each invocation re-ran
+    * the count + 2-step Lloyd + assign build (~0.7 s of the trio's
+    * per-query time at sf0.1). The value keeps the centroids beside the
+    * assignment so eviction releases both. */
+  private val knnIndex = SharedIndex[(DataFrame, DataFrame)]("knnAssigned",
+      Seq("emb_knn_label_purity", "sim_knn_graph", "sim_knn_recall"),
+      t => Seq(t._1, t._2)) { (s, d) =>
+    val emb = fixed(s, d)
+      .select(col("vec_id"), col("fx"), col("nrm")).persist()
+    val n = emb.count()
+    val k = math.max(4,
+      math.min(1024, math.round(math.sqrt(n.toDouble)).toInt))
+    val cent = ivfCentroids(emb, k)
+    val assigned = assignN(emb, cent, 1).persist()
+    assigned.count()
+    emb.unpersist()
+    (cent, assigned)
+  }
   private def knnAssignedCached(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      knnCache.get(d) match {
-        case Some((sess, t)) if sess eq s => t._2
-        case stale =>
-          stale.foreach { case (_, (c, a)) =>
-            try { c.unpersist(); a.unpersist() }
-            catch { case _: Throwable => () } }
-          val emb = fixed(s, d)
-            .select(col("vec_id"), col("fx"), col("nrm")).persist()
-          val n = emb.count()
-          val k = math.max(4,
-            math.min(1024, math.round(math.sqrt(n.toDouble)).toInt))
-          val cent = ivfCentroids(emb, k)
-          val assigned = assignN(emb, cent, 1).persist()
-          assigned.count()
-          emb.unpersist()
-          knnCache(d) = (s, (cent, assigned))
-          assigned
-      }
-    }
-
-  /** Bench warm-up for the kNN-graph trio (sim_knn_graph /
-    * sim_knn_recall / emb_knn_label_purity). */
-  private[graft] def warmKnn(s: SparkSession, d: String): Unit =
-    { knnAssignedCached(s, d); () }
+    knnIndex.get(s, d)._2
 
   private def knnGraph(s: SparkSession, d: String): DataFrame =
     knnEdges(knnAssignedCached(s, d))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OSQL, U}
+import graft.{OSQL, SharedIndex, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,39 +32,34 @@ import org.apache.spark.sql.types._
   */
 object Graphs {
 
-  /** Directed co-occurrence pairs with order-support counts, cached per
-    * (session, sfDir) — the shared base of both graph queries. */
-  private val pairCache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
-  private def coPairs(s: SparkSession, d: String): DataFrame = synchronized {
-    pairCache.get(d) match {
-      case Some((sess, df)) if sess eq s => df
-      case stale =>
-        // release the superseded session's cached blocks before rebuilding
-        stale.foreach { case (_, old) =>
-          try old.unpersist() catch { case _: Throwable => () } }
-        // per-order part sets, then pairs generated MAP-SIDE: one narrow
-        // shuffle groups the 600k lines into ~150k part-set rows; the u<v
-        // pair explosion never shuffles (it feeds the support count's
-        // partial aggregation, which combines duplicates before the only
-        // wide exchange). The earlier self-join formulation shuffled both
-        // join sides by orderkey AND the 3.6M pair rows twice more
-        // (distinct + count) — ~8M shuffled rows versus ~1.8M here.
-        // collect_set makes within-order pairs unique by construction.
-        val li = U.tbl(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        val und = li.groupBy(col("ok")).agg(collect_set(col("pk")).as("pks"))
-          .select(explode(col("pks")).as("u"), col("pks"))
-          .select(col("u"), explode(col("pks")).as("v"))
-          .filter(col("u") < col("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-        val df = und.unionByName(
-            und.select(col("v").as("u"), col("u").as("v"), col("support")))
-          .persist()
-        pairCache(d) = (s, df)
-        df
-    }
+  /** Directed co-occurrence pairs with order-support counts — the shared
+    * base of the graph family, a [[graft.SharedIndex]] entry. */
+  private val pairIndex = SharedIndex[DataFrame]("coPairs", Seq(
+      "graph_assoc_rules", "graph_cc", "graph_degree_dist",
+      "graph_degree_gini", "graph_hits", "graph_katz", "graph_knn_degree",
+      "graph_ktruss", "graph_mst", "graph_rich_club", "graph_triangles",
+      "graph_walk_biased"), Seq(_)) { (s, d) =>
+    // per-order part sets, then pairs generated MAP-SIDE: one narrow
+    // shuffle groups the 600k lines into ~150k part-set rows; the u<v
+    // pair explosion never shuffles (it feeds the support count's
+    // partial aggregation, which combines duplicates before the only
+    // wide exchange). The earlier self-join formulation shuffled both
+    // join sides by orderkey AND the 3.6M pair rows twice more
+    // (distinct + count) — ~8M shuffled rows versus ~1.8M here.
+    // collect_set makes within-order pairs unique by construction.
+    val li = U.tbl(s, d, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+    val und = li.groupBy(col("ok")).agg(collect_set(col("pk")).as("pks"))
+      .select(explode(col("pks")).as("u"), col("pks"))
+      .select(col("u"), explode(col("pks")).as("v"))
+      .filter(col("u") < col("v"))
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
+    val df = und.unionByName(
+        und.select(col("v").as("u"), col("u").as("v"), col("support")))
+      .persist()
+    df
   }
+  private def coPairs(s: SparkSession, d: String): DataFrame = pairIndex.get(s, d)
 
   /** Node-count bound for the broadcast-rank PageRank iteration. A rank row
     * is two longs; 1M nodes is a few tens of MB per broadcast — the sane
@@ -75,30 +70,16 @@ object Graphs {
     * O(|nodes|/partition), never a full driver-side broadcast build. */
   private[operators] val PrBroadcastNodeCap = 1000000L
 
-  /** Bench warm-up: materialize the shared pair cache so per-query bench
-    * numbers stop depending on which graph query happens to run first,
-    * and pre-JIT the iterative-kernel codepaths (broadcast hash join +
-    * two-level hash agg + integer DIV) on a 2k-node synthetic graph —
-    * profiled at sf0.1: the first pagerank in a JVM costs 8.1 s vs 3.3 s
-    * steady-state, and the bench times each query exactly once, so
-    * without this the per-query number is mostly one-time JIT (the same
-    * attribution fix as the collation and DSv2-write warms in Bench). */
-  private[graft] def warm(s: SparkSession, d: String): Unit = {
-    coPairs(s, d).count(); wedgeFrames(s, d)._2.count()
-    // the order-sequence edge cache too (shared by graph_scc and
-    // graph_reciprocity): whichever consumer ran first absorbed the ~6 s
-    // lineitem pair-explosion build into ITS bench number (r10 driver:
-    // graph_scc 5.99 s vs 1.8-3.3 s cache-warm — attribution, not kernel)
-    orderSeqEdges(s, d).count()
-    // the shared prepared PageRank edge frame (deg-joined, persisted) —
-    // graph_pagerank and graph_ppr iterate over it without rebuilding —
-    // and ONE kernel pass over it, so the iteration plan's whole-stage
-    // codegen compiles here (a synthetic-graph warm compiles a DIFFERENT
-    // plan: measured run 1 still paid +1.4 s of compile over steady state)
+  /** Bench warm-up of the PageRank kernel: ONE pass over the shared
+    * prepared edge frame, so the iteration plan's whole-stage codegen
+    * compiles here (profiled at sf0.1: the first pagerank in a JVM costs
+    * 8.1 s vs 3.3 s steady-state; a synthetic-graph warm compiles a
+    * DIFFERENT plan: measured run 1 still paid +1.4 s of compile over
+    * steady state). The shared frames themselves are warmed through
+    * [[graft.SharedIndex]]. */
+  private[graft] def warmKernel(s: SparkSession, d: String): Unit = {
     val (pe, psmall) = prFrames(s, d)
     pagerankKernel(pe, psmall, seedMod = None).count()
-    // the shared walk frame (graph_walk_corpus + graph_skipgram_pairs)
-    walkFrame(s, d).count()
     graft.U.releaseTracked()
   }
 
@@ -124,33 +105,23 @@ object Graphs {
     * run of `graph_pagerank`/`graph_ppr` paid ~2 s of rebuild before the
     * iterations (r12 judge: 4.7 s warm vs the 2.4-2.6 s steady state
     * PrProfile shows once CacheManager dedups the per-call persists).
-    * The pqCache idiom: untracked (outlives single queries), pre-built by
-    * [[warm]] so neither consumer absorbs the build. */
-  private val prCache =
-    scala.collection.mutable.Map[String, (SparkSession, (DataFrame, Boolean))]()
+    * A [[graft.SharedIndex]] entry. */
+  private val prIndex = SharedIndex[(DataFrame, Boolean)]("prFrames", Seq(
+      "graph_pagerank", "graph_ppr"), t => Seq(t._1)) { (s, d) =>
+    val edges = coPairs(s, d).select(col("u"), col("v"))
+    val deg = edges.groupBy(col("u").as("du"))
+      .agg(count(lit(1)).as("deg")).persist()
+    val nNodes = deg.count()
+    val small = nNodes <= PrBroadcastNodeCap
+    val joined = edges.join(deg, col("u") === col("du"))
+      .select(col("u"), col("v"), col("deg"))
+    val e = (if (small) joined else joined.repartition(col("u"))).persist()
+    e.count()
+    deg.unpersist() // folded into e; only e serves the iterations
+    (e, small)
+  }
   private def prFrames(s: SparkSession, d: String): (DataFrame, Boolean) =
-    prCache.synchronized {
-      prCache.get(d) match {
-        case Some((sess, t)) if sess eq s => t
-        case stale =>
-          // release a superseded session's cached blocks (the
-          // shingleCache discipline) before rebuilding
-          stale.foreach { case (_, (old, _)) =>
-            try old.unpersist() catch { case _: Throwable => () } }
-          val edges = coPairs(s, d).select(col("u"), col("v"))
-          val deg = edges.groupBy(col("u").as("du"))
-            .agg(count(lit(1)).as("deg")).persist()
-          val nNodes = deg.count()
-          val small = nNodes <= PrBroadcastNodeCap
-          val joined = edges.join(deg, col("u") === col("du"))
-            .select(col("u"), col("v"), col("deg"))
-          val e = (if (small) joined else joined.repartition(col("u"))).persist()
-          e.count()
-          deg.unpersist() // folded into e; only e serves the iterations
-          prCache(d) = (s, (e, small))
-          (e, small)
-      }
-    }
+    prIndex.get(s, d)
 
   /** The iteration kernel over an arbitrary directed (u, v) edge frame —
     * parameterized so tests can drive synthetic graphs through both gate
@@ -440,27 +411,23 @@ object Graphs {
     * (x < y, w a common neighbor). Both `graph_jaccard_nbrs` and
     * `graph_adamic_adar` aggregate the SAME corpus-sized wedge build —
     * plain count vs degree-weighted sum — so it is built and persisted
-    * once (the [[graft.llm.Pipeline]] gramCache discipline: stale-session
-    * entries unpersist before rebuild; shared caches stay untracked). */
-  private val wedgeCache =
-    scala.collection.mutable.Map[String, (SparkSession, (DataFrame, DataFrame))]()
+    * once (a [[graft.SharedIndex]] entry). */
+  private val wedgeIndex = SharedIndex[(DataFrame, DataFrame)]("wedgeFrames",
+      Seq("graph_adamic_adar", "graph_assortativity", "graph_bfs_hops",
+        "graph_closeness_k", "graph_clustcoeff", "graph_community_lp",
+        "graph_conductance", "graph_eccentricity", "graph_ego_2hop",
+        "graph_jaccard_nbrs", "graph_kcore", "graph_link_predict",
+        "graph_modularity"), t => Seq(t._1, t._2)) { (s, d) =>
+    val adj = coPairs(s, d).filter(col("support") >= 2)
+      .select(col("u"), col("v")).persist() // mirrored: both directions
+    val wedges = adj.select(col("u").as("x"), col("v").as("w"))
+      .join(adj.select(col("u").as("y"), col("v").as("w")), Seq("w"))
+      .filter(col("x") < col("y"))
+      .persist()
+    (adj, wedges)
+  }
   private def wedgeFrames(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    synchronized {
-      wedgeCache.get(d) match {
-        case Some((sess, fr)) if sess eq s => fr
-        case stale =>
-          stale.foreach { case (_, (a, w)) =>
-            try { a.unpersist(); w.unpersist() } catch { case _: Throwable => () } }
-          val adj = coPairs(s, d).filter(col("support") >= 2)
-            .select(col("u"), col("v")).persist() // mirrored: both directions
-          val wedges = adj.select(col("u").as("x"), col("v").as("w"))
-            .join(adj.select(col("u").as("y"), col("v").as("w")), Seq("w"))
-            .filter(col("x") < col("y"))
-            .persist()
-          wedgeCache(d) = (s, (adj, wedges))
-          (adj, wedges)
-      }
-    }
+    wedgeIndex.get(s, d)
 
   /** Neighborhood Jaccard per association edge (edge embeddedness — the
     * link-prediction/community-strength score): for each support-filtered
@@ -1229,33 +1196,27 @@ object Graphs {
   /** Directed order-sequence pairs — u ships on an earlier line than v in
     * some order — distinct with order-count weight, generated MAP-SIDE
     * from per-order line lists (the coPairs discipline). Shared by
-    * [[graphScc]] and [[graphReciprocity]], so it is cached per
-    * (session, sfDir) and persisted exactly like [[coPairs]] — each
+    * [[graphScc]] and [[graphReciprocity]], so it is a
+    * [[graft.SharedIndex]] entry persisted exactly like [[coPairs]] — each
     * consumer also reads it more than once within its own plan. */
-  private val seqCache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
+  private val seqIndex = SharedIndex[DataFrame]("orderSeqEdges", Seq(
+      "graph_reciprocity", "graph_scc", "graph_transitivity_dir",
+      "graph_triad_census"), Seq(_)) { (s, d) =>
+    val df = U.tbl(s, d, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"),
+        col("l_linenumber").as("ln"))
+      .groupBy(col("ok"))
+      .agg(collect_list(struct(col("ln"), col("pk"))).as("ps"))
+      .select(explode(col("ps")).as("a"), col("ps"))
+      .select(col("a"), explode(col("ps")).as("b"))
+      .filter(col("a.ln") < col("b.ln") && col("a.pk") =!= col("b.pk"))
+      .select(col("a.pk").as("u"), col("b.pk").as("v"))
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
+      .persist()
+    df
+  }
   private def orderSeqEdges(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      seqCache.get(d) match {
-        case Some((sess, df)) if sess eq s => df
-        case stale =>
-          stale.foreach { case (_, old) =>
-            try old.unpersist() catch { case _: Throwable => () } }
-          val df = U.tbl(s, d, "lineitem")
-            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"),
-              col("l_linenumber").as("ln"))
-            .groupBy(col("ok"))
-            .agg(collect_list(struct(col("ln"), col("pk"))).as("ps"))
-            .select(explode(col("ps")).as("a"), col("ps"))
-            .select(col("a"), explode(col("ps")).as("b"))
-            .filter(col("a.ln") < col("b.ln") && col("a.pk") =!= col("b.pk"))
-            .select(col("a.pk").as("u"), col("b.pk").as("v"))
-            .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-            .persist()
-          seqCache(d) = (s, df)
-          df
-      }
-    }
+    seqIndex.get(s, d)
 
   private[graft] def sccImpl(s: SparkSession, d: String, cap: Long): DataFrame =
     sccOnEdges(orderSeqEdges(s, d).select(col("u"), col("v")), SccNodeCap, cap)
@@ -1267,7 +1228,7 @@ object Graphs {
     * two counts, ratio in exact micro-units; the three consumers read
     * through the persisted [[orderSeqEdges]] cache. */
   private def graphReciprocity(s: SparkSession, d: String): DataFrame = {
-    // three consumers, but the cached seqCache parent absorbs the re-reads
+    // three consumers, but the shared orderSeqEdges parent absorbs the re-reads
     val e = orderSeqEdges(s, d).select(col("u"), col("v"))
     val rec = e.join(e.select(col("v").as("ru"), col("u").as("rv")),
       col("u") === col("ru") && col("v") === col("rv"), "left_semi")
@@ -1546,23 +1507,16 @@ object Graphs {
     * rebuild-per-consumer attribution hole the permPvals/bpeRounds
     * caches closed; the frame is ≤ |seeds|·walkLen rows, trivially
     * persistable). Cap-overriding callers (the Round14Spec cap=0 parity
-    * pins) bypass the cache and exercise the real kernels. Pre-built in
-    * [[warm]]. */
-  private val walkCache =
-    scala.collection.mutable.Map[String, (SparkSession, DataFrame)]()
+    * pins) bypass the cache and exercise the real kernels. A
+    * [[graft.SharedIndex]] entry. */
+  private val walkIndex = SharedIndex[DataFrame]("walkFrame", Seq(
+      "graph_skipgram_pairs", "graph_walk_corpus"), Seq(_)) { (s, d) =>
+    val df = walkCorpusImpl(s, d, GraphIterEdgeCap).persist()
+    df.count()
+    df
+  }
   private[graft] def walkFrame(s: SparkSession, d: String): DataFrame =
-    walkCache.synchronized {
-      walkCache.get(d) match {
-        case Some((sess, df)) if sess eq s => df
-        case stale =>
-          stale.foreach { case (_, old) =>
-            try old.unpersist() catch { case _: Throwable => () } }
-          val df = walkCorpusImpl(s, d, GraphIterEdgeCap).persist()
-          df.count()
-          walkCache(d) = (s, df)
-          df
-      }
-    }
+    walkIndex.get(s, d)
 
   private[graft] def walkCorpusImpl(s: SparkSession, d: String,
       cap: Long): DataFrame = {
