@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-/** Stage-level attribution for the PageRank kernel (the r4 "≤3 s warm"
+/** Run-over-run attribution for the PageRank kernel (the r4 "≤3 s warm"
   * target, pinned r7): run-over-run in one JVM separates the kernel's
   * steady-state cost from one-time costs the bench's single timed run
   * absorbs (plan-specific whole-stage-codegen compile, per-call deg/edge
@@ -43,29 +42,6 @@ object PrProfile {
         graft.SparkEntry.queries("graph_hits")(spark, sfDir).count())
       U.releaseTracked()
     }
-    // stage breakdown of one run
-    val edges = t("coPairs select")(
-      graft.operators.Graphs.pagerankEdgeFrame(spark, sfDir))
-    val deg = edges.groupBy(col("u").as("du")).agg(count(lit(1)).as("deg")).persist()
-    t("deg count")(deg.count())
-    println("[prof] nodes=" + deg.count() + " edges=" + edges.count())
-    val joined = edges.join(deg, col("u") === col("du"))
-      .select(col("u"), col("v"), col("deg"))
-    val e = joined.persist()
-    t("edge persist count")(e.count())
-    var ranks = deg.select(col("du").as("node")).withColumn("pr", lit(1000000L))
-    for (i <- 1 to 3) {
-      val r = broadcast(ranks)
-      ranks = e.join(r, col("u") === col("node"))
-        .select(col("v"), expr("pr DIV deg").as("c"))
-        .groupBy(col("v"))
-        .agg(expr("(85 * sum(c)) DIV 100").as("flow"))
-        .select(col("v").as("node"), (lit(150000L) + col("flow")).as("pr"))
-      val rr = ranks.persist()
-      t(s"round $i materialize")(rr.count())
-      ranks = rr
-    }
-    t("final top50")(ranks.orderBy(col("pr").desc, col("node")).limit(50).collect())
     // SCC attribution (r11): the r10 driver's 5.99 s was the shared
     // order-sequence edge-cache build landing on whichever of
     // scc/reciprocity ran first — measured here as the build line; the

@@ -15,62 +15,45 @@ import org.apache.spark.sql.types.LongType
   * method keeps the scale shape its query twin is plan-guarded for (one
   * union+window pass for as-of, bounded posting-list joins for near-dup,
   * gated broadcast↔shuffle iteration for graphs — see SCALE.md).
+  *
+  * The rule: a facade method and its declared query share ONE kernel — a
+  * `private[graft]` `*On` function next to the query, over caller frames
+  * and columns — and the method only shapes the caller's columns in and
+  * out. The exceptions, each with the reason it stays standalone, are the
+  * allowlist of `FacadeKernelSpec`, which fails on any other method here
+  * that does not call an `operators`/`llm` kernel.
   */
 object GraftApi {
 
   /** As-of join: enrich each `probe` row with the latest `build` row at
     * `buildTs` <= `probeTs` (or the earliest at >= when `forward`), per
-    * join key. One union-tagged frame + ONE window pass — no join operator,
-    * no per-key range scan; build rows order before probes at equal ts, so
+    * join key — the `join_asof` kernel ([[graft.operators.Joins.asOfOn]]).
+    * One union-tagged frame + ONE window pass — no join operator, no
+    * per-key range scan; build rows order before probes at equal ts, so
     * ties resolve to "at-or-before" exactly like DuckDB's ASOF JOIN.
-    * `buildVals` columns come back as `asof_<name>` (null when no match). */
+    * `buildVals` columns come back as `asof_<name>`, all from the same
+    * matched build row (null when no match; a matched row's NULL value
+    * stays NULL). Build rows tying on (key, ts) win in an unspecified
+    * order — supply unique build timestamps for determinism (the declared
+    * query tie-breaks on event_id). */
   def asOfJoin(probe: DataFrame, build: DataFrame, keys: Seq[String],
       probeTs: String, buildTs: String, buildVals: Seq[String],
       forward: Boolean = false): DataFrame = {
-    require(keys.nonEmpty && buildVals.nonEmpty)
-    val probeCols = probe.columns.toSeq
-    // ONE row-marker struct carries every build value together: last(...,
-    // ignoreNulls) skips only probe rows (whose marker is a NULL struct),
-    // never a matched build row whose VALUE column is NULL — so a NULL
-    // build value comes back as the matched row's NULL (DuckDB ASOF
-    // semantics), and all asof_* columns come from the SAME build row
-    val mType = org.apache.spark.sql.types.StructType(
-      buildVals.map(c => build.schema(c)))
-    val bSide = build.select(
-      keys.map(col) ++ Seq(col(buildTs).as("__ts"), lit(0).as("__side")) ++
-        probeCols.filterNot(keys.contains).map(c =>
-          lit(null).cast(probe.schema(c).dataType).as(c)) ++
-        Seq(struct(buildVals.map(col): _*).as("__m")): _*)
-    val pSide = probe.select(
-      keys.map(col) ++ Seq(col(probeTs).as("__ts"), lit(1).as("__side")) ++
-        probeCols.filterNot(keys.contains).map(col) ++
-        Seq(lit(null).cast(mType).as("__m")): _*)
-    val ord = if (forward) col("__ts").desc else col("__ts").asc
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(ord, col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = bSide.unionByName(pSide)
-      .withColumn("__m", last(col("__m"), ignoreNulls = true).over(w))
+    val carried = graft.operators.Joins.asOfOn(probe, build, keys, probeTs,
+      buildTs, buildVals, Nil, Seq("__asof" -> forward))
     buildVals.foldLeft(carried) { (df, c) =>
-        df.withColumn(s"asof_$c", col(s"__m.$c"))
+        df.withColumn(s"asof_$c", col(s"__asof.$c"))
       }
-      .filter(col("__side") === 1).drop("__ts", "__side", "__m")
+      .drop("__asof")
   }
 
   /** Gap-based sessionization: appends a `session_id` column numbering each
     * key's sessions (1-based) with a new session whenever the gap to the
-    * previous row exceeds `gapSeconds`. One shuffle+sort per key. */
+    * previous row exceeds `gapSeconds` — the `ts_sessionize` kernel
+    * ([[TimeSeries.sessionizeOn]]). One shuffle+sort per key. */
   def sessionize(df: DataFrame, key: String, ts: String,
-      gapSeconds: Long): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ts))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__prev_us", lag(unix_micros(col(ts)), 1).over(w))
-      .withColumn("session_id", sum(
-        when(col("__prev_us").isNull ||
-          unix_micros(col(ts)) - col("__prev_us") > gapSeconds * 1000000L, 1L)
-          .otherwise(0L)).over(run))
-      .drop("__prev_us")
-  }
+      gapSeconds: Long): DataFrame =
+    TimeSeries.sessionizeOn(df, key, ts, Nil, gapSeconds * 1000000L)
 
   /** Grouped top-k through the custom whole-operator plan (bounded per-group
     * heaps — no global sort, no full window materialization). */
@@ -266,6 +249,7 @@ object GraftApi {
 
   /** Hampel filter over (key, ts, value): flags readings more than
     * `nMads` scaled MADs from the trailing-`window` rolling median — the
+    * `ts_hampel` kernel on caller columns ([[TimeSeries.hampelOn]]), the
     * robust spike detector a single outlier cannot drag (a z-score's
     * mean and σ it WOULD inflate). `window` must be odd so both order
     * statistics are exact single picks; the verdict is the integer
@@ -277,162 +261,69 @@ object GraftApi {
     * no tiebreak the tie order is unspecified. */
   def hampelFilter(df: DataFrame, key: String, ts: String, value: String,
       window: Int = 7, nMads: Double = 3.0,
-      tiebreak: Option[String] = None): DataFrame = {
-    require(window >= 3 && window % 2 == 1, s"window must be odd >= 3")
-    val ordCols = col(ts) +: tiebreak.map(col).toSeq
-    val w = Window.partitionBy(col(key)).orderBy(ordCols: _*)
-    val f = w.rowsBetween(-(window - 1), Window.currentRow)
-    val mid = (window + 1) / 2
-    val scale = math.round(nMads * 1.4826 * 10000).toInt
-    df.withColumn("__vc", (col(value).cast("decimal(12,2)") * 100)
-        .cast(LongType))
-      .withColumn("__rn", row_number().over(w).cast(LongType))
-      .withColumn("__win", sort_array(collect_list(col("__vc")).over(f)))
-      .filter(col("__rn") >= window)
-      .withColumn("med", element_at(col("__win"), mid))
-      .withColumn("mad", element_at(
-        sort_array(transform(col("__win"), x => abs(x - col("med")))), mid))
-      .withColumn("is_outlier",
-        abs(col("__vc") - col("med")) * 10000L > lit(scale.toLong) * col("mad"))
-      .drop("__vc", "__rn", "__win")
-  }
+      tiebreak: Option[String] = None): DataFrame =
+    TimeSeries.hampelOn(df.withColumn("__vc", graft.U.cents(col(value))),
+        key, (ts +: tiebreak.toSeq).map(col), "__vc", window, nMads)
+      .drop("__vc")
 
   /** Burst detection over (typeCol, ts): maximal runs of >= `minRun`
     * consecutive buckets each at least num/den × the type's mean bucket
-    * rate — the `ts_burst` kernel on caller columns. The threshold compare
+    * rate — the `ts_burst` kernel on caller columns
+    * ([[TimeSeries.burstOn]]: one input scan). The threshold compare
     * is the exact integer cross-multiplication den·n_b·buckets >= num·total
     * (no division), runs come from gaps-islands on the bucket index.
     * Everything after the first aggregation is bucket-cardinality. */
   def burstRuns(df: DataFrame, typeCol: String, ts: String,
       bucketSeconds: Long = 3600L, num: Long = 4L, den: Long = 3L,
       minRun: Int = 3): DataFrame = {
-    require(bucketSeconds > 0 && num > 0 && den > 0 && minRun >= 1)
     val usPerBucket = bucketSeconds * 1000000L
-    val hourly = df
-      .withColumn("__bidx", expr(s"unix_micros($ts) DIV $usPerBucket"))
-      .groupBy(col(typeCol), col("__bidx"))
-      .agg(count(lit(1)).as("__nb"))
-    val tot = hourly.groupBy(col(typeCol).as("__t"))
-      .agg(sum(col("__nb")).as("__s"), count(lit(1)).as("__c"))
-    val wr = Window.partitionBy(col(typeCol)).orderBy(col("__bidx"))
-    hourly.join(tot, col(typeCol) === col("__t"))
-      .filter(lit(den) * col("__nb") * col("__c") >= lit(num) * col("__s"))
-      .withColumn("__grp", col("__bidx") - row_number().over(wr))
-      .groupBy(col(typeCol), col("__grp"))
-      .agg(timestamp_micros(min(col("__bidx")) * usPerBucket)
-          .as("burst_start"),
-        timestamp_micros((max(col("__bidx")) + 1) * usPerBucket)
-          .as("burst_end"),
-        count(lit(1)).as("n_buckets"), sum(col("__nb")).as("n_events"))
-      .filter(col("n_buckets") >= minRun)
-      .drop("__grp")
+    TimeSeries.burstOn(df, typeCol, ts, usPerBucket, num, den, minRun)
+      .select(col(typeCol),
+        timestamp_micros(col("__b0") * usPerBucket).as("burst_start"),
+        timestamp_micros((col("__b1") + 1) * usPerBucket).as("burst_end"),
+        col("n_buckets"), col("n_events"))
   }
 
   /** Peak concurrency per day over gap-sessionized (key, ts) activity —
-    * the `ts_max_concurrency` sweep line on caller columns. Sessions close
+    * the `ts_max_concurrency` sweep line on caller columns
+    * ([[TimeSeries.maxConcurrencyOn]]). Sessions close
     * after `gapSeconds` idle; each contributes ±1 at its endpoints (starts
     * order before ends at equal instants, inclusive intervals). No global
     * sort: endpoints block by day, day baselines prefix over the |days|
     * frame, and GREATEST with the day-entry level counts
     * midnight-spanning sessions. */
   def maxConcurrency(df: DataFrame, key: String, ts: String,
-      gapSeconds: Long = 1800L): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ts))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = df
-      .withColumn("__prev", lag(unix_micros(col(ts)), 1).over(w))
-      .withColumn("__new", when(col("__prev").isNull ||
-        unix_micros(col(ts)) - col("__prev") > gapSeconds * 1000000L, 1L)
-        .otherwise(0L))
-      .withColumn("__sid", sum(col("__new")).over(run))
-      .groupBy(col(key), col("__sid"))
-      .agg(min(col(ts)).as("__st"), max(col(ts)).as("__en"))
-    val pts = sess.select(col("__st").as("__t"), lit(1L).as("__d"))
-      .unionByName(sess.select(col("__en").as("__t"), lit(-1L).as("__d")))
-      .withColumn("__day", date_trunc("DAY", col("__t")))
-    val offs = pts.groupBy(col("__day").as("__od"))
-      .agg(sum(col("__d")).as("__ds"))
-      .withColumn("__off", coalesce(
-        sum(col("__ds")).over(Window.orderBy(col("__od"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__od"), col("__off"))
-    val wd = Window.partitionBy(col("__day"))
-      .orderBy(col("__t"), col("__d").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pts.withColumn("__rs", sum(col("__d")).over(wd))
-      .groupBy(col("__day")).agg(max(col("__rs")).as("__peak"))
-      .join(offs, col("__day") === col("__od"))
-      .select(col("__day").as("day"),
-        greatest(col("__off") + col("__peak"), col("__off"))
-          .as("max_concurrent"))
-  }
+      gapSeconds: Long = 1800L): DataFrame =
+    TimeSeries.maxConcurrencyOn(df, key, ts, Nil, gapSeconds * 1000000L)
 
   /** Rolling OLS trend over (key, ts, value): slope and intercept of
     * value-vs-row-index over the trailing `window` points per key, emitted
     * once the frame is full — the `ts_rolling_ols` kernel on caller
-    * columns. Four exact Long power sums over ONE ROWS frame; doubles only
-    * in the closing divisions. Rows tying on (key, ts) index in an
+    * columns ([[TimeSeries.rollingOlsOn]]). Four exact Long power sums
+    * over ONE ROWS frame; doubles only in the closing divisions. Rows
+    * tying on (key, ts) index in an
     * unspecified order — supply unique timestamps (or pre-disambiguate)
     * for bit-determinism, like the declared query's event_id tiebreak. */
   def rollingOls(df: DataFrame, key: String, ts: String, value: String,
-      window: Int = 10): DataFrame = {
-    require(window >= 2)
-    val w = Window.partitionBy(col(key)).orderBy(col(ts))
-    val f = w.rowsBetween(-(window - 1), Window.currentRow)
-    val n = window.toDouble
-    df.withColumn("__vc",
-        (col(value).cast("decimal(12,2)") * 100).cast(LongType))
-      .withColumn("__rn", row_number().over(w).cast(LongType))
-      .withColumn("__sx", sum(col("__rn")).over(f))
-      .withColumn("__sy", sum(col("__vc")).over(f))
-      .withColumn("__sxy", sum(col("__rn") * col("__vc")).over(f))
-      .withColumn("__sxx", sum(col("__rn") * col("__rn")).over(f))
-      .filter(col("__rn") >= window)
-      .withColumn("slope",
-        (lit(n) * col("__sxy") - col("__sx").cast("double") * col("__sy")) /
-          (lit(100.0) * (lit(n) * col("__sxx") -
-            col("__sx").cast("double") * col("__sx"))))
-      .withColumn("intercept",
-        (col("__sy").cast("double") / lit(100.0) -
-          col("slope") * col("__sx")) / lit(n))
-      .drop("__vc", "__rn", "__sx", "__sy", "__sxy", "__sxx")
-  }
+      window: Int = 10): DataFrame =
+    TimeSeries.rollingOlsOn(df.withColumn("__vc", graft.U.cents(col(value))),
+        key, Seq(col(ts)), "__vc", window)
+      .drop("__vc")
 
   /** Spearman rank correlation between two numeric columns per group — the
-    * `agg_spearman` kernel on caller columns. Tie-averaged (midrank)
+    * `agg_spearman` kernel on caller columns
+    * ([[graft.operators.Aggregations.spearmanOn]]). Tie-averaged (midrank)
     * semantics with ONE sort per column: 2·midrank = rank() + RANGE-frame
     * peer count; power sums in Decimal(38,0), exact to ~1e9 rows/group.
     * Returns (group, n, spearman). */
   def spearmanCorr(df: DataFrame, group: String, xCol: String,
-      yCol: String): DataFrame = {
-    val wx = Window.partitionBy(col(group)).orderBy(col(xCol))
-    val wy = Window.partitionBy(col(group)).orderBy(col(yCol))
-    val px = wx.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val py = wy.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.partitionBy(col(group))
-    // centered doubled ranks (mean is exactly n+1): sums bounded by n³ so
-    // the closing DOUBLE casts stay exact — see the declared agg_spearman
-    df.withColumn("__nn", count(lit(1)).over(full))
-      .withColumn("__dx",
-        rank().over(wx).cast(LongType) + count(lit(1)).over(px) -
-          (col("__nn") + 1L))
-      .withColumn("__dy",
-        rank().over(wy).cast(LongType) + count(lit(1)).over(py) -
-          (col("__nn") + 1L))
-      .groupBy(col(group))
-      .agg(count(lit(1)).as("n"),
-        sum((col("__dx") * col("__dy")).cast("decimal(38,0)")).as("__sxy"),
-        sum((col("__dx") * col("__dx")).cast("decimal(38,0)")).as("__sxx"),
-        sum((col("__dy") * col("__dy")).cast("decimal(38,0)")).as("__syy"))
-      .select(col(group), col("n"),
-        (expr("CAST(__sxy AS DOUBLE)") /
-          (sqrt(expr("CAST(__sxx AS DOUBLE)")) *
-            sqrt(expr("CAST(__syy AS DOUBLE)")))).as("spearman"))
-  }
+      yCol: String): DataFrame =
+    graft.operators.Aggregations.spearmanOn(df, group, xCol, yCol)
 
   /** Binary (sign-bit) embedding search over an (id, Array[Float] emb)
-    * frame — the `sim_hamming_topk` kernel on caller columns, generalized
-    * to any dimension: signatures pack into ceil(dims/32) 32-bit words
+    * frame — the `sim_hamming_topk` kernel on caller columns
+    * ([[graft.llm.Similarity.hammingRankedOn]]), generalized to any
+    * dimension: signatures pack into ceil(dims/32) 32-bit words
     * (8 bytes per 64 dims — the memory-bound rung below IVF/LSH), probes
     * are the given id set, and each probe ranks the corpus by exact
     * Hamming distance (bit_count per word). The probe block must be small
@@ -441,30 +332,10 @@ object GraftApi {
   def hammingTopK(df: DataFrame, id: String, embCol: String, dims: Int,
       probeIds: Seq[Long], k: Int = 3): DataFrame = {
     require(dims >= 1 && probeIds.nonEmpty && k >= 1)
-    val nWords = (dims + 31) / 32
-    def word(wi: Int): String = {
-      val lo = wi * 32
-      val hi = math.min(lo + 31, dims - 1)
-      s"aggregate(sequence($lo, $hi), CAST(0 AS BIGINT), (acc, i) -> " +
-        s"acc + IF(element_at($embCol, i + 1) > CAST(0 AS FLOAT), " +
-        s"shiftleft(CAST(1 AS BIGINT), i - $lo), CAST(0 AS BIGINT)))"
-    }
-    val sigCols = (0 until nWords).map(i => expr(word(i)).as(s"__w$i"))
-    val sig = df.select(col(id).cast(LongType).as("__id") +: sigCols: _*)
-    val q = sig.filter(col("__id").isin(probeIds: _*))
-      .select(col("__id").as("q_id") +:
-        (0 until nWords).map(i => col(s"__w$i").as(s"__q$i")): _*)
-    val ham = (0 until nWords)
-      .map(i => expr(s"CAST(bit_count(__w$i ^ __q$i) AS BIGINT)"))
-      .reduce(_ + _)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming"), col("__id"))
-    sig.crossJoin(broadcast(q))
-      .filter(col("__id") =!= col("q_id"))
-      .withColumn("hamming", ham)
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("__id").as(id), col("hamming"))
+    graft.llm.Similarity.hammingRankedOn(
+        df.select(col(id).cast(LongType).as("vec_id"), col(embCol).as("__emb")),
+        "__emb", dims, col("vec_id").isin(probeIds: _*), k)
+      .select(col("q_id"), col("rank"), col("vec_id").as(id), col("hamming"))
   }
 
   /** Robust location + scale per group: exact doubled-median and
@@ -550,8 +421,9 @@ object GraftApi {
 
   /** Near-duplicate pairs over an (id, text) frame: word 3-gram shingles
     * through a df-capped inverted index (posting lists longer than
-    * `shingleDfCap` are stop-shingles — the quadratic-bomb control).
-    * Returns (id_a, id_b, common, jaccard) for pairs with jaccard >=
+    * `shingleDfCap` are stop-shingles — the quadratic-bomb control): the
+    * `dedup_jaccard` kernel [[graft.llm.Dedup.jaccardPairsOn]] on caller
+    * columns. Returns (id_a, id_b, common, jaccard) for pairs with jaccard >=
     * `threshold`. NOTE on exactness (same tradeoff as the declared
     * `dedup_jaccard` query): shingles dropped by the df cap are excluded
     * from `common` but still counted in each document's shingle total, so
@@ -560,29 +432,18 @@ object GraftApi {
     * Raise `shingleDfCap` (or Long.MaxValue) for exact scores at the cost
     * of the hot posting lists' quadratic blowup. */
   def nearDupPairs(df: DataFrame, id: String, text: String,
-      threshold: Double = 0.2, shingleDfCap: Long = 1000L): DataFrame = {
-    val sized = df.select(col(id).as("__id"),
-      graft.llm.TextUtil.shingles3(graft.llm.TextUtil.tokens(col(text)))
-        .as("__ss"))
-      .select(col("__id"), col("__ss"), size(col("__ss")).cast(LongType).as("__n"))
-    val inv = sized.select(col("__id"), col("__n"),
-        explode(col("__ss")).as("__sg"))
-      .withColumn("__df", count(lit(1))
-        .over(Window.partitionBy(col("__sg"))))
-      .filter(col("__df") <= shingleDfCap)
-    val pairs = inv.select(col("__id").as("id_a"), col("__n").as("__na"),
-        col("__sg"))
-      .join(inv.select(col("__id").as("id_b"), col("__n").as("__nb"),
-        col("__sg")), Seq("__sg"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("__na"), col("__nb"))
-      .agg(count(lit(1)).as("common"))
-    pairs.select(col("id_a"), col("id_b"), col("common"),
-        (col("common").cast("double") /
-          (col("__na") + col("__nb") - col("common")).cast("double"))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
+      threshold: Double = 0.2, shingleDfCap: Long = 1000L): DataFrame =
+    // tokens get their own projection: inlined into shingles3 they would be
+    // re-split for every shingle position (no subexpression reuse in HOFs)
+    graft.llm.Dedup.jaccardPairsOn(
+        df.select(col(id).as("doc_id"),
+            graft.llm.TextUtil.tokens(col(text)).as("__tk"))
+          .select(col("doc_id"),
+            graft.llm.TextUtil.shingles3(col("__tk")).as("ss")),
+        shingleDfCap)
+      .filter(col("jac") >= threshold)
+      .select(col("da").as("id_a"), col("db").as("id_b"), col("common"),
+        col("jac").as("jaccard"))
 
   /** 1-Wasserstein drift per group: how far each group's distribution of
     * `value` (a <=2-decimal numeric) sits from the POOLED distribution —
@@ -711,23 +572,22 @@ object GraftApi {
     Graphs.triadCensusOnEdges(
       edges.select(col(uCol).as("u"), col(vCol).as("v")), edgeCap)
 
-  /** Fixed-point micro-int vector + its squared norm for the embedding
-    * kernels below — the Similarity discipline on caller columns. */
-  private def fixedVec(df: DataFrame, vec: String): DataFrame =
-    df.withColumn("__fx", transform(col(vec),
-        x => floor(x.cast("double") * lit(1000000.0))))
-      .withColumn("__nrm",
-        graft.plans.CustomExprs.fixed_dot(col("__fx"), col("__fx")))
-
-  private def cosOf(dot: Column, na: Column, nb: Column): Column =
-    dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
+  /** The (vec_id, fx, nrm) frame the Similarity embedding kernels take:
+    * the caller's `id` as vec_id, the fixed-point micro-int vector and its
+    * squared norm — the Similarity discipline on caller columns. */
+  private def fixedIds(df: DataFrame, id: Column, vec: String): DataFrame =
+    df.select(id.as("vec_id"), transform(col(vec),
+        x => floor(x.cast("double") * lit(1000000.0))).as("fx"))
+      .withColumn("nrm",
+        graft.plans.CustomExprs.fixed_dot(col("fx"), col("fx")))
 
   /** Maximal-marginal-relevance selection on a caller frame: greedily pick
     * `k` rows maximizing λ·cos(query, x) − (1−λ)·max cos(x, selected),
-    * query = the row with `id` = `queryId`. The `emb_mmr` kernel lifted:
-    * deterministic fixed-point cosines, id tiebreak, one corpus stream per
-    * round against the broadcast selected set. Returns (step, <id>, rel,
-    * score). */
+    * query = the row with `id` = `queryId`. The `emb_mmr` kernel lifted
+    * ([[graft.llm.Similarity.mmrOn]]): deterministic fixed-point cosines,
+    * id tiebreak, one stream of the cached candidate frame per round
+    * against the broadcast selected set (release the cache with
+    * `graft.U.releaseTracked()`). Returns (step, <id>, rel, score). */
   def mmrSelect(df: DataFrame, id: String, vec: String, queryId: Long,
       k: Int = 5, relWeight: Double = 0.7,
       divWeight: Double = 0.3): DataFrame = {
@@ -735,113 +595,37 @@ object GraftApi {
     // floating point lands 1 ULP off the 0.3 literal the declared query
     // uses, which silently forks the greedy trajectory
     require(k >= 1 && relWeight >= 0.0 && divWeight >= 0.0)
-    val all = fixedVec(df.select(col(id).as("__id"), col(vec)), vec)
-    val q = all.filter(col("__id") === queryId)
-      .select(col("__fx").as("__qx"), col("__nrm").as("__qn"))
-    val cand = all.filter(col("__id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("__id"), col("__fx"), col("__nrm"),
-        cosOf(graft.plans.CustomExprs.fixed_dot(col("__fx"), col("__qx")),
-          col("__nrm"), col("__qn")).as("__rel"))
-    var sel: DataFrame = null
-    for (step <- 1 to k) {
-      val remaining =
-        if (sel == null) cand
-        else cand.join(sel.select(col("__id").as("__sv")),
-          col("__id") === col("__sv"), "left_anti")
-      val scored =
-        if (sel == null) remaining.withColumn("__pen", lit(0.0))
-        else {
-          val pens = remaining.select(col("__id"), col("__fx"), col("__nrm"))
-            .crossJoin(broadcast(sel.select(col("__fx").as("__sx"),
-              col("__nrm").as("__sn"))))
-            .withColumn("__pc",
-              cosOf(graft.plans.CustomExprs.fixed_dot(col("__fx"), col("__sx")),
-                col("__nrm"), col("__sn")))
-            .groupBy(col("__id")).agg(max(col("__pc")).as("__pen"))
-          remaining.join(pens, Seq("__id"))
-        }
-      val pick = scored
-        .withColumn("__score",
-          lit(relWeight) * col("__rel") - lit(divWeight) * col("__pen"))
-        .orderBy(col("__score").desc, col("__id")).limit(1)
-        .select(lit(step.toLong).as("step"), col("__id"), col("__fx"),
-          col("__nrm"), col("__rel"), col("__score"))
-        .localCheckpoint()
-      sel = if (sel == null) pick else sel.unionAll(pick).localCheckpoint()
-    }
-    sel.select(col("step"), col("__id").as(id), col("__rel").as("rel"),
-      col("__score").as("score")).orderBy("step")
+    graft.llm.Similarity.mmrOn(fixedIds(df, col(id), vec), queryId, k,
+        relWeight, divWeight)
+      .withColumnRenamed("vec_id", id)
   }
 
   /** Explicit k-means training on a caller frame — the `emb_kmeans`
-    * kernel lifted: seeds = the `k` smallest ids, `iters` assignment
+    * kernel lifted ([[graft.llm.Similarity.kmeansOn]] and its report):
+    * seeds = the `k` smallest ids, `iters` assignment
     * rounds with floored-mean centroid updates, everything in the exact
     * fixed-point domain. Returns (cid, n_members, inertia, checksum). */
   def kmeansTrain(df: DataFrame, id: String, vec: String, k: Int = 4,
       iters: Int = 3): DataFrame = {
     val (asg, cent) = kmeansAsg(df, id, vec, k, iters)
-    val checks = cent
-      .select(col("__cid").as("__ccid"),
-        posexplode(col("__cx")).as(Seq("__pos", "__c")))
-      .groupBy(col("__ccid"))
-      .agg(sum((col("__pos") + 1).cast(LongType) * col("__c")).as("checksum"))
-    asg.groupBy(col("__cid"))
-      .agg(count(lit(1)).as("n_members"), sum(col("__d2")).as("inertia"))
-      .join(checks, col("__cid") === col("__ccid"))
-      .select(col("__cid").as("cid"), col("n_members"), col("inertia"),
-        col("checksum"))
-      .orderBy("cid")
+    graft.llm.Similarity.kmeansReportOn(asg, cent)
   }
 
-  /** The deterministic Lloyd assignment loop shared by [[kmeansTrain]]
-    * and [[semDedup]] — seeds are the k smallest-id vectors, per-round
-    * ties break (dist, cid). Returns the assignment frame
-    * (__id, __cid, __d2, __fx) together with the final centroid frame
-    * (__cid, __cx, __cn) — a tuple, so concurrent driver threads never
-    * share mutable state between the two results. */
+  /** [[graft.llm.Similarity.kmeansOn]] on a caller frame, seeded with the
+    * k smallest-id vectors — shared by [[kmeansTrain]] and [[semDedup]]. */
   private def kmeansAsg(df: DataFrame, id: String, vec: String, k: Int,
       iters: Int): (DataFrame, DataFrame) = {
-    require(k >= 1 && iters >= 1)
-    val v = fixedVec(df.select(col(id).as("__id"), col(vec)), vec)
-      .select(col("__id"), col("__fx"), col("__nrm"))
-    val seeds = v.orderBy(col("__id")).limit(k)
-    var cent = seeds.select(col("__id").as("__cid"), col("__fx").as("__cx"),
-      col("__nrm").as("__cn")).localCheckpoint()
-    var asg: DataFrame = null
-    for (round <- 1 to iters) {
-      val w = Window.partitionBy(col("__id"))
-        .orderBy(col("__d2"), col("__cid"))
-      asg = v.crossJoin(broadcast(cent))
-        .withColumn("__d2", col("__nrm") -
-          lit(2L) * graft.plans.CustomExprs.fixed_dot(col("__fx"), col("__cx")) +
-          col("__cn"))
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") === 1)
-        .select(col("__id"), col("__cid"), col("__d2"), col("__fx"))
-      if (round < iters) {
-        cent = asg
-          .select(col("__cid"), posexplode(col("__fx")).as(Seq("__pos", "__x")))
-          .groupBy(col("__cid"), col("__pos"))
-          .agg(floor(sum(col("__x")).cast("double") / count(lit(1)))
-            .cast(LongType).as("__c"))
-          .groupBy(col("__cid"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("__pos"), col("__c")))),
-            t => t.getField("__c")).as("__cx"))
-          .withColumn("__cn",
-            graft.plans.CustomExprs.fixed_dot(col("__cx"), col("__cx")))
-          .localCheckpoint()
-      }
-    }
-    (asg, cent)
+    require(k >= 1)
+    val v = fixedIds(df, col(id), vec)
+    graft.llm.Similarity.kmeansOn(v, v.orderBy(col("vec_id")).limit(k), iters)
   }
 
   /** SemDeDup on a caller embedding frame — the `pipeline_semdedup`
     * recipe lifted: k-means-cluster via [[kmeansAsg]] (k smallest-id
     * seeds, deterministic ties), then WITHIN each cluster mark every
     * vector whose cosine to a smaller-id cluster-mate reaches
-    * `simMilli`/1000 (default 0.95) as a duplicate. The threshold never
+    * `simMilli`/1000 (default 0.95) as a duplicate
+    * ([[graft.llm.Similarity.semDupOn]]). The threshold never
     * leaves the integer domain: cos ≥ τ ⟺ dot > 0 ∧ 10⁶·dot² ≥
     * simMilli²·‖a‖²·‖b‖², products in DECIMAL(38,0). Returns one row per
     * input vector: (<id>, cid, kept). The quadratic scan is
@@ -850,27 +634,9 @@ object GraftApi {
   def semDedup(df: DataFrame, id: String, vec: String, k: Int = 4,
       simMilli: Int = 950): DataFrame = {
     require(simMilli >= 1 && simMilli <= 1000)
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val m = graft.U.track(kmeansAsg(df, id, vec, k, iters = 3)._1
-      .select(col("__id"), col("__cid"), col("__fx"))
-      .withColumn("__nrm",
-        graft.plans.CustomExprs.fixed_dot(col("__fx"), col("__fx")))
-      .persist())
-    val b = m.select(col("__cid").as("__bc"), col("__id").as("__kb"),
-      col("__fx").as("__bfx"), col("__nrm").as("__nb"))
-    val thr2 = simMilli.toLong * simMilli
-    val dup = m.join(b, col("__cid") === col("__bc") &&
-        col("__id") < col("__kb"))
-      .withColumn("__dot",
-        graft.plans.CustomExprs.fixed_dot(col("__fx"), col("__bfx")))
-      .filter(col("__dot") > 0L &&
-        lit(1000000L).cast(dec) * col("__dot").cast(dec) * col("__dot") >=
-          lit(thr2).cast(dec) * col("__nrm").cast(dec) * col("__nb"))
-      .select(col("__bc").as("__dc"), col("__kb")).distinct()
-    m.join(dup, col("__cid") === col("__dc") && col("__id") === col("__kb"),
-        "left")
-      .select(col("__id").as(id), col("__cid").as("cid"),
-        col("__kb").isNull.as("kept"))
+    graft.llm.Similarity.semDupOn(kmeansAsg(df, id, vec, k, iters = 3)._1,
+        1000000L, simMilli.toLong * simMilli)
+      .select(col("vec_id").as(id), col("cid"), col("kb").isNull.as("kept"))
       .orderBy(id)
   }
 
@@ -910,10 +676,7 @@ object GraftApi {
       nQueries: Int = 10, probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
     require(k >= 1 && nQueries >= 1 && probes.nonEmpty && probes.forall(_ >= 1))
     val emb = graft.U.track(
-      fixedVec(df.select(col(id).cast(LongType).as("__id"), col(vec)), vec)
-        .select(col("__id").as("vec_id"), col("__fx").as("fx"),
-          col("__nrm").as("nrm"))
-        .persist())
+      fixedIds(df, col(id).cast(LongType), vec).persist())
     val ids = smallestIds(emb, math.max(k, nQueries))
     val seedCut = ids(math.min(k, ids.length) - 1)
     val qn = math.min(nQueries, ids.length)
@@ -944,9 +707,8 @@ object GraftApi {
       s"pqSearch: vector dimension $vecDim must split into nSub=$nSub " +
         "equal subspaces")
     val emb = graft.U.track(
-      fixedVec(df.select(col(id).cast(LongType).as("__id"), col(vec)), vec)
-        .select(col("__id").as("vec_id"), col("__fx").as("fx"))
-        .persist())
+      fixedIds(df, col(id).cast(LongType), vec)
+        .select(col("vec_id"), col("fx")).persist())
     val ids = smallestIds(emb, math.max(k, nQueries))
     graft.llm.Similarity.pqAdcOnEmb(emb, nQueries, nSub, k, vecDim,
         seedCut = ids(math.min(k, ids.length) - 1),
@@ -979,10 +741,7 @@ object GraftApi {
       s"ivfPqSearch: vector dimension $vecDim must split into nSub=$nSub " +
         "equal subspaces")
     val emb = graft.U.track(
-      fixedVec(df.select(col(id).cast(LongType).as("__id"), col(vec)), vec)
-        .select(col("__id").as("vec_id"), col("__fx").as("fx"),
-          col("__nrm").as("nrm"))
-        .persist())
+      fixedIds(df, col(id).cast(LongType), vec).persist())
     val ids = smallestIds(emb, math.max(k, nQueries))
     val seedCut = ids(math.min(k, ids.length) - 1)
     val cent = graft.U.track(
@@ -999,10 +758,7 @@ object GraftApi {
     * the k smallest ids). Returns (<id>, rank, nbr_id, cos). */
   def knnGraph(df: DataFrame, id: String, vec: String): DataFrame = {
     val emb = graft.U.track(
-      fixedVec(df.select(col(id).cast(LongType).as("__id"), col(vec)), vec)
-        .select(col("__id").as("vec_id"), col("__fx").as("fx"),
-          col("__nrm").as("nrm"))
-        .persist())
+      fixedIds(df, col(id).cast(LongType), vec).persist())
     graft.llm.Similarity.knnGraphOnEmb(emb,
         seedCutFor = k => smallestIds(emb, k).last)
       .withColumnRenamed("vec_id", id)

@@ -77,15 +77,8 @@ object Dedup {
     * both engines agree at ANY scale either way. */
   private[llm] val ShingleDfCap = 1000L
 
-  /** Shingle-set pairs with exact Jaccard, via inverted index.
-    * Tokens are materialized into their own projection first: inlining
-    * tokens() into shingles3's element_at calls would re-split the text for
-    * every shingle position (interpreted HOFs have no subexpression reuse —
-    * this was a 40s/query difference at sf0.1).
-    *
-    * The df-cap window runs partitioned by shingle — the same hash
-    * partitioning the self-join requires, so Catalyst reuses the exchange
-    * and the cap costs no extra shuffle. */
+  /** Shingle-set pairs with exact Jaccard >= 0.2 via the inverted index
+    * ([[jaccardPairsOn]] over the shared pair frame). */
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     jaccardPairsShared(s, d)
       .filter(col("jac") >= 0.2)
@@ -125,27 +118,36 @@ object Dedup {
       "dedup_soft_weights", "dedup_source_rate", "dedup_text_vs_embedding",
       "dedup_threshold_curve", "pipeline_curate", "pipeline_split_leakage"),
       Seq(_)) { (s, d) =>
-    val sh = shingled(s, d)
-      .select(col("doc_id"), col("ss"),
-        size(col("ss")).cast(LongType).as("n_sh"))
-    val inv = sh.select(col("doc_id"), col("n_sh"),
+    jaccardPairsOn(shingled(s, d), ShingleDfCap).persist()
+  }
+
+  /** The inverted-index Jaccard kernel behind [[jaccardPairsShared]] and
+    * [[graft.api.GraftApi.nearDupPairs]] over a (doc_id, ss) shingle-set
+    * frame: shingles in more than `dfCap` documents are stop-shingles and
+    * drop out of the index (the quadratic-bomb control — they still count
+    * in each document's total, so jac is a lower bound for pairs sharing
+    * them). The df-cap window runs partitioned by shingle — the same hash
+    * partitioning the self-join requires, so the cap costs no extra
+    * shuffle. Returns every pair sharing >= 1 kept shingle as (da, db, na,
+    * nb, common, jac), da < db. */
+  private[graft] def jaccardPairsOn(sh: DataFrame, dfCap: Long): DataFrame = {
+    val inv = sh.select(col("doc_id"), size(col("ss")).cast(LongType).as("n_sh"),
         explode(col("ss")).as("sg"))
       .withColumn("df",
         count(lit(1)).over(Window.partitionBy(col("sg"))))
-      .filter(col("df") <= lit(ShingleDfCap))
+      .filter(col("df") <= lit(dfCap))
       .drop("df")
     val a = inv.select(col("doc_id").as("da"),
       col("n_sh").as("na"), col("sg"))
     val b = inv.select(col("doc_id").as("db"),
       col("n_sh").as("nb"), col("sg"))
-    val df = a.join(b, Seq("sg")).filter(col("da") < col("db"))
+    a.join(b, Seq("sg")).filter(col("da") < col("db"))
       .groupBy(col("da"), col("db"), col("na"), col("nb"))
       .agg(count(lit(1)).as("common"))
       .withColumn("jac", col("common").cast(DoubleType) /
         (col("na") + col("nb") - col("common")).cast(DoubleType))
-      .persist()
-    df
   }
+
   private[llm] def jaccardPairsShared(s: SparkSession, d: String): DataFrame =
     pairsIndex.get(s, d)
 

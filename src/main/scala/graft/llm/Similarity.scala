@@ -1194,26 +1194,47 @@ object Similarity {
       .orderBy("q_id", "rank")
 
   /** The sign-signature Hamming ranker behind [[hammingTopk]] and
-    * [[rrfFusion]] — one definition of the signature words and the
-    * (hamming, vec_id) tiebreak so the two queries cannot drift. */
+    * [[rrfFusion]]: the 64-dim fixture embeddings, the `nQueries`
+    * lowest ids as probes, through [[hammingRankedOn]]. */
   private def hammingRanked(s: SparkSession, d: String,
-      nQueries: Int, k: Int): DataFrame = {
-    def word(lo: Int): String =
-      s"aggregate(sequence($lo, ${lo + 31}), CAST(0 AS BIGINT), " +
-        "(acc, i) -> acc + IF(element_at(embedding, i + 1) > CAST(0 AS FLOAT), " +
-        "shiftleft(CAST(1 AS BIGINT), i - " + lo + "), CAST(0 AS BIGINT)))"
-    val sig = U.tbl(s, d, "embeddings").select(col("vec_id"),
-      expr(word(0)).as("w0"), expr(word(32)).as("w1"))
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("w0").as("q0"), col("w1").as("q1"))
+      nQueries: Int, k: Int): DataFrame =
+    hammingRankedOn(U.tbl(s, d, "embeddings"), "embedding", 64,
+      col("vec_id") < nQueries, k)
+
+  /** The Hamming ranking kernel behind [[hammingRanked]] and
+    * [[graft.api.GraftApi.hammingTopK]] — one definition of the signature
+    * words and the (hamming, vec_id) tiebreak. Each `embCol` vector of an
+    * (vec_id: Long, embCol) frame packs its sign bits into ceil(dims/32)
+    * 32-bit words (BIGINTs in both engines; a 1<<63 sign-bit word would
+    * overflow DuckDB's checked shift); the `probe` rows broadcast as one
+    * small block against a single corpus stream and rank it by exact
+    * Hamming distance — bit_count(xor) per word, pure integer. Returns
+    * (vec_id, q_id, hamming, rank) for the top `k` per probe. */
+  private[graft] def hammingRankedOn(emb: DataFrame, embCol: String,
+      dims: Int, probe: Column, k: Int): DataFrame = {
+    val nWords = (dims + 31) / 32
+    def word(wi: Int): String = {
+      val lo = wi * 32
+      s"aggregate(sequence($lo, ${math.min(lo + 31, dims - 1)}), " +
+        s"CAST(0 AS BIGINT), (acc, i) -> acc + IF(element_at($embCol, " +
+        "i + 1) > CAST(0 AS FLOAT), shiftleft(CAST(1 AS BIGINT), " +
+        s"i - $lo), CAST(0 AS BIGINT)))"
+    }
+    val sig = emb.select(col("vec_id") +:
+      (0 until nWords).map(i => expr(word(i)).as(s"__w$i")): _*)
+    val q = sig.filter(probe)
+      .select(col("vec_id").as("q_id") +:
+        (0 until nWords).map(i => col(s"__w$i").as(s"__q$i")): _*)
+    val ham = (0 until nWords)
+      .map(i => s"bit_count(__w$i ^ __q$i)").mkString(" + ")
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("hamming"), col("vec_id"))
     sig.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) AS BIGINT)"))
+      .withColumn("hamming", expr(s"CAST($ham AS BIGINT)"))
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= k)
+      .select(col("vec_id"), col("q_id"), col("hamming"), col("rank"))
   }
 
   /** Reciprocal-rank fusion (k₀=60) of the two cheapest rankers — exact
@@ -1301,17 +1322,26 @@ object Similarity {
     * the same fixed-point cosine tree as [[bruteforceTopk]] with a
     * deterministic vec_id tiebreak, so the whole greedy trajectory
     * hash-matches the SQL oracle's 5 chained CTEs. */
-  private def embMmr(s: SparkSession, d: String): DataFrame = {
-    val all = fixed(s, d)
-    val q = all.filter(col("vec_id") === 0L)
+  private def embMmr(s: SparkSession, d: String): DataFrame =
+    mmrOn(fixed(s, d), queryId = 0L, k = 5, relWeight = 0.7, divWeight = 0.3)
+
+  /** The MMR kernel behind [[embMmr]] and [[graft.api.GraftApi.mmrSelect]]
+    * over a fixed-point (vec_id, fx, nrm) frame: greedily pick `k` rows
+    * maximizing relWeight·cos(query, x) − divWeight·max cos(x, selected),
+    * query = the `queryId` row. The candidate frame is persisted and
+    * tracked (release with `U.releaseTracked()`). Returns (step, vec_id,
+    * rel, score) ordered by step. */
+  private[graft] def mmrOn(all: DataFrame, queryId: Long, k: Int,
+      relWeight: Double, divWeight: Double): DataFrame = {
+    val q = all.filter(col("vec_id") === queryId)
       .select(col("fx").as("qx"), col("nrm").as("qn"))
-    val cand = U.track(all.filter(col("vec_id") =!= 0L)
+    val cand = U.track(all.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("fx"), col("nrm"),
         cosCol(dotCol(col("fx"), col("qx")), col("nrm"), col("qn")).as("rel"))
       .persist())
     var sel: DataFrame = null
-    for (step <- 1 to 5) {
+    for (step <- 1 to k) {
       val remaining =
         if (sel == null) cand
         else cand.join(sel.select(col("vec_id").as("sv")),
@@ -1328,7 +1358,8 @@ object Similarity {
           remaining.join(pens, Seq("vec_id"))
         }
       val pick = scored
-        .withColumn("score", lit(0.7) * col("rel") - lit(0.3) * col("pen"))
+        .withColumn("score",
+          lit(relWeight) * col("rel") - lit(divWeight) * col("pen"))
         .orderBy(col("score").desc, col("vec_id")).limit(1)
         .select(lit(step.toLong).as("step"), col("vec_id"), col("fx"),
           col("nrm"), col("rel"), col("score"))
@@ -1339,30 +1370,31 @@ object Similarity {
       .orderBy("step")
   }
 
-  /** Explicit distributed k-means (k = 4, 3 assignment rounds, seeds =
-    * vec_ids 0–3): the TRAINING loop the IVF quantizer runs behind its
-    * cache, surfaced as an exactly-oracled query. Everything stays in the
-    * fixed-point integer domain — dist² = ‖x‖² − 2x·c + ‖c‖² is an exact
-    * Long via the codegen'd FixedDot, centroid updates are the
-    * [[graft.llm.Pipeline]] floored-mean discipline (floor of an exact
-    * double division, identical both engines), and ties break on cid —
-    * so the full 3-round trajectory (assignments, inertia, centroid
-    * checksums) hash-matches 3 chained CTE rounds in SQL. Scale shape:
-    * per round ONE corpus stream against a ≤4-row broadcast centroid
-    * frame (localCheckpoint-pinned, the MMR lesson) + one explode-agg
-    * keyed (cid, dim) for the update — linear in corpus × k, never
-    * corpus². */
   /** The k-means training loop itself: (final assignments, final
     * centroids) — shared by [[embKmeans]]'s report and
     * [[embKmeansAri]]'s label-agreement gate so the two cannot drift. */
   private def kmeansAssignments(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val v = U.track(fixed(s, d)
       .select(col("vec_id"), col("fx"), col("nrm")).persist())
-    var cent = v.filter(col("vec_id") < 4L)
+    kmeansOn(v, v.filter(col("vec_id") < 4L), 3)
+  }
+
+  /** The Lloyd loop behind [[kmeansAssignments]] and
+    * [[graft.api.GraftApi.kmeansTrain]] / [[graft.api.GraftApi.semDedup]]
+    * over a fixed-point (vec_id, fx, nrm) frame `v`, seeded with the
+    * `seeds` rows of `v` (cid = the seed's vec_id): `iters` assignment
+    * rounds with per-round (dist², cid) ties and floored-mean centroid
+    * updates. Returns (assignments (vec_id, cid, dist2, fx), final
+    * centroids (cid, cx, cn)) — a tuple, so concurrent driver threads
+    * never share mutable state between the two results. */
+  private[graft] def kmeansOn(v: DataFrame, seeds: DataFrame,
+      iters: Int): (DataFrame, DataFrame) = {
+    require(iters >= 1)
+    var cent = seeds
       .select(col("vec_id").as("cid"), col("fx").as("cx"),
         col("nrm").as("cn")).localCheckpoint()
     var asg: DataFrame = null
-    for (round <- 1 to 3) {
+    for (round <- 1 to iters) {
       val w = Window.partitionBy(col("vec_id")).orderBy(col("dist2"), col("cid"))
       asg = v.crossJoin(broadcast(cent))
         .withColumn("dist2",
@@ -1370,7 +1402,7 @@ object Similarity {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1)
         .select(col("vec_id"), col("cid"), col("dist2"), col("fx"))
-      if (round < 3) {
+      if (round < iters) {
         cent = asg
           .select(col("cid"), posexplode(col("fx")).as(Seq("pos", "x")))
           .groupBy(col("cid"), col("pos"))
@@ -1429,9 +1461,26 @@ object Similarity {
     * WITHIN-CLUSTER only — the SemDeDup design point: k grows with the
     * corpus so cluster size (and the per-bucket pair work) stays bounded;
     * the oracle nests kmeansCtes so assignment and dedup cannot drift. */
-  private def semDedup(s: SparkSession, d: String): DataFrame = {
+  private def semDedup(s: SparkSession, d: String): DataFrame =
+    semDupOn(kmeansAssignments(s, d)._1, 400L, 361L)
+      .groupBy(col("cid"))
+      .agg(count(lit(1)).as("n_vecs"), count(col("kb")).as("n_dropped"))
+      .select(col("cid"), col("n_vecs"), col("n_dropped"),
+        expr("(1000000 * (n_vecs - n_dropped)) DIV n_vecs")
+          .as("keep_ratio_micro"))
+      .orderBy("cid")
+
+  /** The within-cluster duplicate marker behind [[semDedup]] and
+    * [[graft.api.GraftApi.semDedup]], over a [[kmeansOn]] assignment
+    * frame: a vector is a duplicate when its cosine to a smaller-id
+    * cluster-mate reaches τ, with τ² = den/num tested as the integer
+    * cross-multiplication dot > 0 ∧ num·dot² ≥ den·‖a‖²·‖b‖² in
+    * DECIMAL(38,0). The (vec_id, cid, fx, nrm) frame is persisted and
+    * tracked. Returns it left-joined to the duplicates: `kb` is the
+    * vector's own id when it is dropped, NULL when kept. */
+  private[graft] def semDupOn(asg: DataFrame, num: Long,
+      den: Long): DataFrame = {
     val dec = DecimalType(38, 0)
-    val (asg, _) = kmeansAssignments(s, d)
     val m = U.track(asg.select(col("vec_id"), col("cid"), col("fx"))
       .withColumn("nrm", fixed_dot(col("fx"), col("fx"))).persist())
     val b = m.select(col("cid").as("bc"), col("vec_id").as("kb"),
@@ -1439,17 +1488,11 @@ object Similarity {
     val dup = m.join(b, col("cid") === col("bc") && col("vec_id") < col("kb"))
       .withColumn("dot", fixed_dot(col("fx"), col("bfx")))
       .filter(col("dot") > 0L &&
-        lit(400L).cast(dec) * col("dot").cast(dec) * col("dot") >=
-          lit(361L).cast(dec) * col("nrm").cast(dec) * col("nb"))
+        lit(num).cast(dec) * col("dot").cast(dec) * col("dot") >=
+          lit(den).cast(dec) * col("nrm").cast(dec) * col("nb"))
       .select(col("bc").as("dc"), col("kb")).distinct()
     m.join(dup, col("cid") === col("dc") && col("vec_id") === col("kb"),
-        "left")
-      .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_vecs"), count(col("kb")).as("n_dropped"))
-      .select(col("cid"), col("n_vecs"), col("n_dropped"),
-        expr("(1000000 * (n_vecs - n_dropped)) DIV n_vecs")
-          .as("keep_ratio_micro"))
-      .orderBy("cid")
+      "left")
   }
 
   /** Linear CKA (centered-kernel-alignment family, uncentered linear
@@ -1489,8 +1532,30 @@ object Similarity {
         .as("cka2_micro"))
   }
 
+  /** Explicit distributed k-means (k = 4, 3 assignment rounds, seeds =
+    * vec_ids 0–3): the TRAINING loop the IVF quantizer runs behind its
+    * cache, surfaced as an exactly-oracled query. Everything stays in the
+    * fixed-point integer domain — dist² = ‖x‖² − 2x·c + ‖c‖² is an exact
+    * Long via the codegen'd FixedDot, centroid updates are the
+    * [[graft.llm.Pipeline]] floored-mean discipline (floor of an exact
+    * double division, identical both engines), and ties break on cid —
+    * so the full 3-round trajectory (assignments, inertia, centroid
+    * checksums) hash-matches 3 chained CTE rounds in SQL. Scale shape:
+    * per round ONE corpus stream against a ≤4-row broadcast centroid
+    * frame (localCheckpoint-pinned, the MMR lesson) + one explode-agg
+    * keyed (cid, dim) for the update — linear in corpus × k, never
+    * corpus². */
   private def embKmeans(s: SparkSession, d: String): DataFrame = {
     val (asg, cent) = kmeansAssignments(s, d)
+    kmeansReportOn(asg, cent)
+  }
+
+  /** The k-means report behind [[embKmeans]] and
+    * [[graft.api.GraftApi.kmeansTrain]]: per [[kmeansOn]] cluster the
+    * member count, inertia and a positional checksum of its centroid.
+    * Returns (cid, n_members, inertia, checksum) ordered by cid. */
+  private[graft] def kmeansReportOn(asg: DataFrame,
+      cent: DataFrame): DataFrame = {
     val checks = cent
       .select(col("cid").as("ccid"), posexplode(col("cx")).as(Seq("pos", "c")))
       .groupBy(col("ccid"))

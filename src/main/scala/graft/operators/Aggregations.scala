@@ -943,32 +943,40 @@ object Aggregations {
     * because both engines' past-2⁵³ casts happened to round alike
     * (DuckDB's HUGEINT→DOUBLE double-rounds — the ts_acf_lags lesson).
     * Two window sorts (one per ranked column) + one hash-agg. */
-  private def aggSpearman(s: SparkSession, d: String): DataFrame = {
-    val dec = DecimalType(38, 0)
-    val wv = Window.partitionBy(col("event_type")).orderBy(col("value"))
-    val wt = Window.partitionBy(col("event_type")).orderBy(col("us"))
-    val pv = wv.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val pt = wt.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val full = Window.partitionBy(col("event_type"))
-    U.events(s, d)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("nn", count(lit(1)).over(full))
-      .withColumn("dx",
-        rank().over(wv).cast(LongType) + count(lit(1)).over(pv) -
-          (col("nn") + 1L))
-      .withColumn("dy",
-        rank().over(wt).cast(LongType) + count(lit(1)).over(pt) -
-          (col("nn") + 1L))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum((col("dx") * col("dy")).cast(dec)).as("sxy"),
-        sum((col("dx") * col("dx")).cast(dec)).as("sxx"),
-        sum((col("dy") * col("dy")).cast(dec)).as("syy"))
-      .select(col("event_type"), col("n"),
-        (expr("CAST(sxy AS DOUBLE)") /
-          (sqrt(expr("CAST(sxx AS DOUBLE)")) *
-            sqrt(expr("CAST(syy AS DOUBLE)")))).as("spearman"))
+  private def aggSpearman(s: SparkSession, d: String): DataFrame =
+    spearmanOn(U.events(s, d).withColumn("us", unix_micros(col("ts"))),
+        "event_type", "value", "us")
       .orderBy("event_type")
+
+  /** The Spearman kernel behind [[aggSpearman]] and
+    * [[graft.api.GraftApi.spearmanCorr]]: centered doubled midranks of `x`
+    * and `y` per `group` (one window sort per ranked column), exact
+    * Decimal(38,0) power sums in one hash-agg, and the closing DOUBLE
+    * ratio. Returns (group, n, spearman). */
+  private[graft] def spearmanOn(df: DataFrame, group: String, x: String,
+      y: String): DataFrame = {
+    val dec = DecimalType(38, 0)
+    val wx = Window.partitionBy(col(group)).orderBy(col(x))
+    val wy = Window.partitionBy(col(group)).orderBy(col(y))
+    val px = wx.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val py = wy.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val full = Window.partitionBy(col(group))
+    df.withColumn("__nn", count(lit(1)).over(full))
+      .withColumn("__dx",
+        rank().over(wx).cast(LongType) + count(lit(1)).over(px) -
+          (col("__nn") + 1L))
+      .withColumn("__dy",
+        rank().over(wy).cast(LongType) + count(lit(1)).over(py) -
+          (col("__nn") + 1L))
+      .groupBy(col(group))
+      .agg(count(lit(1)).as("n"),
+        sum((col("__dx") * col("__dy")).cast(dec)).as("__sxy"),
+        sum((col("__dx") * col("__dx")).cast(dec)).as("__sxx"),
+        sum((col("__dy") * col("__dy")).cast(dec)).as("__syy"))
+      .select(col(group), col("n"),
+        (expr("CAST(__sxy AS DOUBLE)") /
+          (sqrt(expr("CAST(__sxx AS DOUBLE)")) *
+            sqrt(expr("CAST(__syy AS DOUBLE)")))).as("spearman"))
   }
 
   /** Empirical CDF per event type at nine fixed probe points — the

@@ -83,7 +83,8 @@ object Graphs {
     graft.U.releaseTracked()
   }
 
-  // profiling accessor for [[graft.PrProfile]]'s stage breakdown
+  // the raw order-sequence (u, v) edge frame the graph kernels start from —
+  // Round8Spec's driver-side reference checks (degree Gini, Katz) read it
   private[graft] def pagerankEdgeFrame(s: SparkSession, d: String): DataFrame =
     coPairs(s, d).select(col("u"), col("v"))
 

@@ -94,65 +94,86 @@ object Joins {
       .agg(count(lit(1)).as("n"), U.dsum(col("l_quantity")).as("sum_qty"))
       .orderBy("o_orderpriority")
 
-  /** As-of join: each 'error' event enriched with the latest 'purchase' of
-    * the same user at ts <= error ts. Union-tag both sides, one sort per
-    * (user, ts), running last(ignoreNulls) carries the build row forward.
-    * Oracle: DuckDB's native ASOF LEFT JOIN. */
-  private def joinAsof(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    // build rows keep their event_id purely as a window tie-break: two
-    // build rows at an identical (user, ts) would otherwise make the
-    // running-last pick shuffle-order-dependent (the fixtures are
-    // (user_id, ts)-unique, but determinism shouldn't rely on it)
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    // build rows sort before probe rows at equal ts => "<=" as-of semantics
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("asof_ts", last(col("b_ts"), ignoreNulls = true).over(w))
-      .withColumn("asof_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"), col("asof_value"))
-      .orderBy("event_id")
+  /** The as-of kernel behind join_asof, join_asof_forward,
+    * join_asof_nearest, join_asof_tolerance, ts_asof_enrich and
+    * [[graft.api.GraftApi.asOfJoin]]: build and probe rows union-tagged
+    * into ONE frame, one shuffle by `keys`, no join operator and no
+    * per-key range scan. Each `markers` entry (output column -> forward)
+    * is one running last(ignoreNulls) window over that frame; entries
+    * share the shuffle and differ only in sort direction. Build rows
+    * order before probes at equal ts, so ties resolve to at-or-before
+    * (at-or-after when forward) exactly like DuckDB's ASOF JOIN;
+    * `tiebreak` columns (present on both sides, ascending in both
+    * directions) then decide which of several build rows at one
+    * (key, ts) wins. The carried value is ONE row-marker struct of the
+    * `buildVals` columns: last(..., ignoreNulls) skips only probe rows
+    * (whose marker is a NULL struct), never a matched build row whose
+    * VALUE is NULL, so a NULL build value comes back as the matched row's
+    * NULL (DuckDB ASOF semantics) and every field comes from the SAME
+    * build row. Returns the probe rows — keys, tiebreak columns, the
+    * other probe columns — plus one marker struct per entry. */
+  private[graft] def asOfOn(probe: DataFrame, build: DataFrame,
+      keys: Seq[String], probeTs: String, buildTs: String,
+      buildVals: Seq[String], tiebreak: Seq[String],
+      markers: Seq[(String, Boolean)]): DataFrame = {
+    require(keys.nonEmpty && buildVals.nonEmpty && markers.nonEmpty &&
+      markers.forall(m => !Seq("__ts", "__side", "__m").contains(m._1)))
+    val carried = probe.columns.toSeq
+      .filterNot(c => keys.contains(c) || tiebreak.contains(c))
+    val mType = StructType(buildVals.map(c => build.schema(c)))
+    val bSide = build.select(
+      keys.map(col) ++ Seq(col(buildTs).as("__ts"), lit(0).as("__side")) ++
+        tiebreak.map(col) ++
+        carried.map(c => lit(null).cast(probe.schema(c).dataType).as(c)) ++
+        Seq(struct(buildVals.map(col): _*).as("__m")): _*)
+    val pSide = probe.select(
+      keys.map(col) ++ Seq(col(probeTs).as("__ts"), lit(1).as("__side")) ++
+        tiebreak.map(col) ++ carried.map(col) ++
+        Seq(lit(null).cast(mType).as("__m")): _*)
+    markers.foldLeft(bSide.unionByName(pSide)) { case (df, (out, forward)) =>
+        val ts = if (forward) col("__ts").desc else col("__ts").asc
+        val w = Window.partitionBy(keys.map(col): _*)
+          .orderBy(ts +: col("__side") +: tiebreak.map(col): _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        df.withColumn(out, last(col("__m"), ignoreNulls = true).over(w))
+      }
+      .filter(col("__side") === 1).drop("__ts", "__side", "__m")
   }
+
+  /** The fixture as-of frames: 'error' probes (event_id, user_id, ts)
+    * against 'purchase' builds carrying (ts, value), event_id the
+    * tiebreak (the fixtures are (user_id, ts)-unique, but determinism
+    * shouldn't rely on it). */
+  private def errorAsOfPurchase(s: SparkSession, d: String,
+      markers: (String, Boolean)*): DataFrame = {
+    val ev = U.events(s, d)
+    asOfOn(
+      ev.filter(col("event_type") === "error")
+        .select(col("event_id"), col("user_id"), col("ts")),
+      ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("event_id"), col("value")),
+      Seq("user_id"), "ts", "ts", Seq("ts", "value"), Seq("event_id"),
+      markers)
+  }
+
+  /** As-of join: each 'error' event enriched with the latest 'purchase' of
+    * the same user at ts <= error ts, through [[asOfOn]].
+    * Oracle: DuckDB's native ASOF LEFT JOIN. */
+  private def joinAsof(s: SparkSession, d: String): DataFrame =
+    errorAsOfPurchase(s, d, "prev" -> false)
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("prev.ts").as("asof_ts"), col("prev.value").as("asof_value"))
+      .orderBy("event_id")
 
   /** Forward as-of: each 'error' enriched with the EARLIEST same-user
     * 'purchase' at ts >= error ts — the joinAsof formulation with time
     * reversed (latest-first scan makes earliest-at-or-after a running
     * last; build rows still sort before probes at equal ts => ">="). */
-  private def joinAsofForward(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("next_ts", last(col("b_ts"), ignoreNulls = true).over(w))
-      .withColumn("next_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"), col("next_ts"),
-        col("next_value"))
+  private def joinAsofForward(s: SparkSession, d: String): DataFrame =
+    errorAsOfPurchase(s, d, "next" -> true)
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("next.ts").as("next_ts"), col("next.value").as("next_value"))
       .orderBy("event_id")
-  }
 
   /** Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys match
     * each other instead of vanishing — the semantics a dim with an "unknown"
@@ -176,36 +197,14 @@ object Joins {
     * desc — two sorts of the same shuffle, still no join operator), then a
     * pick by integer-µs distance. */
   private def joinAsofNearest(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    val wB = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val both = tagged
-      .withColumn("prev_ts", last(col("b_ts"), ignoreNulls = true).over(wB))
-      .withColumn("prev_value", last(col("b_value"), ignoreNulls = true).over(wB))
-      .withColumn("next_ts", last(col("b_ts"), ignoreNulls = true).over(wF))
-      .withColumn("next_value", last(col("b_value"), ignoreNulls = true).over(wF))
-      .filter(col("side") === 1)
-    val dPrev = unix_micros(col("ts")) - unix_micros(col("prev_ts"))
-    val dNext = unix_micros(col("next_ts")) - unix_micros(col("ts"))
-    val takeBackward = col("next_ts").isNull ||
-      (col("prev_ts").isNotNull && dPrev <= dNext)
+    val both = errorAsOfPurchase(s, d, "prev" -> false, "next" -> true)
+    val dPrev = unix_micros(col("ts")) - unix_micros(col("prev.ts"))
+    val dNext = unix_micros(col("next.ts")) - unix_micros(col("ts"))
+    val takeBackward = col("next.ts").isNull ||
+      (col("prev.ts").isNotNull && dPrev <= dNext)
     both.select(col("event_id"), col("user_id"), col("ts"),
-      when(takeBackward, col("prev_ts")).otherwise(col("next_ts")).as("nearest_ts"),
-      when(takeBackward, col("prev_value")).otherwise(col("next_value")).as("nearest_value"),
+      when(takeBackward, col("prev.ts")).otherwise(col("next.ts")).as("nearest_ts"),
+      when(takeBackward, col("prev.value")).otherwise(col("next.value")).as("nearest_value"),
       when(takeBackward, dPrev).otherwise(dNext).as("dist_us"))
       .orderBy("event_id")
   }
@@ -295,28 +294,11 @@ object Joins {
     * out — a stale quote must not enrich a trade. Same single sort+window,
     * no join operator; the tolerance is a post-pick projection. */
   private def joinAsofTolerance(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val probe = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val tagged = build
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("ts").as("b_ts"), col("value").as("b_value"))
-      .unionByName(probe.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(TimestampType).as("b_ts"),
-        lit(null).cast(DoubleType).as("b_value")))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inTol = col("asof_ts") >= col("ts") - expr("INTERVAL 1 HOUR")
-    tagged
-      .withColumn("asof_ts", last(col("b_ts"), ignoreNulls = true).over(w))
-      .withColumn("asof_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
+    val inTol = col("prev.ts") >= col("ts") - expr("INTERVAL 1 HOUR")
+    errorAsOfPurchase(s, d, "prev" -> false)
       .select(col("event_id"), col("user_id"), col("ts"),
-        when(inTol, col("asof_ts")).as("asof_ts"),
-        when(inTol, col("asof_value")).as("asof_value"))
+        when(inTol, col("prev.ts")).as("asof_ts"),
+        when(inTol, col("prev.value")).as("asof_value"))
       .orderBy("event_id")
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{OSQL, U}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,22 +60,41 @@ object TimeSeries {
       .select(col("window.start").as("wstart"), col("n"), col("sum_value"))
       .orderBy("wstart")
 
-  /** 30-minute-gap sessionization: flag gap > 30min, running sum of flags
-    * numbers the sessions, then one aggregate per (user, session). */
-  private def tsSessionize(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+  /** The gap-sessionization kernel behind ts_sessionize, ts_top_sessions,
+    * ts_uptime, ts_max_concurrency, ts_pot_exceedance and
+    * [[graft.api.GraftApi.sessionize]]: one shuffle+sort per `key`
+    * ordered by (`ts`, `tiebreak`…), a lag flags each row whose gap to the
+    * previous one exceeds `gapUs` (or that has none), and the running sum
+    * of the flags appends `session_id` (1-based per key). Rows tying on
+    * (key, ts) are ordered by `tiebreak`; with none the tie order is
+    * unspecified. */
+  private[graft] def sessionizeOn(df: DataFrame, key: String, ts: String,
+      tiebreak: Seq[String], gapUs: Long): DataFrame = {
+    val w = Window.partitionBy(col(key))
+      .orderBy(col(ts) +: tiebreak.map(col): _*)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    U.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_sess")).over(run))
+    df.withColumn("__prev_us", lag(unix_micros(col(ts)), 1).over(w))
+      .withColumn("__new",
+        when(col("__prev_us").isNull ||
+          unix_micros(col(ts)) - col("__prev_us") > gapUs, 1L).otherwise(0L))
+      .withColumn("session_id", sum(col("__new")).over(run))
+      .drop("__prev_us", "__new")
+  }
+
+  /** [[sessionizeOn]] over the events at the fixture's 30-minute gap,
+    * event_id the tiebreak. */
+  private def userSessions(s: SparkSession, d: String): DataFrame =
+    sessionizeOn(U.events(s, d), "user_id", "ts", Seq("event_id"),
+      1800000000L)
+
+  /** 30-minute-gap sessionization through [[sessionizeOn]], then one
+    * aggregate per (user, session). */
+  private def tsSessionize(s: SparkSession, d: String): DataFrame =
+    userSessions(s, d)
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"), U.dsum(col("value")).as("sum_value"))
       .orderBy("user_id", "session_id")
-  }
 
   /** Resample each user's series to a daily grid (sequence+explode — no
     * driver-side loop) and forward-fill the last observed value. */
@@ -200,20 +219,16 @@ object TimeSeries {
 
   /** As-of enrichment applied to the time-series domain (SURVEY §2.8's
     * `ts_asof_enrich`): every event carries the user's latest prior-or-equal
-    * 'signup' value — same union-tag + running-last shape as join_asof. */
+    * 'signup' value — the [[Joins.asOfOn]] kernel join_asof runs on. */
   private def tsAsofEnrich(s: SparkSession, d: String): DataFrame = {
     val ev = U.events(s, d)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tagged = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("ts"), lit(0).as("side"), col("event_id"),
-        col("value").as("b_value"))
-      .unionByName(ev.select(col("user_id"), col("ts"), lit(1).as("side"),
-        col("event_id"), lit(null).cast(DoubleType).as("b_value")))
-    tagged
-      .withColumn("signup_value", last(col("b_value"), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
-      .select(col("event_id"), col("user_id"), col("ts"), col("signup_value"))
+    Joins.asOfOn(ev.select(col("event_id"), col("user_id"), col("ts")),
+        ev.filter(col("event_type") === "signup")
+          .select(col("user_id"), col("ts"), col("event_id"), col("value")),
+        Seq("user_id"), "ts", "ts", Seq("value"), Seq("event_id"),
+        Seq("signup" -> false))
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("signup.value").as("signup_value"))
       .orderBy("event_id")
   }
 
@@ -539,7 +554,7 @@ object TimeSeries {
       .orderBy("a_event_id")
   }
 
-  /** Native session_window in BATCH mode (vs [[tsSessionize]]'s lag-gap
+  /** Native session_window in BATCH mode (vs [[sessionizeOn]]'s lag-gap
     * construction): Spark merges events within 30 min of each other; the
     * window end is last-event + gap. The oracle rebuilds exactly those
     * bounds from the lag-gap sessions, pinning the two formulations to the
@@ -830,20 +845,13 @@ object TimeSeries {
         (sum(col("vc")).cast(DoubleType) / lit(100.0)).as("sum_value"))
       .orderBy("dow", "hod")
 
-  /** Longest sessions leaderboard: the [[tsSessionize]] lag-gap pass
+  /** Longest sessions leaderboard: the [[sessionizeOn]] lag-gap pass
     * reduced to per-session summaries, then a GLOBAL top-10 by duration —
     * the session summary set is tiny relative to the events (one row per
     * session), so the final ordering is a cheap single-stage TopK
     * (TakeOrderedAndProject), not a sort of the raw data. */
-  private def tsTopSessions(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    U.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_sess")).over(run))
+  private def tsTopSessions(s: SparkSession, d: String): DataFrame =
+    userSessions(s, d)
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"))
@@ -851,7 +859,6 @@ object TimeSeries {
         unix_micros(col("session_end")) - unix_micros(col("session_start")))
       .orderBy(col("duration_us").desc, col("user_id"), col("session_id"))
       .limit(10)
-  }
 
   /** Unrolled-CTE mirror of [[tsLttb]]: pick_i selects bucket i's argmax
     * against sel_{i-1}'s point and bucket i+1's (count-scaled) centroid. */
@@ -951,20 +958,13 @@ object TimeSeries {
 
   /** Machine-availability rollup — the OEE-style uptime metric of an
     * industrial time-sequence pipeline: 30-minute-gap activity sessions per
-    * unit (reusing the sessionize shape), each attributed to its START day,
+    * unit ([[sessionizeOn]]), each attributed to its START day,
     * then per unit-day active micros and an availability ratio. All
     * interval arithmetic in integer micros; the single ratio division runs
     * in DOUBLE with the identical op tree both sides. One window sort per
     * unit + one hash agg — the same shape at fleet scale. */
-  private def tsUptime(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    U.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_sess")).over(run))
+  private def tsUptime(s: SparkSession, d: String): DataFrame =
+    userSessions(s, d)
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(unix_micros(col("ts"))).as("s_us"),
         max(unix_micros(col("ts"))).as("e_us"))
@@ -975,7 +975,6 @@ object TimeSeries {
       .withColumn("availability",
         col("active_us").cast(DoubleType) / lit(86400000000.0))
       .orderBy("user_id", "day")
-  }
 
   /** Event-type transition matrix (the first-order Markov profile of the
     * event stream — what follows what): per user, each event pairs with its
@@ -1550,25 +1549,38 @@ object TimeSeries {
     * the shape is the same at 100 TB. x is the per-user row index, so slope
     * is value-units per step; products stay far inside Long (idx ≤ rows per
     * user, cents ≤ 5e4 → idx·cents·10 ≤ 1e12 even at 1e6 rows/user). */
-  private def tsRollingOls(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val f = w.rowsBetween(-9, Window.currentRow)
-    U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .withColumn("sx", sum(col("rn")).over(f))
-      .withColumn("sy", sum(col("vc")).over(f))
-      .withColumn("sxy", sum(col("rn") * col("vc")).over(f))
-      .withColumn("sxx", sum(col("rn") * col("rn")).over(f))
-      .filter(col("rn") >= 10)
-      .withColumn("slope",
-        (lit(10.0) * col("sxy") - col("sx").cast(DoubleType) * col("sy")) /
-          (lit(100.0) * (lit(10.0) * col("sxx") -
-            col("sx").cast(DoubleType) * col("sx"))))
+  private def tsRollingOls(s: SparkSession, d: String): DataFrame =
+    rollingOlsOn(U.events(s, d).withColumn("vc", U.cents(col("value"))),
+        "user_id", Seq(col("ts"), col("event_id")), "vc", 10)
       .select(col("event_id"), col("user_id"), col("ts"), col("slope"),
-        ((col("sy").cast(DoubleType) / lit(100.0) -
-          col("slope") * col("sx")) / lit(10.0)).as("intercept"))
+        col("intercept"))
       .orderBy("event_id")
+
+  /** The rolling-OLS kernel behind [[tsRollingOls]] and
+    * [[graft.api.GraftApi.rollingOls]]: over each `key`'s rows in `order`,
+    * the trailing-`window` slope and intercept of the exact-integer cents
+    * column `vc` against the row index, appended as `slope`/`intercept`
+    * to rows whose frame is full. */
+  private[graft] def rollingOlsOn(df: DataFrame, key: String,
+      order: Seq[Column], vc: String, window: Int): DataFrame = {
+    require(window >= 2)
+    val w = Window.partitionBy(col(key)).orderBy(order: _*)
+    val f = w.rowsBetween(-(window - 1), Window.currentRow)
+    val n = window.toDouble
+    df.withColumn("__rn", row_number().over(w).cast(LongType))
+      .withColumn("__sx", sum(col("__rn")).over(f))
+      .withColumn("__sy", sum(col(vc)).over(f))
+      .withColumn("__sxy", sum(col("__rn") * col(vc)).over(f))
+      .withColumn("__sxx", sum(col("__rn") * col("__rn")).over(f))
+      .filter(col("__rn") >= window)
+      .withColumn("slope",
+        (lit(n) * col("__sxy") - col("__sx").cast(DoubleType) * col("__sy")) /
+          (lit(100.0) * (lit(n) * col("__sxx") -
+            col("__sx").cast(DoubleType) * col("__sx"))))
+      .withColumn("intercept",
+        (col("__sy").cast(DoubleType) / lit(100.0) -
+          col("slope") * col("__sx")) / lit(n))
+      .drop("__rn", "__sx", "__sy", "__sxy", "__sxx")
   }
 
   /** Full-series rescaled-range (R/S) statistic per user — the building
@@ -1637,79 +1649,92 @@ object TimeSeries {
   }
 
   /** Burst detection per event type: maximal runs of >=3 CONSECUTIVE hours
-    * each at least 4/3× the type's mean hourly rate. The threshold compare
-    * is exact-integer (3·n_b·n_hours >= 4·total ⟺ n_b >= (4/3)·mean — no
-    * division), runs come from the gaps-islands trick on the hour index.
-    * Two hash-aggs + one per-type window over HOURLY buckets (≤ |hours|
-    * rows — the event stream itself is never windowed), then one rollup
-    * per island: the whole query is bucket-cardinality after the first
-    * aggregation regardless of event volume. */
-  private def tsBurst(s: SparkSession, d: String): DataFrame = {
-    val hourly = U.events(s, d)
-      .groupBy(col("event_type"), date_trunc("HOUR", col("ts")).as("h"))
-      .agg(count(lit(1)).as("nb"))
-    // per-type totals as a WINDOW over the event_type partitioning the
-    // islands pass below already needs (r15, guide §2.4): the previous
-    // groupBy + broadcast-join re-aggregated the UNPERSISTED hourly frame
-    // from a second full events scan; same exact sums/counts, one scan,
-    // one shared exchange
-    val wt = Window.partitionBy(col("event_type"))
-    val wr = Window.partitionBy(col("event_type")).orderBy(col("hidx"))
-    hourly
-      .withColumn("s", sum(col("nb")).over(wt))
-      .withColumn("c", count(lit(1)).over(wt))
-      .filter(lit(3L) * col("nb") * col("c") >= lit(4L) * col("s"))
-      .withColumn("hidx", expr("unix_micros(h) DIV 3600000000"))
-      .withColumn("grp", col("hidx") - row_number().over(wr))
-      .groupBy(col("event_type"), col("grp"))
-      .agg(min(col("h")).as("burst_start"), max(col("h")).as("burst_end"),
-        count(lit(1)).as("n_hours"), sum(col("nb")).as("n_events"))
-      .filter(col("n_hours") >= 3)
-      .select(col("event_type"), col("burst_start"), col("burst_end"),
-        col("n_hours"), col("n_events"))
+    * each at least 4/3× the type's mean hourly rate — [[burstOn]] at
+    * one-hour buckets. */
+  private def tsBurst(s: SparkSession, d: String): DataFrame =
+    burstOn(U.events(s, d), "event_type", "ts", 3600000000L, 4L, 3L, 3)
+      .select(col("event_type"),
+        timestamp_micros(col("__b0") * 3600000000L).as("burst_start"),
+        timestamp_micros(col("__b1") * 3600000000L).as("burst_end"),
+        col("n_buckets").as("n_hours"), col("n_events"))
       .orderBy("event_type", "burst_start")
+
+  /** The burst kernel behind [[tsBurst]] and
+    * [[graft.api.GraftApi.burstRuns]]: maximal runs of >= `minRun`
+    * consecutive `bucketUs` buckets of `ts`, each at least num/den × the
+    * `typeCol` value's mean bucket rate. The threshold compare is
+    * exact-integer (den·n_b·n_buckets >= num·total — no division), runs
+    * come from the gaps-islands trick on the bucket index. One hash-agg
+    * to buckets, then per-type totals as a WINDOW over the `typeCol`
+    * partitioning the islands pass needs anyway (r15, guide §2.4: a
+    * groupBy + join re-aggregated the unpersisted bucket frame from a
+    * second input scan; same exact sums/counts, one scan, one shared
+    * exchange), then one rollup per island — everything after the first
+    * aggregation is bucket-cardinality regardless of event volume.
+    * Returns (typeCol, __b0, __b1, n_buckets, n_events) with the first
+    * and last bucket index of each run. */
+  private[graft] def burstOn(df: DataFrame, typeCol: String, ts: String,
+      bucketUs: Long, num: Long, den: Long, minRun: Int): DataFrame = {
+    require(bucketUs > 0 && num > 0 && den > 0 && minRun >= 1)
+    val wt = Window.partitionBy(col(typeCol))
+    val wr = Window.partitionBy(col(typeCol)).orderBy(col("__bidx"))
+    df.groupBy(col(typeCol),
+        expr(s"unix_micros($ts) DIV $bucketUs").as("__bidx"))
+      .agg(count(lit(1)).as("__nb"))
+      .withColumn("__s", sum(col("__nb")).over(wt))
+      .withColumn("__c", count(lit(1)).over(wt))
+      .filter(lit(den) * col("__nb") * col("__c") >= lit(num) * col("__s"))
+      .withColumn("__grp", col("__bidx") - row_number().over(wr))
+      .groupBy(col(typeCol), col("__grp"))
+      .agg(min(col("__bidx")).as("__b0"), max(col("__bidx")).as("__b1"),
+        count(lit(1)).as("n_buckets"), sum(col("__nb")).as("n_events"))
+      .filter(col("n_buckets") >= minRun)
+      .drop("__grp")
   }
 
-  /** Peak concurrency per day: sweep-line over the 30-min-gap user
-    * sessions — each session contributes (+1 at start, −1 at end), starts
-    * order before ends at equal instants (inclusive intervals), and the
-    * daily maximum of the running count is the answer. The running sum is
-    * NOT one global sort: points are blocked by day (per-day window), day
-    * baselines come from a prefix over the ~|days| per-day delta totals —
-    * the sample_weighted two-level scan-prefix shape, so the only
-    * single-partition pass touches |days| rows. Day entry level counts
-    * sessions spanning midnight (GREATEST with the baseline). Ties on
-    * (t, delta) cannot disturb the max: each tied row adds the same delta,
-    * so the prefix SET is order-independent. */
-  private def tsMaxConcurrency(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = U.events(s, d)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1L).otherwise(0L))
-      .withColumn("sid", sum(col("new_sess")).over(run))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
-    val pts = sess.select(col("st").as("t"), lit(1L).as("delta"))
-      .unionByName(sess.select(col("en").as("t"), lit(-1L).as("delta")))
-      .withColumn("day", date_trunc("DAY", col("t")))
-    val offs = pts.groupBy(col("day").as("od")).agg(sum(col("delta")).as("dsum"))
-      .withColumn("off", coalesce(
-        sum(col("dsum")).over(Window.orderBy(col("od"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("od"), col("off"))
-    val wd = Window.partitionBy(col("day"))
-      .orderBy(col("t"), col("delta").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pts.withColumn("rsum", sum(col("delta")).over(wd))
-      .groupBy(col("day")).agg(max(col("rsum")).as("peak_in_day"))
-      .join(offs, col("day") === col("od"))
-      .select(col("day"),
-        greatest(col("off") + col("peak_in_day"), col("off"))
-          .as("max_concurrent"))
+  /** Peak concurrency per day over the 30-min-gap user sessions —
+    * [[maxConcurrencyOn]] with the event_id tiebreak. */
+  private def tsMaxConcurrency(s: SparkSession, d: String): DataFrame =
+    maxConcurrencyOn(U.events(s, d), "user_id", "ts", Seq("event_id"),
+        1800000000L)
       .orderBy("day")
+
+  /** The peak-concurrency kernel behind [[tsMaxConcurrency]] and
+    * [[graft.api.GraftApi.maxConcurrency]]: a sweep line over the
+    * [[sessionizeOn]] sessions of (`key`, `ts`) — each session contributes
+    * (+1 at start, −1 at end), starts order before ends at equal instants
+    * (inclusive intervals), and the daily maximum of the running count is
+    * the answer. The running sum is NOT one global sort: points are
+    * blocked by day (per-day window), day baselines come from a prefix
+    * over the ~|days| per-day delta totals — the sample_weighted
+    * two-level scan-prefix shape, so the only single-partition pass
+    * touches |days| rows. Day entry level counts sessions spanning
+    * midnight (GREATEST with the baseline). Ties on (t, delta) cannot
+    * disturb the max: each tied row adds the same delta, so the prefix
+    * SET is order-independent. Returns (day, max_concurrent). */
+  private[graft] def maxConcurrencyOn(df: DataFrame, key: String, ts: String,
+      tiebreak: Seq[String], gapUs: Long): DataFrame = {
+    val sess = sessionizeOn(df, key, ts, tiebreak, gapUs)
+      .groupBy(col(key), col("session_id"))
+      .agg(min(col(ts)).as("__st"), max(col(ts)).as("__en"))
+    val pts = sess.select(col("__st").as("__t"), lit(1L).as("__d"))
+      .unionByName(sess.select(col("__en").as("__t"), lit(-1L).as("__d")))
+      .withColumn("__day", date_trunc("DAY", col("__t")))
+    val offs = pts.groupBy(col("__day").as("__od"))
+      .agg(sum(col("__d")).as("__ds"))
+      .withColumn("__off", coalesce(
+        sum(col("__ds")).over(Window.orderBy(col("__od"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col("__od"), col("__off"))
+    val wd = Window.partitionBy(col("__day"))
+      .orderBy(col("__t"), col("__d").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    pts.withColumn("__rs", sum(col("__d")).over(wd))
+      .groupBy(col("__day")).agg(max(col("__rs")).as("__peak"))
+      .join(offs, col("__day") === col("__od"))
+      .select(col("__day").as("day"),
+        greatest(col("__off") + col("__peak"), col("__off"))
+          .as("max_concurrent"))
   }
 
   /** Autocorrelation function of each type's hourly-total series at lags
@@ -2569,30 +2594,42 @@ object TimeSeries {
   }
 
   /** Hampel filter per user: each reading flagged when it sits more than
-    * 3 scaled MADs from the trailing-7 rolling median — the robust spike
-    * detector that a single outlier cannot drag (unlike a z-score whose
-    * mean and σ it would inflate). The window's median and MAD are EXACT
-    * order statistics of the sorted 7-element frame array (both odd picks
-    * — no halving), and the verdict is the integer cross-multiplication
-    * |x−med|·10⁴ > 44478·mad (3·1.4826 scaled — no float anywhere). One
-    * window sort per user; the frame array is constant-size 7. */
-  private def tsHampel(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val f = w.rowsBetween(-6, Window.currentRow)
-    U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .withColumn("rn", row_number().over(w).cast(LongType))
-      .withColumn("win", sort_array(collect_list(col("vc")).over(f)))
-      .filter(col("rn") >= 7)
-      .withColumn("med7", element_at(col("win"), 4))
-      .withColumn("mad7", element_at(
-        sort_array(transform(col("win"), x => abs(x - col("med7")))), 4))
+    * 3 scaled MADs from the trailing-7 rolling median — [[hampelOn]] with
+    * the (ts, event_id) order. */
+  private def tsHampel(s: SparkSession, d: String): DataFrame =
+    hampelOn(U.events(s, d).withColumn("vc", U.cents(col("value"))),
+        "user_id", Seq(col("ts"), col("event_id")), "vc", 7, 3.0)
       .select(col("user_id"), col("ts"), col("event_id"), col("vc"),
-        col("med7"), col("mad7"),
-        (abs(col("vc") - col("med7")) * 10000L >
-          lit(44478L) * col("mad7")).as("is_outlier"))
+        col("med").as("med7"), col("mad").as("mad7"), col("is_outlier"))
       .orderBy("user_id", "ts", "event_id")
+
+  /** The Hampel kernel behind [[tsHampel]] and
+    * [[graft.api.GraftApi.hampelFilter]]: the robust spike detector that a
+    * single outlier cannot drag (unlike a z-score whose mean and σ it
+    * would inflate). Over each `key`'s rows in `order`, the trailing
+    * `window`'s median and MAD of the exact-integer cents column `vc` are
+    * EXACT order statistics of the sorted frame array (`window` is odd, so
+    * both are single picks — no halving), and the verdict is the integer
+    * cross-multiplication |x−med|·10⁴ > round(nMads·1.4826·10⁴)·mad (no
+    * float anywhere). Appends `med`, `mad` and `is_outlier` to rows whose
+    * frame is full. One window sort per key; the frame array is
+    * constant-size. */
+  private[graft] def hampelOn(df: DataFrame, key: String, order: Seq[Column],
+      vc: String, window: Int, nMads: Double): DataFrame = {
+    require(window >= 3 && window % 2 == 1, s"window must be odd >= 3")
+    val w = Window.partitionBy(col(key)).orderBy(order: _*)
+    val f = w.rowsBetween(-(window - 1), Window.currentRow)
+    val mid = (window + 1) / 2
+    val scale = math.round(nMads * 1.4826 * 10000)
+    df.withColumn("__rn", row_number().over(w).cast(LongType))
+      .withColumn("__win", sort_array(collect_list(col(vc)).over(f)))
+      .filter(col("__rn") >= window)
+      .withColumn("med", element_at(col("__win"), mid))
+      .withColumn("mad", element_at(
+        sort_array(transform(col("__win"), x => abs(x - col("med")))), mid))
+      .withColumn("is_outlier",
+        abs(col(vc) - col("med")) * 10000L > lit(scale) * col("mad"))
+      .drop("__rn", "__win")
   }
 
   /** Tabular (decision-interval) CUSUM alarm per event type: the page-one
@@ -2936,9 +2973,10 @@ object TimeSeries {
 
   /** Peaks-over-threshold per event type: exceedances over the exact
     * per-type P95 (ceil-rank order statistic from the VALUE DOMAIN),
-    * declustered by the standard 1-hour-gap rule — cluster count, mean
-    * excess (the GPD-scale proxy) and the biggest cluster, i.e. the
-    * extreme-value workup one rung past [[aggHillTail]]'s tail index.
+    * declustered by the standard 1-hour-gap rule ([[sessionizeOn]]) —
+    * cluster count, mean excess (the GPD-scale proxy) and the biggest
+    * cluster, i.e. the extreme-value workup one rung past
+    * [[aggHillTail]]'s tail index.
     * The threshold pick is the integer cross-multiplication 20·cum ≥
     * 19·n; exceedance clusters are gaps-islands on the filtered stream;
     * mean excess closes in exact micro-cents via DECIMAL DIV. */
@@ -2952,19 +2990,13 @@ object TimeSeries {
       .withColumn("n", sum(col("c")).over(Window.partitionBy(col("et2"))))
       .filter(col("cum") * 20 >= col("n") * 19)
       .groupBy(col("et2")).agg(min(col("vc")).as("u_c"))
-    val w = Window.partitionBy(col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
     val exc = U.events(s, d)
       .withColumn("vc", U.cents(col("value")))
       .join(broadcast(thr), col("event_type") === col("et2"))
       .filter(col("vc") > col("u_c"))
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("prev", lag(col("us"), 1).over(w))
-      .withColumn("newc", when(col("prev").isNull ||
-        col("us") - col("prev") > 3600000000L, 1L).otherwise(0L))
-      .withColumn("cid", sum(col("newc"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val clusters = exc.groupBy(col("event_type"), col("cid"))
+    val clusters = sessionizeOn(exc, "event_type", "ts", Seq("event_id"),
+        3600000000L)
+      .groupBy(col("event_type"), col("session_id"))
       .agg(count(lit(1)).as("csize"))
     exc.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_exceed"), max(col("u_c")).as("u_c"),
@@ -3188,7 +3220,7 @@ object TimeSeries {
     * with zero-weight probe rows sorting AFTER same-day deltas — the
     * interval count #(fd ≤ t ≤ ld) without joining users to days
     * (|days| delta rows + |death days|×2 probes, all calendar-bounded;
-    * the per-group prefix window is the [[tsMaxConcurrency]] shape).
+    * the per-group prefix window is the [[maxConcurrencyOn]] shape).
     * Returns (grp, day, n_at_risk, n_deaths) for BOTH groups at every
     * pooled death day. */
   private[operators] def survivalRisk(life: DataFrame): DataFrame = {
