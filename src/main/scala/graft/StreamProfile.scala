@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Cost attribution for the streaming replay family (r7 verdict item #5):
   * the bench's 2.3-4.4 s/query on stream_* is NOT data volume — it is the
   * fixed micro-batch machinery. Each memory-sinked replay runs
-  * Trigger.AvailableNow over 8 staged files at 2-4 files/batch with 8
+  * Trigger.AvailableNow over 8 staged files at 4 files/batch with 4
   * shuffle partitions, so every stateful operator commits
-  * batches × 8 state-store instances; this main prints the measured
+  * batches × 4 state-store instances; this main prints the measured
   * batch/commit/update wall-clock per representative query from
   * StreamingQueryProgress (captured by runStream into lastReplayNote).
   * The measured numbers are pinned in BASELINE.md's BENCH-NOTES section.

@@ -80,6 +80,23 @@ object U {
   def scratch(sfDir: String, tag: String): String =
     s"/tmp/graft_scratch/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"
 
+  /** Run `body` with the session confs `kvs` set; in a `finally`, each key
+    * goes back to its prior value, or is unset if it had none. The one
+    * set-and-restore scope in src/main: a per-query knob (replay shuffle
+    * width, state-store provider, overwrite mode) must never leak into the
+    * next query of a shared session. StreamingSpec audits that no other
+    * code in src/main reads or unsets a session conf. */
+  def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Row cap under which a data-derived frame may enter a `broadcast()`
     * join. 1M narrow rows is tens of MB serialized — inside Spark's 8 GB
     * broadcast hard limit and any sane driver/executor memory budget —

@@ -490,14 +490,7 @@ object Dedup {
     // frames plus a driver-synchronized convergence check, so the fixed
     // per-round scheduling cost scales with shuffle width. 8 partitions for
     // the loop; a production run sizes this by |pairs|, not by corpus rows.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "8")
-    try clusterAssignLoop(s, d)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    U.withConfs(s, "spark.sql.shuffle.partitions" -> "8")(clusterAssignLoop(s, d))
   }
 
   /** Edge-count threshold for the single-task union-find fast path — shared

@@ -630,14 +630,10 @@ object Scans {
     val ev = U.events(s, d).select(col("event_id"), col("user_id"),
       col("event_type"), col("value"))
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try ev.filter(col("event_type") === "error")
-      .withColumn("value", col("value") * 2)
-      .write.mode("overwrite").partitionBy("event_type").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    U.withConfs(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      ev.filter(col("event_type") === "error")
+        .withColumn("value", col("value") * 2)
+        .write.mode("overwrite").partitionBy("event_type").parquet(path)
     }
     s.read.parquet(path)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))

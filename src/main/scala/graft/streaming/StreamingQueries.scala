@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{OSQL, U}
 import graft.sources.StatsSink
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
@@ -526,8 +526,18 @@ class IdleTimeoutProcessor extends StatefulProcessor[Long, IdleEvent, IdleAlert]
   * written SEQUENTIALLY (strictly increasing mtimes), so the file stream
   * source batches them in event-time order — watermarks then advance
   * deterministically batch over batch. Every query runs a REAL streaming
-  * pipeline (readStream → transform → writeStream, Trigger.AvailableNow,
-  * memory sink) and returns the sink contents.
+  * pipeline (readStream → transform → writeStream, Trigger.AvailableNow)
+  * and returns the sink contents.
+  *
+  * Runner contract: every memory-sinked replay goes through [[runStream]],
+  * the only code here that names a sink and starts a query. It builds the
+  * streaming frame inside one [[U.withConfs]] scope (replay shuffle width,
+  * changelog checkpointing, the query's state-store posture), unloads the
+  * state-store providers inside that scope after the query ends, and
+  * records [[lastReplayNote]]. The three non-memory sinks (custom DSv2
+  * sink, foreachBatch upsert, parquet file sink) keep their own writers;
+  * the two stateful-capable ones run in the same [[replayScope]]. Staged
+  * input comes from the one writer [[stageRanges]].
   *
   * Four queries are deterministic regardless of micro-batch boundaries and
   * carry DuckDB oracles (complete-mode sliding agg; dedup-within-watermark
@@ -565,35 +575,37 @@ object StreamingQueries {
     name
   }
 
-  /** Split events into 8 sequentially-written ts-range files (once per JVM
-    * per sfDir); returns (dir, schema-carrying batch frame). */
-  private def stage(s: SparkSession, d: String, doubled: Boolean): String = synchronized {
-    val tag = if (doubled) "stream_events_x2" else "stream_events"
-    val dir = U.scratch(d, tag)
-    // v3: versioned so staging dirs written from a superseded fixture layout
-    // (nanos-era events, or pre-explicit-mtime ordering) rebuild rather than
-    // replay stale instants against the regenerated source table
-    val marker = Paths.get(dir, "_GRAFT_STAGED_v3")
-    if (!prepared.contains(dir) && Files.exists(marker)) prepared += dir
+  /** The one staging writer: split `frame` into 8 sequentially-written
+    * `rangeCol`-range files per pass into `dir` (once per JVM per dir, and
+    * across JVMs once `marker` exists), each file stamped with a strictly
+    * increasing mtime, so the file stream source replays the slices in
+    * range order. The marker is versioned: a dir written from a superseded
+    * fixture layout (nanos-era events, pre-explicit-mtime ordering) lacks
+    * the current marker and is rebuilt rather than replayed stale.
+    * `frame` is by name: an already-staged dir costs no table read. */
+  private[graft] def stageRanges(s: SparkSession, frame: => DataFrame,
+      rangeCol: Column, dir: String, passes: Int, marker: String)
+      : String = synchronized {
+    val markerPath = Paths.get(dir, marker)
+    if (!prepared.contains(dir) && Files.exists(markerPath)) prepared += dir
     if (!prepared.contains(dir)) {
-      val ev = U.events(s, d)
-      val bounds = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).head()
+      val src = frame
+      val bounds = src.agg(min(rangeCol).cast(LongType),
+        max(rangeCol).cast(LongType)).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
       val step = math.max((hi - lo) / 8, 1L)
       val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      val passes = if (doubled) 2 else 1
-      // Event-time-ordered replay requires strictly increasing mtimes, but
-      // fast sequential writes can land in the same filesystem-timestamp
-      // tick and FileStreamSource breaks ties by (random) part-file name —
-      // so stamp each batch's new files with an explicit increasing mtime.
+      // Range-ordered replay requires strictly increasing mtimes, but fast
+      // sequential writes can land in the same filesystem-timestamp tick
+      // and FileStreamSource breaks ties by (random) part-file name — so
+      // stamp each slice's new files with an explicit increasing mtime.
       var seq = 0
       val stamped = scala.collection.mutable.Set[String]()
       for (p <- 0 until passes; i <- 0 until 8) {
         val loB = lo + i * step
         val hiB = if (i == 7) hi else lo + (i + 1) * step
-        ev.filter(unix_micros(col("ts")) >= loB && unix_micros(col("ts")) < hiB)
+        src.filter(rangeCol >= loB && rangeCol < hiB)
           .coalesce(1).write.mode("append").parquet(dir)
         val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
           .filter(f => f.getPath.getName.startsWith("part-") &&
@@ -607,63 +619,39 @@ object StreamingQueries {
       }
       // marker makes the staging reusable across JVMs (Verify, Bench, tests
       // all replay the same deterministic files with their original mtimes)
-      Files.createFile(marker)
+      Files.createFile(markerPath)
       prepared += dir
     }
     dir
   }
 
-  /** Split documents into 8 sequentially-written doc_id-range files (once
-    * per JVM per sfDir) with strictly increasing mtimes — the
-    * doc_id-ordered replay whose "first bucket occupant = min id"
-    * contract the near-dup stream rides (the events staging's mtime
-    * discipline applied to the corpus). */
-  private def stageDocs(s: SparkSession, d: String): String = synchronized {
-    val dir = U.scratch(d, "stream_docs")
-    val marker = Paths.get(dir, "_GRAFT_STAGED_v1")
-    if (!prepared.contains(dir) && Files.exists(marker)) prepared += dir
-    if (!prepared.contains(dir)) {
-      val docs = U.tbl(s, d, "documents")
-      val bounds = docs.selectExpr("CAST(min(doc_id) AS BIGINT) AS lo",
-        "CAST(max(doc_id) AS BIGINT) AS hi").head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
-      val step = math.max((hi - lo) / 8, 1L)
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      var seq = 0
-      val stamped = scala.collection.mutable.Set[String]()
-      for (i <- 0 until 8) {
-        val loB = lo + i * step
-        val hiB = if (i == 7) hi else lo + (i + 1) * step
-        docs.filter(col("doc_id") >= loB && col("doc_id") < hiB)
-          .coalesce(1).write.mode("append").parquet(dir)
-        val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .filter(f => f.getPath.getName.startsWith("part-") &&
-            !stamped.contains(f.getPath.getName))
-          .sortBy(_.getPath.getName)
-        for (f <- fresh) {
-          fs.setTimes(f.getPath, 1600000000000L + seq * 1000L, -1L)
-          stamped += f.getPath.getName
-          seq += 1
-        }
-      }
-      Files.createFile(marker)
-      prepared += dir
-    }
-    dir
-  }
+  /** Events staged by event time; `doubled` writes every slice twice (16
+    * files: each event arrives twice, for the dedup replay). */
+  private def stagedEvents(s: SparkSession, d: String, doubled: Boolean): DataFrame =
+    replaySource(s, stageRanges(s, U.events(s, d), unix_micros(col("ts")),
+      U.scratch(d, if (doubled) "stream_events_x2" else "stream_events"),
+      if (doubled) 2 else 1, "_GRAFT_STAGED_v3"))
 
-  /** Shared streaming source over the staged replay — single definition so
-    * every query (memory- or file-sinked) gets identical micro-batching.
-    * filesPerTrigger: watermark-sensitive queries replay at 2 files/batch
-    * (4 batches — enough watermark advances to exercise finalization);
-    * batch-boundary-INDEPENDENT queries may replay at 4 (fewer state-store
-    * commit rounds, same result by construction). */
+  /** Documents staged by doc_id — the doc_id-ordered replay whose "first
+    * bucket occupant = min id" contract the near-dup stream rides. */
+  private def stageDocs(s: SparkSession, d: String): String =
+    stageRanges(s, U.tbl(s, d, "documents"), col("doc_id"),
+      U.scratch(d, "stream_docs"), 1, "_GRAFT_STAGED_v1")
+
+  /** Every replay reads its staged dir at 4 files per trigger (2
+    * micro-batches over the 8 slices): each query here is batch-boundary-
+    * independent — stateless, complete-mode, keyed state over an
+    * order-preserving replay, or append-mode windows that finalize only
+    * on the FINAL watermark — so fewer batches means fewer state-store
+    * commit rounds at the same result. StreamingSpec exercises watermark
+    * finalization at fine batching with MemoryStream instead. */
+  private val FilesPerTrigger = 4
+
+  /** Streaming source over a staged dir — one definition so every query
+    * (memory- or file-sinked) gets identical micro-batching. */
   private val stagedSchemas =
     scala.collection.mutable.Map[String, org.apache.spark.sql.types.StructType]()
-  private def stagedSource(s: SparkSession, d: String, doubled: Boolean,
-      filesPerTrigger: Int = 2): DataFrame = {
-    val dir = stage(s, d, doubled)
+  private def replaySource(s: SparkSession, dir: String): DataFrame = {
     // footer-derived schema cached per staged dir: the staging is immutable
     // once its marker exists, and re-inferring it costs a driver-side footer
     // read per SOURCE per query run (the two-source joins paid it twice)
@@ -671,59 +659,72 @@ object StreamingQueries {
       stagedSchemas.getOrElseUpdate(dir, s.read.parquet(dir).schema)
     }
     s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(dir)
+      .option("maxFilesPerTrigger", FilesPerTrigger.toString).parquet(dir)
   }
 
-  /** Run `body` with shuffle parallelism sized for the replay harness: a
-    * state-store instance is committed PER shuffle partition PER micro-batch,
-    * and at local replay scale those commit rounds dominate wall-clock (the
-    * data per batch is tiny). 4 partitions cuts the fixed cost 8× vs the
-    * session's 32 without changing any result (hash partitioning is
-    * key-exact at any width — r9 re-measured 8 → 4: same oracle rows, ~35%
-    * less family wall-clock). A production deployment sizes this knob to
-    * cluster cores × state volume instead — it is per-pipeline, not global.
+  /** State-store postures a replay runs under, as the confs that set them:
+    * the session's default store; RocksDB (which `transformWithState`
+    * requires); RocksDB with the stream-stream JOIN state in ONE store per
+    * partition (virtual column families, state format v3) instead of
+    * format v2's four — the commit rounds per batch per partition drop 4x,
+    * the dominant cost of the two stream-stream joins. Persistence format
+    * only (the keyToNumValues / keyWithIndexToValue layout inside the
+    * store is unchanged), results byte-identical — oracle re-proven at all
+    * three SFs. */
+  private val DefaultStore = Seq.empty[(String, String)]
+  private val RocksDb = Seq("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  private val RocksDbJoinV3 =
+    RocksDb :+ ("spark.sql.streaming.join.stateFormatVersion" -> "3")
+
+  /** Shuffle width of every replay: a state-store instance is committed
+    * PER shuffle partition PER micro-batch, and at local replay scale
+    * those commit rounds dominate wall-clock (the data per batch is tiny).
+    * 4 partitions cuts the fixed cost 8× vs the session's 32 without
+    * changing any result (hash partitioning is key-exact at any width —
+    * r9 re-measured 8 → 4: same oracle rows, ~35% less family wall-clock).
+    * A production deployment sizes this knob to cluster cores × state
+    * volume instead — it is per-pipeline, not global. */
+  private val ReplayPartitions = 4
+
+  /** Run `body` (one replay) in the replay's conf scope: [[ReplayPartitions]]
+    * shuffle width, RocksDB changelog checkpointing, and the `store`
+    * posture, all restored by [[U.withConfs]]; the state-store providers
+    * are unloaded inside the scope once `body` ends.
     *
-    * r15 measured updates: RocksDB CHANGELOG checkpointing is ON for the
-    * replay (commits write a changelog instead of uploading a full
-    * snapshot per (operator, partition, batch) — family subset 66.3 →
-    * 60.0 s at sf0.1, stream_hysteresis −2.4 s; the production-
+    * r15 measured: CHANGELOG checkpointing makes a commit write a
+    * changelog instead of uploading a full snapshot per (operator,
+    * partition, batch) — family subset 66.3 → 60.0 s at sf0.1,
+    * stream_hysteresis −2.4 s, stream_psi's tiny per-type state ~400 ms
+    * per full-snapshot commit round (8 rounds = 3.1 s); the production-
     * recommended RocksDB posture at any scale, persistence format only,
-    * results byte-identical — 30/30 oracle PASS). Two further knobs were
+    * results byte-identical — 30/30 oracle PASS. Two further knobs were
     * measured and REJECTED: partitions 4 → 2 (66.3 → 69.0 s — commit
     * rounds are already latency-bound at 4) and
     * rocksdb.trackTotalNumberOfRows=false (37.1 → 43.1 s on the TWS
-    * subset, no win worth the lost state-row metrics). */
-  private def withReplayShuffle[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ck = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = s.conf.getOption(key)
-    val prevCk = s.conf.getOption(ck)
-    s.conf.set(key, "4")
-    s.conf.set(ck, "true")
-    try body
-    finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      prevCk match {
-        case Some(v) => s.conf.set(ck, v)
-        case None => s.conf.unset(ck)
-      }
-      // r16 measured: a terminated replay only DEACTIVATES its state-store
-      // providers; the unload (RocksDB close + working-dir delete) waits for
-      // the 60 s maintenance cycle, so back-to-back replays pile up dead
-      // providers until the cycle fires an unload/snapshot storm mid-bench
-      // (subset A/B: the family's late-alphabet queries ran 3-7x their
-      // isolated cost exactly once the first cycle landed). Unloading
-      // eagerly after each replay keeps the cost inside the query that
-      // incurred it; a provider a LIVE query still needs would simply be
-      // reloaded from its checkpoint (the executor-loss path), so this is
-      // safe at any concurrency.
-      try org.apache.spark.sql.graftbridge.Bridge.unloadStateStores()
-      catch { case _: Throwable => }
+    * subset, no win worth the lost state-row metrics).
+    *
+    * r16 measured: a terminated replay only DEACTIVATES its state-store
+    * providers; the unload (RocksDB close + working-dir delete) waits for
+    * the 60 s maintenance cycle, so back-to-back replays pile up dead
+    * providers until the cycle fires an unload/snapshot storm mid-bench
+    * (subset A/B: the family's late-alphabet queries ran 3-7x their
+    * isolated cost exactly once the first cycle landed). Unloading eagerly
+    * after each replay keeps the cost inside the query that incurred it; a
+    * provider a LIVE query still needs would simply be reloaded from its
+    * checkpoint (the executor-loss path), so this is safe at any
+    * concurrency. */
+  private def replayScope[T](s: SparkSession,
+      store: Seq[(String, String)] = DefaultStore)(body: => T): T =
+    U.withConfs(s, Seq(
+        "spark.sql.shuffle.partitions" -> ReplayPartitions.toString,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+          "true") ++ store: _*) {
+      try body
+      finally
+        try org.apache.spark.sql.graftbridge.Bridge.unloadStateStores()
+        catch { case _: Throwable => }
     }
-  }
 
   /** Cost-attribution note for the LAST memory-sinked replay (read by
     * [[graft.StreamProfile]], backs BASELINE.md's BENCH-NOTES): micro-batch
@@ -733,26 +734,32 @@ object StreamingQueries {
     * inherent micro-batch overhead, not a plan defect. */
   private[graft] var lastReplayNote: String = ""
 
-  /** Run a streaming transform of the staged events to completion, return
-    * the memory-sink table. */
-  private def runStream(s: SparkSession, d: String, mode: String,
-      doubled: Boolean = false, filesPerTrigger: Int = 2)
-      (build: DataFrame => DataFrame): DataFrame = withReplayShuffle(s) {
-    val in = stagedSource(s, d, doubled, filesPerTrigger)
+  /** The one memory-sink runner: build `stream` in [[replayScope]], run it
+    * to completion (Trigger.AvailableNow), record [[lastReplayNote]] and
+    * return the sink table. */
+  private def runStream(s: SparkSession, mode: String,
+      store: Seq[(String, String)] = DefaultStore)
+      (stream: => DataFrame): DataFrame = replayScope(s, store) {
     val name = newSinkName(s)
-    val q = build(in).writeStream.outputMode(mode)
+    val q = stream.writeStream.outputMode(mode)
       .format("memory").queryName(name)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val prog = q.recentProgress
     val stateOps = prog.lastOption.map(_.stateOperators.length).getOrElse(0)
     lastReplayNote = s"batches=${prog.length} stateOps=$stateOps " +
-      s"commitRounds=${prog.length * stateOps * 4} " +
+      s"commitRounds=${prog.length * stateOps * ReplayPartitions} " +
       s"stateCommitMs=${prog.flatMap(_.stateOperators.map(_.commitTimeMs)).sum} " +
       s"stateUpdateMs=${prog.flatMap(_.stateOperators.map(_.allUpdatesTimeMs)).sum} " +
       s"batchDurationMs=${prog.map(_.batchDuration).sum}"
     s.table(name)
   }
+
+  /** [[runStream]] over the staged events replay. */
+  private def replayEvents(s: SparkSession, d: String, mode: String,
+      store: Seq[(String, String)] = DefaultStore, doubled: Boolean = false)
+      (build: DataFrame => DataFrame): DataFrame =
+    runStream(s, mode, store)(build(stagedEvents(s, d, doubled)))
 
   /** Append-mode tumbling window + 10-minute watermark: only finalized
     * windows are emitted; late-vs-watermark semantics asserted in tests. */
@@ -761,7 +768,7 @@ object StreamingQueries {
     // FINAL watermark (AvailableNow's no-data batch), so the oracle rows
     // are trigger-count-invariant; StreamingSpec exercises finalization
     // semantics at fine batching with MemoryStream instead
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       in.withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), U.dsum(col("value")).as("sum_value"))
@@ -780,7 +787,7 @@ object StreamingQueries {
     * cannot perturb the result. Oracle: the batch union aggregate filtered
     * to watermark-closed windows over the UNION's own max ts. */
   private def streamUnion(s: SparkSession, d: String): DataFrame =
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       val clicks = in.filter(col("event_type") === "click")
         .select(col("ts"), lit("clicks").as("branch"), col("value"))
       val purchases = in.filter(col("event_type") === "purchase")
@@ -808,7 +815,7 @@ object StreamingQueries {
     // so no row is ever late and the finalized sets depend only on the
     // FINAL watermark — batch boundaries can't perturb the result, and the
     // two stacked stateful operators pay half the state-commit rounds.
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       // NO second withWatermark: the window column keeps its event-time
       // metadata through the agg, and window_time() carries it into the
       // outer window. (A re-watermark on the derived column creates a
@@ -831,7 +838,7 @@ object StreamingQueries {
     * double-count — the idempotent-commit half of streaming exactly-once,
     * demonstrated on our own connector. Totals across epochs equal the
     * plain batch aggregate. */
-  private def customSinkStream(s: SparkSession, d: String): DataFrame = withReplayShuffle(s) {
+  private def customSinkStream(s: SparkSession, d: String): DataFrame = replayScope(s) {
     val run = s"stream_${d.replaceAll("[^A-Za-z0-9.]", "_")}"
     // fresh accumulator per JVM run (epochs of an earlier same-tag run in
     // THIS JVM would otherwise leak into the total)
@@ -841,7 +848,7 @@ object StreamingQueries {
     val ckDir = U.scratch(d, "custom_sink_ckpt")
     org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(ckDir), true)
-    val q = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
+    val q = stagedEvents(s, d, doubled = false)
       .select(col("event_id").as("id"), U.cents(col("value")).as("cents"))
       .writeStream
       .format("graft.sources.StatsSink")
@@ -871,7 +878,7 @@ object StreamingQueries {
     // 4 files/trigger: event_ids are unique in the undoubled replay so the
     // watermark-dedup is an identity; downstream windows finalize on the
     // final watermark — trigger-count-invariant like tumblingWatermark
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       in.withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(Seq("event_id"))
         .join(broadcast(types), col("event_type") === col("et"))
@@ -886,7 +893,7 @@ object StreamingQueries {
     * it carries a full oracle. */
   private def slidingComplete(s: SparkSession, d: String): DataFrame =
     // complete mode: final state = the batch answer at ANY batching => 4
-    runStream(s, d, "complete", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "complete") { in =>
       in.groupBy(window(col("ts"), "1 hour", "15 minutes"))
         .agg(count(lit(1)).as("n"), U.dsum(col("value")).as("sum_value"))
     }.select(col("window.start").as("wstart"), col("n"), col("sum_value"))
@@ -896,7 +903,7 @@ object StreamingQueries {
     * 4 files/trigger — emitted sessions are those closed by the FINAL
     * watermark, trigger-count-invariant like [[tumblingWatermark]]. */
   private def sessionWindows(s: SparkSession, d: String): DataFrame =
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       in.withWatermark("ts", "10 minutes")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), U.dsum(col("value")).as("sum_value"))
@@ -909,7 +916,7 @@ object StreamingQueries {
     * twice): kept rows are value-identical whichever copy wins, so the
     * result oracles to plain SELECT * FROM events. */
   private def dedupStream(s: SparkSession, d: String): DataFrame =
-    runStream(s, d, "append", doubled = true, filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append", doubled = true) { in =>
       // 60-day delay > the 30-day event span: no state eviction, exact dedup
       // (kept rows value-identical whichever copy wins => 4 files/batch safe)
       in.withWatermark("ts", "60 days")
@@ -923,7 +930,7 @@ object StreamingQueries {
   private def statefulRunning(s: SparkSession, d: String): DataFrame =
     // files are time-ranged, the step sorts within each group iterator,
     // state carries across batches => exact at any files/trigger
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       import in.sparkSession.implicits._
       val ds: Dataset[SEvent] = in.select(col("event_id"), col("user_id"),
         col("ts"), graft.U.cents(col("value")).as("cents")).as[SEvent]
@@ -944,13 +951,9 @@ object StreamingQueries {
 
   /** Same running totals through the Spark 4.x `transformWithState` API
     * (ValueState + StatefulProcessor) — requires the RocksDB state store
-    * provider, toggled for just this query and restored after. */
-  private def statefulRunningTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    * provider, the runner's [[RocksDb]] posture. */
+  private def statefulRunningTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("event_id"), col("user_id"), col("ts"),
           graft.U.cents(col("value")).as("cents")).as[SEvent]
@@ -959,11 +962,6 @@ object StreamingQueries {
           TimeMode.None(), OutputMode.Append())
         .toDF()
     }.orderBy("event_id")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** [[HysteresisProcessor]] end-to-end: the SCADA alarm as a LIVE
     * monitor — per-type thresholds computed batch-side (the static
@@ -976,11 +974,7 @@ object StreamingQueries {
     val th = U.events(s, d).groupBy(col("event_type").as("et")).agg(
       floor(percentile(vc, lit(0.75)) * 4).cast(LongType).as("hi_qc"),
       floor(percentile(vc, lit(0.5)) * 4).cast(LongType).as("lo_qc"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.join(broadcast(th), col("event_type") === col("et"))
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
@@ -991,21 +985,13 @@ object StreamingQueries {
           TimeMode.None(), OutputMode.Append())
         .toDF()
     }.orderBy("event_id")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 
   /** [[PageHinkleyProcessor]] end-to-end: the drift monitor as a live
     * stream, then the SAME per-type rollup as the batch twin — one
     * shared oracle (the stream_cusum discipline). */
-  private def pageHinkleyTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+  private def pageHinkleyTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("event_id"), col("event_type"), col("ts"),
           U.cents(col("value")).as("vc")).as[PHEvent]
@@ -1021,11 +1007,6 @@ object StreamingQueries {
           .as("first_alarm_us"),
         max(col("exc")).as("max_excursion_micro"))
       .orderBy("event_type")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** [[NearDupProcessor]] end-to-end — near-dup dedup ON THE STREAM, the
     * shape a crawl-ingest pipeline needs: each arriving doc shingles,
@@ -1044,62 +1025,39 @@ object StreamingQueries {
     * declared query runs it on the fixture staging; StressSpec drives it
     * at 100k docs with planted dups to prove the state path at size. */
   private[graft] def neardupStreamOnDir(s: SparkSession, dir: String)
-      : DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = s.read.parquet(dir).schema
-      val sinkT = withReplayShuffle(s) {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "4").parquet(dir)
-        import s.implicits._
-        val sigs = in
-          .select(col("doc_id"), graft.plans.CustomExprs.shingles3_fast(
-            graft.llm.TextUtil.tokens(col("text"))).as("ss"))
-          .filter(size(col("ss")) > 0)
-          .select(col("doc_id"), graft.plans.CustomExprs.minhash_sigs(
-            graft.plans.CustomExprs.poly_hash_array(col("ss"), 13L), 16)
-            .as("sigs"))
-        val bands = sigs.select(col("doc_id"), explode(array(
-            (0 until 4).map(b => struct(lit(b.toLong).as("band"),
-              concat_ws(":", (0 until 4).map(r =>
-                element_at(col("sigs"), b * 4 + r + 1)): _*).as("bkey"))): _*))
-            .as("bb"))
-          .select(col("doc_id"), col("bb.band").as("band"),
-            col("bb.bkey").as("bkey"))
-        val name = newSinkName(s)
-        val q = bands.as[NDEvent]
-          .groupByKey(e => (e.band, e.bkey))
-          .transformWithState(new NearDupProcessor,
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(name)
-      }
-      sinkT.groupBy(col("doc_id"))
-        .agg(sum(when(col("prior") >= 0, 1L).otherwise(0L)).as("n_bands_hit"),
-          min(when(col("prior") >= 0, col("prior"))).as("dup_of"))
-        .select(col("doc_id"), col("n_bands_hit"),
-          (col("n_bands_hit") > 0).as("is_dup"), col("dup_of"))
-        .orderBy("doc_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      : DataFrame =
+    runStream(s, "append", RocksDb) {
+      import s.implicits._
+      val sigs = replaySource(s, dir)
+        .select(col("doc_id"), graft.plans.CustomExprs.shingles3_fast(
+          graft.llm.TextUtil.tokens(col("text"))).as("ss"))
+        .filter(size(col("ss")) > 0)
+        .select(col("doc_id"), graft.plans.CustomExprs.minhash_sigs(
+          graft.plans.CustomExprs.poly_hash_array(col("ss"), 13L), 16)
+          .as("sigs"))
+      val bands = sigs.select(col("doc_id"), explode(array(
+          (0 until 4).map(b => struct(lit(b.toLong).as("band"),
+            concat_ws(":", (0 until 4).map(r =>
+              element_at(col("sigs"), b * 4 + r + 1)): _*).as("bkey"))): _*))
+          .as("bb"))
+        .select(col("doc_id"), col("bb.band").as("band"),
+          col("bb.bkey").as("bkey"))
+      bands.as[NDEvent]
+        .groupByKey(e => (e.band, e.bkey))
+        .transformWithState(new NearDupProcessor,
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }.groupBy(col("doc_id"))
+      .agg(sum(when(col("prior") >= 0, 1L).otherwise(0L)).as("n_bands_hit"),
+        min(when(col("prior") >= 0, col("prior"))).as("dup_of"))
+      .select(col("doc_id"), col("n_bands_hit"),
+        (col("n_bands_hit") > 0).as("is_dup"), col("dup_of"))
+      .orderBy("doc_id")
 
   /** [[SprtProcessor]] end-to-end: the sequential test as a live stream,
     * then the SAME daily rollup as the batch twin — one shared oracle. */
-  private def sprtTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+  private def sprtTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("event_type"), expr("unix_micros(ts)").as("us"),
           expr("unix_micros(ts) DIV 86400000000").as("dayi"),
@@ -1120,60 +1078,25 @@ object StreamingQueries {
           .when(col("llr") <= -log(lit(19.0)), "accept_h0")
           .otherwise("continue").as("decision"))
       .orderBy("event_type", "dayi")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** [[TokenQuotaProcessor]] end-to-end: the per-source token budget
     * enforced ON THE STREAM over the staged documents replay (the
     * stream_neardup staging), token counts from the shared whitespace
     * tokenizer, output one admission verdict per document. */
-  private def tokenQuotaStream(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val dir = stageDocs(s, d)
-      val schema = s.read.parquet(dir).schema
-      val sinkT = withReplayShuffle(s) {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "4").parquet(dir)
-        import s.implicits._
-        val name = newSinkName(s)
-        val q = in.select(col("doc_id"), col("source"),
-            size(graft.llm.TextUtil.tokens(col("text"))).cast("long")
-              .as("n_tokens"))
-          .as[QuotaEvent]
-          .groupByKey(_.source)
-          .transformWithState(new TokenQuotaProcessor,
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.table(name)
-      }
-      sinkT.orderBy("doc_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def tokenQuotaStream(s: SparkSession, d: String): DataFrame =
+    runStream(s, "append", RocksDb) {
+      import s.implicits._
+      replaySource(s, stageDocs(s, d))
+        .select(col("doc_id"), col("source"),
+          size(graft.llm.TextUtil.tokens(col("text"))).cast("long")
+            .as("n_tokens"))
+        .as[QuotaEvent]
+        .groupByKey(_.source)
+        .transformWithState(new TokenQuotaProcessor,
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }.orderBy("doc_id")
 
-  /** [[IdleTimeoutProcessor]] end-to-end: >30-min idle alerts via
-    * EVENT-TIME TIMERS under a 10-minute watermark — gaps alert on the
-    * next arrival, trailing idles alert when the (ms-granular) watermark
-    * passes last+30min, including Spark's extra pending-timer batch after
-    * AvailableNow drains. Relies on the staged replay's event-time file
-    * order (the [[SessionizeProcessor]] assumption): a timer can never
-    * fire before the gap it guards is decidable, because every event in a
-    * later file is later than every event before it. Exactly oracle-able:
-    * gaps from lag(), trailing idles from the ms-floored watermark
-    * arithmetic Spark actually uses (watermark = floor-ms(max ts) −
-    * 600000 ms). */
   /** [[CusumProcessor]] end-to-end: the tabular CUSUM recursion as a
     * stateful stream, per-type stats from a batch-side broadcast (the
     * stream-static join every threshold alarm runs), then the SAME
@@ -1182,11 +1105,7 @@ object StreamingQueries {
     val vc = U.cents(col("value"))
     val stats = U.events(s, d).groupBy(col("event_type").as("et"))
       .agg(count(lit(1)).as("n"), sum(vc).as("sx"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.join(broadcast(stats), col("event_type") === col("et"))
         .select(col("event_id"), col("event_type"), col("ts"),
@@ -1203,17 +1122,20 @@ object StreamingQueries {
         min(when(col("hi"), col("us"))).as("first_high_us"),
         min(when(col("lo"), col("us"))).as("first_low_us"))
       .orderBy("event_type")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 
+  /** [[IdleTimeoutProcessor]] end-to-end: >30-min idle alerts via
+    * EVENT-TIME TIMERS under a 10-minute watermark — gaps alert on the
+    * next arrival, trailing idles alert when the (ms-granular) watermark
+    * passes last+30min, including Spark's extra pending-timer batch after
+    * AvailableNow drains. Relies on the staged replay's event-time file
+    * order (the [[SessionizeProcessor]] assumption): a timer can never
+    * fire before the gap it guards is decidable, because every event in a
+    * later file is later than every event before it. Exactly oracle-able:
+    * gaps from lag(), trailing idles from the ms-floored watermark
+    * arithmetic Spark actually uses (watermark = floor-ms(max ts) −
+    * 600000 ms). */
   private def idleTimeoutTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // 4 files/batch (the family default): the alert set is batch-boundary-
     // invariant by construction — gap alerts are pure functions of
     // consecutive (user, ts) pairs in the event-time-ordered replay, timer
@@ -1221,7 +1143,7 @@ object StreamingQueries {
     // timer batch), and the distinct() absorbs the only race — so halving
     // the batches (r16: 5 -> 3, ~0.45 s/batch at sf0.1) cannot perturb the
     // result; oracle re-proven at all three SFs.
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.withWatermark("ts", "10 minutes")
         .select(col("user_id"), col("ts")).as[IdleEvent]
@@ -1234,20 +1156,12 @@ object StreamingQueries {
         timestamp_micros(col("idle_since_us")).as("idle_since"),
         timestamp_micros(col("idle_since_us") + 1800000000L).as("alert_ts"))
       .orderBy("user_id", "idle_since")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 
   /** [[SessionizeProcessor]] end-to-end: custom-state session windows whose
     * kept emissions reproduce the batch lag-gap sessionization exactly. */
-  private def sessionizeTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+  private def sessionizeTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("event_id"), col("user_id"), col("ts"),
           graft.U.cents(col("value")).as("cents")).as[SEvent]
@@ -1266,76 +1180,19 @@ object StreamingQueries {
         col("n_events"),
         (col("cents").cast(DoubleType) / 100.0).as("sum_value"))
       .orderBy("user_id", "session_id")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** Stream-stream windowed join: clicks joined to the same user's purchases
     * within the following 4 hours — both sides watermarked, time-interval
     * join condition (the flagship two-stream Structured Streaming shape).
     * The 60-day watermark delay exceeds the 30-day replay span, so no state
     * is evicted mid-replay and the inner join emits EXACTLY the batch
-    * answer regardless of micro-batch boundaries => full DuckDB oracle. */
-  /** Run `body` with the streaming JOIN state kept in ONE RocksDB store per
-    * partition (virtual column families, state format v3) instead of the
-    * four separate stores of format v2 — the commit rounds per batch per
-    * partition drop 4x, which at replay scale is the dominant cost of the
-    * two stream-stream joins. Persistence format only (the keyToNumValues /
-    * keyWithIndexToValue layout inside the store is unchanged), results
-    * byte-identical — oracle re-proven at all three SFs. Set+restore, the
-    * withReplayShuffle discipline. */
-  private def withJoinStateV3[T](s: SparkSession)(body: => T): T = {
-    val pk = "spark.sql.streaming.stateStore.providerClass"
-    val vk = "spark.sql.streaming.join.stateFormatVersion"
-    val prevP = s.conf.getOption(pk)
-    val prevV = s.conf.getOption(vk)
-    s.conf.set(pk,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(vk, "3")
-    try body
-    finally {
-      prevP match {
-        case Some(v) => s.conf.set(pk, v)
-        case None => s.conf.unset(pk)
-      }
-      prevV match {
-        case Some(v) => s.conf.set(vk, v)
-        case None => s.conf.unset(vk)
-      }
-    }
-  }
-
+    * answer regardless of micro-batch boundaries => full DuckDB oracle.
+    * Inner join + no mid-replay eviction => batch-boundary-independent, so
+    * the 4-files/batch replay (2 batches) is safe: join state is committed
+    * once per batch per partition, the dominant cost. */
   private def streamStreamJoin(s: SparkSession, d: String): DataFrame =
-    withJoinStateV3(s) { streamStreamJoinImpl(s, d) }
-
-  private def streamStreamJoinImpl(s: SparkSession, d: String): DataFrame = withReplayShuffle(s) {
-    // inner join + no mid-replay eviction => batch-boundary-independent,
-    // so replay at 4 files/batch (2 batches): join state is committed to
-    // the state store once per batch per partition, the dominant cost
-    val clicks = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("c_event_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "60 days")
-    val purchases = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_event_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"), col("value").as("p_value"))
-      .withWatermark("p_ts", "60 days")
-    val name = newSinkName(s)
-    val q = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 4 HOURS"))
-      .select(col("c_event_id"), col("p_event_id"), col("c_user").as("user_id"),
-        col("c_ts"), col("p_ts"), col("p_value"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(name).orderBy("c_event_id", "p_event_id")
-  }
+    clickPurchaseJoin(s, d, "60 days", "inner")
+      .orderBy("c_event_id", "p_event_id")
 
   /** Stream-stream LEFT OUTER interval join: same click→purchase pairing as
     * [[streamStreamJoin]], but unmatched clicks are emitted with NULL right
@@ -1353,30 +1210,30 @@ object StreamingQueries {
     * within ~5 h of stream end stay in state — their window never provably
     * closes — mirrored in the oracle's cutoff. */
   private def streamStreamLeftJoin(s: SparkSession, d: String): DataFrame =
-    withJoinStateV3(s) { streamStreamLeftJoinImpl(s, d) }
+    clickPurchaseJoin(s, d, "1 hour", "left_outer")
+      .orderBy(col("c_event_id"), col("p_event_id"))
 
-  private def streamStreamLeftJoinImpl(s: SparkSession, d: String): DataFrame = withReplayShuffle(s) {
-    val clicks = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
+  /** The two stream-stream joins: each event type is its own source over
+    * the staged replay, both watermarked by `delay`, joined on user within
+    * [c_ts, c_ts + 4 h]; join state in [[RocksDbJoinV3]]. */
+  private def clickPurchaseJoin(s: SparkSession, d: String, delay: String,
+      joinType: String): DataFrame = runStream(s, "append", RocksDbJoinV3) {
+    val clicks = stagedEvents(s, d, doubled = false)
       .filter(col("event_type") === "click")
       .select(col("event_id").as("c_event_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
+      .withWatermark("c_ts", delay)
+    val purchases = stagedEvents(s, d, doubled = false)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_event_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"), col("value").as("p_value"))
-      .withWatermark("p_ts", "1 hour")
-    val name = newSinkName(s)
-    val q = clicks.join(purchases,
+      .withWatermark("p_ts", delay)
+    clicks.join(purchases,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 4 HOURS"), "left_outer")
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 4 HOURS"), joinType)
       .select(col("c_event_id"), col("p_event_id"), col("c_user").as("user_id"),
         col("c_ts"), col("p_ts"), col("p_value"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(name).orderBy(col("c_event_id"), col("p_event_id"))
   }
 
   /** Streaming read through the custom DSv2 connector
@@ -1384,18 +1241,14 @@ object StreamingQueries {
     * drains in admission-controlled 5k-row micro-batches (4 batches);
     * complete-mode aggregate => final state equals the batch read => the
     * same generator-arithmetic oracle as scan_custom_source. */
-  private def customSourceStream(s: SparkSession, d: String): DataFrame = withReplayShuffle(s) {
-    val name = newSinkName(s)
-    val q = s.readStream.format("graft.sources.DeterministicSource")
-      .option("rows", "20000").option("slices", "8").option("batchRows", "5000")
-      .load()
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("sum_cents"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(name).orderBy("bucket")
-  }
+  private def customSourceStream(s: SparkSession, d: String): DataFrame =
+    runStream(s, "complete") {
+      s.readStream.format("graft.sources.DeterministicSource")
+        .option("rows", "20000").option("slices", "8").option("batchRows", "5000")
+        .load()
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("sum_cents"))
+    }.orderBy("bucket")
 
   /** foreachBatch upsert sink (the merge pattern every CDC/serving pipeline
     * runs): each micro-batch's per-user latest row merges into a keyed
@@ -1406,7 +1259,7 @@ object StreamingQueries {
     * untouched source). Batches replay in event-time order, and the merge
     * picks the max key regardless, so the final store equals the batch
     * latest-per-user answer at ANY batching => full oracle. */
-  private def foreachBatchUpsert(s: SparkSession, d: String): DataFrame = withReplayShuffle(s) {
+  private def foreachBatchUpsert(s: SparkSession, d: String): DataFrame = replayScope(s) {
     val base = U.scratch(d, s"febatch_${nameCounter.incrementAndGet()}")
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     for (i <- 0 to 1)
@@ -1418,7 +1271,7 @@ object StreamingQueries {
       .filter(col("rn") === 1)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
     val lastDst = new java.util.concurrent.atomic.AtomicReference[String]()
-    val q = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
+    val q = stagedEvents(s, d, doubled = false)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val src = s"$base/v${batchId % 2}"
@@ -1444,7 +1297,7 @@ object StreamingQueries {
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("event_type"))).cast(LongType).as("type_code"))
     // stateless enrichment => batch-boundary-independent => 4 files/batch
-    runStream(s, d, "append", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "append") { in =>
       in.join(broadcast(dim), col("event_type") === col("et"))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("type_code"), col("value"))
@@ -1461,7 +1314,7 @@ object StreamingQueries {
     fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
     fs.delete(new org.apache.hadoop.fs.Path(ckDir), true)
     // stateless projection sink => batch-boundary-independent => 4
-    val q = stagedSource(s, d, doubled = false, filesPerTrigger = 4)
+    val q = stagedEvents(s, d, doubled = false)
       .withColumn("value_cents", graft.U.cents(col("value")))
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckDir)
@@ -1476,7 +1329,7 @@ object StreamingQueries {
     * batching can't perturb it => full oracle. The production shape of a
     * live "top movers" leaderboard. */
   private def streamTopk(s: SparkSession, d: String): DataFrame =
-    runStream(s, d, "complete", filesPerTrigger = 4) { in =>
+    replayEvents(s, d, "complete") { in =>
       in.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(graft.U.cents(col("value"))).as("spend_cents"))
@@ -1484,30 +1337,12 @@ object StreamingQueries {
         .limit(3)
     }.orderBy(col("spend_cents").desc, col("event_type"))
 
-  /** [[EwmaProcessor]] end-to-end: the per-user EWMA maintained LIVE on
-    * the stream, finals matching the batch ts_ewma fold bit-for-bit.
-    * Each trigger's rows sort by (event time, event_id) and the staged
-    * replay is event-time-ordered across batches, so the stream applies
-    * the IDENTICAL double-op chain in the identical order as the batch
-    * list fold — which is why it shares the ts_ewma oracle VERBATIM
-    * (the stream_sprt discipline). State is one (count, Double) per
-    * user; the running emission per batch rolls up by the monotone
-    * count. */
-  /** [[DrawdownProcessor]] end-to-end: the per-user running-peak
-    * drawdown LIVE — the risk/degradation trajectory `ts_drawdown`
-    * computes in batch, emitted per event as it arrives. Exactly the
-    * batch window row-for-row (one Long of state per user), so the twin
-    * shares the `ts_drawdown` oracle VERBATIM. */
   /** [[GapProcessor]] end-to-end: per-user sensor-dropout gaps LIVE —
     * exactly the batch `ts_gap_detect` rows, emitted the moment the
     * closing event arrives (one Long of state per user; verbatim-shared
     * oracle). */
-  private def gapDetectTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+  private def gapDetectTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("user_id"), expr("unix_micros(ts)").as("us"),
           col("event_id"))
@@ -1522,18 +1357,14 @@ object StreamingQueries {
       ((col("us") - col("prev_us")).cast(DoubleType) / lit(1000000.0))
         .as("gap_seconds"))
       .orderBy("user_id", "gap_start")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
-  private def drawdownTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+  /** [[DrawdownProcessor]] end-to-end: the per-user running-peak
+    * drawdown LIVE — the risk/degradation trajectory `ts_drawdown`
+    * computes in batch, emitted per event as it arrives. Exactly the
+    * batch window row-for-row (one Long of state per user), so the twin
+    * shares the `ts_drawdown` oracle VERBATIM. */
+  private def drawdownTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("user_id"), expr("unix_micros(ts)").as("us"),
           col("event_id"), graft.U.cents(col("value")).as("c"))
@@ -1547,18 +1378,18 @@ object StreamingQueries {
       ((col("peak_c") - col("c")) / lit(100.0)).cast(DoubleType)
         .as("drawdown"))
       .orderBy("event_id")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
-  private def ewmaTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runStream(s, d, "append", filesPerTrigger = 4) { in =>
+  /** [[EwmaProcessor]] end-to-end: the per-user EWMA maintained LIVE on
+    * the stream, finals matching the batch ts_ewma fold bit-for-bit.
+    * Each trigger's rows sort by (event time, event_id) and the staged
+    * replay is event-time-ordered across batches, so the stream applies
+    * the IDENTICAL double-op chain in the identical order as the batch
+    * list fold — which is why it shares the ts_ewma oracle VERBATIM
+    * (the stream_sprt discipline). State is one (count, Double) per
+    * user; the running emission per batch rolls up by the monotone
+    * count. */
+  private def ewmaTws(s: SparkSession, d: String): DataFrame =
+    replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
       in.select(col("user_id"), expr("unix_micros(ts)").as("us"),
           col("event_id"), col("value"))
@@ -1571,11 +1402,6 @@ object StreamingQueries {
       .agg(max(struct(col("n"), col("ewma"))).as("m"))
       .select(col("user_id"), col("m.n").as("n"), col("m.ewma").as("ewma"))
       .orderBy("user_id")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** [[SrmFirstSeen]] end-to-end: the sample-ratio-mismatch guardrail
     * LIVE per day — each (type, user) admits once with its first-arrival
@@ -1584,39 +1410,30 @@ object StreamingQueries {
     * expression) is the trajectory an experiment dashboard watches to
     * catch a broken randomizer the day it breaks, not at readout. */
   private def srmTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val firsts = runStream(s, d, "append", filesPerTrigger = 4) { in =>
-        import in.sparkSession.implicits._
-        in.select(col("event_type"), col("user_id"),
-            expr("unix_micros(ts)").as("us"),
-            expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-          .as[SrmEvent]
-          .groupByKey(e => (e.event_type, e.user_id))
-          .transformWithState(new SrmFirstSeen,
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-      }
-      val w = Window.partitionBy(col("event_type")).orderBy(col("dayi"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      firsts.groupBy(col("event_type"), col("dayi"))
-        .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("a0"),
-          sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("a1"))
-        .withColumn("n0", sum(col("a0")).over(w))
-        .withColumn("n1", sum(col("a1")).over(w))
-        .select(col("event_type"), col("dayi"), col("n0"), col("n1"),
-          expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * (n0 - n1) * " +
-            "(n0 - n1)) DIV nullif(n0 + n1, 0) AS BIGINT)")
-            .as("srm_micro"))
-        .withColumn("flagged", col("srm_micro") > 3841459L)
-        .orderBy("event_type", "dayi")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+    val firsts = replayEvents(s, d, "append", RocksDb) { in =>
+      import in.sparkSession.implicits._
+      in.select(col("event_type"), col("user_id"),
+          expr("unix_micros(ts)").as("us"),
+          expr("unix_micros(ts) DIV 86400000000").as("dayi"))
+        .as[SrmEvent]
+        .groupByKey(e => (e.event_type, e.user_id))
+        .transformWithState(new SrmFirstSeen,
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
     }
+    val w = Window.partitionBy(col("event_type")).orderBy(col("dayi"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    firsts.groupBy(col("event_type"), col("dayi"))
+      .agg(sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("a0"),
+        sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("a1"))
+      .withColumn("n0", sum(col("a0")).over(w))
+      .withColumn("n1", sum(col("a1")).over(w))
+      .select(col("event_type"), col("dayi"), col("n0"), col("n1"),
+        expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * (n0 - n1) * " +
+          "(n0 - n1)) DIV nullif(n0 + n1, 0) AS BIGINT)")
+          .as("srm_micro"))
+      .withColumn("flagged", col("srm_micro") > 3841459L)
+      .orderBy("event_type", "dayi")
   }
 
   /** The PSI drift monitor LIVE — the third member of the streaming
@@ -1628,79 +1445,55 @@ object StreamingQueries {
     * so the trajectory's last day CLOSES on the batch agg_psi answer
     * (StreamingSpec-pinned). */
   private def psiTws(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = s.conf.getOption(key)
-    val prevCl = s.conf.getOption(clKey)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // state here is ONE 10-long array per event_type, yet full-snapshot
-    // checkpointing costs ~400 ms per commit round (zip + upload of the
-    // whole RocksDB instance, 8 rounds = 3.1 s measured) — changelog
-    // checkpointing writes just the delta, the right mode for tiny
-    // fast-commit state
-    s.conf.set(clKey, "true")
-    try {
-      val snaps0 = runStream(s, d, "append", filesPerTrigger = 4) { in =>
-        import in.sparkSession.implicits._
-        in.withColumn("vc", U.cents(col("value")))
-          .select(col("event_type"), expr("unix_micros(ts)").as("us"),
-            col("event_id"),
-            expr("least(9, vc DIV 1000)").as("band"),
-            expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-          .as[PsiEvent]
-          .groupByKey(_.event_type)
-          .transformWithState(new PsiBandTracker,
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-      }
-      val snaps = U.track(snaps0
-        .groupBy(col("event_type"), col("dayi"), col("band"))
-        .agg(max(col("cnt")).as("cnt"))
-        .persist())
-      val sp = snaps.agg(
-        expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-      val preDay = snaps.crossJoin(broadcast(sp))
-        .filter(col("dayi") < col("sd"))
-        .groupBy(col("event_type").as("pt"))
-        .agg(max(col("dayi")).as("pd"))
-      val pre = snaps.join(broadcast(preDay),
-          col("event_type") === col("pt") && col("dayi") === col("pd"))
-        .select(col("event_type").as("qt"), col("band").as("qb"),
-          col("cnt").as("c0"))
-      val post = snaps.crossJoin(broadcast(sp))
-        .filter(col("dayi") >= col("sd"))
-        .join(broadcast(pre), col("event_type") === col("qt") &&
-          col("band") === col("qb"), "left")
-        .select(col("event_type"), col("dayi"), col("band"),
-          coalesce(col("c0"), lit(0L)).as("c0"),
-          (col("cnt") - coalesce(col("c0"), lit(0L))).as("c1"))
-      val tot = post.groupBy(col("event_type").as("tt"), col("dayi").as("td"))
-        .agg(sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
-      post.join(broadcast(tot), col("event_type") === col("tt") &&
-          col("dayi") === col("td"))
-        .withColumn("term", expr("CAST(floor(1000000.0 * " +
-          "((CAST(c0 + 1 AS DOUBLE) / CAST(n0 + 10 AS DOUBLE)) - " +
-          "(CAST(c1 + 1 AS DOUBLE) / CAST(n1 + 10 AS DOUBLE))) * " +
-          "ln((CAST(c0 + 1 AS DOUBLE) / CAST(n0 + 10 AS DOUBLE)) / " +
-          "(CAST(c1 + 1 AS DOUBLE) / CAST(n1 + 10 AS DOUBLE)))) " +
-          "AS BIGINT)"))
-        .groupBy(col("event_type"), col("dayi"))
-        .agg(max(col("n0")).as("n_pre"), max(col("n1")).as("n_post"),
-          sum(col("term")).as("psi_micro"))
-        .withColumn("flagged", col("psi_micro") > 200000L)
-        .orderBy("event_type", "dayi")
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      prevCl match {
-        case Some(v) => s.conf.set(clKey, v)
-        case None => s.conf.unset(clKey)
-      }
+    val snaps0 = replayEvents(s, d, "append", RocksDb) { in =>
+      import in.sparkSession.implicits._
+      in.withColumn("vc", U.cents(col("value")))
+        .select(col("event_type"), expr("unix_micros(ts)").as("us"),
+          col("event_id"),
+          expr("least(9, vc DIV 1000)").as("band"),
+          expr("unix_micros(ts) DIV 86400000000").as("dayi"))
+        .as[PsiEvent]
+        .groupByKey(_.event_type)
+        .transformWithState(new PsiBandTracker,
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
     }
+    val snaps = U.track(snaps0
+      .groupBy(col("event_type"), col("dayi"), col("band"))
+      .agg(max(col("cnt")).as("cnt"))
+      .persist())
+    val sp = snaps.agg(
+      expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
+    val preDay = snaps.crossJoin(broadcast(sp))
+      .filter(col("dayi") < col("sd"))
+      .groupBy(col("event_type").as("pt"))
+      .agg(max(col("dayi")).as("pd"))
+    val pre = snaps.join(broadcast(preDay),
+        col("event_type") === col("pt") && col("dayi") === col("pd"))
+      .select(col("event_type").as("qt"), col("band").as("qb"),
+        col("cnt").as("c0"))
+    val post = snaps.crossJoin(broadcast(sp))
+      .filter(col("dayi") >= col("sd"))
+      .join(broadcast(pre), col("event_type") === col("qt") &&
+        col("band") === col("qb"), "left")
+      .select(col("event_type"), col("dayi"), col("band"),
+        coalesce(col("c0"), lit(0L)).as("c0"),
+        (col("cnt") - coalesce(col("c0"), lit(0L))).as("c1"))
+    val tot = post.groupBy(col("event_type").as("tt"), col("dayi").as("td"))
+      .agg(sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
+    post.join(broadcast(tot), col("event_type") === col("tt") &&
+        col("dayi") === col("td"))
+      .withColumn("term", expr("CAST(floor(1000000.0 * " +
+        "((CAST(c0 + 1 AS DOUBLE) / CAST(n0 + 10 AS DOUBLE)) - " +
+        "(CAST(c1 + 1 AS DOUBLE) / CAST(n1 + 10 AS DOUBLE))) * " +
+        "ln((CAST(c0 + 1 AS DOUBLE) / CAST(n0 + 10 AS DOUBLE)) / " +
+        "(CAST(c1 + 1 AS DOUBLE) / CAST(n1 + 10 AS DOUBLE)))) " +
+        "AS BIGINT)"))
+      .groupBy(col("event_type"), col("dayi"))
+      .agg(max(col("n0")).as("n_pre"), max(col("n1")).as("n_post"),
+        sum(col("term")).as("psi_micro"))
+      .withColumn("flagged", col("psi_micro") > 200000L)
+      .orderBy("event_type", "dayi")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -205,9 +205,7 @@ class PlanSpec extends SparkTestBase {
       // planner would broadcast, so force the shuffle path (at 100 TB the
       // fact⋈filtered-dim IS a shuffle join and no forcing is needed)
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.U.withConfs(spark, confs: _*) {
       import org.apache.spark.sql.functions._
       val li = graft.U.tbl(spark, sfDir, "lineitem")
       val o = graft.U.tbl(spark, sfDir, "orders")
@@ -216,9 +214,6 @@ class PlanSpec extends SparkTestBase {
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
         .queryExecution.executedPlan.toString
       assert(p.contains("might_contain"), s"no bloom probe injected:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -380,9 +375,7 @@ class PlanSpec extends SparkTestBase {
       // that trade is exactly the point, so opt in explicitly
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.U.withConfs(spark, confs: _*) {
       val ev = graft.U.events(spark, sfDir).drop("ts")
       // collapse most users onto one hot key => one shuffle partition
       // carries ~2/3 of the rows; replicate ×16 so the hot partition's
@@ -417,9 +410,6 @@ class PlanSpec extends SparkTestBase {
       val p = j.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE did not mark the skew split [mapstats: $stats]:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -367,5 +369,92 @@ class StreamingSpec extends SparkTestBase {
     assert(run1.head.getLong(0) == run2.head.getLong(0) &&
       run1.head.getLong(1) == run2.head.getLong(1),
       s"re-run must reproduce identical totals: ${run1.head} vs ${run2.head}")
+  }
+
+  test("rerouted replays record their own replay note") {
+    // the runner is the one place a memory-sinked replay records its note;
+    // a replay that bypassed it would leave the note blank here
+    for (name <- Seq("stream_neardup", "stream_token_quota",
+        "stream_custom_source")) {
+      streaming.StreamingQueries.lastReplayNote = ""
+      streaming.StreamingQueries.queries(name)(spark, sfDir)
+      val note = streaming.StreamingQueries.lastReplayNote
+      val batches = "batches=(\\d+)".r.findFirstMatchIn(note)
+        .map(_.group(1).toInt)
+      assert(batches.exists(_ > 0), s"$name left no replay note: '$note'")
+    }
+  }
+
+  test("replays and U.withConfs restore every conf they touch, set or unset") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "spark.sql.streaming.join.stateFormatVersion")
+    val sentinels = keys.zip(Seq("5",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+      "false", "2"))
+    val inBody = keys.zip(Seq("3",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "true", "3"))
+    def snapshot(): Seq[(String, Option[String])] =
+      keys.map(k => k -> spark.conf.getOption(k))
+    def exercise(label: String): Unit = {
+      val before = snapshot()
+      for (q <- Seq("stream_gap_detect", "stream_stream_join")) {
+        streaming.StreamingQueries.queries(q)(spark, sfDir)
+        assert(snapshot() == before, s"[$label] $q leaked a conf")
+      }
+      intercept[IllegalStateException] {
+        U.withConfs(spark, inBody: _*) { throw new IllegalStateException("body") }
+      }
+      assert(snapshot() == before, s"[$label] a throwing body leaked a conf")
+    }
+    // the outer scope puts the shared session's own values back at the end
+    U.withConfs(spark, sentinels: _*) {
+      exercise("sentinel values")
+      keys.foreach(spark.conf.unset)
+      exercise("unset")
+    }
+  }
+
+  test("one conf scope and one memory-sink runner: no copies in src/main") {
+    // (start, end) of `def name` up to its balanced closing brace
+    def defSpan(code: String, name: String): (Int, Int) = {
+      val a = code.indexOf(s"def $name")
+      assert(a >= 0, s"def $name not found")
+      var i = code.indexOf('{', a)
+      var depth = 0
+      do {
+        if (code(i) == '{') depth += 1 else if (code(i) == '}') depth -= 1
+        i += 1
+      } while (depth > 0)
+      (a, i)
+    }
+    def without(code: String, name: String): String = {
+      val (a, b) = defSpan(code, name)
+      code.substring(0, a) + code.substring(b)
+    }
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    def rel(p: java.nio.file.Path) = root.relativize(p).toString
+    val confCall = """conf\s*\.\s*(getOption|unset)\s*\(""".r
+    val confHits = files.filter { p =>
+      val code = java.nio.file.Files.readString(p)
+      val rest = if (rel(p) == "graft/U.scala") without(code, "withConfs") else code
+      confCall.findFirstIn(rest).isDefined
+    }.map(rel)
+    assert(confHits.isEmpty, s"session conf read or unset outside " +
+      s"U.withConfs in $confHits — set and restore through U.withConfs")
+    val memorySink = """format\s*\(\s*"memory"\s*\)""".r
+    val runner = "graft/streaming/StreamingQueries.scala"
+    val sinkHits = files.filter(p => rel(p).startsWith("graft/streaming/"))
+      .filter { p =>
+        val code = java.nio.file.Files.readString(p)
+        val rest = if (rel(p) == runner) without(code, "runStream") else code
+        memorySink.findFirstIn(rest).isDefined
+      }.map(rel)
+    assert(sinkHits.isEmpty, s"memory sink started outside " +
+      s"StreamingQueries.runStream in $sinkHits — route the replay through it")
   }
 }

@@ -402,27 +402,14 @@ class StressSpec extends SparkTestBase {
           (col("seed") * 131L + lit(j.toLong * 17L)) % 1000003L)) :+
           concat(lit("t"), col("tid")): _*))
       .select(col("doc_id"), col("text"))
-    // stage 8 doc_id-range files with increasing mtimes (the stageDocs
-    // replay contract: batches arrive in doc_id order)
+    // stage 8 doc_id-range files with increasing mtimes through the
+    // declared replay's staging writer (batches arrive in doc_id order);
+    // the dir is cleared first so every run restages this corpus
     val dir = U.scratch(sfDir, "stress_neardup")
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    val stamped = scala.collection.mutable.Set[String]()
-    var seq = 0
-    for (i <- 0 until 8) {
-      d0.filter(col("doc_id") >= i * 12500L && col("doc_id") < (i + 1) * 12500L)
-        .coalesce(1).write.mode("append").parquet(dir)
-      val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(f => f.getPath.getName.startsWith("part-") &&
-          !stamped.contains(f.getPath.getName))
-        .sortBy(_.getPath.getName)
-      for (f <- fresh) {
-        fs.setTimes(f.getPath, 1600000000000L + seq * 1000L, -1L)
-        stamped += f.getPath.getName
-        seq += 1
-      }
-    }
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(dir), true)
+    streaming.StreamingQueries.stageRanges(spark, d0, col("doc_id"), dir,
+      passes = 1, marker = "_GRAFT_STAGED_stress_v1")
     val got = streaming.StreamingQueries.neardupStreamOnDir(spark, dir)
       .collect()
     // batch banding twin: same shingle/minhash/band expressions, per-band
