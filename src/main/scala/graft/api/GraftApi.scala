@@ -433,13 +433,9 @@ object GraftApi {
     * of the hot posting lists' quadratic blowup. */
   def nearDupPairs(df: DataFrame, id: String, text: String,
       threshold: Double = 0.2, shingleDfCap: Long = 1000L): DataFrame =
-    // tokens get their own projection: inlined into shingles3 they would be
-    // re-split for every shingle position (no subexpression reuse in HOFs)
     graft.llm.Dedup.jaccardPairsOn(
-        df.select(col(id).as("doc_id"),
-            graft.llm.TextUtil.tokens(col(text)).as("__tk"))
-          .select(col("doc_id"),
-            graft.llm.TextUtil.shingles3(col("__tk")).as("ss")),
+        df.select(col(id).as("doc_id"), graft.plans.CustomExprs.shingles3_fast(
+          graft.llm.TextUtil.tokens(col(text))).as("ss")),
         shingleDfCap)
       .filter(col("jac") >= threshold)
       .select(col("da").as("id_a"), col("db").as("id_b"), col("common"),
@@ -499,11 +495,10 @@ object GraftApi {
   def bloomPrefilter(build: DataFrame, probe: DataFrame, textCol: String,
       bits: Int = 16384, seed: Long = 11L): DataFrame = {
     require(bits > 0 && bits % 32 == 0, s"bits must be a multiple of 32: $bits")
-    val m = graft.llm.TextUtil.M
     def positions(f: DataFrame): DataFrame = f
-      .withColumn("__h", graft.llm.TextUtil.polyHash(col(textCol), seed))
+      .withColumn("__h", graft.plans.CustomExprs.poly_hash(col(textCol), seed))
       .withColumn("__p1", col("__h") % bits)
-      .withColumn("__p2", (col("__h") * 31 + 7) % lit(m) % bits)
+      .withColumn("__p2", (col("__h") * 31 + 7) % lit(graft.plans.PolyHash.M) % bits)
     val words = positions(build)
       .select(explode(array(col("__p1"), col("__p2"))).as("__p"))
       .groupBy(expr("__p DIV 32").as("__w"))

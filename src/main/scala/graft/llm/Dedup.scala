@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.{SharedIndex, U}
 import graft.llm.TextUtil._
+import graft.plans.PolyHash.M
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,7 +23,7 @@ import org.apache.spark.sql.types._
   *    hamming <= 3 pairs (band blocking degenerates on this corpus — see
   *    the method comment for the measurement) => oracle-able exactly.
   *
-  * All hashes are the shared polynomial hash (TextUtil) — integer
+  * All hashes are the shared polynomial hash (plans.PolyHash) — integer
   * arithmetic reproducible in DuckDB, unlike engine-native murmur3.
   */
 object Dedup {
@@ -639,7 +640,7 @@ object Dedup {
     * the planner sizes itself. */
   private def dedupBloomPrefilter(s: SparkSession, d: String): DataFrame = {
     val base = U.tbl(s, d, "documents")
-      .withColumn("h", polyHash(col("text"), 11L))
+      .withColumn("h", graft.plans.CustomExprs.poly_hash(col("text"), 11L))
       .withColumn("p1", col("h") % 16384)
       .withColumn("p2", (col("h") * 31 + 7) % lit(M) % 16384)
     val words = base.filter(col("source") =!= "src0")
@@ -711,7 +712,7 @@ object Dedup {
       // interpreted transform(sequence → slice → concat_ws) re-sliced
       // the token array per span; same span strings, duplicates kept
       .select(col("doc_id"),
-        explode(graft.plans.CustomExprs.spans_w(col("tk"), w)).as("span"))
+        explode(graft.plans.CustomExprs.spans_w(col("tk"), w, " ")).as("span"))
       // corpus occurrence count as ONE span-keyed shuffle (window over
       // the span partition) — the dedup_cdc_chunks recipe, replacing the
       // earlier groupBy + re-join (two exchanges + a persisted frame)

@@ -364,7 +364,7 @@ object Pipeline {
       val pairs = vocab
         .withColumn("syms", filter(split(col("sym"), "\\|"),
           x => length(x) > 0))
-        // sequence(1, 0) counts DOWN (the shingles3 pitfall) — single-
+        // sequence(1, 0) counts DOWN — single-
         // symbol words contribute no pairs and must filter out first
         .filter(size(col("syms")) >= 2)
         .withColumn("i", explode(expr("sequence(1, size(syms) - 1)")))
@@ -1169,7 +1169,7 @@ object Pipeline {
   /** The mask column builder — ONE definition shared by the declared
     * query and [[graft.api.GraftApi.dropoutMask]]. */
   private[graft] def dropoutKeptCol(id: Column, toks: Column): Column =
-    filter(toks, (t, p) =>
+    filter(toks, (_, p) =>
       pmod(pmod(id, lit(1000000007L)) * lit(1103515245L) +
         p.cast(LongType) * lit(12345L) + lit(7L), lit(100L)) >= 10L)
 
@@ -1595,11 +1595,8 @@ object Pipeline {
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
     val uni = base.select(col("doc_id"), col("source"),
       explode(col("toks")).as("f"))
-    val bi = base.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("source"),
-        explode(expr("transform(sequence(1, size(toks) - 1), " +
-          "i -> concat(element_at(toks, i), '_', " +
-          "element_at(toks, i + 1)))")).as("f"))
+    val bi = base.select(col("doc_id"), col("source"),
+      explode(graft.plans.CustomExprs.spans_w(col("toks"), 2, "_")).as("f"))
     // codegen'd PolyHash, not the interpreted HOF fold (the §4 lesson:
     // interpreted lambdas over millions of feature strings dominate)
     val fe = U.track(uni.unionByName(bi)
@@ -2397,15 +2394,15 @@ object Pipeline {
         "UNION ALL SELECT CAST(3 AS BIGINT), a, b, pf FROM t3) " +
         "ORDER BY round"),
     "pipeline_tokenizer_bpe" -> {
-      def row(r: Int, t: String, v: String): String =
+      def row(r: Int, t: String): String =
         s"SELECT CAST($r AS BIGINT) AS round, a AS merge_left, " +
           s"b AS merge_right, pf AS pair_freq, a || b AS merged_token, " +
           s"(SELECT corpus_tokens_after FROM c$r) AS corpus_tokens_after " +
           s"FROM $t"
       s"WITH $bpeFullCtes, ${bpeCountCte("v1", "c1")}, " +
         s"${bpeCountCte("v2", "c2")}, ${bpeCountCte("v3", "c3")} " +
-        s"SELECT * FROM (${row(1, "t1", "v1")} UNION ALL " +
-        s"${row(2, "t2", "v2")} UNION ALL ${row(3, "t3", "v3")}) " +
+        s"SELECT * FROM (${row(1, "t1")} UNION ALL " +
+        s"${row(2, "t2")} UNION ALL ${row(3, "t3")}) " +
         "ORDER BY round"
     },
     "pipeline_bpe_doc_tokens" ->

@@ -186,7 +186,6 @@ object TextAnalysis {
   private def bigramLp(s: SparkSession, d: String): DataFrame = {
     val base = docs(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2) // sequence(1,0) would count DOWN
     // three consumers (bigram counts, prefix counts, join-back) — persist
     // the exploded pair frame once instead of re-tokenizing per consumer.
     // (Measured dead end: pre-aggregating per-(doc, bigram) multiplicities
@@ -194,11 +193,8 @@ object TextAnalysis {
     // sf0.1 — natural-text bigrams are near-unique within a doc, so the
     // extra wide-string-key shuffle buys nothing.)
     val pairs = U.track(base
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(1, size(toks) - 1), " +
-          "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-          .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .select(col("doc_id"), explode(tokenPairs(col("toks"), 1)).as("bg"))
+      .select("doc_id", "bg.*")
       .persist())
     val cBg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     val cPrefix = pairs.groupBy(col("w1")).agg(count(lit(1)).as("cp"))
@@ -236,9 +232,7 @@ object TextAnalysis {
     val base = docs(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 6) // need >= 4 shingles for one window
-      .withColumn("sh", expr("transform(sequence(1, size(toks) - 2), " +
-        "i -> concat_ws('_', element_at(toks, i), element_at(toks, i + 1), " +
-        "element_at(toks, i + 2)))"))
+      .withColumn("sh", graft.plans.CustomExprs.spans_w(col("toks"), 3, "_"))
       .withColumn("hs", graft.plans.CustomExprs.poly_hash_array(col("sh"), 13L))
       .withColumn("fps", array_distinct(expr(
         "transform(sequence(1, size(hs) - 3), i -> array_min(slice(hs, i, 4)))")))
@@ -267,9 +261,7 @@ object TextAnalysis {
       .withColumn("top_token", expr(
         "array_max(transform(array_distinct(toks), " +
           "t -> size(filter(toks, x -> x = t))))").cast(LongType))
-      .withColumn("bgs", expr(
-        "transform(sequence(1, size(toks) - 1), " +
-          "i -> concat_ws('_', element_at(toks, i), element_at(toks, i + 1)))"))
+      .withColumn("bgs", graft.plans.CustomExprs.spans_w(col("toks"), 2, "_"))
       .withColumn("top_bigram", expr(
         "array_max(transform(array_distinct(bgs), " +
           "b -> size(filter(bgs, x -> x = b))))").cast(LongType))
@@ -340,11 +332,8 @@ object TextAnalysis {
     val tok = base.select(explode(col("toks")).as("token"))
     val uni = tok.groupBy(col("token")).agg(count(lit(1)).as("c1"))
     val nu = tok.agg(count(lit(1)).as("n_uni"))
-    val pairs = base.filter(size(col("toks")) >= 2)
-      .select(explode(expr("transform(sequence(1, size(toks) - 1), " +
-        "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-        .as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val pairs = base.select(explode(tokenPairs(col("toks"), 1)).as("bg"))
+      .select("bg.*")
     val nb = pairs.agg(count(lit(1)).as("n_bg"))
     val cBg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
       .filter(col("cb") >= 5)
@@ -371,14 +360,9 @@ object TextAnalysis {
     * Shapes: one bigram explosion + four hash aggs — token-key shuffles;
     * the two scalar totals broadcast. */
   private def kneserNey(s: SparkSession, d: String): DataFrame = {
-    val base = docs(s, d)
-      .select(tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-    kneserNeyOn(base
-      .select(explode(expr("transform(sequence(1, size(toks) - 1), " +
-        "i -> struct(element_at(toks, i) AS w1, " +
-        "element_at(toks, i + 1) AS w2))")).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2")), 5L)
+    val base = docs(s, d).select(tokens(col("text")).as("toks"))
+    kneserNeyOn(base.select(explode(tokenPairs(col("toks"), 1)).as("bg"))
+      .select("bg.*"), 5L)
   }
 
   /** The Kneser–Ney kernel over any (w1, w2) bigram-occurrence frame —
@@ -435,12 +419,8 @@ object TextAnalysis {
   private[graft] def perplexityFilterOn(docsDf: DataFrame): DataFrame = {
     val bg = U.track(docsDf
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(1, size(toks) - 1), " +
-          "i -> struct(element_at(toks, i) AS w1, " +
-          "element_at(toks, i + 1) AS w2))")).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      .select(col("doc_id"), explode(tokenPairs(col("toks"), 1)).as("bg"))
+      .select("doc_id", "bg.*")
       .persist())
     val model = kneserNeyOn(bg.select(col("w1"), col("w2")), 5L)
       .select(col("w1"), col("w2"), col("pkn_micro"))
@@ -521,11 +501,8 @@ object TextAnalysis {
     val uni = base.select(col("source"), explode(col("toks")).as("g"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n1"), countDistinct(col("g")).as("d1"))
-    val bi = base.filter(size(col("toks")) >= 2)
-      .select(col("source"),
-        explode(expr("transform(sequence(1, size(toks) - 1), " +
-          "i -> concat(element_at(toks, i), '_', " +
-          "element_at(toks, i + 1)))")).as("g"))
+    val bi = base.select(col("source"),
+        explode(graft.plans.CustomExprs.spans_w(col("toks"), 2, "_")).as("g"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n2"), countDistinct(col("g")).as("d2"))
     uni.join(bi, Seq("source"))
@@ -552,11 +529,8 @@ object TextAnalysis {
     val uni = tok.groupBy(col("token")).agg(count(lit(1)).as("c1"))
     val nu = tok.agg(count(lit(1)).as("n_uni"))
     def offPairs(off: Int): DataFrame = base
-      .filter(size(col("toks")) >= off + 1)
-      .select(explode(expr(s"transform(sequence(1, size(toks) - $off), " +
-        s"i -> struct(element_at(toks, i) AS wa, " +
-        s"element_at(toks, CAST(i + $off AS INT)) AS wb))")).as("p"))
-      .select(col("p.wa").as("wa"), col("p.wb").as("wb"))
+      .select(explode(tokenPairs(col("toks"), off)).as("p"))
+      .select(col("p.w1").as("wa"), col("p.w2").as("wb"))
     val dir = offPairs(1).unionByName(offPairs(2))
     val sym = dir.unionByName(
       dir.select(col("wb").as("wa"), col("wa").as("wb")))

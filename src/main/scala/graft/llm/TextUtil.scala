@@ -2,41 +2,39 @@ package graft.llm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.PolyHash.M
 
 /** Shared text primitives for the LLM-pipeline operators (SURVEY.md §2.10).
   *
-  * The polynomial rolling hash is implemented in plain integer arithmetic
-  * (mod 1e9+7) instead of Spark's murmur3 `hash()` so the SAME hash is
-  * expressible in DuckDB SQL — engine-native hash functions differ and would
-  * make every hash-derived operator un-oracle-able. All folds are
-  * left-to-right over <=2^31 intermediate values: deterministic and
-  * overflow-free in both engines.
+  * One implementation per primitive, none of them an interpreted lambda:
+  * tokens are built-in array functions, and the hash, shingle and n-gram
+  * kernels are the codegen'd expressions in [[graft.plans.CustomExprs]]
+  * (`poly_hash`/`poly_hash_array`, `shingles3_fast`, `spans_w`) or the
+  * built-in [[tokenPairs]]. TextKernelAuditSpec keeps interpreted twins from
+  * growing back.
+  *
+  * The polynomial rolling hash folds (acc*31 + c) mod 1e9+7 over Unicode
+  * CODE POINTS (c = `ascii()` of each character, in Spark and in DuckDB)
+  * instead of Spark's murmur3 `hash()`, so the SAME hash is expressible in
+  * DuckDB SQL — engine-native hash functions differ and would make every
+  * hash-derived operator un-oracle-able. All folds are left-to-right over
+  * <=2^31 intermediate values: deterministic and overflow-free in both
+  * engines. The SQL mirrors below are the oracle's reference forms.
   */
 object TextUtil {
-  val M = 1000000007L
-
-  /** Whitespace tokens, empty strings dropped. */
+  /** Whitespace tokens, empty strings dropped (`split` yields no nulls). */
   def tokens(text: Column): Column =
-    filter(split(text, " "), t => length(t) > 0)
+    array_remove(split(text, " "), "")
 
-  /** Polynomial rolling hash of a string column: fold (acc*31 + code) mod M.
-    * Empty strings short-circuit to the seed — Spark's sequence(1, 0) counts
-    * DOWN, which would otherwise fold twice (diverging from sqlPolyHash and
-    * the codegen'd PolyHash, which both return the seed). */
-  def polyHash(t: Column, seed: Long): Column =
-    when(length(t) === 0, lit(seed)).otherwise(
-      aggregate(sequence(lit(1), length(t)), lit(seed),
-        (acc, i) => pmod(acc * lit(31L) + ascii(t.substr(i, lit(1))), lit(M))))
+  /** Token pairs (toks[i], toks[i + off]) as array<struct<w1, w2>>, in
+    * position order; empty when there are at most `off` tokens. */
+  def tokenPairs(toks: Column, off: Int): Column = {
+    val n = greatest(size(toks) - off, lit(0))
+    arrays_zip(slice(toks, lit(1), n), slice(toks, lit(1 + off), n))
+      .cast("array<struct<w1:string,w2:string>>")
+  }
 
-  /** Distinct word 3-gram shingles joined with '_'. Guarded: Spark's
-    * sequence(1, 0) counts DOWN, so short docs need the explicit empty. */
-  def shingles3(toks: Column): Column =
-    when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(sequence(lit(1), size(toks) - 2),
-        i => concat_ws("_", element_at(toks, i), element_at(toks, i + 1),
-          element_at(toks, i + 2)))))
-
-  // --- DuckDB SQL mirrors (1:1 with the Column builders above) ---
+  // --- DuckDB SQL mirrors (1:1 with the kernels above) ---
 
   def sqlTokens(text: String): String =
     s"list_filter(string_split($text, ' '), t -> length(t) > 0)"

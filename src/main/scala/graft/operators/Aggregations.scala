@@ -3135,7 +3135,6 @@ object Aggregations {
   /** The calibration kernel over any (score, label) frame — shared by
     * the declared query and [[graft.api.GraftApi.calibrationError]]. */
   private[graft] def eceOn(pf: DataFrame): DataFrame = {
-    val dec = DecimalType(38, 0)
     val b = U.track(pf
       .withColumn("bucket", expr("least(9, score DIV 100000)"))
       .groupBy(col("bucket"))

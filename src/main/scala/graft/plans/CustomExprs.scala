@@ -51,9 +51,11 @@ case class FixedDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Polynomial rolling hash over the UTF-8 bytes of a string:
-  * fold (acc*31 + byte) mod 1e9+7 — byte == code point for ASCII, matching
-  * TextUtil.polyHash / the oracle's ascii() fold on the fixture corpus. */
+/** THE polynomial rolling hash of a string (DuckDB mirror:
+  * `TextUtil.sqlPolyHash`): fold (acc*31 + c) mod 1e9+7 over its Unicode
+  * code points c, the values Spark's and DuckDB's `ascii()` give. Bytes
+  * fold directly while ASCII and decode from the first non-ASCII byte on;
+  * the fixture corpus is ASCII, so the fixtures only take the byte loop. */
 case class PolyHash(child: Expression, seed: Long) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = LongType
@@ -65,11 +67,22 @@ case class PolyHash(child: Expression, seed: Long) extends UnaryExpression {
 }
 
 object PolyHash {
+  /** The project's one 1e9+7 modulus. */
   final val M = 1000000007L
   def hashBytes(bytes: Array[Byte], seed: Long): Long = {
     var acc = seed
     var i = 0
-    while (i < bytes.length) { acc = (acc * 31L + (bytes(i) & 0xff)) % M; i += 1 }
+    while (i < bytes.length) {
+      val b = bytes(i)
+      if (b < 0) {
+        val rest = new String(bytes, i, bytes.length - i,
+          java.nio.charset.StandardCharsets.UTF_8)
+        rest.codePoints().forEach(cp => acc = (acc * 31L + cp) % M)
+        return acc
+      }
+      acc = (acc * 31L + b) % M
+      i += 1
+    }
     acc
   }
 }
@@ -166,27 +179,27 @@ object Shingles3 {
   }
 }
 
-/** All width-w token windows, space-joined, duplicates PRESERVED (unlike
-  * [[Shingles3]], whose consumers want the distinct set) — one codegen'd
-  * pass replacing the interpreted transform(sequence, i -> concat_ws(' ',
-  * slice(tk, i, w))) chain, which re-sliced the token array and re-ran
-  * the lambda per span (r15; the dedup_substring_spans hot path). Returns
-  * the empty array below w tokens, exactly like the sequence form after
-  * its size(tk) >= w guard. */
-case class SpansW(child: Expression, w: Int) extends UnaryExpression {
+/** All width-w token windows joined with `sep`, duplicates PRESERVED
+  * (unlike [[Shingles3]], whose consumers want the distinct set) — THE
+  * n-gram walk: one codegen'd pass in place of the interpreted
+  * transform(sequence(...), i -> concat_ws(sep, element_at(toks, i), ...))
+  * lambda. Returns the empty array below w tokens. */
+case class SpansW(child: Expression, w: Int, sep: String) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  private lazy val sepU = UTF8String.fromString(sep)
   override def nullSafeEval(v: Any): Any =
-    SpansW.compute(v.asInstanceOf[ArrayData], w)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.SpansW.compute($c, $w)")
+    SpansW.compute(v.asInstanceOf[ArrayData], w, sepU)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sepRef = ctx.addReferenceObj("spansSep", sepU)
+    defineCodeGen(ctx, ev, c => s"graft.plans.SpansW.compute($c, $w, $sepRef)")
+  }
   override protected def withNewChildInternal(c: Expression): SpansW =
     copy(child = c)
 }
 
 object SpansW {
-  private val SP = UTF8String.fromString(" ")
-  def compute(toks: ArrayData, w: Int): GenericArrayData = {
+  def compute(toks: ArrayData, w: Int, sep: UTF8String): GenericArrayData = {
     val n = toks.numElements()
     val m = math.max(0, n - w + 1)
     val out = new Array[AnyRef](m)
@@ -195,7 +208,7 @@ object SpansW {
     while (i < m) {
       var k = 0
       while (k < w) { win(k) = toks.getUTF8String(i + k); k += 1 }
-      out(i) = UTF8String.concatWs(SP, win: _*)
+      out(i) = UTF8String.concatWs(sep, win: _*)
       i += 1
     }
     new GenericArrayData(out)
@@ -330,7 +343,7 @@ object CustomExprs {
   def shingles3_fast(toks: Column): Column = c(Shingles3(e(toks)))
   def zorder2(x: Column, y: Column): Column = c(ZOrder2(e(x), e(y)))
   def cdc_chunks(text: Column): Column = c(CdcChunks(e(text)))
-  def spans_w(toks: Column, w: Int): Column = c(SpansW(e(toks), w))
+  def spans_w(toks: Column, w: Int, sep: String): Column = c(SpansW(e(toks), w, sep))
 
   /** Unrolled SQL mirror of [[ZOrder2]] (both engines): Σ over bit i of
     * ((x>>i)&1)<<2i | ((y>>i)&1)<<(2i+1). */

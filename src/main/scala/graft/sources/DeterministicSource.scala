@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -265,9 +265,12 @@ private class DeterministicScanBuilder(rows: Long, slices: Int, batchRows: Long)
       * .AvailableNow drains it batch over batch to the fixed end, so the
       * final state is exactly the batch read => full oracle). The offset
       * is the next unread row id — trivially serializable, and restart
-      * just resumes the arithmetic at the committed id. */
+      * just resumes the arithmetic at the committed id. The source
+      * supports AvailableNow itself: without it Spark wraps the stream and
+      * drains the whole ReadAllAvailable target in ONE batch, and the
+      * `batchRows` limit never applies. */
     override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new MicroBatchStream with SupportsAdmissionControl {
+      new MicroBatchStream with SupportsTriggerAvailableNow {
         private def off(o: Offset): Long = o.asInstanceOf[IdOffset].id
         override def initialOffset(): Offset = IdOffset(0L)
         override def latestOffset(): Offset =
@@ -285,6 +288,9 @@ private class DeterministicScanBuilder(rows: Long, slices: Int, batchRows: Long)
           IdOffset(math.min(rows, off(start) + cap))
         }
         override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(batchRows)
+        // the drain target is `rows`, fixed when the table was built, so
+        // there is nothing to capture at query start
+        override def prepareForTriggerAvailableNow(): Unit = ()
         override def deserializeOffset(json: String): Offset = IdOffset(json.toLong)
         // offsets advance over the FULL id space, but each batch intersects
         // the pushed [lo, hi): accepted filters are removed from post-scan

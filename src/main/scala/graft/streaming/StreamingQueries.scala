@@ -8,7 +8,7 @@ import graft.sources.StatsSink
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
 import org.apache.spark.sql.types._
 
 /** Encoder types for the stateful query — top-level for Catalyst codegen. */
@@ -535,8 +535,9 @@ class IdleTimeoutProcessor extends StatefulProcessor[Long, IdleEvent, IdleAlert]
   * changelog checkpointing, the query's state-store posture), unloads the
   * state-store providers inside that scope after the query ends, and
   * records [[lastReplayNote]]. The three non-memory sinks (custom DSv2
-  * sink, foreachBatch upsert, parquet file sink) keep their own writers;
-  * the two stateful-capable ones run in the same [[replayScope]]. Staged
+  * sink, foreachBatch upsert, parquet file sink) keep their own writers
+  * and record their note through the same [[awaitReplay]]; the two
+  * stateful-capable ones run in the same [[replayScope]]. Staged
   * input comes from the one writer [[stageRanges]].
   *
   * Four queries are deterministic regardless of micro-batch boundaries and
@@ -602,7 +603,7 @@ object StreamingQueries {
       // stamp each slice's new files with an explicit increasing mtime.
       var seq = 0
       val stamped = scala.collection.mutable.Set[String]()
-      for (p <- 0 until passes; i <- 0 until 8) {
+      for (_ <- 0 until passes; i <- 0 until 8) {
         val loB = lo + i * step
         val hiB = if (i == 7) hi else lo + (i + 1) * step
         src.filter(rangeCol >= loB && rangeCol < hiB)
@@ -726,7 +727,7 @@ object StreamingQueries {
         catch { case _: Throwable => }
     }
 
-  /** Cost-attribution note for the LAST memory-sinked replay (read by
+  /** Cost-attribution note for the LAST replay (read by
     * [[graft.StreamProfile]], backs BASELINE.md's BENCH-NOTES): micro-batch
     * count, stateful-operator count, and the summed state-store commit /
     * update wall-clock across all batches. The replay's fixed cost is
@@ -734,16 +735,9 @@ object StreamingQueries {
     * inherent micro-batch overhead, not a plan defect. */
   private[graft] var lastReplayNote: String = ""
 
-  /** The one memory-sink runner: build `stream` in [[replayScope]], run it
-    * to completion (Trigger.AvailableNow), record [[lastReplayNote]] and
-    * return the sink table. */
-  private def runStream(s: SparkSession, mode: String,
-      store: Seq[(String, String)] = DefaultStore)
-      (stream: => DataFrame): DataFrame = replayScope(s, store) {
-    val name = newSinkName(s)
-    val q = stream.writeStream.outputMode(mode)
-      .format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
+  /** Run a started replay `q` to completion and record its
+    * [[lastReplayNote]] — every replay, whatever its sink, ends here. */
+  private def awaitReplay(q: StreamingQuery): Unit = {
     q.awaitTermination()
     val prog = q.recentProgress
     val stateOps = prog.lastOption.map(_.stateOperators.length).getOrElse(0)
@@ -752,6 +746,18 @@ object StreamingQueries {
       s"stateCommitMs=${prog.flatMap(_.stateOperators.map(_.commitTimeMs)).sum} " +
       s"stateUpdateMs=${prog.flatMap(_.stateOperators.map(_.allUpdatesTimeMs)).sum} " +
       s"batchDurationMs=${prog.map(_.batchDuration).sum}"
+  }
+
+  /** The one memory-sink runner: build `stream` in [[replayScope]], run it
+    * to completion (Trigger.AvailableNow) through [[awaitReplay]] and
+    * return the sink table. */
+  private def runStream(s: SparkSession, mode: String,
+      store: Seq[(String, String)] = DefaultStore)
+      (stream: => DataFrame): DataFrame = replayScope(s, store) {
+    val name = newSinkName(s)
+    awaitReplay(stream.writeStream.outputMode(mode)
+      .format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start())
     s.table(name)
   }
 
@@ -856,7 +862,7 @@ object StreamingQueries {
       .option("checkpointLocation", ckDir)
       .outputMode("append")
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    awaitReplay(q)
     val (n, sum) = StatsSink.streamedTotal(run)
     import s.implicits._
     Seq((n, sum)).toDF("n_rows", "sum_cents")
@@ -1285,7 +1291,7 @@ object StreamingQueries {
         lastDst.set(dst)
       }
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    awaitReplay(q)
     s.read.parquet(lastDst.get()).orderBy("user_id")
   }
 
@@ -1319,7 +1325,7 @@ object StreamingQueries {
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckDir)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    awaitReplay(q)
     s.read.parquet(outDir).orderBy("event_id")
   }
 

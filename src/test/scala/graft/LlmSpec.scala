@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.plans.CustomExprs
 
@@ -137,6 +138,19 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("custom codegen expressions match their declarative equivalents") {
+    // the declarative forms the kernels replaced, kept here as the
+    // reference: the ascii() fold over the characters (code points) ...
+    def polyHashHof(t: Column, seed: Long) =
+      when(length(t) === 0, lit(seed)).otherwise(
+        aggregate(sequence(lit(1), length(t)), lit(seed),
+          (acc, i) => pmod(acc * lit(31L) + ascii(t.substr(i, lit(1))),
+            lit(1000000007L))))
+    // ... and the distinct '_'-joined 3-gram walk
+    def shingles3Hof(toks: Column) =
+      when(size(toks) < 3, array().cast("array<string>"))
+        .otherwise(array_distinct(transform(sequence(lit(1), size(toks) - 2),
+          i => concat_ws("_", element_at(toks, i), element_at(toks, i + 1),
+            element_at(toks, i + 2)))))
     val df = Seq((Seq(1L, 2L, 3L), Seq(4L, 5L, 6L), "hello world"))
       .toDF("a", "b", "s")
     val r = df.select(
@@ -144,10 +158,10 @@ class LlmSpec extends SparkTestBase {
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0L),
         (acc, x) => acc + x).as("dot_hof"),
       CustomExprs.poly_hash(col("s"), 7L).as("ph"),
-      graft.llm.TextUtil.polyHash(col("s"), 7L).as("ph_hof"),
+      polyHashHof(col("s"), 7L).as("ph_hof"),
       CustomExprs.poly_hash_array(split(col("s"), " "), 13L).as("pha"),
-      transform(split(col("s"), " "),
-        t => graft.llm.TextUtil.polyHash(t, 13L)).as("pha_hof")).head()
+      transform(split(col("s"), " "), t => polyHashHof(t, 13L)).as("pha_hof"))
+      .head()
     assert(r.getAs[Long]("dot") == 32L)
     assert(r.getAs[Long]("dot") == r.getAs[Long]("dot_hof"))
     assert(r.getAs[Long]("ph") == r.getAs[Long]("ph_hof"))
@@ -156,11 +170,28 @@ class LlmSpec extends SparkTestBase {
     val sh = Seq("a b c d b c d e").toDF("t")
       .select(split(col("t"), " ").as("toks"))
       .select(CustomExprs.shingles3_fast(col("toks")).as("fast"),
-        graft.llm.TextUtil.shingles3(col("toks")).as("slow")).head()
+        shingles3Hof(col("toks")).as("slow")).head()
     assert(sh.getAs[scala.collection.Seq[String]]("fast").toList ==
       sh.getAs[scala.collection.Seq[String]]("slow").toList)
     assert(sh.getAs[scala.collection.Seq[String]]("fast").toList ==
       List("a_b_c", "b_c_d", "c_d_b", "d_b_c", "c_d_e"))
+    // non-ASCII text: the kernels fold code points like the ascii() fold
+    // and DuckDB's sqlPolyHash (seed-7 values computed in DuckDB)
+    val pinned = Seq("é" -> 450L, "a😀b" -> 4285724L,
+      "naïve café" -> 980374742L)
+    pinned.toDF("s", "want").select(col("s"), col("want"),
+        CustomExprs.poly_hash(col("s"), 7L).as("ph"),
+        polyHashHof(col("s"), 7L).as("ph_hof"),
+        element_at(CustomExprs.poly_hash_array(array(col("s")), 7L), 1)
+          .as("pha"),
+        expr("graft_poly_hash(s, 7)").as("ph_sql"),
+        expr("element_at(graft_poly_hash_array(array(s), 7), 1)").as("pha_sql"))
+      .collect().foreach { u =>
+        val want = u.getAs[Long]("want")
+        for (c <- Seq("ph", "ph_hof", "pha", "ph_sql", "pha_sql"))
+          assert(u.getAs[Long](c) == want,
+            s"$c('${u.getAs[String]("s")}') = ${u.getAs[Long](c)}, want $want")
+      }
   }
 
   test("simhash60 of identical hash-sets is identical; disjoint sets differ") {

@@ -49,13 +49,23 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("poly hash is deterministic and order-sensitive") {
-    samples(Gen.alphaNumStr.suchThat(_.length > 1), 10).foreach { s0 =>
-      val s = s0.take(20)
-      val df = Seq(s, s, s.reverse).toDF("t")
+    // arbitrary Unicode: ASCII, the rest of the BMP and the supplementary
+    // planes (surrogates excluded — they are not characters)
+    val codePoint = Gen.frequency(3 -> Gen.choose(0x20, 0x7e),
+      1 -> Gen.choose(0x80, 0xd7ff), 1 -> Gen.choose(0xe000, 0x10ffff))
+    def str(cps: Seq[Int]) = new String(cps.toArray, 0, cps.length)
+    samples(Gen.listOf(codePoint).suchThat(_.length > 1), 10).foreach { c0 =>
+      val cps = c0.take(20)
+      val (s, rev) = (str(cps), str(cps.reverse))
+      val df = Seq(s, s, rev).toDF("t")
         .select(graft.plans.CustomExprs.poly_hash(col("t"), 7L).as("h"))
       val hs = df.collect().map(_.getLong(0))
       assert(hs(0) == hs(1))
-      if (s != s.reverse) assert(hs(0) != hs(2))
+      if (s != rev) assert(hs(0) != hs(2))
+      // the definition: fold (acc*31 + code point) mod 1e9+7
+      val want = s.codePoints().toArray
+        .foldLeft(7L)((acc, c) => (acc * 31L + c) % 1000000007L)
+      assert(hs(0) == want, s"poly_hash('$s') = ${hs(0)}, want $want")
     }
   }
 

@@ -372,16 +372,21 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("rerouted replays record their own replay note") {
-    // the runner is the one place a memory-sinked replay records its note;
+    // every replay, memory-sinked or not, records its note in one place;
     // a replay that bypassed it would leave the note blank here
     for (name <- Seq("stream_neardup", "stream_token_quota",
-        "stream_custom_source")) {
+        "stream_custom_source", "stream_custom_sink", "stream_upsert_sink",
+        "stream_parquet_sink")) {
       streaming.StreamingQueries.lastReplayNote = ""
       streaming.StreamingQueries.queries(name)(spark, sfDir)
       val note = streaming.StreamingQueries.lastReplayNote
       val batches = "batches=(\\d+)".r.findFirstMatchIn(note)
         .map(_.group(1).toInt)
       assert(batches.exists(_ > 0), s"$name left no replay note: '$note'")
+      // the custom source admits 5k of its 20k rows per micro-batch
+      if (name == "stream_custom_source")
+        assert(batches.contains(4), s"$name: want 4 admission-controlled " +
+          s"batches: '$note'")
     }
   }
 
