@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one registry of indexes that several queries of a session share:
-  * the co-purchase graph frames, the Gram/eigvector frames, the shingle and
+  * the co-purchase graph frames, the collected embedding Gram, the shingle and
   * candidate-pair frames, the IVF/PQ codebooks and assignments.
   *
   * Policy: an entry exists only when at least two distinct declared queries
@@ -18,8 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that built them.
   *
   * One lock guards every entry. JVM monitors are reentrant, so a build may
-  * get another entry (`wedgeFrames` reads `coPairs`, `embTopEigvec` reads
-  * `gram`) on the same thread. */
+  * get another entry (`wedgeFrames` reads `coPairs`) on the same thread. */
 object SharedIndex {
 
   final class Entry[T] private[SharedIndex] (val name: String,

@@ -137,8 +137,7 @@ object Pipeline {
   private def labelComp(s: SparkSession, d: String): DataFrame =
     U.tbl(s, d, "embeddings")
       .select(col("vec_id"), col("label"),
-        posexplode(transform(col("embedding"),
-          x => floor(x.cast(DoubleType) * lit(1000000.0)))).as(Seq("pos", "x")))
+        posexplode(microVec(col("embedding"))).as(Seq("pos", "x")))
       .select(col("vec_id"), col("label"),
         (col("pos") + 1).cast(LongType).as("dim"), col("x"))
 
@@ -381,7 +380,7 @@ object Pipeline {
           expr("replace(replace(sym, pat, rep), pat, rep)").as("sym"))
         // each round's vocab has THREE consumers (next pairs, the count
         // below, the next merge): eager-checkpoint so the pair agg and
-        // argmax of round r run exactly once (the emb_pca2 lesson)
+        // argmax of round r run exactly once
         .localCheckpoint()
       // corpus token count AFTER this round's merge: the conservation
       // quantity (before − applications) a tokenizer report tracks
@@ -493,9 +492,7 @@ object Pipeline {
     * identical operand-for-operand in the oracle. */
   private def embStandardize(s: SparkSession, d: String): DataFrame = {
     val comp = U.track(U.tbl(s, d, "embeddings")
-      .select(col("vec_id"), posexplode(transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1000000.0)).cast(LongType)))
-        .as(Seq("pos", "x")))
+      .select(col("vec_id"), posexplode(microVec(col("embedding"))).as(Seq("pos", "x")))
       .persist())
     val stats = comp.groupBy(col("pos"))
       .agg(sum(col("x")).as("sx"), sum(col("x") * col("x")).as("sxx"),
@@ -661,122 +658,53 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
-  /** Top principal direction of the embedding Gram matrix by POWER
-    * ITERATION, entirely in fixed-point integers — distributed linear
-    * algebra that still hash-matches a SQL oracle. Components floor to 1e6
-    * micro-units; the 64×64 Gram accumulates exact Long products scaled
-    * down by 1e9 (sized so q = C·v and the 1e6-renormalization both stay
-    * inside Long at every fixture SF); each iteration renormalizes by the
-    * max-|component| with integer division. Same integers on any engine,
-    * any aggregation order — the property float power iteration loses.
-    * Scale shape: the Gram build is SHUFFLE-FREE until the final 4096-cell
-    * exchange — each row's outer product v·vᵀ is generated narrowly by two
-    * nested posexplodes over its own array (no self-join; the old vec_id
-    * self-join shuffled the exploded frame twice and pushed the n·dim²
-    * pair stream through a join), and map-side partial aggregation
-    * collapses every partition to ≤dim² cells before the exchange — at
-    * 100 TB this is the standard tree-aggregated gramian; iterations run
-    * on the tiny (dim², dim) frames. */
-  /** Shared per-(session, sfDir) eigvector cache: the 2-iteration DAG on
-    * the cached gram still costs >1 s of stage/broadcast latency per
-    * MATERIALIZATION, and three queries (emb_top_eigvec,
-    * emb_project_eigvec, emb_pca2) each evaluate it — so the 64-row
-    * result is computed once per session and served persisted (a
-    * [[graft.SharedIndex]] entry; measured 3.7 → ~1 s on the projection
-    * query). */
-  private val eigvecIndex = SharedIndex[DataFrame]("embTopEigvec", Seq(
-      "emb_pca2", "emb_project_eigvec", "emb_top_eigvec"), Seq(_)) { (s, d) =>
-    val df = embTopEigvecBuild(s, d).persist()
-    df.count()
-    df
-  }
-  private[llm] def embTopEigvec(s: SparkSession, d: String): DataFrame =
-    eigvecIndex.get(s, d)
+  /** An embedding floored to exact integer micro-units (array<bigint>). */
+  private[llm] def microVec(e: Column): Column =
+    transform(e, x => floor(x.cast(DoubleType) * lit(1000000.0)))
 
-  private def embTopEigvecBuild(s: SparkSession, d: String): DataFrame = {
-    val g = gram(s, d)
-    var v = g.select(col("i").as("dim")).distinct()
-      .withColumn("v", lit(1000000L))
-    for (_ <- 0 until 2) {
-      val q = g.join(broadcast(v), col("j") === col("dim"))
-        .groupBy(col("i")).agg(sum(expr("c * v")).as("q"))
-      val mx = q.agg(max(abs(col("q"))).as("mx"))
-      v = q.crossJoin(broadcast(mx))
-        .select(col("i").as("dim"), expr("(q * 1000000) DIV mx").as("v"))
-    }
-    // posexplode's pos is int32; the oracle's generate_subscripts is int64
-    v.select(col("dim").cast(LongType).as("dim"), col("v")).orderBy("dim")
-  }
+  /** Top principal direction of the embedding Gram matrix by POWER
+    * ITERATION in fixed-point integers, so it hash-matches a SQL oracle
+    * on any engine and aggregation order (float power iteration does
+    * not): 2 rounds of q = C·v renormalized by max-|component| with
+    * integer division, computed locally over the collected [[gram]]
+    * ([[GramKernel.topEigvec]]: two 64×64 mat-vecs, no Spark job). */
+  private[llm] def embTopEigvec(s: SparkSession, d: String): DataFrame =
+    s.createDataFrame(GramKernel.topEigvec(gram(s, d)).toSeq.zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }).toDF("dim", "v")
 
   /** Second principal direction by DEFLATED power iteration — the PCA-2
     * completion of [[embTopEigvec]]: iterate u ← C·u but project v₁ back
-    * out after every renormalization (o = q̂ − (q̂·v₁ DIV v₁·v₁)·v₁), so
-    * the iteration converges inside v₁'s orthogonal complement. Every
-    * step is exact integer arithmetic; the one product that can exceed
-    * int64 (s·v₁ᵢ ≤ ~6.4e19) runs in DECIMAL(38,0) with integral DIV —
-    * DuckDB mirrors it in HUGEINT, both truncating toward zero (probed;
-    * DuckDB's `//` over DECIMAL returns DOUBLE and is NOT usable). The
-    * alternating ±1e6 start vector is deterministic and has large overlap
-    * with the complement. Iterations run on 64-row broadcast frames over
-    * the shared Gram cache — the corpus is touched zero extra times. */
+    * out after every renormalization, so the iteration converges inside
+    * v₁'s orthogonal complement ([[GramKernel.pca2]], computed locally). The
+    * one product past int64 (s·v₁ᵢ ≤ ~6.4e19) is DECIMAL(38,0) with
+    * integral DIV; the oracle mirrors it in HUGEINT, both truncating
+    * toward zero (probed: DuckDB's `//` over DECIMAL returns DOUBLE). */
   private def embPca2(s: SparkSession, d: String): DataFrame = {
-    val g = gram(s, d)
-    // Two structural rules keep this fast AND keep the plan bounded:
-    // (1) the round is ONE LINEAR CHAIN — every scalar (max, s, t) is a
-    //     single-partition window over the 64-row frame instead of a
-    //     separate aggregate + crossJoin, so nothing in the round has two
-    //     consumers and nothing re-evaluates;
-    // (2) v₁ alone is multi-consumer (each round's projection + the final
-    //     join), so it alone is pinned with an EAGER localCheckpoint,
-    //     which — unlike persist() — also TRUNCATES LINEAGE. The naive
-    //     aggregate+crossJoin formulation re-evaluated v₁'s Gram passes
-    //     multiplicatively per round: measured 86 s at sf0.1 and a final
-    //     plan string big enough to OOM Explain; this shape runs ~1 s.
-    //     On a cluster the pin would be checkpoint() against the reliable
-    //     store; values are identical either way.
-    val wAll = Window.partitionBy(lit(1))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val v1 = embTopEigvec(s, d).select(col("dim"), col("v")).localCheckpoint()
-    var u = v1.select(col("dim"),
-      expr("CAST(CASE WHEN dim % 2 = 0 THEN 1000000 ELSE -1000000 END " +
-        "AS BIGINT)").as("u"))
-    for (_ <- 0 until 2) {
-      u = g.join(broadcast(u), col("j").cast(LongType) === col("dim"))
-        .groupBy(col("i")).agg(sum(expr("c * u")).as("q"))
-        .withColumn("mx", max(abs(col("q"))).over(wAll))
-        .select(col("i").cast(LongType).as("dim"),
-          expr("(q * 1000000) DIV mx").as("qn"))
-        .join(broadcast(v1), Seq("dim"))
-        .withColumn("s", sum(expr("qn * v")).over(wAll))
-        .withColumn("t", sum(expr("v * v")).over(wAll))
-        .select(col("dim"),
-          expr("qn - CAST((CAST(s AS DECIMAL(38,0)) * v) DIV t AS BIGINT)")
-            .as("o"))
-        .withColumn("mo", max(abs(col("o"))).over(wAll))
-        .select(col("dim"), expr("(o * 1000000) DIV mo").as("u"))
-    }
-    v1.join(u, Seq("dim"))
-      .select(col("dim"), col("v").as("pc1"), col("u").as("pc2"))
-      .orderBy("dim")
+    val (v1, v2) = GramKernel.pca2(gram(s, d))
+    s.createDataFrame(v1.indices.map(i => (i.toLong, v1(i), v2(i))))
+      .toDF("dim", "pc1", "pc2")
   }
 
-  /** The dim²-cell Gram frame, a [[graft.SharedIndex]] entry (the
-    * iterations run on tiny (dim², dim) frames; only this corpus-sized
-    * build is worth sharing). */
-  private val gramIndex = SharedIndex[DataFrame]("gram", Seq(
-      "emb_cka", "emb_pca2"), Seq(_)) { (s, d) =>
-    val fixed = U.tbl(s, d, "embeddings")
-      .select(transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1000000.0)).cast(LongType))
-        .as("f"))
-    val df = fixed
+  /** The collected dim×dim Gram of the fixed-point embeddings, cell
+    * (i, j) = Σ xᵢ·xⱼ DIV 1e9, read by the [[GramKernel]] tails. The
+    * corpus-sized build stays distributed and shuffle-free until the
+    * dim²-cell exchange: nested posexplodes generate each row's outer
+    * product narrowly and map-side partial aggregation collapses every
+    * partition to ≤dim² cells. Only those dim² cells are collected. */
+  private val gramIndex = SharedIndex[GramKernel.Gram]("gram", Seq(
+      "emb_cka", "emb_pca2", "emb_project_eigvec", "emb_top_eigvec"),
+      _ => Nil) { (s, d) =>
+    val cells = U.tbl(s, d, "embeddings").select(microVec(col("embedding")).as("f"))
       .select(posexplode(col("f")).as(Seq("i", "x")), col("f"))
       .select(col("i"), col("x"), posexplode(col("f")).as(Seq("j", "y")))
       .groupBy(col("i"), col("j"))
-      .agg(expr("sum(x * y) DIV 1000000000").as("c")).persist()
-    df
+      .agg(expr("sum(x * y) DIV 1000000000").as("c")).collect()
+    val n = if (cells.isEmpty) 0 else cells.map(_.getInt(0)).max + 1
+    val g = Array.ofDim[Long](n, n)
+    cells.foreach(r => g(r.getInt(0))(r.getInt(1)) = r.getLong(2))
+    g
   }
-  private[llm] def gram(s: SparkSession, d: String): DataFrame =
+  private[llm] def gram(s: SparkSession, d: String): GramKernel.Gram =
     gramIndex.get(s, d)
 
   /** Projection of every embedding onto the top principal direction (the
@@ -798,9 +726,7 @@ object Pipeline {
   private def embProjectEigvec(s: SparkSession, d: String): DataFrame = {
     val v = embTopEigvec(s, d)
     val flat = U.tbl(s, d, "embeddings")
-      .select(col("vec_id"), posexplode(transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1000000.0)).cast(LongType)))
-        .as(Seq("i", "x")))
+      .select(col("vec_id"), posexplode(microVec(col("embedding"))).as(Seq("i", "x")))
     // persisted: three consumers (block counts, the corpus count, the
     // rank join) would otherwise each replay the 64-way explode join
     val projF = U.track(flat
@@ -1027,9 +953,7 @@ object Pipeline {
       .join(docs(s, d).select(col("doc_id"), col("source")),
         col("vec_id") === col("doc_id"))
       .select(col("source"),
-        posexplode(transform(col("embedding"),
-          x => floor(x.cast(DoubleType) * lit(1000000.0))))
-          .as(Seq("pos", "x")))
+        posexplode(microVec(col("embedding"))).as(Seq("pos", "x")))
       .select(col("source"), (col("pos") + 1).cast(LongType).as("dim"),
         col("x"))
     val cent = comp.groupBy(col("source"), col("dim"))
@@ -1351,9 +1275,7 @@ object Pipeline {
     * 64-group hash agg. */
   private def embDimVariance(s: SparkSession, d: String): DataFrame =
     U.tbl(s, d, "embeddings")
-      .select(posexplode(transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1000000.0)).cast(LongType)))
-        .as(Seq("pos", "x")))
+      .select(posexplode(microVec(col("embedding"))).as(Seq("pos", "x")))
       .groupBy(col("pos"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("x").cast(DecimalType(38, 0)) *

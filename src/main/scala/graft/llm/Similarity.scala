@@ -35,8 +35,7 @@ object Similarity {
     * byte identical Long results. */
   private[llm] def fixed(s: SparkSession, d: String): DataFrame =
     U.tbl(s, d, "embeddings").select(col("vec_id"), col("label"),
-      transform(col("embedding"), x => floor(x.cast(DoubleType) * lit(1000000.0)))
-        .as("fx"))
+      Pipeline.microVec(col("embedding")).as("fx"))
       .withColumn("nrm", fixed_dot(col("fx"), col("fx")))
 
   private def dotCol(a: Column, b: Column): Column = fixed_dot(a, b)
@@ -237,8 +236,7 @@ object Similarity {
       when(dot > 0, lit(1L << j)).otherwise(lit(0L))
     }
     val emb = U.tbl(s, d, "embeddings")
-      .withColumn("fx", transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1000000.0))))
+      .withColumn("fx", Pipeline.microVec(col("embedding")))
       .withColumn("bucket", planeCols.reduce(_ + _))
       .withColumn("nrm", fixed_dot(col("fx"), col("fx")))
       .select(col("vec_id"), col("bucket"), col("fx"), col("nrm"))
@@ -946,8 +944,7 @@ object Similarity {
       when(dot > 0, lit(1L << j)).otherwise(lit(0L))
     }
     U.tbl(s, d, "embeddings")
-      .withColumn("fx", transform(col("embedding"),
-        x => floor(x.cast(DoubleType) * lit(1000000.0))))
+      .withColumn("fx", Pipeline.microVec(col("embedding")))
       .withColumn("bucket", planeCols.reduce(_ + _))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n_vecs"))
       .orderBy("bucket")
@@ -1495,42 +1492,16 @@ object Similarity {
       "left")
   }
 
-  /** Linear CKA (centered-kernel-alignment family, uncentered linear
-    * variant) between the FIRST and SECOND 32-dim halves of the
-    * embedding — "do two representations of the same items agree?", the
-    * similarity-of-representations readout a distillation/MRL pipeline
-    * tracks. CKA² = ‖XᵀY‖²_F / (‖XᵀX‖_F·‖YᵀY‖_F) squared so no sqrt
-    * enters the oracle. Reads the SHARED per-(session, sfDir) Gram cache
-    * (the emb_top_eigvec/emb_pca2 shuffle-free map-side outer-product
-    * build, cells pre-truncated by 10⁹ — its oracle CTE is nested here
-    * verbatim so the two definitions cannot drift); the Frobenius sums
-    * ride DECIMAL(38,0) and the final ratio is one integral division.
-    * Marginal cost over the cache: a 4096-row aggregate. */
-  private def embCka(s: SparkSession, d: String): DataFrame = {
-    val dec = DecimalType(38, 0)
-    // the SHARED per-(session, sfDir) Gram cache (the emb_top_eigvec /
-    // emb_pca2 build: shuffle-free map-side outer products, cells
-    // pre-truncated by 1e9) — 0-based dims, halves split at i < 32
-    val cells = graft.llm.Pipeline.gram(s, d)
-      .select(col("i").as("da"), col("j").as("db"), col("c").as("cd"))
-    val f = cells.agg(
-      sum(when(col("da") < 32 && col("db") < 32,
-        col("cd").cast(dec) * col("cd")).otherwise(lit(0L).cast(dec)))
-        .as("fxx"),
-      sum(when(col("da") < 32 && col("db") >= 32,
-        col("cd").cast(dec) * col("cd")).otherwise(lit(0L).cast(dec)))
-        .as("fxy"),
-      sum(when(col("da") >= 32 && col("db") >= 32,
-        col("cd").cast(dec) * col("cd")).otherwise(lit(0L).cast(dec)))
-        .as("fyy"))
-    f.select(expr("CAST(fxx AS BIGINT)").as("fxx"),
-      expr("CAST(fxy AS BIGINT)").as("fxy"),
-      expr("CAST(fyy AS BIGINT)").as("fyy"),
-      expr("CASE WHEN fxx > 0 AND fyy > 0 THEN " +
-        "CAST((CAST(fxy AS DECIMAL(38,0)) * fxy * 1000000) DIV " +
-        "(CAST(fxx AS DECIMAL(38,0)) * fyy) AS BIGINT) END")
-        .as("cka2_micro"))
-  }
+  /** Linear CKA (uncentered linear variant) between the FIRST and SECOND
+    * 32-dim halves of the embedding — "do two representations of the
+    * same items agree?", the readout a distillation/MRL pipeline tracks.
+    * CKA² = ‖XᵀY‖²_F / (‖XᵀX‖_F·‖YᵀY‖_F), squared so no sqrt enters the
+    * oracle, whose Gram CTE is nested verbatim from the eigvector
+    * oracle. [[GramKernel.cka]] sums the Frobenius terms locally over
+    * the shared collected Gram. */
+  private def embCka(s: SparkSession, d: String): DataFrame =
+    s.createDataFrame(Seq(GramKernel.cka(Pipeline.gram(s, d))))
+      .toDF("fxx", "fxy", "fyy", "cka2_micro")
 
   /** Explicit distributed k-means (k = 4, 3 assignment rounds, seeds =
     * vec_ids 0–3): the TRAINING loop the IVF quantizer runs behind its

@@ -228,28 +228,25 @@ object TextAnalysis {
     * hash of each sliding window of 4 — guarantees any shared run of >= 6
     * tokens shares a fingerprint, with ~1/4 the storage of full shingling.
     * All-array per-row ops: no shuffle until the output sort. */
-  private def winnowing(s: SparkSession, d: String): DataFrame = {
-    val base = docs(s, d)
+  private def winnowing(s: SparkSession, d: String): DataFrame =
+    docs(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 6) // need >= 4 shingles for one window
-      .withColumn("sh", graft.plans.CustomExprs.spans_w(col("toks"), 3, "_"))
-      .withColumn("hs", graft.plans.CustomExprs.poly_hash_array(col("sh"), 13L))
-      .withColumn("fps", array_distinct(expr(
-        "transform(sequence(1, size(hs) - 3), i -> array_min(slice(hs, i, 4)))")))
-    base.select(col("doc_id"),
-      size(col("fps")).cast(LongType).as("n_fps"),
-      array_min(col("fps")).as("min_fp"),
-      array_max(col("fps")).as("max_fp"))
+      .withColumn("fps", graft.plans.CustomExprs.window_min_distinct(
+        graft.plans.CustomExprs.poly_hash_array(
+          graft.plans.CustomExprs.spans_w(col("toks"), 3, "_"), 13L), 4))
+      .select(col("doc_id"), size(col("fps")).cast(LongType).as("n_fps"),
+        array_min(col("fps")).as("min_fp"), array_max(col("fps")).as("max_fp"))
       .orderBy("doc_id")
-  }
 
   /** Gopher-style repetition quality signals per doc: duplicate-token
     * ratio (1 − distinct/total, in integer micro-units), the most frequent
     * token's count, and the most frequent word-bigram's count — the
     * repetition filters every corpus-quality pass runs (heavily repeated
     * text is boilerplate or spam). Entirely per-row array arithmetic
-    * (quadratic in tokens-per-doc, which is bounded; linear in docs), so
-    * the whole query is a shuffle-free projection at any corpus size.
+    * (each top count is one codegen'd hash count, `CustomExprs.max_freq`:
+    * linear in tokens-per-doc and in docs), so the whole query is a
+    * shuffle-free projection at any corpus size.
     * Docs under 2 tokens are filtered BEFORE the ratio division — ANSI
     * mode evaluates expressions on semantically-unreachable rows. */
   private def repetition(s: SparkSession, d: String): DataFrame =
@@ -258,13 +255,9 @@ object TextAnalysis {
       .filter(size(col("toks")) >= 2)
       .withColumn("n_tokens", size(col("toks")).cast(LongType))
       .withColumn("n_distinct", size(array_distinct(col("toks"))).cast(LongType))
-      .withColumn("top_token", expr(
-        "array_max(transform(array_distinct(toks), " +
-          "t -> size(filter(toks, x -> x = t))))").cast(LongType))
-      .withColumn("bgs", graft.plans.CustomExprs.spans_w(col("toks"), 2, "_"))
-      .withColumn("top_bigram", expr(
-        "array_max(transform(array_distinct(bgs), " +
-          "b -> size(filter(bgs, x -> x = b))))").cast(LongType))
+      .withColumn("top_token", graft.plans.CustomExprs.max_freq(col("toks")))
+      .withColumn("top_bigram", graft.plans.CustomExprs.max_freq(
+        graft.plans.CustomExprs.spans_w(col("toks"), 2, "_")))
       .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
         expr("((n_tokens - n_distinct) * 1000000) DIV n_tokens").as("dup_micro"),
         col("top_token"), col("top_bigram"))

@@ -1789,8 +1789,8 @@ object Graphs {
         .withColumn("rk", (row_number().over(wAdj) - 1).cast(LongType))
         .withColumn("deg", count(lit(1)).over(wCnt))
       // localCheckpoint pins the ≤20-row frontier: without it every
-      // broadcast(cur) re-walks the whole k-step lineage (the emb_pca2
-      // deflation lesson), turning 6 hops into O(k²) window passes
+      // broadcast(cur) re-walks the whole k-step lineage, turning 6 hops
+      // into O(k²) window passes
       cur = ranked.join(broadcast(cur.select(col("wid"), col("node").as("cu"))),
           col("u") === col("cu") &&
             col("rk") === (col("cu") * 31 + k * 17) % col("deg"))

@@ -215,6 +215,55 @@ object SpansW {
   }
 }
 
+/** The largest number of times one value occurs in an array<string>: one
+  * hash count in place of the quadratic interpreted lambda pair
+  * array_max(transform(array_distinct(xs), t -> size(filter(xs, x -> x = t)))).
+  * NULL elements equal nothing (count 0); an empty array gives NULL. */
+case class MaxFreq(child: Expression) extends UnaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+  override def dataType: DataType = LongType
+  override def nullSafeEval(v: Any): Any = MaxFreq.compute(v.asInstanceOf[ArrayData])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val m = ctx.freshName("maxFreq")
+      s"""Long $m = graft.plans.MaxFreq.compute($c);
+      |${ev.isNull} = $m == null;
+      |if ($m != null) ${ev.value} = $m;""".stripMargin
+    })
+  override protected def withNewChildInternal(c: Expression): MaxFreq = copy(child = c)
+}
+
+object MaxFreq {
+  def compute(xs: ArrayData): java.lang.Long = if (xs.numElements() == 0) null else {
+    val counts = scala.collection.mutable.HashMap.empty[UTF8String, Long]
+    (0 until xs.numElements()).filterNot(xs.isNullAt).foldLeft(0L) { (top, i) =>
+      val k = xs.getUTF8String(i)
+      counts(k) = counts.getOrElse(k, 0L) + 1
+      math.max(top, counts(k))
+    }
+  }
+}
+
+/** The distinct minima (first-occurrence order) of the width-w windows of a
+  * NULL-free array<long>, empty below w elements: one codegen'd pass for
+  * array_distinct(transform(sequence(1, size(hs) - w + 1),
+  * i -> array_min(slice(hs, i, w)))), which re-slices at every position. */
+case class WindowMinDistinct(child: Expression, w: Int) extends UnaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullSafeEval(v: Any): Any =
+    WindowMinDistinct.compute(v.asInstanceOf[ArrayData].toLongArray(), w)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.plans.WindowMinDistinct.compute($c.toLongArray(), $w)")
+  override protected def withNewChildInternal(c: Expression): WindowMinDistinct = copy(child = c)
+}
+
+object WindowMinDistinct {
+  def compute(hs: Array[Long], w: Int): GenericArrayData = new GenericArrayData(
+    hs.iterator.sliding(w).withPartial(false).map(_.min).distinct.toArray[Any])
+}
+
 /** MinHash signature vector in one pass: sig_k = min over the input hashes
   * of (h*(2k+1) + k*12345+7) mod 1e9+7, for k in [0, nPerm). Replaces
   * nPerm interpreted transform/array_min scans with one codegen'd loop. */
@@ -344,6 +393,8 @@ object CustomExprs {
   def zorder2(x: Column, y: Column): Column = c(ZOrder2(e(x), e(y)))
   def cdc_chunks(text: Column): Column = c(CdcChunks(e(text)))
   def spans_w(toks: Column, w: Int, sep: String): Column = c(SpansW(e(toks), w, sep))
+  def max_freq(xs: Column): Column = c(MaxFreq(e(xs)))
+  def window_min_distinct(hs: Column, w: Int): Column = c(WindowMinDistinct(e(hs), w))
 
   /** Unrolled SQL mirror of [[ZOrder2]] (both engines): Σ over bit i of
     * ((x>>i)&1)<<2i | ((y>>i)&1)<<(2i+1). */

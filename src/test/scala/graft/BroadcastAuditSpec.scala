@@ -26,7 +26,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
     "operators/Joins.scala" -> 2,
     "operators/Scans.scala" -> 2,
     "operators/TypedApi.scala" -> 1,
-    "llm/Pipeline.scala" -> 29,
+    "llm/Pipeline.scala" -> 25,
     "llm/Similarity.scala" -> 34,
     "llm/Dedup.scala" -> 2,
     "llm/Multimodal.scala" -> 1,

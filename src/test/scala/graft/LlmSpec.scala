@@ -194,6 +194,36 @@ class LlmSpec extends SparkTestBase {
       }
   }
 
+  test("max_freq and window_min_distinct equal the lambdas they replaced") {
+    // the interpreted forms text_repetition and text_winnowing ran before
+    val freqHof = "array_max(transform(array_distinct(xs), " +
+      "t -> size(filter(xs, x -> x = t))))"
+    val winHof = "array_distinct(transform(sequence(1, size(hs) - 3), " +
+      "i -> array_min(slice(hs, i, 4))))"
+    val xs = Seq(Seq("a", "b", "a", "c", "a", "b"), Seq("z"),
+      Seq[String](), Seq("a", null, null, "a"), Seq[String](null))
+    xs.map(Tuple1(_)).toDF("xs")
+      .select(CustomExprs.max_freq(col("xs")).as("fast"),
+        expr(freqHof).cast("bigint").as("slow")).collect()
+      .foreach(r => assert(r.get(0) == r.get(1), s"max_freq $r"))
+    val hs = Seq(Seq(5L, 3L, 9L, 7L, 3L, 8L, 1L, 6L), Seq(4L, 4L, 4L, 4L),
+      Seq(9L, 8L, 7L, 6L, 5L, 6L, 7L, 8L, 9L), Seq(Long.MinValue, 0L, Long.MaxValue, 2L))
+    hs.map(Tuple1(_)).toDF("hs")
+      .select(CustomExprs.window_min_distinct(col("hs"), 4).as("fast"),
+        expr(winHof).as("slow")).collect()
+      .foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"window min $r"))
+    // and over every fixture document, codegen'd and interpreted
+    val docs = U.tbl(spark, sfDir, "documents")
+      .select(graft.llm.TextUtil.tokens(col("text")).as("xs"))
+      .filter(size(col("xs")) >= 6)
+      .withColumn("hs", CustomExprs.poly_hash_array(
+        CustomExprs.spans_w(col("xs"), 3, "_"), 13L))
+    val diff = docs.filter(
+      !(CustomExprs.max_freq(col("xs")) <=> expr(freqHof).cast("bigint")) ||
+        !(CustomExprs.window_min_distinct(col("hs"), 4) <=> expr(winHof)))
+    assert(docs.count() > 0 && diff.count() == 0)
+  }
+
   test("simhash60 of identical hash-sets is identical; disjoint sets differ") {
     val df = Seq(
       (1L, Seq(111L, 222L, 333L, 444L)),

@@ -39,7 +39,7 @@ class SharedIndexSpec extends SparkTestBase {
   test("one value per (session, sfDir); another sfDir evicts the first") {
     val other = "/root/testdata/sf0.01"
     val sc = spark.sparkContext
-    for (name <- Seq("gram", "permPvals", "knnAssigned")) {
+    for (name <- Seq("shingled", "permPvals", "knnAssigned")) {
       val e = entry(name)
       val a = e.get(spark, sfDir).asInstanceOf[AnyRef]
       assert(a eq e.get(spark, sfDir).asInstanceOf[AnyRef])
@@ -54,6 +54,12 @@ class SharedIndexSpec extends SparkTestBase {
       assert(left.isEmpty, s"$name still pins $sfDir's RDDs $left")
       e.get(spark, sfDir)
     }
+    // the collected Gram holds no frame: a second sfDir replaces the value
+    val g = entry("gram")
+    val a = g.get(spark, sfDir).asInstanceOf[AnyRef]
+    assert(a eq g.get(spark, sfDir).asInstanceOf[AnyRef])
+    g.get(spark, other)
+    assert(!(a eq g.get(spark, sfDir).asInstanceOf[AnyRef]))
   }
 
   test("no hand-rolled per-(session, sfDir) cache outside SharedIndex.scala") {

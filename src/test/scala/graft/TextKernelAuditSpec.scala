@@ -12,7 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - no `element_at(toks, i + 1)` n-gram lambda outside TextUtil — use
   *    `CustomExprs.spans_w` (joined n-grams) or `TextUtil.tokenPairs`;
   *  - no `ascii(` Column fold outside TextUtil — use `CustomExprs.poly_hash`
-  *    (DuckDB oracle strings may call `ascii(`: literals are not code).
+  *    (DuckDB oracle strings may call `ascii(`: literals are not code);
+  *  - no per-value frequency lambda `transform(array_distinct(…), t ->
+  *    size(filter(…)))` — use `CustomExprs.max_freq`;
+  *  - no per-position window lambda `array_min(slice(…))` /
+  *    `array_max(slice(…))` — use `CustomExprs.window_min_distinct`.
+  * The last two name Spark functions (DuckDB spells them `list_*`), so
+  * the rules read SQL strings too: the lambdas hid in `expr(…)` text.
   */
 class TextKernelAuditSpec extends AnyFunSuite {
 
@@ -74,5 +80,14 @@ class TextKernelAuditSpec extends AnyFunSuite {
     }.map(_._1)
     assert(found.isEmpty, s"ascii( Column folds in $found — hash text " +
       "through CustomExprs.poly_hash")
+  }
+
+  test("no frequency-count or window-slice lambda over a token or hash array") {
+    val rules = Seq(
+      """transform\s*\(\s*array_distinct\s*\(""" -> "CustomExprs.max_freq",
+      """array_m(in|ax)\s*\(\s*slice\s*\(""" -> "CustomExprs.window_min_distinct")
+    val found = for ((re, use) <- rules; (f, code) <- sources
+      if hits(re, code) > 0) yield s"$f: $re (use $use)"
+    assert(found.isEmpty, s"interpreted per-element lambdas: $found")
   }
 }
