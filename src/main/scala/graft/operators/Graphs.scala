@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{OSQL, SharedIndex, U}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Graph analytics over the co-purchase graph (parts linked when they
   * appear in the same order) — the relational-to-graph bridge every
@@ -226,101 +227,62 @@ object Graphs {
   private[graft] def hitsImpl(s: SparkSession, d: String,
       cap: Long): DataFrame = {
     val e = coPairs(s, d).select(col("u"), col("v"))
-    if (e.count() <= cap) hitsSingleTask(e)
-    else hitsOnEdges(e, PrBroadcastNodeCap)
-  }
-
-  private def hitsSingleTask(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    // id-indexed CSR arrays, not boxed groupBy Maps (the
-    // transitiveTriplesSingleTask discipline): the boxed form allocated
-    // a Map entry + array per node and hash-looked-up every edge twice
-    // per half-step — measured as the bulk of graph_hits' 2.0 s at sf0.1
-    // on the ~1.9M-row co-pair frame. Arithmetic is unchanged: exact
-    // Long sums per node (order-free), max-rescale via the same
-    // truncating 1e6 division, output = nodes with BOTH an out- and an
-    // in-edge, identically to the hub/auth key intersection before.
-    e.as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        if (edges.isEmpty) Iterator.empty
-        else {
-          val m = edges.length
-          val idx = scala.collection.mutable.LongMap.empty[Int]
-          val eu = new Array[Int](m); val ev = new Array[Int](m)
-          var i = 0
-          while (i < m) {
-            eu(i) = idx.getOrElseUpdate(edges(i)._1, idx.size)
-            ev(i) = idx.getOrElseUpdate(edges(i)._2, idx.size)
-            i += 1
-          }
-          val n = idx.size
-          val ids = new Array[Long](n)
-          idx.foreach { case (id, j) => ids(j) = id }
-          val inOff = new Array[Int](n + 1); val outOff = new Array[Int](n + 1)
-          i = 0
-          while (i < m) { inOff(ev(i) + 1) += 1; outOff(eu(i) + 1) += 1; i += 1 }
-          i = 0
-          while (i < n) {
-            inOff(i + 1) += inOff(i); outOff(i + 1) += outOff(i); i += 1
-          }
-          val inAdj = new Array[Int](m); val outAdj = new Array[Int](m)
-          val ip = inOff.clone(); val op = outOff.clone()
-          i = 0
-          while (i < m) {
-            inAdj(ip(ev(i))) = eu(i); ip(ev(i)) += 1
-            outAdj(op(eu(i))) = ev(i); op(eu(i)) += 1
-            i += 1
-          }
-          val araw = new Array[Long](n); val auth = new Array[Long](n)
-          val hraw = new Array[Long](n); val hub = new Array[Long](n)
-          var r = 0
-          while (r < 2) {
-            i = 0
-            while (i < n) {
-              araw(i) =
-                if (r == 0) 1000000L * (inOff(i + 1) - inOff(i))
-                else {
-                  var acc = 0L; var p = inOff(i)
-                  while (p < inOff(i + 1)) { acc += hub(inAdj(p)); p += 1 }
-                  acc
-                }
-              i += 1
+    singleTask(e, cap, "node", "h", "a") { g =>
+      // id-indexed CSR arrays, not boxed groupBy Maps: the boxed form
+      // allocated a Map entry + array per node and hash-looked-up every
+      // edge twice per half-step — measured as the bulk of graph_hits'
+      // 2.0 s at sf0.1 on the ~1.9M-row co-pair frame. Exact Long sums
+      // per node (order-free), max-rescale via the same truncating 1e6
+      // division, output = nodes with BOTH an out- and an in-edge,
+      // identically to the hub/auth key intersection of the twin.
+      val c = g.csr
+      val (n, inOff, inAdj, outOff, outAdj) =
+        (c.n, c.inOff, c.inAdj, c.outOff, c.outAdj)
+      val araw = new Array[Long](n); val auth = new Array[Long](n)
+      val hraw = new Array[Long](n); val hub = new Array[Long](n)
+      var r = 0
+      while (r < 2) {
+        var i = 0
+        while (i < n) {
+          araw(i) =
+            if (r == 0) 1000000L * (inOff(i + 1) - inOff(i))
+            else {
+              var acc = 0L; var p = inOff(i)
+              while (p < inOff(i + 1)) { acc += hub(inAdj(p)); p += 1 }
+              acc
             }
-            // max over in-nodes only — indeg-0 rows hold 0 and a
-            // non-negative in-node max dominates them, but an all-zero
-            // in-node set must divide by 0 exactly as the Map form did
-            var am = Long.MinValue
-            i = 0
-            while (i < n) {
-              if (inOff(i + 1) > inOff(i) && araw(i) > am) am = araw(i)
-              i += 1
-            }
-            i = 0; while (i < n) { auth(i) = araw(i) * 1000000L / am; i += 1 }
-            i = 0
-            while (i < n) {
-              var acc = 0L; var p = outOff(i)
-              while (p < outOff(i + 1)) { acc += auth(outAdj(p)); p += 1 }
-              hraw(i) = acc
-              i += 1
-            }
-            var hm = Long.MinValue
-            i = 0
-            while (i < n) {
-              if (outOff(i + 1) > outOff(i) && hraw(i) > hm) hm = hraw(i)
-              i += 1
-            }
-            i = 0; while (i < n) { hub(i) = hraw(i) * 1000000L / hm; i += 1 }
-            r += 1
-          }
-          (0 until n).iterator
-            .filter(j => outOff(j + 1) > outOff(j) && inOff(j + 1) > inOff(j))
-            .map(j => (ids(j), hub(j), auth(j)))
+          i += 1
         }
+        // max over in-nodes only — indeg-0 rows hold 0 and a
+        // non-negative in-node max dominates them, but an all-zero
+        // in-node set must divide by 0 exactly as the Map form did
+        var am = Long.MinValue
+        i = 0
+        while (i < n) {
+          if (inOff(i + 1) > inOff(i) && araw(i) > am) am = araw(i)
+          i += 1
+        }
+        i = 0; while (i < n) { auth(i) = araw(i) * 1000000L / am; i += 1 }
+        i = 0
+        while (i < n) {
+          var acc = 0L; var p = outOff(i)
+          while (p < outOff(i + 1)) { acc += auth(outAdj(p)); p += 1 }
+          hraw(i) = acc
+          i += 1
+        }
+        var hm = Long.MinValue
+        i = 0
+        while (i < n) {
+          if (outOff(i + 1) > outOff(i) && hraw(i) > hm) hm = hraw(i)
+          i += 1
+        }
+        i = 0; while (i < n) { hub(i) = hraw(i) * 1000000L / hm; i += 1 }
+        r += 1
       }
-      .toDF("node", "h", "a")
+      (0 until n).iterator
+        .filter(j => c.outDeg(j) > 0 && c.inDeg(j) > 0)
+        .map(j => (c.ids(j), hub(j), auth(j)))
+    }(hitsOnEdges(e, PrBroadcastNodeCap))
       .orderBy(col("a").desc, col("node")).limit(50)
   }
 
@@ -572,17 +534,143 @@ object Graphs {
     * plans. */
   private[operators] val GraphIterEdgeCap = 5000000L
 
-  private[graft] def kcoreOnAdj(adj: DataFrame, cap: Long): DataFrame = {
-    // gate action on the cached adjacency; production decision source at
-    // 100 TB: catalog/file row statistics when the edge set is a stored
-    // table (here it is a derived pair frame, so the count doubles as the
-    // cache materializer)
-    val degs =
-      if (adj.count() <= cap) kcoreDegreesSingleTask(adj)
-      else kcoreDegreesLoop(adj)
-    degs.groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
-      .orderBy("degree")
+  /** The one single-task runner behind every [[GraphIterEdgeCap]]-gated
+    * kernel. It owns the gate: one `count()` of the (u, v) frame `e`
+    * against `cap` (production decision source at 100 TB: catalog/file
+    * row statistics when the edge set is a stored table; the frames here
+    * are derived, so the count doubles as their cache materializer). At
+    * or below the cap the pairs are collapsed into ONE task, decoded once
+    * into primitive arrays and handed to `body`, whose rows are named
+    * `cols`; above it the result is `twin`, the kernel's distributed
+    * loop, which must compute the same rows. The single-task frame stays
+    * lazy — Dataset `mapPartitions`, never `.rdd`, which under AQE can run
+    * upstream shuffle stages while the frame is being built — so the
+    * gate's count is the only job building it starts. */
+  private[graft] def singleTask[T <: Product : TypeTag](e: DataFrame,
+      cap: Long, cols: String*)(body: Edges => Iterator[T])(
+      twin: => DataFrame): DataFrame =
+    if (e.count() <= cap)
+      e.select(col("u"), col("v"))
+        .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+        .coalesce(1)
+        .mapPartitions(it => body(Edges(it)))(Encoders.product[T])
+        .toDF(cols: _*)
+    else twin
+
+  /** One task's decoded edge list: edge i runs u(i) → v(i), input order
+    * and duplicates kept. */
+  private[graft] final class Edges(val u: Array[Long], val v: Array[Long]) {
+    lazy val csr: Csr = Csr(u, v)
   }
+  private object Edges {
+    def apply(it: Iterator[(Long, Long)]): Edges = {
+      val u = new scala.collection.mutable.ArrayBuilder.ofLong
+      val v = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { p => u += p._1; v += p._2 }
+      new Edges(u.result(), v.result())
+    }
+  }
+
+  /** Compressed sparse rows over one task's edges. Nodes are renumbered
+    * 0 until n in ascending id order (`ids(j)` is node j's id) and every
+    * out-/in-adjacency segment is sorted, so it lists its neighbors in
+    * node-id order: the order the merge counts intersect in and the walk
+    * oracles rank neighbors by. Duplicate edges stay repeated entries.
+    * The in-adjacency is built on first use: only HITS and the
+    * closed-wedge count read it. */
+  private[graft] final class Csr(val ids: Array[Long], eu: Array[Int],
+      ev: Array[Int]) {
+    val (outOff, outAdj) = Csr.segments(eu, ev, ids.length)
+    lazy val (inOff, inAdj) = Csr.segments(ev, eu, ids.length)
+    def n: Int = ids.length
+    def outDeg(j: Int): Int = outOff(j + 1) - outOff(j)
+    def inDeg(j: Int): Int = inOff(j + 1) - inOff(j)
+    def hasEdge(a: Int, b: Int): Boolean =
+      java.util.Arrays.binarySearch(outAdj, outOff(a), outOff(a + 1), b) >= 0
+
+    /** Nodes with an out-edge, ascending id: the seed pool of the BFS
+      * kernels, whose distributed twins draw seeds from the distinct `u`
+      * (a node that is only ever a target never seeds). */
+    def sources: Iterator[Int] = (0 until n).iterator.filter(outDeg(_) > 0)
+
+    /** Out-edge hop distance from `src` to every node, -1 where it is not
+      * reached within `maxHops`. */
+    def hops(src: Int, maxHops: Int): Array[Int] = {
+      val dist = Array.fill(n)(-1)
+      val queue = new Array[Int](n)
+      dist(src) = 0; queue(0) = src
+      var head = 0; var tail = 1
+      while (head < tail && dist(queue(head)) < maxHops) {
+        val x = queue(head); head += 1
+        var p = outOff(x)
+        while (p < outOff(x + 1)) {
+          val y = outAdj(p)
+          if (dist(y) < 0) { dist(y) = dist(x) + 1; queue(tail) = y; tail += 1 }
+          p += 1
+        }
+      }
+      dist
+    }
+  }
+  private object Csr {
+    def apply(u: Array[Long], v: Array[Long]): Csr = {
+      val m = u.length
+      val idx = scala.collection.mutable.LongMap.empty[Int]
+      val eu = new Array[Int](m); val ev = new Array[Int](m)
+      var i = 0
+      while (i < m) {
+        eu(i) = idx.getOrElseUpdate(u(i), idx.size)
+        ev(i) = idx.getOrElseUpdate(v(i), idx.size)
+        i += 1
+      }
+      // renumber from first-seen to ascending id order
+      val seen = new Array[Long](idx.size)
+      idx.foreach { case (id, j) => seen(j) = id }
+      val ids = seen.sorted
+      val rank = seen.map(java.util.Arrays.binarySearch(ids, _))
+      i = 0; while (i < m) { eu(i) = rank(eu(i)); ev(i) = rank(ev(i)); i += 1 }
+      new Csr(ids, eu, ev)
+    }
+
+    /** Offsets and sorted segments: segment k lists `to(i)` of every edge
+      * i with `from(i) == k`. */
+    def segments(from: Array[Int], to: Array[Int],
+        n: Int): (Array[Int], Array[Int]) = {
+      val off = new Array[Int](n + 1)
+      var i = 0
+      while (i < from.length) { off(from(i) + 1) += 1; i += 1 }
+      i = 0; while (i < n) { off(i + 1) += off(i); i += 1 }
+      val adj = new Array[Int](from.length)
+      val p = off.clone()
+      i = 0
+      while (i < from.length) { adj(p(from(i))) = to(i); p(from(i)) += 1; i += 1 }
+      i = 0
+      while (i < n) { java.util.Arrays.sort(adj, off(i), off(i + 1)); i += 1 }
+      (off, adj)
+    }
+  }
+
+  /** Per-node degree inside the 2-core, as its histogram: below the cap
+    * the identical 8 keep-set rounds in one task, mirroring
+    * [[kcoreDegreesLoop]] round-for-round so gate dispatch cannot change
+    * the answer. */
+  private[graft] def kcoreOnAdj(adj: DataFrame, cap: Long): DataFrame =
+    singleTask(adj, cap, "u", "degree") { g =>
+      val (us, vs) = (g.u, g.v)
+      var keep: scala.collection.Set[Long] = us.toSet
+      for (_ <- 0 until 8) {
+        val cnt = scala.collection.mutable.Map.empty[Long, Int]
+        for (i <- us.indices if keep(vs(i)))
+          cnt.update(us(i), cnt.getOrElse(us(i), 0) + 1)
+        keep = cnt.collect { case (u, c) if c >= 2 => u }.toSet
+      }
+      val deg = scala.collection.mutable.Map.empty[Long, Long]
+      for (i <- us.indices if keep(us(i)) && keep(vs(i)))
+        deg.update(us(i), deg.getOrElse(us(i), 0L) + 1L)
+      deg.iterator
+    }(kcoreDegreesLoop(adj))
+      .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
+      .orderBy("degree")
 
   /** The distributed peel — one semi-join + one agg per round against the
     * cached adjacency, keep-set referenced once per round (linear lineage). */
@@ -598,32 +686,6 @@ object Graphs {
     adj.join(keep.select(col("u").as("cu")), col("u") === col("cu"), "left_semi")
       .join(keep.select(col("u").as("cv")), col("v") === col("cv"), "left_semi")
       .groupBy(col("u")).agg(count(lit(1)).as("degree"))
-  }
-
-  /** The below-the-cap kernel: the identical 8 keep-set rounds in one task
-    * (the [[Components.dsuLabels]] precedent — a support-filtered edge set
-    * is tiny, so one pass beats 16 scheduled stages). Mirrors the loop
-    * round-for-round so gate dispatch cannot change the answer. */
-  private def kcoreDegreesSingleTask(adj: DataFrame): DataFrame = {
-    val s = adj.sparkSession
-    import s.implicits._
-    adj.select(col("u"), col("v")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        var keep: scala.collection.Set[Long] = edges.iterator.map(_._1).toSet
-        for (_ <- 0 until 8) {
-          val cnt = scala.collection.mutable.Map.empty[Long, Int]
-          for ((u, v) <- edges if keep(v))
-            cnt.update(u, cnt.getOrElse(u, 0) + 1)
-          keep = cnt.collect { case (u, c) if c >= 2 => u }.toSet
-        }
-        val deg = scala.collection.mutable.Map.empty[Long, Long]
-        for ((u, v) <- edges if keep(u) && keep(v))
-          deg.update(u, deg.getOrElse(u, 0L) + 1L)
-        deg.iterator
-      }
-      .toDF("u", "degree")
   }
 
   /** Bounded BFS hop distance from the minimum-id node of the association
@@ -642,10 +704,15 @@ object Graphs {
 
   private[graft] def bfsOnAdj(adj: DataFrame, cap: Long,
       frontierBcastCap: Long = PrBroadcastNodeCap): DataFrame =
-    // gate action (production source: catalog/file row stats for stored
-    // edge tables; this adjacency is derived, so the count warms its cache)
-    (if (adj.count() <= cap) bfsSingleTask(adj)
-     else bfsLoop(adj, frontierBcastCap))
+    singleTask(adj, cap, "node", "hops") { g =>
+      val c = g.csr
+      // the source is the twin's min(u): the lowest id with an out-edge
+      c.sources.take(1).flatMap { src =>
+        val h = c.hops(src, 3)
+        (0 until c.n).iterator.filter(h(_) >= 0)
+          .map(j => (c.ids(j), h(j).toLong))
+      }
+    }(bfsLoop(adj, frontierBcastCap))
       .orderBy("hops", "node")
 
   /** Truncated harmonic centrality from the 5 lowest-id seed nodes (the
@@ -671,47 +738,25 @@ object Graphs {
     * executor); above, the gated-frontier loop. Round12Spec pins cap=0
     * parity. */
   private[graft] def closenessImpl(s: SparkSession, d: String,
-      cap: Long): DataFrame = {
-    val adj = wedgeFrames(s, d)._1
-    if (adj.count() <= cap) closenessSingleTask(adj)
-    else closenessOnAdj(adj, PrBroadcastNodeCap)
-  }
+      cap: Long): DataFrame =
+    closenessOn(wedgeFrames(s, d)._1, cap)
 
-  private def closenessSingleTask(adj: DataFrame): DataFrame = {
-    val s = adj.sparkSession
-    import s.implicits._
-    adj.select(col("u"), col("v")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        if (edges.isEmpty) Iterator.empty
-        else {
-          val nbrs = edges.groupBy(_._1)
-            .map { case (u, es) => u -> es.map(_._2) }
-          val seeds = nbrs.keys.toSeq.sorted.take(5)
-          val acc = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-          seeds.foreach { seed =>
-            val dist = scala.collection.mutable.Map(seed -> 0L)
-            var frontier = Set(seed)
-            for (h <- 1L to 3L) {
-              frontier = frontier.iterator
-                .flatMap(n => nbrs.getOrElse(n, Array.empty[Long]))
-                .filter(n => !dist.contains(n)).toSet
-              frontier.foreach(n => dist(n) = h)
-            }
-            dist.foreach { case (n, dd) =>
-              if (dd > 0) {
-                val (c, hsum) = acc.getOrElse(n, (0L, 0L))
-                acc(n) = (c + 1, hsum + 1000000L / dd)
-              }
-            }
-          }
-          acc.iterator.map { case (n, (c, hsum)) => (n, c, hsum) }
+  private[graft] def closenessOn(adj: DataFrame, cap: Long): DataFrame =
+    singleTask(adj, cap, "node", "n_seeds", "harmonic_micro") { g =>
+      val c = g.csr
+      val nSeeds = new Array[Long](c.n); val hsum = new Array[Long](c.n)
+      c.sources.take(5).foreach { seed =>
+        val h = c.hops(seed, 3)
+        var j = 0
+        while (j < c.n) {
+          if (h(j) > 0) { nSeeds(j) += 1; hsum(j) += 1000000L / h(j) }
+          j += 1
         }
       }
-      .toDF("node", "n_seeds", "harmonic_micro")
+      (0 until c.n).iterator.filter(nSeeds(_) > 0)
+        .map(j => (c.ids(j), nSeeds(j), hsum(j)))
+    }(closenessOnAdj(adj, PrBroadcastNodeCap))
       .orderBy(col("harmonic_micro").desc, col("node")).limit(50)
-  }
 
   private[graft] def closenessOnAdj(adj: DataFrame,
       broadcastCap: Long): DataFrame = {
@@ -772,32 +817,6 @@ object Graphs {
       .unionByName(h2.withColumn("hops", lit(2L)))
       .unionByName(h3.withColumn("hops", lit(3L)))
       .groupBy(col("n").as("node")).agg(min(col("hops")).as("hops"))
-  }
-
-  /** One-task BFS kernel: identical 3 frontier rounds + min-hop labeling. */
-  private def bfsSingleTask(adj: DataFrame): DataFrame = {
-    val s = adj.sparkSession
-    import s.implicits._
-    adj.select(col("u"), col("v")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        if (edges.isEmpty) Iterator.empty
-        else {
-          val nbrs = edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
-          val hops = scala.collection.mutable.Map.empty[Long, Long]
-          var frontier: Set[Long] = Set(edges.iterator.map(_._1).min)
-          hops(frontier.head) = 0L
-          for (h <- 1L to 3L) {
-            frontier = frontier.iterator
-              .flatMap(n => nbrs.getOrElse(n, Array.empty[Long])).toSet
-            // min-hop: only label nodes no earlier round reached
-            for (n <- frontier if !hops.contains(n)) hops(n) = h
-          }
-          hops.iterator
-        }
-      }
-      .toDF("node", "hops")
   }
 
   /** Local clustering coefficient per node of the support-filtered
@@ -1259,11 +1278,16 @@ object Graphs {
       .select(col("u"), col("v"))
       .unionByName(top.select(col("n").as("u"), col("n").as("v")))
       .persist())
-    // gate action (production source: catalog/file row stats for stored
-    // edge tables; this subgraph is derived, so the count materializes it)
-    val closure =
-      if (sub.count() <= cap) sccClosureSingleTask(sub)
-      else sccClosureLoop(sub)
+    // below the cap: BFS from each of the ≤ nodeCap nodes in one task —
+    // the transitive closure is a unique fixpoint, so any sound algorithm
+    // matches the doubling loop exactly
+    val closure = singleTask(sub, cap, "a", "b") { g =>
+      val c = g.csr
+      (0 until c.n).iterator.flatMap { a =>
+        val h = c.hops(a, Int.MaxValue)
+        (0 until c.n).iterator.filter(h(_) >= 0).map(b => (c.ids(a), c.ids(b)))
+      }
+    }(sccClosureLoop(sub))
     val swapped = closure.select(col("b").as("sa"), col("a").as("sb"))
     val mut = closure.join(swapped,
       col("a") === col("sa") && col("b") === col("sb"), "left_semi")
@@ -1274,31 +1298,6 @@ object Graphs {
     scc.join(broadcast(sz), col("scc_id") === col("sid"))
       .select(col("node"), col("scc_id"), col("scc_size"))
       .orderBy("node")
-  }
-
-  /** One-task closure kernel (BFS from each of the ≤[[SccNodeCap]] nodes):
-    * the transitive closure is a unique fixpoint, so any sound algorithm
-    * matches the doubling loop exactly. */
-  private def sccClosureSingleTask(seed: DataFrame): DataFrame = {
-    val s = seed.sparkSession
-    import s.implicits._
-    seed.select(col("u"), col("v")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        val adj = edges.groupBy(_._1).map { case (k, es) => (k, es.map(_._2)) }
-        val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2))
-          .toArray.distinct
-        nodes.iterator.flatMap { n =>
-          val seen = scala.collection.mutable.Set(n)
-          var frontier = List(n)
-          while (frontier.nonEmpty)
-            frontier = frontier.flatMap(x => adj.getOrElse(x, Array.empty[Long]))
-              .filter(seen.add)
-          seen.iterator.map(m => (n, m))
-        }
-      }
-      .toDF("a", "b")
   }
 
   /** Distributed twin: 6 path-doubling rounds over the capped subgraph,
@@ -1349,12 +1348,32 @@ object Graphs {
 
   private[graft] def ktrussOnEdges(e0: DataFrame, cap: Long): DataFrame = {
     val e = U.track(e0.persist())
-    // gate action (production source: catalog/file row stats for stored
-    // edge tables; this edge set is derived, so the count materializes it)
-    val out =
-      if (e.count() <= cap) ktrussSingleTask(e)
-      else ktrussLoop(e)
-    out.orderBy("u", "v")
+    // below the cap: the identical 8 rounds + closing count in one task,
+    // mirroring [[ktrussLoop]] round-for-round so gate dispatch cannot
+    // change the answer
+    singleTask(e, cap, "u", "v", "support") { g =>
+      var edges = g.u.zip(g.v)
+      def support(es: Array[(Long, Long)]): scala.collection.Map[(Long, Long), Long] = {
+        val nbr = scala.collection.mutable
+          .Map.empty[Long, scala.collection.mutable.Set[Long]]
+        for ((u, v) <- es) {
+          nbr.getOrElseUpdate(u, scala.collection.mutable.Set.empty) += v
+          nbr.getOrElseUpdate(v, scala.collection.mutable.Set.empty) += u
+        }
+        val m = scala.collection.mutable.Map.empty[(Long, Long), Long]
+        for ((u, v) <- es) m((u, v)) = (nbr(u) & nbr(v)).size.toLong
+        m
+      }
+      for (_ <- 0 until 8) {
+        val sup = support(edges)
+        edges = edges.filter(ed => sup(ed) >= 1L)
+      }
+      val fin = support(edges)
+      edges.iterator.collect {
+        case (u, v) if fin((u, v)) > 0L => (u, v, fin((u, v)))
+      }
+    }(ktrussLoop(e))
+      .orderBy("u", "v")
   }
 
   /** Per-edge triangle support within the CURRENT edge set — the wedge
@@ -1370,46 +1389,15 @@ object Graphs {
 
   private def ktrussLoop(e: DataFrame): DataFrame = {
     var cur = e
-    for (_ <- 0 until 8) {
-      val nxt = U.track(edgeSupport(cur)
-        .filter(col("support") >= 1).select(col("u"), col("v")).persist())
-      nxt.count()
-      cur = nxt
-    }
+    // localCheckpoint, not persist: each round reads the previous one five
+    // times, and a persisted round keeps that lineage in its plan — 5⁸
+    // copies of the base plan by round 8, whose cache-name string alone
+    // ran the heap out (the sccClosureLoop lesson)
+    for (_ <- 0 until 8)
+      cur = edgeSupport(cur)
+        .filter(col("support") >= 1).select(col("u"), col("v"))
+        .localCheckpoint()
     edgeSupport(cur)
-  }
-
-  /** The below-the-cap kernel: identical 8 rounds + closing count in one
-    * task — mirrors [[ktrussLoop]] round-for-round so gate dispatch cannot
-    * change the answer. */
-  private def ktrussSingleTask(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    e.select(col("u"), col("v")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var edges = it.toArray
-        def support(es: Array[(Long, Long)]): scala.collection.Map[(Long, Long), Long] = {
-          val nbr = scala.collection.mutable
-            .Map.empty[Long, scala.collection.mutable.Set[Long]]
-          for ((u, v) <- es) {
-            nbr.getOrElseUpdate(u, scala.collection.mutable.Set.empty) += v
-            nbr.getOrElseUpdate(v, scala.collection.mutable.Set.empty) += u
-          }
-          val m = scala.collection.mutable.Map.empty[(Long, Long), Long]
-          for ((u, v) <- es) m((u, v)) = (nbr(u) & nbr(v)).size.toLong
-          m
-        }
-        for (_ <- 0 until 8) {
-          val sup = support(edges)
-          edges = edges.filter(ed => sup(ed) >= 1L)
-        }
-        val fin = support(edges)
-        edges.iterator.collect {
-          case (u, v) if fin((u, v)) > 0L => (u, v, fin((u, v)))
-        }
-      }
-      .toDF("u", "v", "support")
   }
 
   /** Rich-club coefficient φ(k) = 2·E_k / (N_k·(N_k−1)) of the
@@ -1522,83 +1510,35 @@ object Graphs {
   private[graft] def walkCorpusImpl(s: SparkSession, d: String,
       cap: Long): DataFrame = {
     val sym = coPairs(s, d).select(col("u"), col("v"))
-    if (sym.count() <= cap) walkCorpusSingleTask(sym)
-    else walkCorpusOnEdges(sym)
-  }
-
-  /** Sorted-CSR build + top-degree seed pick shared by BOTH single-task
-    * walk kernels (the transitiveTriplesSingleTask layout): node-id
-    * interning, offset/adjacency fill, per-node sorted segments (sorted
-    * order IS the frame loop's window rank — coPairs rows are distinct)
-    * and the (-degree, id) 20-seed tie-break. One definition so the
-    * adjacency layout and seed rule — which both walk oracles mirror —
-    * cannot drift between the uniform and the node2vec walker. */
-  private[operators] final case class WalkCsr(
-      idx: scala.collection.mutable.LongMap[Int], ids: IndexedSeq[Long],
-      off: Array[Int], adj: Array[Long], seeds: Seq[Long])
-  private[operators] def walkCsr(edges: Array[(Long, Long)]): WalkCsr = {
-    val m = edges.length
-    val idx = scala.collection.mutable.LongMap.empty[Int]
-    val ids = scala.collection.mutable.ArrayBuffer[Long]()
-    val eu = new Array[Int](m); val ev = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      eu(i) = idx.getOrElseUpdate(edges(i)._1,
-        { ids += edges(i)._1; ids.size - 1 })
-      ev(i) = edges(i)._2
-      i += 1
-    }
-    val n = ids.size
-    val off = new Array[Int](n + 1)
-    i = 0; while (i < m) { off(eu(i) + 1) += 1; i += 1 }
-    i = 0; while (i < n) { off(i + 1) += off(i); i += 1 }
-    val adj = new Array[Long](m)
-    val p = off.clone()
-    i = 0
-    while (i < m) { adj(p(eu(i))) = ev(i); p(eu(i)) += 1; i += 1 }
-    i = 0
-    while (i < n) { java.util.Arrays.sort(adj, off(i), off(i + 1)); i += 1 }
-    val seeds = (0 until n)
-      .sortBy(j => (-(off(j + 1) - off(j)).toLong, ids(j)))
-      .take(20).map(ids(_))
-    WalkCsr(idx, ids.toIndexedSeq, off, adj, seeds)
-  }
-
-  private def walkCorpusSingleTask(sym: DataFrame): DataFrame = {
-    val s = sym.sparkSession
-    import s.implicits._
-    // one sequential task over the raw pair tuples, primitive CSR (see
-    // walkCsr). A distributed collect_list pre-grouping was measured
-    // SLOWER (2.0 vs 1.1 s warm at sf0.1): the ObjectHashAgg + array
-    // encoder costs more than one task's tuple deserialization.
-    sym.select(col("u"), col("v")).as[(Long, Long)].coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        if (edges.isEmpty) Iterator.empty
-        else {
-          val csr = walkCsr(edges)
-          val idx = csr.idx; val off = csr.off
-          val adj = csr.adj; val seeds = csr.seeds
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-          seeds.foreach { wid =>
-            var node = wid
-            out += ((wid, node, 0L))
-            var k = 1
-            while (k <= 6) {
-              val j = idx(node)
-              val deg = (off(j + 1) - off(j)).toLong
-              val rk = (node * 31L + k.toLong * 17L) % deg
-              node = adj(off(j) + rk.toInt)
-              out += ((wid, node, k.toLong))
-              k += 1
-            }
-          }
-          out.iterator
+    // one sequential task over the raw pairs. A distributed collect_list
+    // pre-grouping was measured SLOWER (2.0 vs 1.1 s warm at sf0.1): the
+    // ObjectHashAgg + array encoder costs more than one task's decode.
+    singleTask(sym, cap, "wid", "node", "step") { g =>
+      val c = g.csr
+      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+      walkSeeds(c).foreach { seed =>
+        val wid = c.ids(seed)
+        var j = seed
+        out += ((wid, wid, 0L))
+        var k = 1
+        while (k <= 6) {
+          val rk = (c.ids(j) * 31L + k.toLong * 17L) % c.outDeg(j)
+          j = c.outAdj(c.outOff(j) + rk.toInt)
+          out += ((wid, c.ids(j), k.toLong))
+          k += 1
         }
       }
-      .toDF("wid", "node", "step")
+      out.iterator
+    }(walkCorpusOnEdges(sym))
       .orderBy("wid", "step")
   }
+
+  /** The 20 walk seeds of both single-task walk kernels: top out-degree,
+    * ties by id — the rule both walk oracles and the twins' (-dg, u) seed
+    * frame mirror. Each node's sorted CSR segment IS the twins' window
+    * rank over `v` (coPairs rows are distinct). */
+  private def walkSeeds(c: Csr): Seq[Int] =
+    c.sources.toSeq.sortBy(j => (-c.outDeg(j), j)).take(20)
 
   /** SECOND-ORDER (node2vec) biased walk corpus — the p/q walk the
     * first-order [[graphWalkCorpus]] approximates (p = q = 2, cleared to
@@ -1621,68 +1561,42 @@ object Graphs {
   private[graft] def walkBiasedImpl(s: SparkSession, d: String,
       cap: Long): DataFrame = {
     val sym = coPairs(s, d).select(col("u"), col("v"))
-    if (sym.count() <= cap) walkBiasedSingleTask(sym)
-    else walkBiasedOnEdges(sym)
-  }
-
-  private def walkBiasedSingleTask(sym: DataFrame): DataFrame = {
-    val s = sym.sparkSession
-    import s.implicits._
-    sym.select(col("u"), col("v")).as[(Long, Long)].coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        if (edges.isEmpty) Iterator.empty
-        else {
-          val csr = walkCsr(edges)
-          val idx = csr.idx; val off = csr.off
-          val adj = csr.adj; val seeds = csr.seeds
-          def hasEdge(a: Long, b: Long): Boolean = {
-            val j = idx(a)
-            java.util.Arrays.binarySearch(adj, off(j), off(j + 1), b) >= 0
+    singleTask(sym, cap, "wid", "node", "step") { g =>
+      val c = g.csr
+      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
+      walkSeeds(c).foreach { seed =>
+        val wid = c.ids(seed)
+        out += ((wid, wid, 0L))
+        // step 1: first-order pick (no previous node)
+        var prev = seed
+        var j = c.outAdj(c.outOff(seed) + ((wid * 31L + 17L) % c.outDeg(seed)).toInt)
+        out += ((wid, c.ids(j), 1L))
+        var k = 2
+        while (k <= 6) {
+          def weight(t: Int): Long = {
+            val v = c.outAdj(t)
+            if (v == prev) 1L else if (c.hasEdge(prev, v)) 2L else 1L
           }
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-          seeds.foreach { wid =>
-            var node = wid
-            var prev = -1L
-            out += ((wid, node, 0L))
-            // step 1: first-order pick (no previous node)
-            val j1 = idx(node)
-            val deg1 = (off(j1 + 1) - off(j1)).toLong
-            prev = node
-            node = adj(off(j1) + ((node * 31L + 17L) % deg1).toInt)
-            out += ((wid, node, 1L))
-            var k = 2
-            while (k <= 6) {
-              val j = idx(node)
-              var tot = 0L
-              var t = off(j)
-              while (t < off(j + 1)) {
-                val v = adj(t)
-                tot += (if (v == prev) 1L
-                        else if (hasEdge(prev, v)) 2L else 1L)
-                t += 1
-              }
-              val r = (node * 31L + k.toLong * 17L) % tot
-              var cum = 0L
-              var pick = -1L
-              t = off(j)
-              while (t < off(j + 1) && pick < 0L) {
-                val v = adj(t)
-                cum += (if (v == prev) 1L
-                        else if (hasEdge(prev, v)) 2L else 1L)
-                if (r < cum) pick = v
-                t += 1
-              }
-              prev = node
-              node = pick
-              out += ((wid, node, k.toLong))
-              k += 1
-            }
+          var tot = 0L
+          var t = c.outOff(j)
+          while (t < c.outOff(j + 1)) { tot += weight(t); t += 1 }
+          val r = (c.ids(j) * 31L + k.toLong * 17L) % tot
+          var cum = 0L
+          var pick = -1
+          t = c.outOff(j)
+          while (t < c.outOff(j + 1) && pick < 0) {
+            cum += weight(t)
+            if (r < cum) pick = c.outAdj(t)
+            t += 1
           }
-          out.iterator
+          prev = j
+          j = pick
+          out += ((wid, c.ids(j), k.toLong))
+          k += 1
         }
       }
-      .toDF("wid", "node", "step")
+      out.iterator
+    }(walkBiasedOnEdges(sym))
       .orderBy("wid", "step")
   }
 
@@ -1801,15 +1715,6 @@ object Graphs {
     acc.orderBy("wid", "step")
   }
 
-  /** Directed transitivity of the order-sequence digraph: of all directed
-    * wedges u→v→w (u≠w), how many are closed by the shortcut u→w? High
-    * closure means basket sequence is near-transitive (a consistent
-    * global order exists); low closure means sequence is order-local —
-    * the triad-level companion of [[graphReciprocity]]'s dyad test. One
-    * wedge self-join on the shared persisted [[orderSeqEdges]] frame
-    * (wedge-bounded — the standard distributed triangle shape, no node
-    * materializes its neighborhood) + one left-semi closure probe; counts
-    * exact, ratio in integer micro-units. */
   /** Count of transitive triples (u,v,w distinct with u→v, v→w, u→w) of a
     * directed distinct-edge frame, as a 1-row (n_closed BIGINT) frame.
     * Size-gated on edge count like [[kcoreOnAdj]]: below
@@ -1824,61 +1729,34 @@ object Graphs {
     * cap, StressSpec forces cap=0 for the distributed twin). */
   private[graft] def transitiveTriplesCount(
       e: DataFrame, cap: Long = GraphIterEdgeCap): DataFrame =
-    if (e.count() <= cap) transitiveTriplesSingleTask(e)
-    else transitiveTriplesOriented(e)
+    singleTask(e, cap, "t")(g => Iterator.single(Tuple1(closedWedges(g.csr))))(
+      transitiveTriplesOriented(e))
+      .agg(coalesce(sum(col("t")), lit(0L)).cast(LongType).as("n_closed"))
 
-  private def transitiveTriplesSingleTask(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    e.select(col("u"), col("v")).as[(Long, Long)].coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        val m = edges.length
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val eu = new Array[Int](m); val ev = new Array[Int](m)
-        var i = 0
-        while (i < m) {
-          eu(i) = idx.getOrElseUpdate(edges(i)._1, idx.size)
-          ev(i) = idx.getOrElseUpdate(edges(i)._2, idx.size)
-          i += 1
+  /** Σ_{(u,w)∈E} |out(u) ∩ in(w)| by sorted-segment merge: the closed
+    * wedges u→v→w with u→w, v ≠ u and v ≠ w for free on a distinct-edge
+    * frame without self-loops. */
+  private def closedWedges(c: Csr): Long = {
+    val (outOff, outAdj, inOff, inAdj) = (c.outOff, c.outAdj, c.inOff, c.inAdj)
+    var closed = 0L
+    var u = 0
+    while (u < c.n) {
+      var p = outOff(u)
+      while (p < outOff(u + 1)) {
+        val w = outAdj(p)
+        var a = outOff(u); val aEnd = outOff(u + 1)
+        var b = inOff(w); val bEnd = inOff(w + 1)
+        while (a < aEnd && b < bEnd) {
+          val x = outAdj(a); val y = inAdj(b)
+          if (x == y) { closed += 1; a += 1; b += 1 }
+          else if (x < y) a += 1
+          else b += 1
         }
-        val n = idx.size
-        // CSR both directions, segments sorted for merge-intersection
-        val outOff = new Array[Int](n + 1); val inOff = new Array[Int](n + 1)
-        i = 0; while (i < m) { outOff(eu(i) + 1) += 1; inOff(ev(i) + 1) += 1; i += 1 }
-        i = 0; while (i < n) { outOff(i + 1) += outOff(i); inOff(i + 1) += inOff(i); i += 1 }
-        val outAdj = new Array[Int](m); val inAdj = new Array[Int](m)
-        val op = outOff.clone(); val ip = inOff.clone()
-        i = 0
-        while (i < m) {
-          outAdj(op(eu(i))) = ev(i); op(eu(i)) += 1
-          inAdj(ip(ev(i))) = eu(i); ip(ev(i)) += 1
-          i += 1
-        }
-        i = 0
-        while (i < n) {
-          java.util.Arrays.sort(outAdj, outOff(i), outOff(i + 1))
-          java.util.Arrays.sort(inAdj, inOff(i), inOff(i + 1))
-          i += 1
-        }
-        // v ≠ u and v ≠ w for free: no self-loops in a distinct-edge frame
-        var closed = 0L
-        i = 0
-        while (i < m) {
-          var a = outOff(eu(i)); val aEnd = outOff(eu(i) + 1)
-          var b = inOff(ev(i)); val bEnd = inOff(ev(i) + 1)
-          while (a < aEnd && b < bEnd) {
-            val x = outAdj(a); val y = inAdj(b)
-            if (x == y) { closed += 1; a += 1; b += 1 }
-            else if (x < y) a += 1
-            else b += 1
-          }
-          i += 1
-        }
-        Iterator.single(closed)
+        p += 1
       }
-      .toDF("c")
-      .agg(coalesce(sum(col("c")), lit(0L)).as("n_closed"))
+      u += 1
+    }
+    closed
   }
 
   /** Distributed support-triangle enumeration with per-pair direction
@@ -1928,9 +1806,10 @@ object Graphs {
   }
 
   /** The past-the-cap distributed twin of the transitive-triples kernel:
-    * score each support triangle's 6 vertex orderings against its three
-    * pairs' direction bits. Exact — every directed transitive triple maps
-    * to exactly one support triangle and one of its orderings. */
+    * per support triangle, how many of its 6 vertex orderings are
+    * transitive under its three pairs' direction bits. Exact — every
+    * directed transitive triple maps to exactly one support triangle and
+    * one of its orderings. */
   private def transitiveTriplesOriented(e: DataFrame): DataFrame =
     orientedTriangleBits(e)
       .select((col("ab_f") * col("bc_f") * col("ac_f") +
@@ -1939,7 +1818,6 @@ object Graphs {
         col("bc_f") * col("ac_r") * col("ab_r") +
         col("ac_r") * col("ab_f") * col("bc_r") +
         col("bc_r") * col("ab_r") * col("ac_r")).as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L)).cast(LongType).as("n_closed"))
 
   /** The triad-type label of one support triangle from its six direction
     * bits — shared verbatim by the census's single-task kernel (as the
@@ -1982,122 +1860,142 @@ object Graphs {
     triadCensusOnEdges(orderSeqEdges(s, d).select(col("u"), col("v")),
       GraphIterEdgeCap)
 
-  private[graft] def triadCensusOnEdges(e: DataFrame, cap: Long): DataFrame = {
-    val tri =
-      if (e.count() <= cap) triadBitsSingleTask(e)
-      else orientedTriangleBits(e)
+  private[graft] def triadCensusOnEdges(e: DataFrame, cap: Long): DataFrame =
+    singleTask(e, cap, "ab_f", "ab_r", "ac_f", "ac_r", "bc_f", "bc_r", "n")(
+        triadBits)(
+      orientedTriangleBits(e)
         .select(col("ab_f"), col("ab_r"), col("ac_f"), col("ac_r"),
-          col("bc_f"), col("bc_r"), lit(1L).as("n"))
-    tri.groupBy(triadLabel.as("triad_type"))
+          col("bc_f"), col("bc_r"), lit(1L).as("n")))
+      .groupBy(triadLabel.as("triad_type"))
       .agg(sum(col("n")).as("n_triads"))
       .orderBy("triad_type")
-  }
 
   /** Below-the-cap kernel: enumerate support triangles in one task over
-    * id-sorted CSR adjacency (the [[transitiveTriplesSingleTask]]
-    * discipline) and emit one (six-bit, count) row per DISTINCT bit
-    * pattern with node roles a < b < c by id — at most 64 rows leave the
-    * task, and [[triadLabel]] classifies them exactly as it does the
-    * distributed frame (the label is role-consistent for any fixed role
-    * assignment). */
-  private def triadBitsSingleTask(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    e.select(col("u"), col("v")).as[(Long, Long)].coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        // pair bits keyed by (lo, hi) id pair; node ids dense-indexed
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val m = edges.length
-        var i = 0
-        while (i < m) {
-          idx.getOrElseUpdate(edges(i)._1, idx.size)
-          idx.getOrElseUpdate(edges(i)._2, idx.size)
-          i += 1
+    * id-sorted packed adjacency and emit one (six-bit, count) row per
+    * DISTINCT bit pattern with node roles a < b < c by dense index — at
+    * most 64 rows leave the task, and [[triadLabel]] classifies them
+    * exactly as it does the distributed frame (the label is
+    * role-consistent for any fixed role assignment). The pair bits OR
+    * together, so duplicate caller edges count once, as in the twin. */
+  private def triadBits(g: Edges): Iterator[(Int, Int, Int, Int, Int, Int, Long)] = {
+    val (us, vs) = (g.u, g.v)
+    // pair bits keyed by (lo, hi) id pair; node ids dense-indexed
+    val idx = scala.collection.mutable.LongMap.empty[Int]
+    val m = us.length
+    var i = 0
+    while (i < m) {
+      idx.getOrElseUpdate(us(i), idx.size)
+      idx.getOrElseUpdate(vs(i), idx.size)
+      i += 1
+    }
+    val n = idx.size
+    val bits = scala.collection.mutable.LongMap.empty[Int]
+    i = 0
+    while (i < m) {
+      val ui = idx(us(i)); val vi = idx(vs(i))
+      val (lo, hi) = if (ui < vi) (ui, vi) else (vi, ui)
+      val bit = if (ui < vi) 1 else 2 // 1 = lo→hi, 2 = hi→lo
+      val k = lo.toLong * n + hi
+      bits.update(k, bits.getOrElse(k, 0) | bit)
+      i += 1
+    }
+    // CSR of id-ascending support neighbors hi > lo, each entry
+    // PACKED as (hi << 2 | direction bits) so the triangle loop
+    // below never hash-probes the pair map (r15: the previous form
+    // tested every wedge pair (b, c) of every a-adjacency with a
+    // LongMap lookup — Σ C(deg, 2) probes, the measured bulk of the
+    // query's 2.2 s warm at sf0.1; sorted-merge intersection of
+    // adj(a)>b with adj(b) enumerates exactly the same a<b<c
+    // support triangles in Σ (deg(a)+deg(b)) comparisons, the
+    // closedWedges discipline, with all six bits
+    // read off the two merge cursors)
+    val off = new Array[Int](n + 1)
+    bits.foreachKey { k => off((k / n).toInt + 1) += 1 }
+    i = 0; while (i < n) { off(i + 1) += off(i); i += 1 }
+    val padj = new Array[Long](bits.size)
+    val pos = off.clone()
+    bits.foreach { case (k, b) =>
+      val lo = (k / n).toInt
+      padj(pos(lo)) = ((k % n) << 2) | b.toLong; pos(lo) += 1
+    }
+    i = 0
+    while (i < n) {
+      java.util.Arrays.sort(padj, off(i), off(i + 1))
+      i += 1
+    }
+    // accumulate counts per 6-bit pattern (ab_f ab_r ac_f ac_r bc_f bc_r)
+    val acc = new Array[Long](64)
+    var a = 0
+    while (a < n) {
+      var p = off(a)
+      while (p < off(a + 1)) {
+        val b = (padj(p) >>> 2).toInt
+        val ab = (padj(p) & 3L).toInt
+        var q = p + 1
+        var r = off(b)
+        val qEnd = off(a + 1); val rEnd = off(b + 1)
+        while (q < qEnd && r < rEnd) {
+          val c1 = padj(q) >>> 2; val c2 = padj(r) >>> 2
+          if (c1 == c2) {
+            val ac = (padj(q) & 3L).toInt; val bc = (padj(r) & 3L).toInt
+            val pat = ((ab & 1) << 5) | ((ab >> 1) << 4) |
+              ((ac & 1) << 3) | ((ac >> 1) << 2) |
+              ((bc & 1) << 1) | (bc >> 1)
+            acc(pat) += 1L
+            q += 1; r += 1
+          } else if (c1 < c2) q += 1 else r += 1
         }
-        val n = idx.size
-        val bits = scala.collection.mutable.LongMap.empty[Int]
-        i = 0
-        while (i < m) {
-          val ui = idx(edges(i)._1); val vi = idx(edges(i)._2)
-          val (lo, hi) = if (ui < vi) (ui, vi) else (vi, ui)
-          val bit = if (ui < vi) 1 else 2 // 1 = lo→hi, 2 = hi→lo
-          val k = lo.toLong * n + hi
-          bits.update(k, bits.getOrElse(k, 0) | bit)
-          i += 1
-        }
-        // CSR of id-ascending support neighbors hi > lo, each entry
-        // PACKED as (hi << 2 | direction bits) so the triangle loop
-        // below never hash-probes the pair map (r15: the previous form
-        // tested every wedge pair (b, c) of every a-adjacency with a
-        // LongMap lookup — Σ C(deg, 2) probes, the measured bulk of the
-        // query's 2.2 s warm at sf0.1; sorted-merge intersection of
-        // adj(a)>b with adj(b) enumerates exactly the same a<b<c
-        // support triangles in Σ (deg(a)+deg(b)) comparisons, the
-        // transitiveTriplesSingleTask discipline, with all six bits
-        // read off the two merge cursors)
-        val off = new Array[Int](n + 1)
-        bits.foreachKey { k => off((k / n).toInt + 1) += 1 }
-        i = 0; while (i < n) { off(i + 1) += off(i); i += 1 }
-        val padj = new Array[Long](bits.size)
-        val pos = off.clone()
-        bits.foreach { case (k, b) =>
-          val lo = (k / n).toInt
-          padj(pos(lo)) = ((k % n) << 2) | b.toLong; pos(lo) += 1
-        }
-        i = 0
-        while (i < n) {
-          java.util.Arrays.sort(padj, off(i), off(i + 1))
-          i += 1
-        }
-        // accumulate counts per 6-bit pattern (ab_f ab_r ac_f ac_r bc_f bc_r)
-        val acc = new Array[Long](64)
-        var a = 0
-        while (a < n) {
-          var p = off(a)
-          while (p < off(a + 1)) {
-            val b = (padj(p) >>> 2).toInt
-            val ab = (padj(p) & 3L).toInt
-            var q = p + 1
-            var r = off(b)
-            val qEnd = off(a + 1); val rEnd = off(b + 1)
-            while (q < qEnd && r < rEnd) {
-              val c1 = padj(q) >>> 2; val c2 = padj(r) >>> 2
-              if (c1 == c2) {
-                val ac = (padj(q) & 3L).toInt; val bc = (padj(r) & 3L).toInt
-                val pat = ((ab & 1) << 5) | ((ab >> 1) << 4) |
-                  ((ac & 1) << 3) | ((ac >> 1) << 2) |
-                  ((bc & 1) << 1) | (bc >> 1)
-                acc(pat) += 1L
-                q += 1; r += 1
-              } else if (c1 < c2) q += 1 else r += 1
-            }
-            p += 1
-          }
-          a += 1
-        }
-        (0 until 64).iterator.filter(acc(_) > 0L).map { pat =>
-          (((pat >> 5) & 1), ((pat >> 4) & 1), ((pat >> 3) & 1),
-            ((pat >> 2) & 1), ((pat >> 1) & 1), (pat & 1), acc(pat))
-        }
+        p += 1
       }
-      .toDF("ab_f", "ab_r", "ac_f", "ac_r", "bc_f", "bc_r", "n")
+      a += 1
+    }
+    (0 until 64).iterator.filter(acc(_) > 0L).map { pat =>
+      (((pat >> 5) & 1), ((pat >> 4) & 1), ((pat >> 3) & 1),
+        ((pat >> 2) & 1), ((pat >> 1) & 1), (pat & 1), acc(pat))
+    }
   }
 
-  private def graphTransitivityDir(s: SparkSession, d: String): DataFrame = {
-    val e = orderSeqEdges(s, d).select(col("u"), col("v"))
-    // Below the iteration cap ALL FOUR scalars (edge count, Σ in·out,
-    // reciprocal-edge count, closed-wedge count) come out of ONE
-    // in-memory CSR pass (r15): the distributed assembly ran four
-    // separate sub-jobs — two degree rollups + a sort-merge left-semi
-    // self-join + the gated closure kernel — and three crossJoins, ~2 s
-    // of pure stage latency at sf0.1 on a graph that fits one task.
-    // Identical Long arithmetic, StressSpec-pinned parity with the
-    // distributed twin below. Above the cap the distributed shape is
-    // unchanged (degree rollups + semi join + oriented triangle stream
-    // — each piece 100×-scale-safe, see the r8/r12 notes).
-    if (e.count() <= GraphIterEdgeCap) transitivityDirSingleTask(e)
-    else {
+  /** Directed transitivity of the order-sequence digraph: of all directed
+    * wedges u→v→w (u≠w), how many are closed by the shortcut u→w? High
+    * closure means basket sequence is near-transitive (a consistent
+    * global order exists); low closure means sequence is order-local —
+    * the triad-level companion of [[graphReciprocity]]'s dyad test.
+    * Counts exact, ratio in integer micro-units. */
+  private def graphTransitivityDir(s: SparkSession, d: String): DataFrame =
+    transitivityDirOnEdges(orderSeqEdges(s, d).select(col("u"), col("v")),
+      GraphIterEdgeCap)
+
+  /** The four scalars over a directed distinct-edge frame, gated on edge
+    * count. At or below `cap` ALL FOUR (edge count, Σ in·out,
+    * reciprocal-edge count, closed-wedge count) come out of ONE
+    * in-memory CSR pass (r15): the distributed assembly runs four
+    * separate sub-jobs — two degree rollups + a sort-merge left-semi
+    * self-join + the gated closure kernel — and three crossJoins, ~2 s of
+    * pure stage latency at sf0.1 on a graph that fits one task. Identical
+    * Long arithmetic: paths2 = Σ_v indeg·outdeg (zero terms where either
+    * degree is 0, exactly the distributed inner join's row set); n_recip
+    * = directed edges whose reverse exists (each direction counted once,
+    * the left-semi's semantics); both arms share the final projection.
+    * StressSpec pins cap=0 parity of all four scalars. Above the cap the
+    * distributed shape: degree rollups + semi join + oriented triangle
+    * stream — each piece 100×-scale-safe, see the r8/r12 notes. */
+  private[graft] def transitivityDirOnEdges(e: DataFrame, cap: Long): DataFrame =
+    singleTask(e, cap, "n_edges", "paths2", "n_recip", "n_closed") { g =>
+      val c = g.csr
+      var paths2 = 0L
+      var recip = 0L
+      var j = 0
+      while (j < c.n) {
+        paths2 += c.inDeg(j).toLong * c.outDeg(j)
+        var p = c.outOff(j)
+        while (p < c.outOff(j + 1)) {
+          if (c.hasEdge(c.outAdj(p), j)) recip += 1
+          p += 1
+        }
+        j += 1
+      }
+      Iterator.single((g.u.length.toLong, paths2, recip, closedWedges(c)))
+    } {
       // wedge COUNT needs no wedge frame: paths of length 2 = Σ_v in·out,
       // and the u = w ones are exactly the reciprocal edge pairs — two
       // degree rollups + one semi count instead of a 54M-row enumeration
@@ -2121,98 +2019,13 @@ object Graphs {
       // super-linear on skewed hubs) through a shuffle into a left-semi
       // probe; the oriented wedge stream is Σ C(d⁺,2) with d⁺ bounded by
       // orientation — 100×-scale-safe where the wedge stream was not.
-      val closed = transitiveTriplesCount(e)
+      val closed = transitiveTriplesCount(e, cap)
       e.agg(count(lit(1)).as("n_edges"))
         .crossJoin(paths2).crossJoin(recip).crossJoin(closed)
-        .select(col("n_edges"),
-          (col("paths2") - col("n_recip")).as("n_wedges"), col("n_closed"),
-          expr("(1000000 * n_closed) DIV (paths2 - n_recip)")
-            .as("transitivity_micro"))
-    }
-  }
-
-  /** The below-the-cap fused kernel: one task, one CSR build, all four
-    * scalars — n_edges = m; paths2 = Σ_v indeg·outdeg (zero terms where
-    * either degree is 0, exactly the distributed inner join's row set);
-    * n_recip = directed edges whose reverse exists (each direction
-    * counted once, the left-semi's semantics on the distinct edge
-    * frame); n_closed = the per-edge out(u)∩in(v) merge count, verbatim
-    * from [[transitiveTriplesSingleTask]]. The final projection reuses
-    * the IDENTICAL integer expression tree as the distributed branch. */
-  private def transitivityDirSingleTask(e: DataFrame): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    e.select(col("u"), col("v")).as[(Long, Long)].coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        val m = edges.length
-        val idx = scala.collection.mutable.LongMap.empty[Int]
-        val eu = new Array[Int](m); val ev = new Array[Int](m)
-        var i = 0
-        while (i < m) {
-          eu(i) = idx.getOrElseUpdate(edges(i)._1, idx.size)
-          ev(i) = idx.getOrElseUpdate(edges(i)._2, idx.size)
-          i += 1
-        }
-        val n = idx.size
-        val eset = scala.collection.mutable.LongMap.empty[Boolean]
-        i = 0
-        while (i < m) { eset.update(eu(i).toLong * n + ev(i), true); i += 1 }
-        val outOff = new Array[Int](n + 1); val inOff = new Array[Int](n + 1)
-        i = 0
-        while (i < m) { outOff(eu(i) + 1) += 1; inOff(ev(i) + 1) += 1; i += 1 }
-        i = 0
-        while (i < n) {
-          outOff(i + 1) += outOff(i); inOff(i + 1) += inOff(i); i += 1
-        }
-        val outAdj = new Array[Int](m); val inAdj = new Array[Int](m)
-        val op = outOff.clone(); val ip = inOff.clone()
-        i = 0
-        while (i < m) {
-          outAdj(op(eu(i))) = ev(i); op(eu(i)) += 1
-          inAdj(ip(ev(i))) = eu(i); ip(ev(i)) += 1
-          i += 1
-        }
-        i = 0
-        while (i < n) {
-          java.util.Arrays.sort(outAdj, outOff(i), outOff(i + 1))
-          java.util.Arrays.sort(inAdj, inOff(i), inOff(i + 1))
-          i += 1
-        }
-        var paths2 = 0L
-        i = 0
-        while (i < n) {
-          paths2 += (inOff(i + 1) - inOff(i)).toLong *
-            (outOff(i + 1) - outOff(i))
-          i += 1
-        }
-        var recip = 0L
-        i = 0
-        while (i < m) {
-          if (eset.contains(ev(i).toLong * n + eu(i))) recip += 1
-          i += 1
-        }
-        var closed = 0L
-        i = 0
-        while (i < m) {
-          var a = outOff(eu(i)); val aEnd = outOff(eu(i) + 1)
-          var b = inOff(ev(i)); val bEnd = inOff(ev(i) + 1)
-          while (a < aEnd && b < bEnd) {
-            val x = outAdj(a); val y = inAdj(b)
-            if (x == y) { closed += 1; a += 1; b += 1 }
-            else if (x < y) a += 1
-            else b += 1
-          }
-          i += 1
-        }
-        Iterator.single((m.toLong, paths2, recip, closed))
-      }
-      .toDF("n_edges", "paths2", "n_recip", "n_closed")
-      .select(col("n_edges"),
-        (col("paths2") - col("n_recip")).as("n_wedges"), col("n_closed"),
-        expr("(1000000 * n_closed) DIV (paths2 - n_recip)")
-          .as("transitivity_micro"))
-  }
+    }.select(col("n_edges"),
+      (col("paths2") - col("n_recip")).as("n_wedges"), col("n_closed"),
+      expr("(1000000 * n_closed) DIV (paths2 - n_recip)")
+        .as("transitivity_micro"))
 
   /** Bipartite projection of the user–event-type graph onto event types:
     * for every type pair, the number of SHARED users plus the exact
@@ -2270,42 +2083,18 @@ object Graphs {
     eccentricityImpl(s, d, GraphIterEdgeCap)
 
   private[graft] def eccentricityImpl(s: SparkSession, d: String,
-      cap: Long): DataFrame = {
-    val adj = wedgeFrames(s, d)._1
-    if (adj.count() <= cap) eccentricitySingleTask(adj)
-    else eccentricityOnAdj(adj, PrBroadcastNodeCap)
-  }
+      cap: Long): DataFrame =
+    eccentricityOn(wedgeFrames(s, d)._1, cap)
 
-  private def eccentricitySingleTask(adj: DataFrame): DataFrame = {
-    val s = adj.sparkSession
-    import s.implicits._
-    adj.select(col("u"), col("v")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val edges = it.toArray
-        if (edges.isEmpty) Iterator.empty
-        else {
-          val nbrs = edges.groupBy(_._1)
-            .map { case (u, es) => u -> es.map(_._2) }
-          val seeds = nbrs.keys.toSeq.sorted.take(5)
-          seeds.iterator.map { seed =>
-            val dist = scala.collection.mutable.Map(seed -> 0L)
-            var frontier = Set(seed)
-            var h = 1L
-            while (frontier.nonEmpty && h <= 64L) {
-              frontier = frontier.iterator
-                .flatMap(n => nbrs.getOrElse(n, Array.empty[Long]))
-                .filter(n => !dist.contains(n)).toSet
-              frontier.foreach(n => dist(n) = h)
-              h += 1
-            }
-            (seed, dist.values.max, dist.size - 1L)
-          }
-        }
+  private[graft] def eccentricityOn(adj: DataFrame, cap: Long): DataFrame =
+    singleTask(adj, cap, "seed", "eccentricity", "n_reached") { g =>
+      val c = g.csr
+      c.sources.take(5).map { seed =>
+        val h = c.hops(seed, 64)
+        (c.ids(seed), h.max.toLong, h.count(_ >= 0) - 1L)
       }
-      .toDF("seed", "eccentricity", "n_reached")
+    }(eccentricityOnAdj(adj, PrBroadcastNodeCap))
       .orderBy("seed")
-  }
 
   private[graft] def eccentricityOnAdj(adj: DataFrame,
       broadcastCap: Long): DataFrame = {

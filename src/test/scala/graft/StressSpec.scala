@@ -257,12 +257,11 @@ class StressSpec extends SparkTestBase {
     }
   }
 
-  test("transitive-triples gate parity: oriented twin equals single-task kernel") {
-    // force the past-the-cap degree-oriented triangle path (cap = 0) and
-    // the below-the-cap CSR kernel (default cap) over the same edge frame;
-    // gate dispatch must not change the answer. Includes reciprocal pairs
-    // and 3-cycles (a 3-cycle closes ZERO wedges — the orderings test).
-    val e = U.tbl(spark, sfDir, "lineitem")
+  // an adversarial directed distinct-edge frame: a dense 97-node digraph
+  // with reciprocal pairs, plus a seeded 3-cycle and a bidirectional
+  // triangle (a 3-cycle closes ZERO wedges — the orderings test)
+  private def adversarialDigraph() =
+    U.tbl(spark, sfDir, "lineitem")
       .selectExpr("l_partkey % 97 AS u", "(l_partkey * 31 + l_orderkey) % 97 AS v")
       .filter(col("u") =!= col("v")).distinct()
       .unionByName( // seed explicit 3-cycle + bidirectional triangle
@@ -275,7 +274,12 @@ class StressSpec extends SparkTestBase {
           .unionAll(spark.range(1).selectExpr("2003L u", "2002L v"))
           .unionAll(spark.range(1).selectExpr("2001L u", "2003L v"))
           .unionAll(spark.range(1).selectExpr("2003L u", "2001L v")))
-      .persist()
+
+  test("transitive-triples gate parity: oriented twin equals single-task kernel") {
+    // force the past-the-cap degree-oriented triangle path (cap = 0) and
+    // the below-the-cap CSR kernel (default cap) over the same edge frame;
+    // gate dispatch must not change the answer
+    val e = adversarialDigraph().persist()
     val fast = operators.Graphs.transitiveTriplesCount(e)
       .collect().head.getAs[Long]("n_closed")
     val dist = operators.Graphs.transitiveTriplesCount(e, cap = 0L)
@@ -295,6 +299,36 @@ class StressSpec extends SparkTestBase {
     assert(cFast == cDist, s"census gate parity broke: $cFast vs $cDist")
     assert(cFast.getOrElse("030C", 0L) >= 1L && cFast.getOrElse("300", 0L) >= 1L)
     e.unpersist()
+  }
+
+  test("ktruss and transitivity-dir gate parity: sf0.001 and adversarial digraph") {
+    def truss(e: org.apache.spark.sql.DataFrame, cap: Long) =
+      operators.Graphs.ktrussOnEdges(e, cap).collect().map(_.toSeq).toSeq
+    def dir(e: org.apache.spark.sql.DataFrame, cap: Long) =
+      operators.Graphs.transitivityDirOnEdges(e, cap).collect().map(_.toSeq).toSeq
+    val seq = SharedIndex.entries.find(_.name == "orderSeqEdges").get
+      .get(spark, sfDir).asInstanceOf[org.apache.spark.sql.DataFrame]
+      .select(col("u"), col("v"))
+    val und = operators.Graphs.pagerankEdgeFrame(spark, sfDir)
+      .filter(col("u") < col("v"))
+    val adv = adversarialDigraph().persist()
+    // ktruss takes an undirected u < v edge set (the trussPeel facade's
+    // canonical form); transitivity takes the directed frame as it is
+    val advUnd = adv.select(least(col("u"), col("v")).as("u"),
+      greatest(col("u"), col("v")).as("v")).distinct()
+    for ((name, e) <- Seq("sf0.001" -> und, "adversarial" -> advUnd)) {
+      val fast = truss(e, Long.MaxValue)
+      assert(fast.nonEmpty && fast == truss(e, 0L),
+        s"ktruss gate parity broke on $name: ${fast.length} single-task rows")
+      U.releaseTracked()
+    }
+    for ((name, e) <- Seq("sf0.001" -> seq, "adversarial" -> adv)) {
+      val fast = dir(e, Long.MaxValue)
+      assert(fast.length == 1 && fast == dir(e, 0L),
+        s"transitivity-dir gate parity broke on $name: $fast")
+      U.releaseTracked()
+    }
+    adv.unpersist()
   }
 
   test("survival curves are invariant under 8x user replication") {
