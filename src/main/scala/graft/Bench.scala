@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC explicitly (not only via the sbt -D flag): timestamp-literal
-      // casts must select the same rows here as in the t2-verified plans
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN (r14 verdict "What's missing #2"): the driver tails
-    // this process's output and BENCH_r13/r14 both came back parsed:null —
-    // the contract JSON line drowned in thousands of WindowExec WARNs
-    // (the unpartitioned-window posture is already CI-audited in
-    // WindowAuditSpec; the runtime warning adds nothing to a bench run).
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Session.sfDir
+    val spark = Session.local()
     // A failed warm-up is recorded in the artifact ("warm_failed"), not
     // only logged: its cost then lands in whichever query runs first.
     val warmFailed = scala.collection.mutable.ArrayBuffer[String]()
@@ -45,146 +31,91 @@ object Bench {
         .mode("append").save()
       graft.sources.StatsSink.committed.remove("bench_warm")
     }
-    // local-iteration subset filter (comma-separated names); the driver sets
-    // no env, so its invocation always times the full suite
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val runSet = SparkEntry.queries.keySet.filter(n => only.forall(_(n)))
     // Pre-build the shared indexes so per-query numbers are
     // attribution-deterministic: whoever runs first no longer pays the
-    // shared build. An entry is warmed only when the run contains one of
-    // its declared consumers, so a dev subset run does not pay for indexes
-    // it never reads.
-    for (e <- SharedIndex.entries if e.consumers.exists(runSet))
-      warmStep(e.name)(e.warm(spark, sfDir))
+    // shared build.
+    for (e <- SharedIndex.entries) warmStep(e.name)(e.warm(spark, sfDir))
     // JIT/class-load warms and Scans' on-disk input staging, per family
-    def wants(prefixes: String*): Boolean =
-      prefixes.exists(p => runSet.exists(_.startsWith(p)))
-    if (wants("graph_"))
-      warmStep("pagerankKernel")(graft.operators.Graphs.warmKernel(spark, sfDir))
-    if (wants("scan_", "join_dpp", "sink_"))
-      warmStep("scans")(graft.operators.Scans.warm(spark, sfDir))
-    if (wants("multimodal_"))
-      warmStep("audio")(graft.llm.Multimodal.warmAudio(spark))
+    warmStep("pagerankKernel")(graft.operators.Graphs.warmKernel(spark, sfDir))
+    warmStep("scans")(graft.operators.Scans.warm(spark, sfDir))
+    warmStep("audio")(graft.llm.Multimodal.warmAudio(spark))
     // a failed query must NOT pass as a fast timing: record it and surface
     // the failure list in the JSON (a plan-time crash is milliseconds and
     // would otherwise make a broken suite look faster than a working one)
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    // median-of-N protocol (default 3): single-run numbers spiked up to
-    // 5x on unchanged code under driver-machine load round after round;
-    // the per-query MEDIAN of three back-to-back runs is the reported
-    // figure and the raw runs ship alongside so any spike stays visible.
-    // Local subset iteration can set SPARK_GRAFT_BENCH_RUNS=1.
-    val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    // SORTED name order, not map order: map iteration reshuffles whenever
-    // the registry grows, which re-attributes any residual shared-cache
-    // cost to a different first consumer every round (r12: four queries
-    // swung >3x on unchanged code). Sorted order + the warm hooks above
-    // make per-query medians comparable across rounds.
-    // Host-load telemetry (r13 verdict "What's missing #3"): three of the
-    // last four rounds burned judge time adjudicating ambient-noise swings
-    // (26 r13 queries >2x on UNCHANGED code, all host contention). The
-    // 1-minute /proc/loadavg before and after each query's triple ships in
-    // the artifact so a loaded-host run is self-evident from the JSON —
-    // a noise dispute becomes a table lookup, not a re-measure session.
-    // Files.readString, not io.Source: Source leaks its descriptor until
-    // finalization, and this runs twice per benched query — enough to
-    // trip a 1024 ulimit mid-run on a low-GC-pressure driver
+    // median-of-3 protocol: single-run numbers spiked up to 5x on
+    // unchanged code under driver-machine load; the per-query MEDIAN of
+    // three back-to-back runs is the reported figure and the raw runs ship
+    // alongside so any spike stays visible.
+    val nRuns = 3
+    // Host telemetry per query, so a loaded-host run is self-evident from
+    // the JSON: the 1-minute /proc/loadavg before and after each triple,
+    // and the hypervisor-stolen jiffies over it (/proc/stat's cpu STEAL column;
+    // steal ≈ 0 plus high load = self-generated parallelism, steal >> 0 =
+    // co-tenant interference). Files.readString, not io.Source: Source
+    // leaks its descriptor until finalization, enough to trip a 1024
+    // ulimit mid-run.
     def loadavg(): Array[Double] =
-      try java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/loadavg"))
+      try Files.readString(Paths.get("/proc/loadavg"))
         .split(" ").take(3).map(_.toDouble)
       catch { case _: Throwable => Array(-1.0, -1.0, -1.0) }
-    // Hypervisor STEAL telemetry (r16): /proc/stat cpu field 9, cumulative
-    // stolen jiffies. Direct 20 s sampling during a bench measured bursts
-    // of ~3.7 CPUs stolen continuously with the guest otherwise idle — the
-    // recurring "spike parked on one alphabetical block" that loadavg alone
-    // could not attribute (the graph family's own task churn also raises
-    // loadavg). Per-query stolen jiffies make external-contention rows
-    // self-evident: steal ≈ 0 plus high load = self-generated parallelism;
-    // steal >> 0 = co-tenant interference, judge from the other run.
     def stealJiffies(): Long =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
+      try Files.readString(Paths.get("/proc/stat"))
         .linesIterator.next().trim.split("\\s+").drop(1).map(_.toLong)
         .lift(7).getOrElse(-1L) // cpu: user nice sys idle iowait irq softirq STEAL
       catch { case _: Throwable => -1L }
     val loadStart = loadavg()
     val tStartMs = System.currentTimeMillis()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => runSet(name) }
-      .map { case (name, fn) =>
+    val results = Session.eachQuery(Nil) { (name, fn) =>
       val laBefore = loadavg()(0)
       val stBefore = stealJiffies()
       val runs = (1 to nRuns).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name failed: $e")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release per-query persisted frames so a long bench JVM does not
-        // accumulate dead cached blocks (shared caches are not tracked)
+        val (dt, r) = Session.timed(spark, sfDir, fn)
+        r.left.foreach { e =>
+          failed += name
+          System.err.println(s"[bench] $name failed: $e")
+        }
+        // release per-query persisted frames between runs (shared caches
+        // are not tracked)
         U.releaseTracked()
-        (dt, ok)
+        (dt, r.isRight)
       }
-      name -> (runs, laBefore, loadavg()(0), stBefore, stealJiffies())
+      val stAfter = stealJiffies()
+      // failed runs are excluded from the median: a plan-time crash takes
+      // milliseconds, so letting it vote would make a query failing 2 of 3
+      // runs look CHEAPER than a working one. All-runs-failed reports null
+      // (the name is in `failed` either way); raw triples stay complete.
+      val ok = runs.collect { case (dt, true) => dt }.sorted
+      val median = ok.lift((ok.length - 1) / 2)
+      median -> Map("queries" -> median.fold("null")(_.toString),
+        "runs" -> runs.map(_._1).mkString("[", ",", "]"),
+        // raw Double.toString, not %.2f: the JVM default locale could
+        // emit "3,14", invalid JSON
+        "load" -> s"[$laBefore,${loadavg()(0)}]",
+        "steal_jiffies" ->
+          (if (stBefore < 0 || stAfter < 0) -1L else stAfter - stBefore).toString)
     }
-    // failed runs are excluded from the median: a plan-time crash takes
-    // milliseconds, so letting it vote would make a query failing 2 of 3
-    // runs look CHEAPER than a working one. All-runs-failed reports null
-    // (the name is in `failed` either way); raw triples stay complete.
-    val medians = results.map { case (k, (rs, _, _, _, _)) =>
-      val ok = rs.collect { case (dt, true) => dt }
-      k -> (if (ok.nonEmpty) Some(ok.sorted.apply((ok.length - 1) / 2))
-            else None)
-    }
-    val qs = medians.map { case (k, v) =>
-        s"\"" + k + "\":" + v.fold("null")(_.toString) }
-      .mkString("{", ",", "}")
-    val runsJson = results.map { case (k, (rs, _, _, _, _)) =>
-      s"\"" + k + "\":" + rs.map(_._1).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    // raw Double.toString, not the f-interpolator: %.2f uses the JVM
-    // default locale and a comma-decimal locale would emit "3,14" —
-    // invalid JSON that breaks scalecurve.py's load gate (r14 ADVICE);
-    // /proc/loadavg values carry at most 2 decimals already
-    val loadJson = results.map { case (k, (_, lb, la, _, _)) =>
-      s""""$k":[$lb,$la]""" }
-      .mkString("{", ",", "}")
-    // per-query hypervisor-stolen jiffies (delta over the triple); -1 =
-    // /proc/stat unreadable on this platform
-    val stealJson = results.map { case (k, (_, _, _, sb, sa)) =>
-      s""""$k":${if (sb < 0 || sa < 0) -1L else sa - sb}""" }
-      .mkString("{", ",", "}")
+    def perQuery(key: String) =
+      results.map { case (k, (_, m)) => s""""$k":${m(key)}""" }.mkString("{", ",", "}")
     val loadEnv = {
       val le = loadavg()
       s""""load_start":[${loadStart.mkString(",")}],""" +
         s""""load_end":[${le.mkString(",")}],""" +
         s""""t_start_ms":$tStartMs,"t_end_ms":${System.currentTimeMillis()}"""
     }
-    val total =
-      if (medians.nonEmpty) medians.flatMap(_._2).sum else 0.0
+    val total = results.flatMap(_._2._1).sum
     def strs(xs: Iterable[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val failedJson = strs(failed)
     val warmJson = strs(warmFailed)
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"median_of_$nRuns","queries":$qs,"runs":$runsJson,"load":$loadJson,"steal_jiffies":$stealJson,$loadEnv,"failed":$failedJson,"warm_failed":$warmJson,"sf":"$sfDir"}"""
-    // The driver's stdout parse failed four rounds running ("parsed": null):
-    // the ~10 KB per-query map gets truncated mid-JSON in the captured tail.
-    // Contract fix: the FULL json goes only to stable files; stdout's final
-    // line is a compact summary that cannot truncate.
-    // subset runs land in a separate scratch file so local iteration can
-    // read per-query times without touching the driver-facing artifacts
-    val outPaths =
-      if (only.isEmpty) Seq("/tmp/graft_bench.json", "bench_latest.json")
-      else Seq("/tmp/graft_bench_subset.json")
-    for (p <- outPaths) {
-      try {
-        val w = new java.io.PrintWriter(new java.io.File(p))
-        try w.println(full) finally w.close()
-      } catch { case _: Throwable => }
+    val maps = Seq("queries", "runs", "load", "steal_jiffies")
+      .map(k => s""""$k":${perQuery(k)}""").mkString(",")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"median_of_$nRuns",$maps,$loadEnv,"failed":$failedJson,"warm_failed":$warmJson,"sf":"$sfDir"}"""
+    // The FULL json goes only to stable files (a ~10 KB per-query map got
+    // truncated mid-JSON in a captured stdout tail); stdout's final line
+    // is a compact summary that cannot truncate.
+    for (p <- Seq("/tmp/graft_bench.json", "bench_latest.json")) {
+      try Files.writeString(Paths.get(p), full + "\n")
+      catch { case _: Throwable => }
     }
     val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"warm_failed":$warmJson,"queries_file":"/tmp/graft_bench.json","sf":"$sfDir"}"""
     // stop FIRST, print LAST: the contract line must be the absolute tail

@@ -28,7 +28,7 @@ object U {
     *     `TimestampType` — already the oracle's type;
     *   - TIMESTAMP(MICROS, isAdjustedToUTC=false): reads as
     *     `TimestampNTZType` → cast to `TimestampType`. The session timezone
-    *     is pinned UTC (Bench/Verify/Explain), so the cast is
+    *     is pinned UTC ([[Session.builder]]), so the cast is
     *     instant-preserving and value-identical to the UTC-micros layout.
     *
     * All paths end at identical µs `TimestampType` instants, so every
@@ -144,9 +144,9 @@ object U {
 
   /** Per-query persisted-frame registry. Queries that persist an internal
     * frame for the duration of one computation (the PageRank edge frame, the
-    * IVF vector frame, a propagation label fixpoint) register it here; the
-    * harness (Bench/Verify) calls [[releaseTracked]] after each query's
-    * result materializes, so a long benchmark JVM does not accumulate dead
+    * IVF vector frame, a propagation label fixpoint) register it here;
+    * [[Session.eachQuery]] calls [[releaseTracked]] after each query (Bench
+    * after each run), so a long benchmark JVM does not accumulate dead
     * cached blocks. Frames held by a [[SharedIndex]] entry are NOT tracked
     * — they are reused between queries by design, and the registry
     * unpersists them when a get for another (session, sfDir) rebuilds. */

@@ -1058,6 +1058,26 @@ object Aggregations {
       .orderBy("event_type")
   }
 
+  /** The DOUBLED median of the integer column `vcol` per `key`, as `out`,
+    * beside the group size `n`: the sum of the two middle values under an
+    * even count, twice the middle value under an odd one, so it stays an
+    * integer (the ts_interarrival trick). One row_number window sort + one
+    * hash-agg. */
+  private[graft] def med2Of(df: DataFrame, key: String, vcol: String,
+      out: String): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col(vcol))
+    val full = w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    df.withColumn("rn", row_number().over(w).cast(LongType))
+      .withColumn("n", count(lit(1)).over(full))
+      .groupBy(col(key))
+      .agg(max(col("n")).as("n"),
+        sum(when(col("rn") === expr("(n + 1) DIV 2") ||
+            col("rn") === expr("n DIV 2 + 1"),
+          when(expr("n % 2 = 1"), col(vcol) * 2).otherwise(col(vcol)))
+          .otherwise(lit(0L))).as(out))
+  }
+
   /** Median absolute deviation of value per event type — the robust SCALE
     * companion to [[aggTrimmedMean]]'s location. Fully integer: the median
     * ships DOUBLED (two middle cents summed — integral under even counts,
@@ -1068,27 +1088,14 @@ object Aggregations {
     * Two window sorts + two hash-aggs; the med2 frame is \|types\|-sized
     * (broadcast — taxonomy-bounded). */
   private def aggMad(s: SparkSession, d: String): DataFrame = {
-    def med2Of(df: DataFrame, vcol: String, out: String): DataFrame = {
-      val w = Window.partitionBy(col("event_type")).orderBy(col(vcol))
-      val full = w.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      df.withColumn("rn", row_number().over(w).cast(LongType))
-        .withColumn("n", count(lit(1)).over(full))
-        .groupBy(col("event_type"))
-        .agg(max(col("n")).as("n"),
-          sum(when(col("rn") === expr("(n + 1) DIV 2") ||
-              col("rn") === expr("n DIV 2 + 1"),
-            when(expr("n % 2 = 1"), col(vcol) * 2).otherwise(col(vcol)))
-            .otherwise(lit(0L))).as(out))
-    }
     val base = U.events(s, d)
       .select(col("event_type"), U.cents(col("value")).as("vc"))
-    val med = med2Of(base, "vc", "med2")
+    val med = med2Of(base, "event_type", "vc", "med2")
       .select(col("event_type").as("et"), col("n").as("n_med"), col("med2"))
     val devs = base.join(broadcast(med), col("event_type") === col("et"))
       .select(col("event_type"),
         abs(col("vc") * 2 - col("med2")).as("dev"))
-    med2Of(devs, "dev", "mad4")
+    med2Of(devs, "event_type", "dev", "mad4")
       .join(broadcast(med), col("event_type") === col("et"))
       .select(col("event_type"), col("n"),
         (col("med2").cast(DoubleType) / lit(200.0)).as("median"),
@@ -1291,22 +1298,10 @@ object Aggregations {
     * profiler decides whether per-type models are even comparable. Two
     * window sorts (median) + two hash-aggs. */
   private def aggLevene(s: SparkSession, d: String): DataFrame = {
-    def med2Of(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("vc"))
-      val full = w.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      df.withColumn("rn", row_number().over(w).cast(LongType))
-        .withColumn("n", count(lit(1)).over(full))
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("rn") === expr("(n + 1) DIV 2") ||
-            col("rn") === expr("n DIV 2 + 1"),
-          when(expr("n % 2 = 1"), col("vc") * 2).otherwise(col("vc")))
-          .otherwise(lit(0L))).as("med2"))
-    }
     val dec = DecimalType(38, 0)
     val base = U.events(s, d)
       .select(col("event_type"), U.cents(col("value")).as("vc"))
-    val med = med2Of(base)
+    val med = med2Of(base, "event_type", "vc", "med2")
       .select(col("event_type").as("et"), col("med2"))
     val z = base.join(broadcast(med), col("event_type") === col("et"))
       .select(col("event_type"), abs(col("vc") * 2 - col("med2")).as("z"))

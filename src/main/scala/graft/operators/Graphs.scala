@@ -105,8 +105,8 @@ object Graphs {
     * the frames are a pure function of the co-purchase graph, yet the
     * kernel used to rebuild+re-persist them on EVERY call, so each bench
     * run of `graph_pagerank`/`graph_ppr` paid ~2 s of rebuild before the
-    * iterations (r12 judge: 4.7 s warm vs the 2.4-2.6 s steady state
-    * PrProfile shows once CacheManager dedups the per-call persists).
+    * iterations (r12 judge: 4.7 s warm vs the 2.4-2.6 s steady state of
+    * a warm rerun once CacheManager dedups the per-call persists).
     * A [[graft.SharedIndex]] entry. */
   private val prIndex = SharedIndex[(DataFrame, Boolean)]("prFrames", Seq(
       "graph_pagerank", "graph_ppr"), t => Seq(t._1)) { (s, d) =>
@@ -758,16 +758,22 @@ object Graphs {
     }(closenessOnAdj(adj, PrBroadcastNodeCap))
       .orderBy(col("harmonic_micro").desc, col("node")).limit(50)
 
+  /** The join-side wrapper of the distributed BFS twins (closeness, BFS,
+    * eccentricity): their frontier and reached frames hold at most a few
+    * rows per node, so one count of the adjacency's distinct nodes picks
+    * the posture for every join of the loop — `broadcast` at or below
+    * `cap`, `shuffle_hash` above it (the hint keeps AQE from
+    * re-broadcasting what the gate declined). Production decision source:
+    * catalog NDV statistics for stored edge tables; one distinct-count job
+    * on a derived adjacency otherwise. */
+  private def nodeGate(adj: DataFrame, cap: Long): DataFrame => DataFrame = {
+    val small = adj.select(col("u")).distinct().count() <= cap
+    f => if (small) broadcast(f) else f.hint("shuffle_hash")
+  }
+
   private[graft] def closenessOnAdj(adj: DataFrame,
       broadcastCap: Long): DataFrame = {
-    // one count on the (persisted, shared) adjacency picks the posture
-    // for every frontier/reached join below; the frontier is ≤ 5·|V|
-    // (seed, node) rows, so the gate compares against the node count
-    // production decision source: catalog NDV statistics for stored edge
-    // tables; one distinct-count job on the derived adjacency otherwise
-    val small = adj.select(col("u")).distinct().count() <= broadcastCap
-    def gate(f: DataFrame): DataFrame =
-      if (small) broadcast(f) else f.hint("shuffle_hash")
+    val gate = nodeGate(adj, broadcastCap)
     val seeds = adj.select(col("u").as("seed")).distinct()
       .orderBy("seed").limit(5)
     var reached = U.track(seeds
@@ -801,12 +807,7 @@ object Graphs {
     // source), matching the kernel and the oracle's HAVING COUNT(*) > 0
     val src = adj.agg(min(col("u")).as("n"), count(lit(1)).as("ne"))
       .filter(col("ne") > 0).select(col("n"))
-    // the frontier is bounded by |V| (3-hop reachable set of one seed) —
-    // gate once on the node count, like [[closenessOnAdj]]: broadcast
-    // frontiers below the cap, shuffle-hash semi-joins above it
-    val small = adj.select(col("u")).distinct().count() <= frontierBcastCap
-    def gate(f: DataFrame): DataFrame =
-      if (small) broadcast(f) else f.hint("shuffle_hash")
+    val gate = nodeGate(adj, frontierBcastCap)
     def nbrs(fr: DataFrame): DataFrame =
       adj.join(gate(fr.select(col("n").as("fn"))),
           col("u") === col("fn"), "left_semi")
@@ -2068,7 +2069,7 @@ object Graphs {
     * n_reached = the component size seen from the seed. The max
     * eccentricity over seeds lower-bounds the graph diameter — the
     * "how many Pregel supersteps will anything need" number. Driver loop
-    * with the closenessOnAdj posture (frontier ≤ |V| rows per seed,
+    * behind [[nodeGate]] (frontier ≤ |V| rows per seed,
     * broadcast below the node cap, shuffle-hash above; first-discovery
     * anti-join keeps every hop's frontier strictly new), terminating on
     * an empty frontier with a 64-hop safety cap mirrored by the oracle's
@@ -2098,9 +2099,7 @@ object Graphs {
 
   private[graft] def eccentricityOnAdj(adj: DataFrame,
       broadcastCap: Long): DataFrame = {
-    val small = adj.select(col("u")).distinct().count() <= broadcastCap
-    def gate(f: DataFrame): DataFrame =
-      if (small) broadcast(f) else f.hint("shuffle_hash")
+    val gate = nodeGate(adj, broadcastCap)
     val seeds = adj.select(col("u").as("seed")).distinct()
       .orderBy("seed").limit(5)
     var reached = U.track(seeds

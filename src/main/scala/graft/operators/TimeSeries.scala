@@ -2467,18 +2467,10 @@ object TimeSeries {
     * count is one lag pass, and only the closing (R−μ)/σ is a mirrored
     * double tree. One per-type median window + one ordered pass. */
   private def tsRunsTest(s: SparkSession, d: String): DataFrame = {
-    val wm = Window.partitionBy(col("event_type")).orderBy(col("vc"))
-    val fullm = wm.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val med2 = U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .withColumn("rn", row_number().over(wm).cast(LongType))
-      .withColumn("nn", count(lit(1)).over(fullm))
-      .groupBy(col("event_type").as("mt"))
-      .agg(sum(when(col("rn") === expr("(nn + 1) DIV 2") ||
-          col("rn") === expr("nn DIV 2 + 1"),
-        when(expr("nn % 2 = 1"), col("vc") * 2).otherwise(col("vc")))
-        .otherwise(lit(0L))).as("med2"))
+    val med2 = Aggregations.med2Of(U.events(s, d)
+        .select(col("event_type"), U.cents(col("value")).as("vc")),
+        "event_type", "vc", "med2")
+      .select(col("event_type").as("mt"), col("med2"))
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("ts"), col("event_id"))
     val ps = U.events(s, d)

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{OSQL, U}
 import graft.sources.StatsSink
+import graft.streaming.StreamingQueries.micros
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,17 +55,15 @@ class SessionizeProcessor extends StatefulProcessor[Long, SEvent, SessOut] {
   @transient private var st: org.apache.spark.sql.streaming.ValueState[SessState] = _
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     st = getHandle.getValueState[SessState]("sess", Encoders.product[SessState], TTLConfig.NONE)
-  private def us(t: java.sql.Timestamp): Long =
-    (t.getTime / 1000) * 1000000L + t.getNanos / 1000 // exact µs (ms-truncation trap)
   private def fin(key: Long, c: SessState): SessOut =
     SessOut(key, c.sessionId, c.startUs, c.lastUs, c.n, c.cents)
   override def handleInputRows(key: Long, rows: Iterator[SEvent],
       tv: TimerValues): Iterator[SessOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (us(e.ts), e.event_id))
+    val sorted = rows.toIndexedSeq.sortBy(e => (micros(e.ts), e.event_id))
     var out = List.empty[SessOut]
     var cur = if (st.exists()) Option(st.get()) else None
     for (e <- sorted) {
-      val t = us(e.ts)
+      val t = micros(e.ts)
       cur match {
         case Some(c) if t - c.lastUs <= 1800000000L =>
           cur = Some(c.copy(lastUs = t, n = c.n + 1, cents = c.cents + e.cents))
@@ -147,8 +146,7 @@ class CusumProcessor
       cur = CuState(cp, math.min(cur.minp, cp), cm, math.min(cur.minm, cm))
       val sp = cp - math.min(0L, cur.minp)
       val sm = cm - math.min(0L, cur.minm)
-      val us = (e.ts.getTime / 1000) * 1000000L + e.ts.getNanos / 1000
-      COut(key, us, e.n, sp > e.n * 5000L, sm > e.n * 5000L)
+      COut(key, micros(e.ts), e.n, sp > e.n * 5000L, sm > e.n * 5000L)
     }
     st.update(cur)
     out.iterator
@@ -186,8 +184,7 @@ class PageHinkleyProcessor
       val term = (BigInt(1000000) * e.vc - (BigInt(1000000) * sx) / i).toLong
       m += term
       mn = math.min(mn, m)
-      val us = (e.ts.getTime / 1000) * 1000000L + e.ts.getNanos / 1000
-      PHOut(key, us, m - mn)
+      PHOut(key, micros(e.ts), m - mn)
     }
     st.update((i, sx, m, mn))
     out.iterator
@@ -487,11 +484,9 @@ class IdleTimeoutProcessor extends StatefulProcessor[Long, IdleEvent, IdleAlert]
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     last = getHandle.getValueState[Long]("last_us", Encoders.scalaLong,
       TTLConfig.NONE)
-  private def us(t: java.sql.Timestamp): Long =
-    (t.getTime / 1000) * 1000000L + t.getNanos / 1000
   override def handleInputRows(key: Long, rows: Iterator[IdleEvent],
       tv: TimerValues): Iterator[IdleAlert] = {
-    val sorted = rows.map(e => us(e.ts)).toIndexedSeq.sorted
+    val sorted = rows.map(e => micros(e.ts)).toIndexedSeq.sorted
     var out = List.empty[IdleAlert]
     var cur = if (last.exists()) Some(last.get()) else None
     // only the PREVIOUS batch's last event ever registered a timer —
@@ -552,6 +547,11 @@ class IdleTimeoutProcessor extends StatefulProcessor[Long, IdleEvent, IdleAlert]
   * watermark-closed windows), on top of StreamingSpec's semantics tests.
   */
 object StreamingQueries {
+
+  /** Exact µs of an event timestamp: whole seconds from `getTime`, the
+    * sub-second part from `getNanos` (`getTime` alone truncates to ms). */
+  private[graft] def micros(t: java.sql.Timestamp): Long =
+    (t.getTime / 1000) * 1000000L + t.getNanos / 1000
 
   private val nameCounter = new AtomicInteger(0)
   private val prepared = scala.collection.mutable.Set[String]()
@@ -727,8 +727,8 @@ object StreamingQueries {
         catch { case _: Throwable => }
     }
 
-  /** Cost-attribution note for the LAST replay (read by
-    * [[graft.StreamProfile]], backs BASELINE.md's BENCH-NOTES): micro-batch
+  /** Cost-attribution note for the LAST replay (printed by
+    * [[graft.Probe]], backs BASELINE.md's BENCH-NOTES): micro-batch
     * count, stateful-operator count, and the summed state-store commit /
     * update wall-clock across all batches. The replay's fixed cost is
     * batches × stateOps × shufflePartitions state-store commit rounds —

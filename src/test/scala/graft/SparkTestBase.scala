@@ -6,13 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared session for the whole forked test JVM (SURVEY.md §5). */
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-tests")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -3,7 +3,8 @@
 
 Usage: python3 tools/check.py <sfDir> <outDir> [name ...]
 
-For each query name in <outDir>/oracle_sql.json (or just the names given),
+For each query name in <outDir>/oracle_sql.json (or just the names given;
+a given name without oracle SQL, a typo included, is a FAIL),
 executes the oracle SQL in DuckDB over the sfDir parquet tables, reads the
 Spark result parquet from <outDir>/<name>/, sorts columns by name on both
 sides, and compares values exactly (the driver hash-compares, so any
@@ -20,10 +21,12 @@ def main():
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(oracle):
-        if only and name not in only:
+    for name in sorted(only or oracle):
+        sql = oracle.get(name)
+        if sql is None:
+            print(f"FAIL {name}: no oracle SQL")
+            n_fail += 1
             continue
-        sql = oracle[name]
         try:
             exp = con.execute(sql).fetch_arrow_table()
         except Exception as e:
