@@ -113,7 +113,7 @@ object Bench {
     // The FULL json goes only to stable files (a ~10 KB per-query map got
     // truncated mid-JSON in a captured stdout tail); stdout's final line
     // is a compact summary that cannot truncate.
-    for (p <- Seq("/tmp/graft_bench.json", "bench_latest.json")) {
+    for (p <- outputPaths(sfDir)) {
       try Files.writeString(Paths.get(p), full + "\n")
       catch { case _: Throwable => }
     }
@@ -123,4 +123,13 @@ object Bench {
     spark.stop()
     println(compact)
   }
+
+  /** Where the full JSON goes: `/tmp/graft_bench.json` on every run, and
+    * the committed `bench_latest.json` (relative to the working directory)
+    * only for a run on the sf0.1 fixtures it records — so a local run at
+    * another scale factor cannot overwrite it. */
+  def outputPaths(sfDir: String): Seq[String] =
+    "/tmp/graft_bench.json" +:
+      (if (Paths.get(sfDir).normalize.getFileName.toString == "sf0.1")
+        Seq("bench_latest.json") else Nil)
 }

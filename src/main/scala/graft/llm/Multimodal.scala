@@ -134,6 +134,68 @@ object Multimodal {
     blobs.mapPartitions(it => it.map(featOne)).toDF().orderBy("doc_id")
   }
 
+  /** The synthetic image of doc `id` through the JDK's ImageIO PNG codec
+    * (pure-Java, headless-safe): (encoded PNG bytes, decoded image). The
+    * image is (4 + id % 5) × (4 + 7·id % 5) px of per-channel pixel
+    * formulas that the oracles recompute from id, so any pixel the codec
+    * altered fails the hash. The codec stays in memory: ImageIO's default
+    * stream cache writes a temp FILE per encode/decode — two filesystem
+    * round-trips per image that dwarf the 4x4..8x8 pixel work itself. */
+  private def pngRoundtrip(id: Long)
+      : (Array[Byte], java.awt.image.BufferedImage) = {
+    javax.imageio.ImageIO.setUseCache(false)
+    val w = (4 + id % 5).toInt
+    val h = (4 + (id * 7) % 5).toInt
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until h; x <- 0 until w) {
+      val k = y * w + x
+      val r = ((id * 31 + k) % 256).toInt
+      val g = ((id * 17 + y * 3 + x * 5) % 256).toInt
+      val b = ((id * 13 + y * 7 + x * 11) % 256).toInt
+      img.setRGB(x, y, (r << 16) | (g << 8) | b)
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    val png = bos.toByteArray
+    (png, javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png)))
+  }
+
+  /** r + g + b of a packed RGB pixel — the luma sum of every image rung. */
+  private def rgbSum(p: Int): Long =
+    ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
+
+  /** The synthetic PCM16 mono clip of doc `id` through the JDK WAV codec
+    * (javax.sound.sampled — pure-Java, headless-safe): 64 + id % 64
+    * samples at 8 kHz, sample k = (31·id + 17·k) mod 65536 − 32768 (the
+    * oracles' closed form), encoded to a RIFF/WAVE container by
+    * AudioSystem.write and decoded back by getAudioInputStream. Returns
+    * (WAV bytes, decoded sample rate, DECODED samples), so a codec that
+    * altered one sample or mis-declared the format fails the hash. */
+  private def wavRoundtrip(id: Long): (Array[Byte], Long, Array[Long]) = {
+    val n = (64 + id % 64).toInt
+    val pcm = new Array[Byte](n * 2)
+    for (k <- 0 until n) {
+      val v = (((id * 31 + k.toLong * 17) % 65536) - 32768).toInt
+      pcm(2 * k) = (v & 0xff).toByte        // little-endian PCM16
+      pcm(2 * k + 1) = ((v >> 8) & 0xff).toByte
+    }
+    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+    val ais = new javax.sound.sampled.AudioInputStream(
+      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.sound.sampled.AudioSystem.write(ais,
+      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+    val wav = bos.toByteArray
+    val back = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(wav))
+    val out = back.readAllBytes()
+    val xs = new Array[Long](out.length / 2)
+    for (i <- xs.indices)
+      xs(i) = ((out(2 * i) & 0xff) | (out(2 * i + 1) << 8)).toShort.toLong
+    (wav, back.getFormat.getSampleRate.toLong, xs)
+  }
+
   /** The one multimodal rung with a REAL codec, not a stand-in: a
     * deterministic doc_id-keyed image (4–8 px per side, per-channel LCG
     * pixels) is encoded to actual PNG bytes and decoded back through the
@@ -149,38 +211,15 @@ object Multimodal {
   private def codecRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    ids.mapPartitions { it =>
-      // in-memory codec streams (no per-image temp-file cache) — the
-      // phashBuild rationale
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 7) % 5).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until h; x <- 0 until w) {
-          val k = y * w + x
-          val r = ((id * 31 + k) % 256).toInt
-          val g = ((id * 17 + y * 3 + x * 5) % 256).toInt
-          val b = ((id * 13 + y * 7 + x * 11) % 256).toInt
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val png = bos.toByteArray
-        val magicOk = png.length > 8 && (png(0) & 0xff) == 0x89 &&
-          png(1) == 'P' && png(2) == 'N' && png(3) == 'G'
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(png))
-        var sum = 0L
-        for (y <- 0 until back.getHeight; x <- 0 until back.getWidth) {
-          val p = back.getRGB(x, y)
-          sum += (y.toLong * back.getWidth + x + 1) *
-            (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff))
-        }
-        PngDecoded(id, back.getWidth.toLong, back.getHeight.toLong,
-          magicOk, sum)
-      }
+    ids.map { id =>
+      val (png, back) = pngRoundtrip(id)
+      val magicOk = png.length > 8 && (png(0) & 0xff) == 0x89 &&
+        png(1) == 'P' && png(2) == 'N' && png(3) == 'G'
+      var sum = 0L
+      for (y <- 0 until back.getHeight; x <- 0 until back.getWidth)
+        sum += (y.toLong * back.getWidth + x + 1) * rgbSum(back.getRGB(x, y))
+      PngDecoded(id, back.getWidth.toLong, back.getHeight.toLong,
+        magicOk, sum)
     }.toDF().orderBy("doc_id")
   }
 
@@ -212,33 +251,17 @@ object Multimodal {
   private def phashFrame(s: SparkSession, d: String): DataFrame =
     phashIndex.get(s, d)
 
-  /** Bench warm-up: one dummy WAV encode/decode. AudioSystem's first use
+  /** Bench warm-up: two [[wavRoundtrip]]s. AudioSystem's first use
     * triggers a full SPI provider scan that otherwise lands on the first
     * audio consumer (r14 verdict "What's missing #3" — driver run-1
     * measured `multimodal_vad` 14.3 s / `multimodal_zcr` 17.4 s vs ~1.9 s
-    * warm). The warm encode runs on EXECUTOR threads too (one
-    * mapPartitions pass), because local-mode tasks share the JVM but the
-    * scan cost is per-classloader-first-touch, and the real codecs run
-    * inside tasks. */
+    * warm). The warm round-trips run on EXECUTOR threads (one Dataset
+    * map), because local-mode tasks share the JVM but the scan cost is
+    * per-classloader-first-touch, and the real codecs run inside tasks. */
   private[graft] def warmAudio(s: SparkSession): Unit = {
     import s.implicits._
-    s.range(1L, 3L).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val pcm = Array.tabulate(160)(i => ((i * id) % 251).toByte)
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1,
-          true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, pcm.length / 2)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        val back = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val buf = new Array[Byte](pcm.length)
-        back.read(buf)
-        buf.length.toLong
-      }
-    }.reduce(_ + _)
+    s.range(1L, 3L).as[Long].map(id => wavRoundtrip(id)._3.length.toLong)
+      .reduce(_ + _)
     ()
   }
 
@@ -248,41 +271,18 @@ object Multimodal {
   private def phashBuild(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    ids.mapPartitions { it =>
-      // keep the codec in memory: ImageIO's default ImageInputStream cache
-      // writes a temp FILE per encode/decode — two filesystem round-trips
-      // per image that dwarf the 4x4..8x8 pixel work itself
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 7) % 5).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until h; x <- 0 until w) {
-          val k = y * w + x
-          val r = ((id * 31 + k) % 256).toInt
-          val g = ((id * 17 + y * 3 + x * 5) % 256).toInt
-          val b = ((id * 13 + y * 7 + x * 11) % 256).toInt
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val grays = for (y <- 0 until back.getHeight; x <- 0 until back.getWidth)
-          yield {
-            val p = back.getRGB(x, y)
-            (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)).toLong
-          }
-        val npx = grays.length.toLong
-        val sg = grays.sum
-        var (w0, w1, ones) = (0L, 0L, 0L)
-        for ((g, k) <- grays.zipWithIndex if g * npx > sg) {
-          if (k < 32) w0 |= 1L << k else w1 |= 1L << (k - 32)
-          ones += 1
-        }
-        PHash(id, w0, w1, ones)
+    ids.map { id =>
+      val back = pngRoundtrip(id)._2
+      val grays = for (y <- 0 until back.getHeight; x <- 0 until back.getWidth)
+        yield rgbSum(back.getRGB(x, y))
+      val npx = grays.length.toLong
+      val sg = grays.sum
+      var (w0, w1, ones) = (0L, 0L, 0L)
+      for ((g, k) <- grays.zipWithIndex if g * npx > sg) {
+        if (k < 32) w0 |= 1L << k else w1 |= 1L << (k - 32)
+        ones += 1
       }
+      PHash(id, w0, w1, ones)
     }.toDF()
   }
 
@@ -337,39 +337,14 @@ object Multimodal {
   private def wavStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    ids.mapPartitions { it =>
-      it.map { id =>
-        val n = (64 + id % 64).toInt
-        val pcm = new Array[Byte](n * 2)
-        for (k <- 0 until n) {
-          val v = (((id * 31 + k.toLong * 17) % 65536) - 32768).toInt
-          pcm(2 * k) = (v & 0xff).toByte        // little-endian PCM16
-          pcm(2 * k + 1) = ((v >> 8) & 0xff).toByte
-        }
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1,
-          true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        val wav = bos.toByteArray
-        val riffOk = wav.length > 44 &&
-          wav(0) == 'R' && wav(1) == 'I' && wav(2) == 'F' && wav(3) == 'F' &&
-          wav(8) == 'W' && wav(9) == 'A' && wav(10) == 'V' && wav(11) == 'E'
-        val back = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(wav))
-        val rate = back.getFormat.getSampleRate.toLong
-        val out = back.readAllBytes()
-        var peak = 0L; var sumSq = 0L; var m = 0L
-        var i = 0
-        while (i + 1 < out.length) {
-          val v = ((out(i) & 0xff) | (out(i + 1) << 8)).toShort.toLong
-          if (math.abs(v) > peak) peak = math.abs(v)
-          sumSq += v * v; m += 1; i += 2
-        }
-        WavStats(id, m, rate, riffOk, peak, sumSq)
-      }
+    ids.map { id =>
+      val (wav, rate, xs) = wavRoundtrip(id)
+      val riffOk = wav.length > 44 &&
+        wav(0) == 'R' && wav(1) == 'I' && wav(2) == 'F' && wav(3) == 'F' &&
+        wav(8) == 'W' && wav(9) == 'A' && wav(10) == 'V' && wav(11) == 'E'
+      var peak = 0L; var sumSq = 0L
+      for (v <- xs) { peak = math.max(peak, math.abs(v)); sumSq += v * v }
+      WavStats(id, xs.length.toLong, rate, riffOk, peak, sumSq)
     }.toDF().orderBy("doc_id")
   }
 
@@ -385,35 +360,15 @@ object Multimodal {
   private def resizeNn(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    ids.mapPartitions { it =>
-      // in-memory codec streams — the phashBuild rationale
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 7) % 5).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until h; x <- 0 until w) {
-          val k = y * w + x
-          val r = ((id * 31 + k) % 256).toInt
-          val g = ((id * 17 + y * 3 + x * 5) % 256).toInt
-          val b = ((id * 13 + y * 7 + x * 11) % 256).toInt
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val w2 = (w + 1) / 2; val h2 = (h + 1) / 2
-        var sum = 0L
-        for (y <- 0 until h2; x <- 0 until w2) {
-          val p = back.getRGB(2 * x, 2 * y)
-          sum += (y.toLong * w2 + x + 1) *
-            (((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff))
-        }
-        Resized(id, w.toLong * h, w2.toLong * h2,
-          f"${w2}%02x${h2}%02x" + f"$sum%08x")
-      }
+    ids.map { id =>
+      val back = pngRoundtrip(id)._2
+      val (w, h) = (back.getWidth, back.getHeight)
+      val w2 = (w + 1) / 2; val h2 = (h + 1) / 2
+      var sum = 0L
+      for (y <- 0 until h2; x <- 0 until w2)
+        sum += (y.toLong * w2 + x + 1) * rgbSum(back.getRGB(2 * x, 2 * y))
+      Resized(id, w.toLong * h, w2.toLong * h2,
+        f"${w2}%02x${h2}%02x" + f"$sum%08x")
     }.toDF()
       .select(col("doc_id"), col("n_in"), col("n_out"),
         col("resized_hex").as("resized_sig"))
@@ -434,34 +389,15 @@ object Multimodal {
   private def patches(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    ids.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
-      it.flatMap { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 7) % 5).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (y <- 0 until h; x <- 0 until w) {
-          val k = y * w + x
-          val r = ((id * 31 + k) % 256).toInt
-          val g = ((id * 17 + y * 3 + x * 5) % 256).toInt
-          val b = ((id * 13 + y * 7 + x * 11) % 256).toInt
-          img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val (pw, ph) = (back.getWidth / 2, back.getHeight / 2)
-        for (py <- 0 until ph; px <- 0 until pw) yield {
-          var sum = 0L
-          for (oy <- 0 until 2; ox <- 0 until 2) {
-            val p = back.getRGB(px * 2 + ox, py * 2 + oy)
-            sum += ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-          }
-          ImgPatch(id, (py * pw + px).toLong, py.toLong, px.toLong,
-            sum, sum / 4)
-        }
+    ids.flatMap { id =>
+      val back = pngRoundtrip(id)._2
+      val (pw, ph) = (back.getWidth / 2, back.getHeight / 2)
+      for (py <- 0 until ph; px <- 0 until pw) yield {
+        var sum = 0L
+        for (oy <- 0 until 2; ox <- 0 until 2)
+          sum += rgbSum(back.getRGB(px * 2 + ox, py * 2 + oy))
+        ImgPatch(id, (py * pw + px).toLong, py.toLong, px.toLong,
+          sum, sum / 4)
       }
     }.toDF().orderBy("doc_id", "patch_id")
   }
@@ -481,35 +417,12 @@ object Multimodal {
   private def vad(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    val frames = ids.mapPartitions { it =>
-      it.flatMap { id =>
-        val n = (64 + id % 64).toInt
-        val pcm = new Array[Byte](n * 2)
-        for (k <- 0 until n) {
-          val v = (((id * 31 + k.toLong * 17) % 65536) - 32768).toInt
-          pcm(2 * k) = (v & 0xff).toByte
-          pcm(2 * k + 1) = ((v >> 8) & 0xff).toByte
-        }
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1,
-          true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        val back = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val out = back.readAllBytes()
-        val nFrames = (out.length / 2) / 16
-        (0 until nFrames).map { f =>
-          var e = 0L
-          for (k <- 0 until 16) {
-            val i = (f * 16 + k) * 2
-            val v = ((out(i) & 0xff) | (out(i + 1) << 8)).toShort.toLong
-            e += v * v
-          }
-          WavFrame(id, f.toLong, e)
-        }
+    val frames = ids.flatMap { id =>
+      val xs = wavRoundtrip(id)._3
+      (0 until xs.length / 16).map { f =>
+        var e = 0L
+        for (k <- f * 16 until f * 16 + 16) e += xs(k) * xs(k)
+        WavFrame(id, f.toLong, e)
       }
     }.toDF()
     // per-clip totals as a WINDOW over the same doc_id partitioning the
@@ -554,39 +467,15 @@ object Multimodal {
   private def zcr(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = U.tbl(s, d, "documents").select(col("doc_id")).as[Long]
-    ids.mapPartitions { it =>
-      it.flatMap { id =>
-        val n = (64 + id % 64).toInt
-        val pcm = new Array[Byte](n * 2)
-        for (k <- 0 until n) {
-          val v = (((id * 31 + k.toLong * 17) % 65536) - 32768).toInt
-          pcm(2 * k) = (v & 0xff).toByte
-          pcm(2 * k + 1) = ((v >> 8) & 0xff).toByte
+    ids.flatMap { id =>
+      val xs = wavRoundtrip(id)._3
+      (0 until xs.length / 16).map { f =>
+        var e = 0L; var zc = 0L
+        for (k <- f * 16 until f * 16 + 16) {
+          e += xs(k) * xs(k)
+          if (k > f * 16 && (xs(k) >= 0L) != (xs(k - 1) >= 0L)) zc += 1L
         }
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1,
-          true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.sound.sampled.AudioSystem.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        val back = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val out = back.readAllBytes()
-        val nFrames = (out.length / 2) / 16
-        (0 until nFrames).map { f =>
-          var e = 0L; var zc = 0L
-          var prevNonNeg = false
-          for (k <- 0 until 16) {
-            val i = (f * 16 + k) * 2
-            val v = ((out(i) & 0xff) | (out(i + 1) << 8)).toShort.toLong
-            e += v * v
-            val nonNeg = v >= 0L
-            if (k > 0 && nonNeg != prevNonNeg) zc += 1L
-            prevNonNeg = nonNeg
-          }
-          ZcrFrame(id, f.toLong, zc, e)
-        }
+        ZcrFrame(id, f.toLong, zc, e)
       }
     }.toDF()
       .orderBy("doc_id", "frame")

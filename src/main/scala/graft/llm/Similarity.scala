@@ -38,6 +38,53 @@ object Similarity {
       Pipeline.microVec(col("embedding")).as("fx"))
       .withColumn("nrm", fixed_dot(col("fx"), col("fx")))
 
+  /** The persisted (vec_id, fx, nrm) frame of a query or index build that
+    * reads the corpus more than once. A shared-index build unpersists it
+    * itself once the index is materialized; a query uses [[trackedEmb]]. */
+  private def persistedEmb(s: SparkSession, d: String): DataFrame =
+    fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist()
+
+  /** [[persistedEmb]] registered with [[U.track]], so the harness's
+    * `U.releaseTracked()` after each query releases it. */
+  private def trackedEmb(s: SparkSession, d: String): DataFrame =
+    U.track(persistedEmb(s, d))
+
+  /** Recall@3 per query of an index's top-3 `hits` (q_id, id) against the
+    * exact top-3 `truth` (q_id, id): (q_id, n_hits, recall = n_hits / 3).
+    * Both sides are deterministic (fixed-point scores, id tiebreaks), so
+    * the overlap count is exactly oracle-able. */
+  private def recallAt3(hits: DataFrame, truth: DataFrame): DataFrame =
+    hits.toDF("q_id", "hv")
+      .join(truth.toDF("bq", "bv"),
+        col("q_id") === col("bq") && col("hv") === col("bv"), "left")
+      .groupBy(col("q_id"))
+      .agg(count(col("bv")).as("n_hits"))
+      .select(col("q_id"), col("n_hits"),
+        (col("n_hits").cast(DoubleType) / lit(3.0)).as("recall"))
+      .orderBy("q_id")
+
+  /** Exact cosine top-3 (q_id, vec_id) of the 10 lowest-id probes — the
+    * ground truth of the cosine indexes (IVF, kNN graph, int8). */
+  private def cosTop3(s: SparkSession, d: String): DataFrame =
+    scoredNeighbors(s, d, nQueries = 10, k = 3)
+      .select(col("q_id"), col("vec_id"))
+
+  /** Exact squared-L2 top-3 (q_id, vec_id) of the 10 lowest-id probes —
+    * the ground truth of the PQ indexes, whose ADC ranks by L2. */
+  private def l2Top3(s: SparkSession, d: String): DataFrame = {
+    val all = trackedEmb(s, d)
+    val q = all.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("fx").as("qx"), col("nrm").as("qn"))
+    val wb = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("vec_id"))
+    all.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("d2", col("qn") - lit(2L) * fixed_dot(col("qx"), col("fx")) +
+        col("nrm"))
+      .withColumn("rank", row_number().over(wb))
+      .filter(col("rank") <= 3)
+      .select(col("q_id"), col("vec_id"))
+  }
+
   private def dotCol(a: Column, b: Column): Column = fixed_dot(a, b)
 
   private def cosCol(dot: Column, na: Column, nb: Column): Column =
@@ -69,15 +116,7 @@ object Similarity {
     * fixed-point cosine, deterministic tiebreaks), so the overlap count is
     * exactly oracle-able; the join is 30 rows against 30. */
   private def simRecallAtK(s: SparkSession, d: String): DataFrame =
-    ivfAnn(s, d).select(col("q_id"), col("vec_id"))
-      .join(bruteforceTopk(s, d).filter(col("rank") <= 3)
-          .select(col("q_id").as("bq"), col("vec_id").as("bv")),
-        col("q_id") === col("bq") && col("vec_id") === col("bv"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("bv")).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast(DoubleType) / lit(3.0)).as("recall"))
-      .orderBy("q_id")
+    recallAt3(ivfAnn(s, d).select(col("q_id"), col("vec_id")), cosTop3(s, d))
 
   private def bruteforceTopk(s: SparkSession, d: String): DataFrame =
     scoredNeighbors(s, d, nQueries = 10, k = 5)
@@ -152,8 +191,7 @@ object Similarity {
 
   private[graft] def embeddingPairsImpl(s: SparkSession, d: String,
       exactCap: Long): DataFrame = {
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     // one action on the persisted frame picks the path (and doubles as
     // the cache materializer both branches then reuse). The projection is
     // 1:1 with the source table, so at 100 TB the gate VALUE is available
@@ -185,8 +223,7 @@ object Similarity {
   private def embeddingPairsAnn(s: SparkSession, d: String): DataFrame = {
     // the √n-cell IVF build is this query's own work (its only consumer),
     // so it runs inside the timed call like the serving half
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     blockedPairs(emb, emb.count())
   }
 
@@ -348,7 +385,7 @@ object Similarity {
       "emb_ood_score", "sim_index_persist", "sim_ivf_ann", "sim_ivf_curve",
       "sim_ivfpq_adc", "sim_ivfpq_recall", "sim_recall_at_k"),
       Seq(_)) { (s, d) =>
-    val emb = fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist()
+    val emb = persistedEmb(s, d)
     val c = ivfCentroids(emb, 16)
     emb.unpersist() // c is materialized; the build input can go
     c
@@ -365,8 +402,7 @@ object Similarity {
     * the file-loaded index is that query's point.) */
   private val assigned16Index = SharedIndex[DataFrame]("assigned16", Seq(
       "sim_ivf_ann", "sim_ivf_curve", "sim_recall_at_k"), Seq(_)) { (s, d) =>
-    val emb = fixed(s, d)
-      .select(col("vec_id"), col("fx"), col("nrm")).persist()
+    val emb = persistedEmb(s, d)
     val a = assignN(emb, centroids16(s, d), 1).persist()
     a.count()
     emb.unpersist()
@@ -376,8 +412,7 @@ object Similarity {
     assigned16Index.get(s, d)
 
   private def ivfAnn(s: SparkSession, d: String): DataFrame = {
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     val cent = centroids16(s, d)
     val assigned = assigned16Cached(s, d)
     // queries probe their 2 nearest centroids
@@ -467,8 +502,7 @@ object Similarity {
   }
 
   private def ivfCurve(s: SparkSession, d: String): DataFrame = {
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     ivfCurveOnEmb(emb, centroids16(s, d), nQueries = 10, probes = Seq(1, 2, 4),
       assignedPre = assigned16Cached(s, d))
   }
@@ -750,8 +784,7 @@ object Similarity {
   private val ivfPqIndex = SharedIndex[(DataFrame, DataFrame)]("ivfPqCoded",
       Seq("sim_ivfpq_adc", "sim_ivfpq_recall"),
       t => Seq(t._1, t._2)) { (s, d) =>
-    val emb = fixed(s, d).select(col("vec_id"), col("fx"), col("nrm"))
-      .persist()
+    val emb = persistedEmb(s, d)
     val t = ivfPqCoded(emb, centroids16(s, d), nSub = 4, k = 16,
       vecDim = 64, seedCut = -1L)
     emb.unpersist()
@@ -761,8 +794,7 @@ object Similarity {
       : (DataFrame, DataFrame) = ivfPqIndex.get(s, d)
 
   private def ivfPqTop(s: SparkSession, d: String): DataFrame = {
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     ivfPqOnCoded(emb, centroids16(s, d), ivfPqCodedCached(s, d),
       nQueries = 10, nprobe = 4, nShort = 192)
   }
@@ -776,28 +808,8 @@ object Similarity {
     * vs raw-PQ's ≈0.2 and the IVF curve's nprobe=1 row at every SF (the
     * shortlist's exact refine removes ADC ranking error; coverage comes
     * from the nprobe=4 cells). */
-  private def ivfPqRecall(s: SparkSession, d: String): DataFrame = {
-    val all = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
-    val q = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("bq_id"), col("fx").as("qx"), col("nrm").as("qn"))
-    val wb = Window.partitionBy(col("bq_id")).orderBy(col("d2"), col("vec_id"))
-    val exact = all.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("bq_id"))
-      .withColumn("d2", col("qn") - lit(2L) * fixed_dot(col("qx"), col("fx")) +
-        col("nrm"))
-      .withColumn("rank", row_number().over(wb))
-      .filter(col("rank") <= 3)
-      .select(col("bq_id"), col("vec_id").as("bv"))
-    ivfPqTop(s, d).select(col("q_id"), col("vec_id"))
-      .join(exact, col("q_id") === col("bq_id") && col("vec_id") === col("bv"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("bv")).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast(DoubleType) / lit(3.0)).as("recall"))
-      .orderBy("q_id")
-  }
+  private def ivfPqRecall(s: SparkSession, d: String): DataFrame =
+    recallAt3(ivfPqTop(s, d).select(col("q_id"), col("vec_id")), l2Top3(s, d))
 
   /** Recall@3 of PQ-ADC against exact-L2 ground truth per query — the
     * quality gate the 4-byte code must pass before it replaces the
@@ -809,28 +821,8 @@ object Similarity {
     * index this coarse must not silently replace the exact path, and
     * this query is the number that says so. The configuration that
     * passes is the residual variant: [[ivfPqRecall]]. */
-  private def pqRecall(s: SparkSession, d: String): DataFrame = {
-    val all = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
-    val q = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("bq_id"), col("fx").as("qx"), col("nrm").as("qn"))
-    val wb = Window.partitionBy(col("bq_id")).orderBy(col("d2"), col("vec_id"))
-    val exact = all.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("bq_id"))
-      .withColumn("d2", col("qn") - lit(2L) * fixed_dot(col("qx"), col("fx")) +
-        col("nrm"))
-      .withColumn("rank", row_number().over(wb))
-      .filter(col("rank") <= 3)
-      .select(col("bq_id"), col("vec_id").as("bv"))
-    pqAdcTop(s, d).select(col("q_id"), col("vec_id"))
-      .join(exact, col("q_id") === col("bq_id") && col("vec_id") === col("bv"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("bv")).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast(DoubleType) / lit(3.0)).as("recall"))
-      .orderBy("q_id")
-  }
+  private def pqRecall(s: SparkSession, d: String): DataFrame =
+    recallAt3(pqAdcTop(s, d).select(col("q_id"), col("vec_id")), l2Top3(s, d))
 
   /** Corpus-wide k-NN graph — top-3 cosine neighbors for EVERY vector,
     * blocked by a √n-cell IVF quantizer (the [[blockedPairs]] sizing: the
@@ -851,8 +843,7 @@ object Similarity {
   private val knnIndex = SharedIndex[(DataFrame, DataFrame)]("knnAssigned",
       Seq("emb_knn_label_purity", "sim_knn_graph", "sim_knn_recall"),
       t => Seq(t._1, t._2)) { (s, d) =>
-    val emb = fixed(s, d)
-      .select(col("vec_id"), col("fx"), col("nrm")).persist()
+    val emb = persistedEmb(s, d)
     val n = emb.count()
     val k = math.max(4,
       math.min(1024, math.round(math.sqrt(n.toDouble)).toInt))
@@ -906,30 +897,9 @@ object Similarity {
     * in THIS number — the measured trade the graph's scaladoc promises.
     * Exact at any SF: both sides are deterministic integer/identical-
     * double trees, so the oracle recomputes graph AND truth. */
-  private def knnRecall(s: SparkSession, d: String): DataFrame = {
-    val all = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
-    val q = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("bq_id"), col("fx").as("qx"), col("nrm").as("qn"))
-    val wb = Window.partitionBy(col("bq_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val exact = all.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("bq_id"))
-      .withColumn("cos",
-        cosCol(dotCol(col("qx"), col("fx")), col("qn"), col("nrm")))
-      .withColumn("rank", row_number().over(wb))
-      .filter(col("rank") <= 3)
-      .select(col("bq_id"), col("vec_id").as("bv"))
-    knnGraph(s, d).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("nbr_id"))
-      .join(exact,
-        col("q_id") === col("bq_id") && col("nbr_id") === col("bv"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("bv")).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast(DoubleType) / lit(3.0)).as("recall"))
-      .orderBy("q_id")
-  }
+  private def knnRecall(s: SparkSession, d: String): DataFrame =
+    recallAt3(knnGraph(s, d).filter(col("vec_id") < 10)
+      .select(col("vec_id"), col("nbr_id")), cosTop3(s, d))
 
   /** LSH bucket-balance histogram — the index-health diagnostic behind
     * [[lshAnn]]: occupancy of every occupied 8-plane bucket. A healthy
@@ -959,8 +929,7 @@ object Similarity {
     * corpus stream against the broadcast cached k=16 quantizer — the
     * assignN shape with the score kept instead of dropped. */
   private def embOod(s: SparkSession, d: String): DataFrame = {
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     emb.crossJoin(broadcast(centroids16(s, d)))
       .withColumn("dist",
         -(dotCol(col("fx"), col("cfx")).cast(DoubleType) /
@@ -1163,8 +1132,7 @@ object Similarity {
     * this read-assign-histogram is the cheap online one; splitting them
     * is the operational shape. */
   private def indexPersist(s: SparkSession, d: String): DataFrame = {
-    val emb = U.track(
-      fixed(s, d).select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val emb = trackedEmb(s, d)
     val cent = centroids16(s, d)
     val path = U.scratch(d, "ivf_index")
     cent.select(col("cid"), col("cfx")).coalesce(1)
@@ -1371,8 +1339,7 @@ object Similarity {
     * centroids) — shared by [[embKmeans]]'s report and
     * [[embKmeansAri]]'s label-agreement gate so the two cannot drift. */
   private def kmeansAssignments(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val v = U.track(fixed(s, d)
-      .select(col("vec_id"), col("fx"), col("nrm")).persist())
+    val v = trackedEmb(s, d)
     kmeansOn(v, v.filter(col("vec_id") < 4L), 3)
   }
 
@@ -1618,21 +1585,14 @@ object Similarity {
         col("qn").as("an"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
-    q8.crossJoin(broadcast(qq))
+    val top = q8.crossJoin(broadcast(qq))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos",
         cosCol(dotCol(col("ax"), col("qx")), col("an"), col("qn")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("q_id"), col("vec_id"))
-      .join(bruteforceTopk(s, d).filter(col("rank") <= 3)
-          .select(col("q_id").as("bq"), col("vec_id").as("bv")),
-        col("q_id") === col("bq") && col("vec_id") === col("bv"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("bv")).as("n_hits"))
-      .select(col("q_id"), col("n_hits"),
-        (col("n_hits").cast(DoubleType) / lit(3.0)).as("recall"))
-      .orderBy("q_id")
+    recallAt3(top, cosTop3(s, d))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

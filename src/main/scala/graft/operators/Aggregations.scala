@@ -1533,20 +1533,10 @@ object Aggregations {
     * one agg over the sign products; the closing tau-b is one mirrored
     * double tree. Missing days fill as exact (0, 0) ties. */
   private def aggKendallTau(s: SparkSession, d: String): DataFrame = {
-    val daily = U.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-      .agg(sum(when(col("event_type") === "click", col("vc")).otherwise(0L))
-          .as("xc"),
-        sum(when(col("event_type") === "purchase", col("vc")).otherwise(0L))
-          .as("yc"))
-    val grid = daily.groupBy()
-      .agg(min(col("dayi")).as("d0"), max(col("dayi")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("gd"))
-    val filled = U.track(grid.join(daily, col("gd") === col("dayi"), "left")
-      .select(col("gd"), coalesce(col("xc"), lit(0L)).as("x"),
-        coalesce(col("yc"), lit(0L)).as("y")).persist())
+    val filled = U.track(TimeSeries.clickPurchaseGrid(s, d,
+        "unix_micros(ts) DIV 86400000000", "dayi")
+      .select(col("dayi").as("gd"), col("xc").as("x"), col("yc").as("y"))
+      .persist())
     val nd = filled.groupBy().agg(count(lit(1)).as("n_days"))
     val a = filled.select(col("gd").as("g1"), col("x").as("x1"),
       col("y").as("y1"))
@@ -2287,6 +2277,14 @@ object Aggregations {
       .orderBy("event_type", "rel_micro")
   }
 
+  /** `ev` with `sd`, the pre/post split day: the observed midpoint of
+    * its `dayi` column, crossed in as a broadcast 1-row frame — the one
+    * split rule of the before/after designs (CUPED, McNemar, PSI, the
+    * prediction frame, DiD, `ts_its`, `stream_psi`). */
+  private[graft] def withSplitDay(ev: DataFrame): DataFrame =
+    ev.crossJoin(broadcast(
+      ev.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))))
+
   /** CUPED variance reduction for the id-parity A/B design — the
     * covariate-adjustment step every experimentation stack runs before
     * reading a lift: each user's PRE-period spend (days before the
@@ -2301,8 +2299,7 @@ object Aggregations {
     val ev = U.events(s, d).select(col("user_id"),
       expr("unix_micros(ts) DIV 86400000000").as("dayi"),
       U.cents(col("value")).as("vc"))
-    val split = ev.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-    cupedOn(ev.crossJoin(broadcast(split))
+    cupedOn(withSplitDay(ev)
       .groupBy(col("user_id"))
       .agg(sum(when(col("dayi") < col("sd"), col("vc")).otherwise(0L)).as("x"),
         sum(when(col("dayi") >= col("sd"), col("vc")).otherwise(0L)).as("y"))
@@ -2484,8 +2481,7 @@ object Aggregations {
   private def aggMcnemar(s: SparkSession, d: String): DataFrame = {
     val ev = U.events(s, d).select(col("user_id"), col("event_type"),
       expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-    val split = ev.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-    ev.crossJoin(broadcast(split))
+    withSplitDay(ev)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(when(col("dayi") < col("sd"), 1L).otherwise(0L)).as("pre"),
         max(when(col("dayi") >= col("sd"), 1L).otherwise(0L)).as("post"))
@@ -2703,8 +2699,7 @@ object Aggregations {
     * [[graft.api.GraftApi.psiDrift]]. Splits at the observed midpoint
     * of the time index. */
   private[graft] def psiOn(ev: DataFrame): DataFrame = {
-    val split = ev.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-    val cnt = U.track(ev.crossJoin(broadcast(split))
+    val cnt = U.track(withSplitDay(ev)
       .withColumn("seg", when(col("dayi") < col("sd"), 0L).otherwise(1L))
       .groupBy(col("event_type"), col("seg"), col("band"))
       .agg(count(lit(1)).as("c"))
@@ -3040,8 +3035,7 @@ object Aggregations {
     val ev = U.events(s, d).select(col("user_id"),
       expr("unix_micros(ts) DIV 86400000000").as("dayi"),
       when(U.cents(col("value")) >= 5000L, 1L).otherwise(0L).as("succ"))
-    val split = ev.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-    ev.crossJoin(broadcast(split))
+    withSplitDay(ev)
       .groupBy(col("user_id"))
       .agg(sum(when(col("dayi") < col("sd"), 1L).otherwise(0L)).as("n_pre"),
         sum(when(col("dayi") < col("sd"), col("succ")).otherwise(0L))
@@ -3221,10 +3215,9 @@ object Aggregations {
     * arm 0/1, vc = exact-integer outcome) frame — shared by the declared
     * query and [[graft.api.GraftApi.didEstimate]]. */
   private[graft] def didOn(ev: DataFrame): DataFrame = {
-    val split = ev.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
     def cell(a: Int, p: Int) =
       col("arm") === a.toLong && col("post") === p.toLong
-    val g = ev.crossJoin(broadcast(split))
+    val g = withSplitDay(ev)
       .withColumn("post", when(col("dayi") >= col("sd"), 1L).otherwise(0L))
       .groupBy(col("event_type"))
       .agg(

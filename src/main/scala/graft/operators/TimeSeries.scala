@@ -42,6 +42,67 @@ object TimeSeries {
   private[graft] def anchorGate(f: DataFrame,
       cap: Long): (DataFrame, DataFrame => DataFrame) = U.sizeGate(f, cap)
 
+  /** The one zero-filled bucket grid. `buckets` holds one row per (`key`,
+    * integer `idx`); the result has a row for EVERY index from each key's
+    * min to its max (one global grid when `key` is None; sequence +
+    * explode inside the plan), `g0` = that key's first index, and
+    * every other column of `buckets` with 0L where the bucket is absent.
+    * The grid is span-bounded (hours or days), never event-bounded.
+    * Callers keep their own bucket expression: `unix_micros(date_trunc(
+    * 'HOUR', ts)) DIV 3600000000` and `unix_micros(ts) DIV 3600000000`
+    * differ before 1970, and each oracle mirrors the one its query uses. */
+  private[graft] def gapFill(buckets: DataFrame, key: Option[String],
+      idx: String): DataFrame = {
+    val ks = key.toSeq
+    val grid = buckets.groupBy(ks.map(col): _*)
+      .agg(min(col(idx)).as("g0"), max(col(idx)).as("g1"))
+      .select(ks.map(col) :+ col("g0") :+
+        explode(sequence(col("g0"), col("g1"))).as(idx): _*)
+    val values = buckets.columns.filterNot((ks :+ idx).contains)
+    grid.join(buckets, ks :+ idx, "left")
+      .select((ks :+ idx :+ "g0").map(col) ++
+        values.map(v => coalesce(col(v), lit(0L)).as(v)): _*)
+  }
+
+  /** Per-type hourly cent totals, bucketed on the truncated hour — the
+    * series [[tsBinseg]], [[tsHaarEnergy]], [[acfMicroFrame]] and
+    * [[tsAdf]] densify through [[gapFill]]. */
+  private def typeHourCents(s: SparkSession, d: String): DataFrame =
+    gapFill(U.events(s, d)
+      .groupBy(col("event_type"),
+        expr("unix_micros(date_trunc('HOUR', ts)) DIV 3600000000").as("hidx"))
+      .agg(sum(U.cents(col("value"))).as("xc")), Some("event_type"), "hidx")
+
+  /** Per-type daily cent totals as `out`, zero-filled by [[gapFill]] —
+    * [[tsVarianceRatio]]'s and [[tsSnaiveMase]]'s series. */
+  private def typeDayCents(s: SparkSession, d: String, out: String): DataFrame =
+    gapFill(U.events(s, d)
+      .groupBy(col("event_type"),
+        expr("unix_micros(ts) DIV 86400000000").as("dayi"))
+      .agg(sum(U.cents(col("value"))).as(out)), Some("event_type"), "dayi")
+
+  /** Per-type hourly event counts `c`, zero-filled by [[gapFill]] —
+    * [[tsCompleteness]]'s and [[tsDispersion]]'s series. */
+  private def typeHourCounts(s: SparkSession, d: String): DataFrame =
+    gapFill(U.events(s, d)
+      .groupBy(col("event_type"),
+        expr("unix_micros(ts) DIV 3600000000").as("hidx"))
+      .agg(count(lit(1)).as("c")), Some("event_type"), "hidx")
+
+  /** Click (xc) and purchase (yc) cent totals per `bucket` index, named
+    * `idx`, over one global zero-filled grid — the paired series of
+    * [[tsGranger]], [[tsCointegration]] and `agg_kendall_tau`. */
+  private[operators] def clickPurchaseGrid(s: SparkSession, d: String,
+      bucket: String, idx: String): DataFrame =
+    gapFill(U.events(s, d)
+      .filter(col("event_type").isin("click", "purchase"))
+      .withColumn("vc", U.cents(col("value")))
+      .groupBy(expr(bucket).as(idx))
+      .agg(sum(when(col("event_type") === "click", col("vc")).otherwise(0L))
+          .as("xc"),
+        sum(when(col("event_type") === "purchase", col("vc")).otherwise(0L))
+          .as("yc")), None, idx)
+
   /** 1-hour tumbling window aggregation via Spark's window() — start/end
     * flattened out of the struct for the oracle compare. */
   private def tsTumbling(s: SparkSession, d: String): DataFrame =
@@ -96,25 +157,34 @@ object TimeSeries {
         count(lit(1)).as("n_events"), U.dsum(col("value")).as("sum_value"))
       .orderBy("user_id", "session_id")
 
-  /** Resample each user's series to a daily grid (sequence+explode — no
-    * driver-side loop) and forward-fill the last observed value. */
-  private def tsResampleFill(s: SparkSession, d: String): DataFrame = {
+  /** Each user's daily grid, first to last event day (sequence + explode
+    * inside the plan), left-joined with the day's deterministic
+    * closing value, the last (ts, event_id) of the day, as `out`: NULL on
+    * a day without events, which [[tsResampleFill]] and [[tsInterpolate]]
+    * each fill their own way (so not the zero-filling [[gapFill]]). */
+  private def userDayCloses(s: SparkSession, d: String,
+      out: String): DataFrame = {
     val ev = U.events(s, d)
     val grid = ev.groupBy(col("user_id"))
       .agg(date_trunc("DAY", min(col("ts"))).as("d0"),
         date_trunc("DAY", max(col("ts"))).as("d1"))
       .select(col("user_id"),
         explode(sequence(col("d0"), col("d1"), expr("INTERVAL 1 DAY"))).as("day"))
-    // deterministic daily closing value: the last (ts, event_id) of the day
     val wDay = Window.partitionBy(col("user_id"), col("day"))
       .orderBy(col("ts").desc, col("event_id").desc)
     val daily = ev.withColumn("day", date_trunc("DAY", col("ts")))
       .withColumn("rn", row_number().over(wDay))
       .filter(col("rn") === 1)
-      .select(col("user_id"), col("day"), col("value").as("close_value"))
+      .select(col("user_id"), col("day"), col("value").as(out))
+    grid.join(daily, Seq("user_id", "day"), "left_outer")
+  }
+
+  /** Resample each user's series to a daily grid and forward-fill the
+    * last observed value. */
+  private def tsResampleFill(s: SparkSession, d: String): DataFrame = {
     val wFill = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.join(daily, Seq("user_id", "day"), "left_outer")
+    userDayCloses(s, d, "close_value")
       .withColumn("filled_value", last(col("close_value"), ignoreNulls = true).over(wFill))
       .withColumn("is_observed", col("close_value").isNotNull)
       .select(col("user_id"), col("day"), col("filled_value"), col("is_observed"))
@@ -407,29 +477,17 @@ object TimeSeries {
   }
 
   /** Linear interpolation of each user's daily series at unobserved grid
-    * points: same sequence+explode grid as [[tsResampleFill]], then the
+    * points: the [[userDayCloses]] grid of [[tsResampleFill]], then the
     * previous/next observed (value, day) via two frames over ONE sort order,
     * interp = pv + (nv−pv)·frac with frac an exact-integer-µs ratio — the
     * identical double-op tree runs in the oracle, so the hash gate holds. */
   private def tsInterpolate(s: SparkSession, d: String): DataFrame = {
-    val ev = U.events(s, d)
-    val grid = ev.groupBy(col("user_id"))
-      .agg(date_trunc("DAY", min(col("ts"))).as("d0"),
-        date_trunc("DAY", max(col("ts"))).as("d1"))
-      .select(col("user_id"),
-        explode(sequence(col("d0"), col("d1"), expr("INTERVAL 1 DAY"))).as("day"))
-    val wDay = Window.partitionBy(col("user_id"), col("day"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val daily = ev.withColumn("day", date_trunc("DAY", col("ts")))
-      .withColumn("rn", row_number().over(wDay))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("day"), col("value").as("obs"))
     val wB = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wF = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val obsDay = when(col("obs").isNotNull, col("day"))
-    val nbrs = grid.join(daily, Seq("user_id", "day"), "left_outer")
+    val nbrs = userDayCloses(s, d, "obs")
       .withColumn("pv", last(col("obs"), ignoreNulls = true).over(wB))
       .withColumn("pd", last(obsDay, ignoreNulls = true).over(wB))
       .withColumn("nv", first(col("obs"), ignoreNulls = true).over(wF))
@@ -1788,20 +1846,8 @@ object TimeSeries {
     * NULL cuts identically in both engines. */
   private def tsBinseg(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val hourly = U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('HOUR', ts)) DIV 3600000000").as("hidx"))
-      .agg(sum(col("vc")).as("xc"))
-    val grid = hourly.groupBy(col("event_type").as("et"))
-      .agg(min(col("hidx")).as("h0"), max(col("hidx")).as("h1"))
-      .select(col("et"), col("h0"),
-        explode(sequence(col("h0"), col("h1"))).as("ghidx"))
-    val dense = grid.join(hourly,
-        col("et") === col("event_type") && col("ghidx") === col("hidx"),
-        "left")
-      .select(col("et").as("t"), (col("ghidx") - col("h0")).as("i"),
-        coalesce(col("xc"), lit(0L)).as("x"))
+    val dense = typeHourCents(s, d).select(col("event_type").as("t"),
+      (col("hidx") - col("g0")).as("i"), col("xc").as("x"))
     val wt = Window.partitionBy(col("t")).orderBy(col("i"))
     val wtu = Window.partitionBy(col("t"))
     val w2 = Window.partitionBy(col("t"))
@@ -1891,20 +1937,8 @@ object TimeSeries {
     * first hourly agg is bucket-cardinality, not event-cardinality. */
   private def tsHaarEnergy(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val hourly = U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('HOUR', ts)) DIV 3600000000").as("hidx"))
-      .agg(sum(col("vc")).as("xc"))
-    val grid = hourly.groupBy(col("event_type").as("et"))
-      .agg(min(col("hidx")).as("h0"), max(col("hidx")).as("h1"))
-      .select(col("et"), col("h0"),
-        explode(sequence(col("h0"), col("h1"))).as("ghidx"))
-    val dense = grid.join(hourly,
-        col("et") === col("event_type") && col("ghidx") === col("hidx"),
-        "left")
-      .select(col("et").as("t"), (col("ghidx") - col("h0")).as("i"),
-        coalesce(col("xc"), lit(0L)).as("x"))
+    val dense = typeHourCents(s, d).select(col("event_type").as("t"),
+      (col("hidx") - col("g0")).as("i"), col("xc").as("x"))
     def level(src: DataFrame): (DataFrame, DataFrame) = {
       val g = src.groupBy(col("t"), expr("i DIV 2").as("q"))
         .agg(sum(when(expr("i % 2 = 0"), col("x")).otherwise(-col("x")))
@@ -1933,18 +1967,8 @@ object TimeSeries {
     * (event_type, lag 1..12, n_pairs, acf_micro, grid length n). */
   private def acfMicroFrame(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val hourly = U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('HOUR', ts)) DIV 3600000000").as("hidx"))
-      .agg(sum(col("vc")).as("xc"))
-    val grid = hourly.groupBy(col("event_type").as("et"))
-      .agg(min(col("hidx")).as("h0"), max(col("hidx")).as("h1"))
-      .select(col("et"), explode(sequence(col("h0"), col("h1"))).as("ghidx"))
-    val dense = grid.join(hourly,
-        col("et") === col("event_type") && col("ghidx") === col("hidx"), "left")
-      .select(col("et").as("t"), col("ghidx").as("hx"),
-        coalesce(col("xc"), lit(0L)).as("x"))
+    val dense = typeHourCents(s, d).select(col("event_type").as("t"),
+      col("hidx").as("hx"), col("xc").as("x"))
     val stats = dense.groupBy(col("t").as("st"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("ssum"))
     val dn = dense.join(broadcast(stats), col("t") === col("st"))
@@ -2235,22 +2259,10 @@ object TimeSeries {
     * two-direction union are constant-size at any SF. */
   private def tsGranger(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val hourly = U.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(expr("unix_micros(date_trunc('HOUR', ts)) DIV 3600000000")
-        .as("hidx"))
-      .agg(sum(when(col("event_type") === "click", col("vc")).otherwise(0L))
-        .as("xc"),
-        sum(when(col("event_type") === "purchase", col("vc")).otherwise(0L))
-          .as("yc"))
-    val grid = hourly.groupBy().agg(min(col("hidx")).as("h0"),
-        max(col("hidx")).as("h1"))
-      .select(explode(sequence(col("h0"), col("h1"))).as("gh"))
-    val w = Window.orderBy(col("gh"))
-    val lagged = grid.join(hourly, col("gh") === col("hidx"), "left")
-      .select(col("gh"), coalesce(col("xc"), lit(0L)).as("xv"),
-        coalesce(col("yc"), lit(0L)).as("yv"))
+    val w = Window.orderBy(col("hidx"))
+    val lagged = clickPurchaseGrid(s, d,
+        "unix_micros(date_trunc('HOUR', ts)) DIV 3600000000", "hidx")
+      .select(col("hidx"), col("xc").as("xv"), col("yc").as("yv"))
       .withColumn("xl", lag(col("xv"), 1).over(w))
       .withColumn("yl", lag(col("yv"), 1).over(w))
       .filter(col("xl").isNotNull)
@@ -2296,22 +2308,12 @@ object TimeSeries {
     * are time-domain-bounded. */
   private def tsAdf(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val hourly = U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(col("event_type"),
-        expr("unix_micros(date_trunc('HOUR', ts)) DIV 3600000000").as("hidx"))
-      .agg(sum(col("vc")).as("xc"))
-    val grid = hourly.groupBy(col("event_type").as("et"))
-      .agg(min(col("hidx")).as("h0"), max(col("hidx")).as("h1"))
-      .select(col("et"), explode(sequence(col("h0"), col("h1"))).as("gh"))
-    val w = Window.partitionBy(col("et")).orderBy(col("gh"))
-    val lagged = grid.join(hourly,
-        col("et") === col("event_type") && col("gh") === col("hidx"), "left")
-      .select(col("et"), col("gh"), coalesce(col("xc"), lit(0L)).as("y"))
+    val w = Window.partitionBy(col("event_type")).orderBy(col("hidx"))
+    val lagged = typeHourCents(s, d).withColumnRenamed("xc", "y")
       .withColumn("l", lag(col("y"), 1).over(w))
       .filter(col("l").isNotNull)
       .withColumn("dy", col("y") - col("l"))
-    val ps = lagged.groupBy(col("et")).agg(
+    val ps = lagged.groupBy(col("event_type")).agg(
       count(lit(1)).cast(DoubleType).as("nd"),
       sum(col("l")).cast(DoubleType).as("sl"),
       sum(col("dy")).cast(DoubleType).as("sd"),
@@ -2324,7 +2326,7 @@ object TimeSeries {
     val cdd = U.covPowerSums(col("sdd"), col("sd"), col("sd"), nd)
     val beta = cld / cll
     val se2 = (cdd - cld * cld / cll) / ((nd - lit(2.0)) * cll)
-    ps.select(col("et").as("event_type"), nd.cast(LongType).as("n"),
+    ps.select(col("event_type"), nd.cast(LongType).as("n"),
         beta.as("beta"), sqrt(se2).as("se"),
         (beta / sqrt(se2)).as("t_stat"))
       .orderBy("event_type")
@@ -2504,21 +2506,11 @@ object TimeSeries {
   private def tsVarianceRatio(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val q = 5
-    val daily = U.events(s, d)
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-      .agg(sum(col("vc")).as("xc"))
-    val grid = daily.groupBy(col("event_type").as("et"))
-      .agg(min(col("dayi")).as("d0"), max(col("dayi")).as("d1"))
-      .select(col("et"), explode(sequence(col("d0"), col("d1"))).as("gd"))
-    val w = Window.partitionBy(col("et")).orderBy(col("gd"))
-    val lagged = grid.join(daily,
-        col("et") === col("event_type") && col("gd") === col("dayi"), "left")
-      .select(col("et"), col("gd"), coalesce(col("xc"), lit(0L)).as("x"))
+    val w = Window.partitionBy(col("event_type")).orderBy(col("dayi"))
+    val lagged = typeDayCents(s, d, "x")
       .withColumn("d1v", col("x") - lag(col("x"), 1).over(w))
       .withColumn("dqv", col("x") - lag(col("x"), q).over(w))
-    val ps = lagged.groupBy(col("et")).agg(
+    val ps = lagged.groupBy(col("event_type")).agg(
       count(lit(1)).as("n_days"),
       count(col("d1v")).cast(DoubleType).as("n1"),
       sum(col("d1v")).cast(DoubleType).as("s1"),
@@ -2530,7 +2522,7 @@ object TimeSeries {
         .as("qq"))
     val var1 = (col("q1") - col("s1") * col("s1") / col("n1")) / col("n1")
     val varq = (col("qq") - col("sq") * col("sq") / col("nq")) / col("nq")
-    ps.select(col("et").as("event_type"), col("n_days"),
+    ps.select(col("event_type"), col("n_days"),
         col("n1").cast(LongType).as("n_diff1"),
         col("nq").cast(LongType).as("n_diffq"),
         var1.as("var1"), varq.as("varq"),
@@ -2677,21 +2669,10 @@ object TimeSeries {
     * totals (~7e14 at sf0.1); the [[tsAdf]] headroom note applies. */
   private def tsCointegration(s: SparkSession, d: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = U.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .withColumn("vc", U.cents(col("value")))
-      .groupBy(expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-      .agg(sum(when(col("event_type") === "click", col("vc")).otherwise(0L))
-          .as("xc"),
-        sum(when(col("event_type") === "purchase", col("vc")).otherwise(0L))
-          .as("yc"))
-    val grid = daily.groupBy()
-      .agg(min(col("dayi")).as("d0"), max(col("dayi")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("gd"))
-    val w = Window.orderBy(col("gd"))
-    val filled = U.track(grid.join(daily, col("gd") === col("dayi"), "left")
-      .select(col("gd"), coalesce(col("xc"), lit(0L)).as("x"),
-        coalesce(col("yc"), lit(0L)).as("y")).persist())
+    val w = Window.orderBy(col("dayi"))
+    val filled = U.track(clickPurchaseGrid(s, d,
+        "unix_micros(ts) DIV 86400000000", "dayi")
+      .select(col("dayi"), col("xc").as("x"), col("yc").as("y")).persist())
     val ps1 = filled.groupBy().agg(
       count(lit(1)).cast(DoubleType).as("n"),
       sum(col("x")).cast(DoubleType).as("sx"),
@@ -3010,27 +2991,18 @@ object TimeSeries {
     * gaps; this scores the feed). Coverage in exact micro-units; the
     * outage run comes from gaps-islands on the empty-hour index. */
   private def tsCompleteness(s: SparkSession, d: String): DataFrame = {
-    val hourly = U.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) DIV 3600000000").as("hidx"))
-      .agg(count(lit(1)).as("c"))
-    val grid = hourly.groupBy(col("event_type").as("et"))
-      .agg(min(col("hidx")).as("h0"), max(col("hidx")).as("h1"))
-      .select(col("et"), explode(sequence(col("h0"), col("h1"))).as("gh"))
-    val dense = grid.join(hourly,
-        col("et") === col("event_type") && col("gh") === col("hidx"), "left")
-      .select(col("et"), col("gh"), coalesce(col("c"), lit(0L)).as("c"))
-    val w = Window.partitionBy(col("et")).orderBy(col("gh"))
+    val dense = typeHourCounts(s, d)
+    val w = Window.partitionBy(col("event_type")).orderBy(col("hidx"))
     val outage = dense.filter(col("c") === 0L)
       .withColumn("rn", row_number().over(w).cast(LongType))
-      .groupBy(col("et").as("et2"), (col("gh") - col("rn")).as("grp"))
+      .groupBy(col("event_type").as("et2"), (col("hidx") - col("rn")).as("grp"))
       .agg(count(lit(1)).as("len"))
       .groupBy(col("et2")).agg(max(col("len")).as("longest_outage_h"))
-    dense.groupBy(col("et"))
+    dense.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_hours"),
         sum(when(col("c") > 0L, 1L).otherwise(0L)).as("covered_hours"))
-      .join(outage, col("et") === col("et2"), "left")
-      .select(col("et").as("event_type"), col("n_hours"),
+      .join(outage, col("event_type") === col("et2"), "left")
+      .select(col("event_type"), col("n_hours"),
         col("covered_hours"),
         expr("(1000000 * covered_hours) DIV n_hours")
           .as("completeness_micro"),
@@ -3045,27 +3017,17 @@ object TimeSeries {
     * alert assumes it; [[tsBurst]] then finds WHERE the clumps are).
     * FULLY integer: χ² = (n·Σc² − (Σc)²)/Σc closes in exact
     * micro-units via the DECIMAL DIV bridge. */
-  private def tsDispersion(s: SparkSession, d: String): DataFrame = {
-    val hourly = U.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) DIV 3600000000").as("hidx"))
-      .agg(count(lit(1)).as("c"))
-    val grid = hourly.groupBy(col("event_type").as("et"))
-      .agg(min(col("hidx")).as("h0"), max(col("hidx")).as("h1"))
-      .select(col("et"), explode(sequence(col("h0"), col("h1"))).as("gh"))
-    grid.join(hourly,
-        col("et") === col("event_type") && col("gh") === col("hidx"), "left")
-      .select(col("et"), coalesce(col("c"), lit(0L)).as("c"))
-      .groupBy(col("et"))
+  private def tsDispersion(s: SparkSession, d: String): DataFrame =
+    typeHourCounts(s, d)
+      .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_hours"), sum(col("c")).as("total"),
         sum((col("c") * col("c")).cast(DecimalType(38, 0))).as("scc"))
-      .select(col("et").as("event_type"), col("n_hours"), col("total"),
+      .select(col("event_type"), col("n_hours"), col("total"),
         (col("n_hours") - 1L).as("df"),
         expr("CAST((1000000 * (CAST(n_hours AS DECIMAL(38,0)) * scc - " +
           "CAST(total AS DECIMAL(38,0)) * total)) DIV " +
           "CAST(total AS DECIMAL(38,0)) AS BIGINT)").as("chi2_micro"))
       .orderBy("event_type")
-  }
 
   /** Turning-point randomness test per user: count interior points that
     * are strict local maxima or minima of the (ts, event_id)-ordered value
@@ -3495,18 +3457,8 @@ object TimeSeries {
     * two exact sums (snaive beats naive-1 when mase_micro < 1e6). One
     * grid explode + one window pass per type. */
   private def tsSnaiveMase(s: SparkSession, d: String): DataFrame = {
-    val vc = U.cents(col("value"))
-    val daily = U.events(s, d)
-      .groupBy(col("event_type"),
-        expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-      .agg(sum(vc).as("y"))
-    val grid = daily.groupBy(col("event_type"))
-      .agg(min(col("dayi")).as("lo"), max(col("dayi")).as("hi"))
-      .select(col("event_type"),
-        explode(sequence(col("lo"), col("hi"))).as("dayi"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("dayi"))
-    grid.join(daily, Seq("event_type", "dayi"), "left")
-      .withColumn("y", coalesce(col("y"), lit(0L)))
+    typeDayCents(s, d, "y")
       .withColumn("l1", lag(col("y"), 1).over(w))
       .withColumn("l7", lag(col("y"), 7).over(w))
       .filter(col("l7").isNotNull)
@@ -3683,8 +3635,7 @@ object TimeSeries {
         U.cents(col("value")).as("vc"))
       .groupBy(col("event_type"), col("dayi"))
       .agg(sum(col("vc")).as("y"))
-    val split = daily.agg(expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-    val seg = daily.crossJoin(broadcast(split))
+    val seg = Aggregations.withSplitDay(daily)
       .withColumn("post", when(col("dayi") >= col("sd"), 1L).otherwise(0L))
       .groupBy(col("event_type"), col("post"), col("sd"))
       .agg(count(lit(1)).as("n"), sum(col("dayi")).as("sx"),

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{OSQL, U}
+import graft.operators.Aggregations.withSplitDay
 import graft.sources.StatsSink
 import graft.streaming.StreamingQueries.micros
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
@@ -1468,9 +1469,7 @@ object StreamingQueries {
       .groupBy(col("event_type"), col("dayi"), col("band"))
       .agg(max(col("cnt")).as("cnt"))
       .persist())
-    val sp = snaps.agg(
-      expr("(min(dayi) + max(dayi) + 1) DIV 2").as("sd"))
-    val preDay = snaps.crossJoin(broadcast(sp))
+    val preDay = withSplitDay(snaps)
       .filter(col("dayi") < col("sd"))
       .groupBy(col("event_type").as("pt"))
       .agg(max(col("dayi")).as("pd"))
@@ -1478,7 +1477,7 @@ object StreamingQueries {
         col("event_type") === col("pt") && col("dayi") === col("pd"))
       .select(col("event_type").as("qt"), col("band").as("qb"),
         col("cnt").as("c0"))
-    val post = snaps.crossJoin(broadcast(sp))
+    val post = withSplitDay(snaps)
       .filter(col("dayi") >= col("sd"))
       .join(broadcast(pre), col("event_type") === col("qt") &&
         col("band") === col("qb"), "left")

@@ -32,6 +32,14 @@ class HarnessAuditSpec extends SparkTestBase {
     assert(got == Seq("filter_null" -> 11, "filter_pred" -> 11))
   }
 
+  test("Bench writes bench_latest.json only for a run on the sf0.1 fixtures") {
+    val tmp = "/tmp/graft_bench.json"
+    for (d <- Seq("data/sf0.1", "/data/sf0.1/", "sf0.1", "/x/../data/sf0.1"))
+      assert(Bench.outputPaths(d) == Seq(tmp, "bench_latest.json"), d)
+    for (d <- Seq("data/sf0.01", "/data/sf0.001", "/data/sf0.1/sub", "sf0.10"))
+      assert(Bench.outputPaths(d) == Seq(tmp), d)
+  }
+
   test("Verify.dump leaves no stale output when a query fails to build") {
     val out = Files.createTempDirectory("graft_verify").toString
     val dir = new java.io.File(s"$out/filter_null")

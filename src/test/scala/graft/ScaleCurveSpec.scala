@@ -3,7 +3,8 @@ package graft
 /** The measured scale-curve gate (r11/r12 verdicts' top carried ask):
   * re-derives the sf0.001 → sf0.1 scaling exponent for a representative
   * query of each of the 5 heaviest bench families (stream, graph, ts,
-  * agg, sql — per-family totals in bench_latest.json) and asserts
+  * agg, sql — per-family totals in bench_latest.json, which Bench writes
+  * only for a run on the sf0.1 fixtures) and asserts
   * at-most-~linear. The full 552-query tri-SF table lives in SCALE.md
   * ("Measured tri-SF scale curve"), produced by tools/scalecurve.py
   * from three Bench runs; this spec is the CI tripwire that catches a
