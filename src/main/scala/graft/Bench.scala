@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = Session.sfDir
@@ -113,11 +114,15 @@ object Bench {
     // The FULL json goes only to stable files (a ~10 KB per-query map got
     // truncated mid-JSON in a captured stdout tail); stdout's final line
     // is a compact summary that cannot truncate.
-    for (p <- outputPaths(sfDir)) {
-      try Files.writeString(Paths.get(p), full + "\n")
-      catch { case _: Throwable => }
+    // A failed write names no file: the old one may hold an earlier run.
+    val written = outputPaths(sfDir).filter { p =>
+      try { Files.writeString(Paths.get(p), full + "\n"); true }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] writing $p failed: $e"); false }
     }
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"warm_failed":$warmJson,"queries_file":"/tmp/graft_bench.json","sf":"$sfDir"}"""
+    val queriesFile =
+      if (written.contains(QueriesFile)) "\"" + QueriesFile + "\"" else "null"
+    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"warm_failed":$warmJson,"queries_file":$queriesFile,"sf":"$sfDir"}"""
     // stop FIRST, print LAST: the contract line must be the absolute tail
     // of stdout so the driver's tail-parse cannot lose it to shutdown logs
     spark.stop()
@@ -128,8 +133,9 @@ object Bench {
     * the committed `bench_latest.json` (relative to the working directory)
     * only for a run on the sf0.1 fixtures it records — so a local run at
     * another scale factor cannot overwrite it. */
+  private val QueriesFile = "/tmp/graft_bench.json"
   def outputPaths(sfDir: String): Seq[String] =
-    "/tmp/graft_bench.json" +:
+    QueriesFile +:
       (if (Paths.get(sfDir).normalize.getFileName.toString == "sf0.1")
         Seq("bench_latest.json") else Nil)
 }

@@ -80,6 +80,26 @@ object U {
   def scratch(sfDir: String, tag: String): String =
     s"/tmp/graft_scratch/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"
 
+  /** The one write-once staging rule: run `write` to fill scratch dir
+    * `dir` at most once per JVM, and not at all once `dir/marker` exists
+    * (an earlier JVM finished it); the marker is written after `write`
+    * returns, so a half-written dir is rebuilt. Markers are versioned
+    * (`_GRAFT_STAGED_vN`): bump N when what `write` produces changes. The
+    * `_` prefix keeps the marker out of Spark's file listing. */
+  private val staged = scala.collection.mutable.Set[String]()
+  def stageOnce(dir: String, marker: String)(write: => Unit): String =
+    staged.synchronized {
+      val markerPath = java.nio.file.Paths.get(dir, marker)
+      if (!staged.contains(dir)) {
+        if (!java.nio.file.Files.exists(markerPath)) {
+          write
+          java.nio.file.Files.write(markerPath, Array.emptyByteArray)
+        }
+        staged += dir
+      }
+      dir
+    }
+
   /** Run `body` with the session confs `kvs` set; in a `finally`, each key
     * goes back to its prior value, or is unset if it had none. The one
     * set-and-restore scope in src/main: a per-query knob (replay shuffle

@@ -1,16 +1,17 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.control.NonFatal
 
 import graft.{OSQL, U}
 import graft.operators.Aggregations.withSplitDay
 import graft.sources.StatsSink
 import graft.streaming.StreamingQueries.micros
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
 /** Encoder types for the stateful query — top-level for Catalyst codegen. */
@@ -18,441 +19,85 @@ case class SEvent(event_id: Long, user_id: Long, ts: java.sql.Timestamp, cents: 
 case class SState(n: Long, sum: Long)
 case class SOut(event_id: Long, user_id: Long, running_n: Long, running_sum: Double)
 
-/** Spark 4.x arbitrary-state API (`transformWithState`) processor computing
-  * the SAME running totals as the flatMapGroupsWithState step — the two
-  * queries share one DuckDB oracle, which pins the semantics across both
-  * state APIs. Top-level class: the processor is serialized to executors. */
-class RunningTotalsProcessor extends StatefulProcessor[Long, SEvent, SOut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[SState] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SState]("running", Encoders.product[SState], TTLConfig.NONE)
-  override def handleInputRows(key: Long, rows: Iterator[SEvent],
-      tv: TimerValues): Iterator[SOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    var cur = if (st.exists()) st.get() else SState(0L, 0L)
-    val out = sorted.map { e =>
-      cur = SState(cur.n + 1, cur.sum + e.cents)
-      SOut(e.event_id, key, cur.n, cur.sum.toDouble / 100.0)
-    }
-    st.update(cur)
-    out.iterator
-  }
-}
-
-/** Session accumulator for [[SessionizeProcessor]]; times in exact µs. */
+/** Session accumulator for [[StreamingQueries.sessionizeFold]]; times in exact
+  * µs. `n == 0` is the no-session-yet state. */
 case class SessState(sessionId: Long, startUs: Long, lastUs: Long, n: Long, cents: Long)
 case class SessOut(user_id: Long, session_id: Long, start_us: Long, end_us: Long,
   n_events: Long, cents: Long)
 
-/** Streaming sessionization through `transformWithState` custom state (gap
-  * logic in a ValueState, not the built-in session_window): batches arrive
-  * in event-time order, so each key's open session either extends or closes
-  * on gap>30min exactly as the batch lag-gap pass would. Every touched
-  * session emits its CURRENT summary each batch; the consumer keeps each
-  * session's final (max-n) emission, which equals the batch answer =>
-  * full oracle — unlike watermark-finalized session windows, no session is
-  * lost to end-of-stream. */
-class SessionizeProcessor extends StatefulProcessor[Long, SEvent, SessOut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[SessState] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SessState]("sess", Encoders.product[SessState], TTLConfig.NONE)
-  private def fin(key: Long, c: SessState): SessOut =
-    SessOut(key, c.sessionId, c.startUs, c.lastUs, c.n, c.cents)
-  override def handleInputRows(key: Long, rows: Iterator[SEvent],
-      tv: TimerValues): Iterator[SessOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (micros(e.ts), e.event_id))
-    var out = List.empty[SessOut]
-    var cur = if (st.exists()) Option(st.get()) else None
-    for (e <- sorted) {
-      val t = micros(e.ts)
-      cur match {
-        case Some(c) if t - c.lastUs <= 1800000000L =>
-          cur = Some(c.copy(lastUs = t, n = c.n + 1, cents = c.cents + e.cents))
-        case Some(c) =>
-          out ::= fin(key, c) // closed by gap: final summary
-          cur = Some(SessState(c.sessionId + 1, t, t, 1L, e.cents))
-        case None =>
-          cur = Some(SessState(1L, t, t, 1L, e.cents))
-      }
-    }
-    cur.foreach { c => st.update(c); out ::= fin(key, c) }
-    out.reverseIterator
-  }
-}
-
-/** Per-(user, type) input/output rows for [[HysteresisProcessor]]; the
-  * quarter-cent thresholds ride on each row from the stream-static join. */
+/** Per-(user, type) input/output rows for [[StreamingQueries.hysteresisFold]];
+  * the quarter-cent thresholds ride on each row from the stream-static join. */
 case class HEvent(event_id: Long, user_id: Long, event_type: String,
   ts: java.sql.Timestamp, v4: Long, hi_qc: Long, lo_qc: Long)
 case class HOut(event_id: Long, user_id: Long, event_type: String,
   alarm: Long, is_onset: Boolean)
 
-/** Streaming twin of the batch `ts_hysteresis` SCADA alarm: the latched
-  * state is one Long ValueState per (user, type). Batches arrive in
-  * event-time order (staged replay) and rows sort within a batch, so the
-  * latch replays the batch last-IGNORE-NULLS scan exactly — both queries
-  * share ONE oracle ([[graft.operators.TimeSeries.hysteresisSql]]). */
-class HysteresisProcessor
-    extends StatefulProcessor[(Long, String), HEvent, HOut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[Long] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("alarm", Encoders.scalaLong, TTLConfig.NONE)
-  override def handleInputRows(key: (Long, String), rows: Iterator[HEvent],
-      tv: TimerValues): Iterator[HOut] = {
-    val sorted = rows.toIndexedSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    var cur = if (st.exists()) st.get() else 0L
-    val out = sorted.map { e =>
-      val prev = cur
-      cur = if (e.v4 > e.hi_qc) 1L else if (e.v4 < e.lo_qc) 0L else cur
-      HOut(e.event_id, e.user_id, e.event_type, cur, cur == 1L && prev == 0L)
-    }
-    st.update(cur)
-    out.iterator
-  }
-}
-
-/** Per-type rows for [[CusumProcessor]]; the batch-computed (n, Σx) stats
-  * ride on each row from the stream-static join (the HEvent discipline). */
+/** Per-type rows for [[StreamingQueries.cusumFold]]; the batch-computed (n, Σx)
+  * stats ride on each row from the stream-static join (the HEvent
+  * discipline). */
 case class CEvent(event_id: Long, event_type: String,
   ts: java.sql.Timestamp, vc: Long, n: Long, sx: Long)
 case class CuState(cp: Long, minp: Long, cm: Long, minm: Long)
 case class COut(event_type: String, us: Long, n: Long,
   hi: Boolean, lo: Boolean)
 
-/** Streaming twin of the batch `ts_cusum_alarm` tabular CUSUM: the S⁺/S⁻
-  * recursion runs NATIVELY here (max(0, prev + d) per event — the state
-  * is exactly (cum, running-min) per side, 4 Longs per type), where the
-  * batch query needed the closed-form window identity. Batches arrive in
-  * event-time order (staged replay) and rows sort within a batch, so the
-  * replay equals the batch ordered scan and both queries share ONE oracle
-  * ([[graft.operators.TimeSeries.cusumAlarmSql]]). n-scaled Long domain:
-  * |cum| ≤ n·max|x|·rows — fine to ~1e6 rows/type; the batch twin's
-  * Decimal(38,0) is the 100 TB path. */
-class CusumProcessor
-    extends StatefulProcessor[String, CEvent, COut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[CuState] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CuState]("cusum",
-      Encoders.product[CuState], TTLConfig.NONE)
-  override def handleInputRows(key: String, rows: Iterator[CEvent],
-      tv: TimerValues): Iterator[COut] = {
-    val sorted = rows.toIndexedSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    var cur = if (st.exists()) st.get() else CuState(0L, 0L, 0L, 0L)
-    val out = sorted.map { e =>
-      val dp = e.n * (e.vc - 500L) - e.sx
-      val dm = e.sx - e.n * (e.vc + 500L)
-      val cp = cur.cp + dp; val cm = cur.cm + dm
-      cur = CuState(cp, math.min(cur.minp, cp), cm, math.min(cur.minm, cm))
-      val sp = cp - math.min(0L, cur.minp)
-      val sm = cm - math.min(0L, cur.minm)
-      COut(key, micros(e.ts), e.n, sp > e.n * 5000L, sm > e.n * 5000L)
-    }
-    st.update(cur)
-    out.iterator
-  }
-}
-
 case class PHEvent(event_id: Long, event_type: String,
   ts: java.sql.Timestamp, vc: Long)
 case class PHOut(event_type: String, us: Long, exc: Long)
-
-/** Page–Hinkley drift detection as a LIVE monitor — the streaming twin
-  * of the batch ts_page_hinkley windows (SAME oracle): per event type
-  * the processor carries (n, Σx, m, min m) and replays the identical
-  * running-mean recursion, each mean term computed through BigInt so
-  * the ×1e6 product can never wrap where the batch twin's
-  * DECIMAL(38,0) doesn't (BigInt and Spark's DIV both truncate toward
-  * zero). Batches arrive in event-time order (staged replay) and rows
-  * sort within a batch — the [[CusumProcessor]] assumptions, so the
-  * stream equals the batch ordered scan exactly. */
-class PageHinkleyProcessor
-    extends StatefulProcessor[String, PHEvent, PHOut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[(Long, Long, Long, Long)] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long, Long, Long)]("ph",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-  override def handleInputRows(key: String, rows: Iterator[PHEvent],
-      tv: TimerValues): Iterator[PHOut] = {
-    val sorted = rows.toIndexedSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    var (i, sx, m, mn) =
-      if (st.exists()) st.get() else (0L, 0L, 0L, Long.MaxValue)
-    val out = sorted.map { e =>
-      i += 1; sx += e.vc
-      val term = (BigInt(1000000) * e.vc - (BigInt(1000000) * sx) / i).toLong
-      m += term
-      mn = math.min(mn, m)
-      PHOut(key, micros(e.ts), m - mn)
-    }
-    st.update((i, sx, m, mn))
-    out.iterator
-  }
-}
 
 /** One exploded (doc, LSH band) row on the stream; `bkey` is the
   * concat_ws(":") band signature — the batch dedup_minhash key. */
 case class NDEvent(doc_id: Long, band: Long, bkey: String)
 case class NDOut(doc_id: Long, band: Long, prior: Long)
 
-/** Streaming MinHash near-dup detector — the crawl-ingest shape: band
-  * signatures flow through `transformWithState` keyed by (band, bkey);
-  * each bucket's ValueState holds the MINIMUM doc_id seen, and every
-  * arrival emits the bucket occupant it collided with (−1 if it opened
-  * the bucket). Batches arrive in doc_id order (the staged replay's
-  * mtime contract, same assumption as [[SessionizeProcessor]]) and rows
-  * sort within a batch, so "occupant" = min smaller-id doc in the bucket
-  * — exactly the batch banding's candidate predicate, which is what
-  * makes the replay exactly oracle-able. State is one Long per occupied
-  * bucket; a production deployment bounds the dedup horizon with a
-  * TTLConfig on this state (drop-vs-keep then depends only on docs
-  * inside the horizon), which changes retention, not the per-arrival
-  * logic. */
-class NearDupProcessor
-    extends StatefulProcessor[(Long, String), NDEvent, NDOut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[Long] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("minDoc",
-      Encoders.scalaLong, TTLConfig.NONE)
-  override def handleInputRows(key: (Long, String), rows: Iterator[NDEvent],
-      tv: TimerValues): Iterator[NDOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(_.doc_id)
-    var cur = if (st.exists()) st.get() else -1L
-    val out = sorted.map { e =>
-      val prior = if (cur >= 0L && cur < e.doc_id) cur else -1L
-      cur = if (cur < 0L) e.doc_id else math.min(cur, e.doc_id)
-      NDOut(e.doc_id, e.band, prior)
-    }
-    st.update(cur)
-    out.iterator
-  }
-}
-
 case class SprtEvent(event_type: String, us: Long, dayi: Long, succ: Long)
 case class SprtOut(event_type: String, dayi: Long, cum_n: Long, cum_k: Long)
-
-/** Wald's SPRT live on the stream — the always-valid sequential monitor
-  * enforced where it belongs, on arrival: per type the running
-  * (trials, successes) pair rides one ValueState, each event emits the
-  * post-update cumulants tagged with its day, and the post-replay
-  * rollup takes each day's LAST cumulants (max — the running counts
-  * are monotone) before computing the LLR verdicts. Rows sort by event
-  * time within a batch and the staged replay is event-time-ordered
-  * across batches, so the per-day finals are batch-boundary-invariant
-  * — which is why the stream shares the batch agg_sprt oracle
-  * VERBATIM (the stream_page_hinkley discipline). */
-class SprtProcessor
-    extends StatefulProcessor[String, SprtEvent, SprtOut] {
-  @transient private var st:
-    org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long)]("cums",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-  override def handleInputRows(key: String, rows: Iterator[SprtEvent],
-      tv: TimerValues): Iterator[SprtOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (e.us, e.dayi))
-    var (n, k) = if (st.exists()) st.get() else (0L, 0L)
-    val out = sorted.map { e =>
-      n += 1L; k += e.succ
-      SprtOut(e.event_type, e.dayi, n, k)
-    }
-    st.update((n, k))
-    out.iterator
-  }
-}
 
 case class SrmEvent(event_type: String, user_id: Long, us: Long, dayi: Long)
 case class SrmOut(event_type: String, dayi: Long, arm: Long)
 
-/** First-sight detector behind the streaming SRM guardrail — one Boolean
-  * of RocksDB state per (type, user) (the stream_dedup state
-  * discipline): a key emits exactly one row, tagged with the day of its
-  * first arrival. Batches ride the staged replay's event-time order and
-  * the batch minimum is taken explicitly, so first-sight day == the
-  * batch MIN(day) — what makes the running rollup exactly oracle-able. */
-class SrmFirstSeen
-    extends StatefulProcessor[(String, Long), SrmEvent, SrmOut] {
-  @transient private var seen:
-    org.apache.spark.sql.streaming.ValueState[Boolean] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getValueState[Boolean]("seen",
-      Encoders.scalaBoolean, TTLConfig.NONE)
-  override def handleInputRows(key: (String, Long),
-      rows: Iterator[SrmEvent], tv: TimerValues): Iterator[SrmOut] = {
-    if (seen.exists()) Iterator.empty
-    else {
-      val first = rows.minBy(_.us)
-      seen.update(true)
-      Iterator.single(SrmOut(key._1, first.dayi, key._2 % 2))
-    }
-  }
-}
-
 case class EwmaEvent(user_id: Long, us: Long, event_id: Long, value: Double)
 case class EwmaOut(user_id: Long, n: Long, ewma: Double)
-
-/** Per-user EWMA (α=0.2) live on the stream — one (count, accumulator)
-  * ValueState per user, seeded with the user's first value exactly like
-  * the batch fold, each batch emitting the running final so the rollup
-  * keeps the row with the highest monotone count. The double chain is
-  * order-sensitive, so rows sort by (event time, event_id) within the
-  * batch and ride the staged replay's event-time file order across
-  * batches — the two assumptions that make the stream hash-match the
-  * batch ts_ewma oracle verbatim. */
-class EwmaProcessor
-    extends StatefulProcessor[Long, EwmaEvent, EwmaOut] {
-  @transient private var st:
-    org.apache.spark.sql.streaming.ValueState[(Long, Double)] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Double)]("acc",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble), TTLConfig.NONE)
-  override def handleInputRows(key: Long, rows: Iterator[EwmaEvent],
-      tv: TimerValues): Iterator[EwmaOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (e.us, e.event_id))
-    var (n, acc) = if (st.exists()) st.get() else (0L, 0.0)
-    sorted.foreach { e =>
-      acc = if (n == 0L) e.value else 0.2 * e.value + 0.8 * acc
-      n += 1L
-    }
-    st.update((n, acc))
-    Iterator.single(EwmaOut(key, n, acc))
-  }
-}
 
 case class GapEvent(user_id: Long, us: Long, event_id: Long)
 case class GapOut(user_id: Long, prev_us: Long, us: Long)
 
-/** Live sensor-dropout detector behind the streaming gap monitor — ONE
-  * Long of state per user (the last-seen event time): a gap over the
-  * 2-hour threshold emits the moment the closing event arrives, exactly
-  * the batch `ts_gap_detect` lag-window rows (which is why the twin
-  * shares that oracle VERBATIM). The alert a maintenance pipeline wants
-  * live, not at the nightly rollup. */
-class GapProcessor
-    extends StatefulProcessor[Long, GapEvent, GapOut] {
-  @transient private var st:
-    org.apache.spark.sql.streaming.ValueState[Long] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("last_us",
-      Encoders.scalaLong, TTLConfig.NONE)
-  override def handleInputRows(key: Long, rows: Iterator[GapEvent],
-      tv: TimerValues): Iterator[GapOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (e.us, e.event_id))
-    var last = if (st.exists()) st.get() else Long.MinValue
-    val out = scala.collection.mutable.ArrayBuffer[GapOut]()
-    sorted.foreach { e =>
-      if (last != Long.MinValue && e.us - last > 7200000000L)
-        out += GapOut(key, last, e.us)
-      last = e.us
-    }
-    st.update(last)
-    out.iterator
-  }
-}
-
 case class DrawEvent(user_id: Long, us: Long, event_id: Long, c: Long)
 case class DrawOut(user_id: Long, event_id: Long, c: Long, peak_c: Long)
-
-/** Live per-user running-peak tracker behind the streaming drawdown
-  * monitor — ONE Long of state per user: rows ride the staged replay's
-  * event-time order (sorted per batch on (us, event_id), state carries
-  * the peak across batches), each event emits its running peak, and the
-  * post-stream projection divides to currency — so the output is
-  * row-for-row the batch `ts_drawdown` window, which is why the twin
-  * shares that oracle VERBATIM. */
-class DrawdownProcessor
-    extends StatefulProcessor[Long, DrawEvent, DrawOut] {
-  @transient private var st:
-    org.apache.spark.sql.streaming.ValueState[Long] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("peak",
-      Encoders.scalaLong, TTLConfig.NONE)
-  override def handleInputRows(key: Long, rows: Iterator[DrawEvent],
-      tv: TimerValues): Iterator[DrawOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (e.us, e.event_id))
-    var peak = if (st.exists()) st.get() else Long.MinValue
-    val out = sorted.map { e =>
-      if (e.c > peak) peak = e.c
-      DrawOut(key, e.event_id, e.c, peak)
-    }
-    st.update(peak)
-    out.iterator
-  }
-}
 
 case class PsiEvent(event_type: String, us: Long, event_id: Long,
   band: Long, dayi: Long)
 case class PsiState(counts: Array[Long], curDay: Long)
 case class PsiSnap(event_type: String, dayi: Long, band: Long, cnt: Long)
 
-/** Live band-histogram tracker behind the streaming PSI drift monitor —
-  * ten Longs of state per event type: rows ride the staged replay's
-  * event-time order, a day boundary closes the previous day with a
-  * 10-band cumulative snapshot, and each batch also emits the current
-  * (possibly partial) day — the epilogue keeps the LAST emission per
-  * (type, day, band) (counts are monotone, max = final), so every
-  * observed day ends with its exact cumulative histogram and the PSI
-  * trajectory is exactly oracle-able. */
-class PsiBandTracker
-    extends StatefulProcessor[String, PsiEvent, PsiSnap] {
-  @transient private var st:
-    org.apache.spark.sql.streaming.ValueState[PsiState] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[PsiState]("bands",
-      Encoders.product[PsiState], TTLConfig.NONE)
-  override def handleInputRows(key: String, rows: Iterator[PsiEvent],
-      tv: TimerValues): Iterator[PsiSnap] = {
-    val sorted = rows.toIndexedSeq.sortBy(e => (e.us, e.event_id))
-    var cur = if (st.exists()) st.get()
-      else PsiState(Array.fill(10)(0L), Long.MinValue)
-    val out = scala.collection.mutable.ArrayBuffer[PsiSnap]()
-    def snap(day: Long): Unit =
-      (0 until 10).foreach(b =>
-        out += PsiSnap(key, day, b.toLong, cur.counts(b)))
-    sorted.foreach { e =>
-      if (cur.curDay != Long.MinValue && e.dayi > cur.curDay)
-        snap(cur.curDay)
-      cur = PsiState(cur.counts, e.dayi)
-      cur.counts(e.band.toInt) += 1L
-    }
-    if (cur.curDay != Long.MinValue) snap(cur.curDay)
-    st.update(cur)
-    out.iterator
-  }
-}
-
 case class QuotaEvent(doc_id: Long, source: String, n_tokens: Long)
 case class QuotaOut(doc_id: Long, source: String, n_tokens: Long,
   cum_tokens: Long, admitted: Boolean)
 
-/** Streaming per-source token-quota admission — the crawl-ingest budget
-  * enforcer: each source's ValueState carries its running arrived-token
-  * total, and a document is admitted while the running total (including
-  * itself) stays within the fixed budget — the prefix-quota rule, whose
-  * verdict depends only on arrival ORDER (the staged replay's doc_id
-  * contract), not on batch boundaries, which is what makes the stream
-  * exactly oracle-able as a per-source window cumsum. State is one Long
-  * per source regardless of corpus size. */
-object TokenQuotaProcessor { val BudgetTokens = 2000L }
-class TokenQuotaProcessor
-    extends StatefulProcessor[String, QuotaEvent, QuotaOut] {
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[Long] = _
+/** The one keyed-state processor of the streaming replays: each key's rows
+  * fold in a fixed order over one ValueState. Per batch it reads the key's
+  * `stateName` state, or a fresh `zero()` for a key not seen yet, sorts the
+  * batch's rows by `order`, runs `fold` and stores the state it returns;
+  * the rows it emits are the fold's. Batches replay in the staged order, so
+  * a fold over (stored state, sorted batch) is its batch twin's ordered
+  * scan. `zero` is a function so a mutable state (PsiState's counts) is
+  * never shared between keys. Spark serializes the processor to executors:
+  * a fold captures no SparkSession. */
+class OrderedFold[K, I, S, O](stateName: String, stateEncoder: Encoder[S],
+    zero: () => S, order: Ordering[I],
+    fold: (K, S, IndexedSeq[I]) => (S, Iterator[O]))
+    extends StatefulProcessor[K, I, O] {
+  @transient private var st: ValueState[S] = _
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("cumTokens",
-      Encoders.scalaLong, TTLConfig.NONE)
-  override def handleInputRows(key: String, rows: Iterator[QuotaEvent],
-      tv: TimerValues): Iterator[QuotaOut] = {
-    val sorted = rows.toIndexedSeq.sortBy(_.doc_id)
-    var cum = if (st.exists()) st.get() else 0L
-    val out = sorted.map { e =>
-      cum += e.n_tokens
-      QuotaOut(e.doc_id, e.source, e.n_tokens, cum,
-        cum <= TokenQuotaProcessor.BudgetTokens)
-    }
-    st.update(cum)
-    out.iterator
+    st = getHandle.getValueState[S](stateName, stateEncoder, TTLConfig.NONE)
+  /** One batch of `key`'s rows from its `prior` state (None: unseen key). */
+  def step(key: K, prior: Option[S], rows: Iterator[I]): (S, Iterator[O]) =
+    fold(key, prior.getOrElse(zero()), rows.toIndexedSeq.sorted(order))
+  override def handleInputRows(key: K, rows: Iterator[I],
+      tv: TimerValues): Iterator[O] = {
+    val (next, out) = step(key, Option.when(st.exists())(st.get()), rows)
+    st.update(next)
+    out
   }
 }
 
@@ -555,7 +200,6 @@ object StreamingQueries {
     (t.getTime / 1000) * 1000000L + t.getNanos / 1000
 
   private val nameCounter = new AtomicInteger(0)
-  private val prepared = scala.collection.mutable.Set[String]()
 
   /** Allocate a memory-sink table name AND evict stale sinks: a memory
     * sink pins its rows in the driver for the session's lifetime, so a
@@ -578,53 +222,42 @@ object StreamingQueries {
   }
 
   /** The one staging writer: split `frame` into 8 sequentially-written
-    * `rangeCol`-range files per pass into `dir` (once per JVM per dir, and
-    * across JVMs once `marker` exists), each file stamped with a strictly
+    * `rangeCol`-range files per pass into `dir` (write-once through
+    * [[U.stageOnce]] behind `marker`), each file stamped with a strictly
     * increasing mtime, so the file stream source replays the slices in
-    * range order. The marker is versioned: a dir written from a superseded
-    * fixture layout (nanos-era events, pre-explicit-mtime ordering) lacks
-    * the current marker and is rebuilt rather than replayed stale.
-    * `frame` is by name: an already-staged dir costs no table read. */
+    * range order. A dir written from a superseded fixture layout
+    * (nanos-era events, pre-explicit-mtime ordering) lacks the current
+    * marker and is rebuilt rather than replayed stale. `frame` is by name:
+    * an already-staged dir costs no table read. */
   private[graft] def stageRanges(s: SparkSession, frame: => DataFrame,
       rangeCol: Column, dir: String, passes: Int, marker: String)
-      : String = synchronized {
-    val markerPath = Paths.get(dir, marker)
-    if (!prepared.contains(dir) && Files.exists(markerPath)) prepared += dir
-    if (!prepared.contains(dir)) {
-      val src = frame
-      val bounds = src.agg(min(rangeCol).cast(LongType),
-        max(rangeCol).cast(LongType)).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
-      val step = math.max((hi - lo) / 8, 1L)
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      // Range-ordered replay requires strictly increasing mtimes, but fast
-      // sequential writes can land in the same filesystem-timestamp tick
-      // and FileStreamSource breaks ties by (random) part-file name — so
-      // stamp each slice's new files with an explicit increasing mtime.
-      var seq = 0
-      val stamped = scala.collection.mutable.Set[String]()
-      for (_ <- 0 until passes; i <- 0 until 8) {
-        val loB = lo + i * step
-        val hiB = if (i == 7) hi else lo + (i + 1) * step
-        src.filter(rangeCol >= loB && rangeCol < hiB)
-          .coalesce(1).write.mode("append").parquet(dir)
-        val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .filter(f => f.getPath.getName.startsWith("part-") &&
-            !stamped.contains(f.getPath.getName))
-          .sortBy(_.getPath.getName)
-        for (f <- fresh) {
-          fs.setTimes(f.getPath, 1600000000000L + seq * 1000L, -1L)
-          stamped += f.getPath.getName
-          seq += 1
-        }
+      : String = U.stageOnce(dir, marker) {
+    val src = frame
+    val bounds = src.agg(min(rangeCol).cast(LongType),
+      max(rangeCol).cast(LongType)).head()
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1) + 1)
+    val step = math.max((hi - lo) / 8, 1L)
+    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    // Range-ordered replay requires strictly increasing mtimes, but fast
+    // sequential writes can land in the same filesystem-timestamp tick
+    // and FileStreamSource breaks ties by (random) part-file name — so
+    // stamp each slice's new files with an explicit increasing mtime.
+    var stamped = Set.empty[String]
+    for (_ <- 0 until passes; i <- 0 until 8) {
+      val loB = lo + i * step
+      val hiB = if (i == 7) hi else lo + (i + 1) * step
+      src.filter(rangeCol >= loB && rangeCol < hiB)
+        .coalesce(1).write.mode("append").parquet(dir)
+      val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+        .map(_.getPath)
+        .filter(f => f.getName.startsWith("part-") && !stamped(f.getName))
+        .sortBy(_.getName)
+      for (f <- fresh) {
+        fs.setTimes(f, 1600000000000L + stamped.size * 1000L, -1L)
+        stamped += f.getName
       }
-      // marker makes the staging reusable across JVMs (Verify, Bench, tests
-      // all replay the same deterministic files with their original mtimes)
-      Files.createFile(markerPath)
-      prepared += dir
     }
-    dir
   }
 
   /** Events staged by event time; `doubled` writes every slice twice (16
@@ -724,8 +357,11 @@ object StreamingQueries {
           "true") ++ store: _*) {
       try body
       finally
+        // a failed unload must show (the r16 storm returns unseen), but
+        // must not replace the exception `body` may be throwing
         try org.apache.spark.sql.graftbridge.Bridge.unloadStateStores()
-        catch { case _: Throwable => }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[replay] state-store unload failed: $e") }
     }
 
   /** Cost-attribution note for the LAST replay (printed by
@@ -767,6 +403,32 @@ object StreamingQueries {
       store: Seq[(String, String)] = DefaultStore, doubled: Boolean = false)
       (build: DataFrame => DataFrame): DataFrame =
     runStream(s, mode, store)(build(stagedEvents(s, d, doubled)))
+
+  /** The one keyed-state tail: `rows` as `I`, grouped by `key`, each key's
+    * rows through `fold` (no timers, append output). */
+  private def foldByKey[K: Encoder, I: Encoder, S, O: Encoder](
+      fold: OrderedFold[K, I, S, O], rows: DataFrame)(key: I => K): DataFrame =
+    rows.as[I].groupByKey(key)
+      .transformWithState(fold, TimeMode.None(), OutputMode.Append()).toDF()
+
+  /** An [[OrderedFold]] body that emits one row per input row: `f` maps
+    * (key, state, row) to (next state, output row). */
+  private def perRow[K, I, S, O](f: (K, S, I) => (S, O))
+      : (K, S, IndexedSeq[I]) => (S, Iterator[O]) = { (key, s0, rows) =>
+    var cur = s0
+    val out = rows.map { e => val (next, o) = f(key, cur, e); cur = next; o }
+    (cur, out.iterator)
+  }
+
+  /** Event-time row order: (exact ts, event_id). */
+  private def byTs[I](ts: I => java.sql.Timestamp, id: I => Long): Ordering[I] =
+    Ordering.by((e: I) => (ts(e).getTime, ts(e).getNanos, id(e)))
+
+  /** The `(event_id, user_id, ts, cents)` rows of the two running-totals
+    * replays and the custom-state sessionizer. */
+  private def centsEvents(in: DataFrame): DataFrame =
+    in.select(col("event_id"), col("user_id"), col("ts"),
+      U.cents(col("value")).as("cents"))
 
   /** Append-mode tumbling window + 10-minute watermark: only finalized
     * windows are emitted; late-vs-watermark semantics asserted in tests. */
@@ -930,30 +592,36 @@ object StreamingQueries {
         .dropDuplicatesWithinWatermark("event_id")
     }.orderBy("event_id")
 
+  /** Per-user running count + cumulative spend, in event-time order. The
+    * flatMapGroupsWithState step and the `transformWithState` processor run
+    * this same fold; the two queries share one DuckDB oracle, which pins
+    * the semantics across both state APIs. Each `*Fold` here is a `def`:
+    * the driver binds a processor's handle while planning its query, so
+    * no two queries share an instance. */
+  private def runningTotals = new OrderedFold[Long, SEvent, SState, SOut](
+    "running", Encoders.product[SState], () => SState(0L, 0L),
+    byTs[SEvent](_.ts, _.event_id), perRow { (key, c, e) =>
+      val next = SState(c.n + 1, c.sum + e.cents)
+      (next, SOut(e.event_id, key, next.n, next.sum.toDouble / 100.0))
+    })
+
   /** Custom per-key streaming state: running count + cumulative spend per
     * user via flatMapGroupsWithState. Batches arrive in event-time order
-    * (staged files), each batch's group iterator is sorted in the function,
+    * (staged files), each batch's group iterator is sorted by the fold,
     * so the running totals hash-match a batch window-function oracle. */
   private def statefulRunning(s: SparkSession, d: String): DataFrame =
     // files are time-ranged, the step sorts within each group iterator,
     // state carries across batches => exact at any files/trigger
     replayEvents(s, d, "append") { in =>
       import in.sparkSession.implicits._
-      val ds: Dataset[SEvent] = in.select(col("event_id"), col("user_id"),
-        col("ts"), graft.U.cents(col("value")).as("cents")).as[SEvent]
-      def step(key: Long, it: Iterator[SEvent], st: GroupState[SState]): Iterator[SOut] = {
-        val sorted = it.toIndexedSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-        var cur = st.getOption.getOrElse(SState(0L, 0L))
-        val out = sorted.map { e =>
-          cur = SState(cur.n + 1, cur.sum + e.cents)
-          SOut(e.event_id, key, cur.n, cur.sum.toDouble / 100.0)
-        }
-        st.update(cur)
-        out.iterator
-      }
-      ds.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
-        .toDF()
+      val fold = runningTotals
+      centsEvents(in).as[SEvent].groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (key: Long, it: Iterator[SEvent], st: GroupState[SState]) =>
+            val (next, out) = fold.step(key, st.getOption, it)
+            st.update(next)
+            out
+        }.toDF()
     }.orderBy("event_id")
 
   /** Same running totals through the Spark 4.x `transformWithState` API
@@ -962,15 +630,22 @@ object StreamingQueries {
   private def statefulRunningTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("event_id"), col("user_id"), col("ts"),
-          graft.U.cents(col("value")).as("cents")).as[SEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new RunningTotalsProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(runningTotals, centsEvents(in))(_.user_id)
     }.orderBy("event_id")
 
-  /** [[HysteresisProcessor]] end-to-end: the SCADA alarm as a LIVE
+  /** Streaming twin of the batch `ts_hysteresis` SCADA alarm: the latched
+    * state is one Long per (user, type). Batches arrive in event-time order
+    * (staged replay) and rows sort within a batch, so the latch replays the
+    * batch last-IGNORE-NULLS scan exactly — both queries share ONE oracle
+    * ([[graft.operators.TimeSeries.hysteresisSql]]). */
+  private def hysteresisFold = new OrderedFold[(Long, String), HEvent, Long, HOut](
+    "alarm", Encoders.scalaLong, () => 0L, byTs[HEvent](_.ts, _.event_id),
+    perRow { (_, prev, e) =>
+      val cur = if (e.v4 > e.hi_qc) 1L else if (e.v4 < e.lo_qc) 0L else prev
+      (cur, HOut(e.event_id, e.user_id, e.event_type, cur, cur == 1L && prev == 0L))
+    })
+
+  /** [[hysteresisFold]] end-to-end: the SCADA alarm as a LIVE
     * monitor — per-type thresholds computed batch-side (the static
     * profile a deployment refreshes offline), broadcast into the stream,
     * the latch advanced per (user, type) in custom state. Emits every
@@ -983,29 +658,41 @@ object StreamingQueries {
       floor(percentile(vc, lit(0.5)) * 4).cast(LongType).as("lo_qc"))
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.join(broadcast(th), col("event_type") === col("et"))
+      foldByKey(hysteresisFold, in.join(broadcast(th), col("event_type") === col("et"))
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
-          (U.cents(col("value")) * 4).as("v4"), col("hi_qc"), col("lo_qc"))
-        .as[HEvent]
-        .groupByKey(e => (e.user_id, e.event_type))
-        .transformWithState(new HysteresisProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+          (U.cents(col("value")) * 4).as("v4"), col("hi_qc"), col("lo_qc")))(
+        e => (e.user_id, e.event_type))
     }.orderBy("event_id")
   }
 
-  /** [[PageHinkleyProcessor]] end-to-end: the drift monitor as a live
+  /** Page–Hinkley drift detection as a LIVE monitor — the streaming twin
+    * of the batch ts_page_hinkley windows (SAME oracle): per event type
+    * the state is (n, Σx, m, min m) and the fold replays the identical
+    * running-mean recursion, each mean term computed through BigInt so
+    * the ×1e6 product can never wrap where the batch twin's
+    * DECIMAL(38,0) doesn't (BigInt and Spark's DIV both truncate toward
+    * zero). Batches arrive in event-time order (staged replay) and rows
+    * sort within a batch — the [[cusumFold]] assumptions, so the
+    * stream equals the batch ordered scan exactly. */
+  private def pageHinkleyFold =
+    new OrderedFold[String, PHEvent, (Long, Long, Long, Long), PHOut]("ph",
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+        Encoders.scalaLong, Encoders.scalaLong), () => (0L, 0L, 0L, Long.MaxValue),
+      byTs[PHEvent](_.ts, _.event_id), perRow { case (key, (i0, sx0, m0, mn0), e) =>
+        val (i, sx) = (i0 + 1, sx0 + e.vc)
+        val m = m0 + (BigInt(1000000) * e.vc - (BigInt(1000000) * sx) / i).toLong
+        val mn = math.min(mn0, m)
+        ((i, sx, m, mn), PHOut(key, micros(e.ts), m - mn))
+      })
+
+  /** [[pageHinkleyFold]] end-to-end: the drift monitor as a live
     * stream, then the SAME per-type rollup as the batch twin — one
     * shared oracle (the stream_cusum discipline). */
   private def pageHinkleyTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("event_id"), col("event_type"), col("ts"),
-          U.cents(col("value")).as("vc")).as[PHEvent]
-        .groupByKey(_.event_type)
-        .transformWithState(new PageHinkleyProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(pageHinkleyFold, in.select(col("event_id"), col("event_type"),
+        col("ts"), U.cents(col("value")).as("vc")))(_.event_type)
     }.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("exc") > 300000000000L, 1L).otherwise(0L))
@@ -1015,7 +702,27 @@ object StreamingQueries {
         max(col("exc")).as("max_excursion_micro"))
       .orderBy("event_type")
 
-  /** [[NearDupProcessor]] end-to-end — near-dup dedup ON THE STREAM, the
+  /** Streaming MinHash near-dup detector — the crawl-ingest shape: band
+    * signatures flow through `transformWithState` keyed by (band, bkey);
+    * each bucket's state holds the MINIMUM doc_id seen, and every
+    * arrival emits the bucket occupant it collided with (−1 if it opened
+    * the bucket). Batches arrive in doc_id order (the staged replay's
+    * mtime contract, same assumption as [[sessionizeFold]]) and rows
+    * sort within a batch, so "occupant" = min smaller-id doc in the bucket
+    * — exactly the batch banding's candidate predicate, which is what
+    * makes the replay exactly oracle-able. State is one Long per occupied
+    * bucket; a production deployment bounds the dedup horizon with a
+    * TTLConfig on this state (drop-vs-keep then depends only on docs
+    * inside the horizon), which changes retention, not the per-arrival
+    * logic. */
+  private def nearDupFold = new OrderedFold[(Long, String), NDEvent, Long, NDOut](
+    "minDoc", Encoders.scalaLong, () => -1L, Ordering.by((e: NDEvent) => e.doc_id),
+    perRow { (_, cur, e) =>
+      (if (cur < 0L) e.doc_id else math.min(cur, e.doc_id),
+        NDOut(e.doc_id, e.band, if (cur >= 0L && cur < e.doc_id) cur else -1L))
+    })
+
+  /** [[nearDupFold]] end-to-end — near-dup dedup ON THE STREAM, the
     * shape a crawl-ingest pipeline needs: each arriving doc shingles,
     * MinHash-signs and explodes into its 4 LSH band keys per row (all
     * codegen'd expressions, zero pre-shuffle), the stateful operator
@@ -1049,11 +756,7 @@ object StreamingQueries {
           .as("bb"))
         .select(col("doc_id"), col("bb.band").as("band"),
           col("bb.bkey").as("bkey"))
-      bands.as[NDEvent]
-        .groupByKey(e => (e.band, e.bkey))
-        .transformWithState(new NearDupProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(nearDupFold, bands)(e => (e.band, e.bkey))
     }.groupBy(col("doc_id"))
       .agg(sum(when(col("prior") >= 0, 1L).otherwise(0L)).as("n_bands_hit"),
         min(when(col("prior") >= 0, col("prior"))).as("dup_of"))
@@ -1061,20 +764,32 @@ object StreamingQueries {
         (col("n_bands_hit") > 0).as("is_dup"), col("dup_of"))
       .orderBy("doc_id")
 
-  /** [[SprtProcessor]] end-to-end: the sequential test as a live stream,
+  /** Wald's SPRT live on the stream — the always-valid sequential monitor
+    * enforced where it belongs, on arrival: per type the running
+    * (trials, successes) pair is the state, each event emits the
+    * post-update cumulants tagged with its day, and the post-replay
+    * rollup takes each day's LAST cumulants (max — the running counts
+    * are monotone) before computing the LLR verdicts. Rows sort by event
+    * time within a batch and the staged replay is event-time-ordered
+    * across batches, so the per-day finals are batch-boundary-invariant
+    * — which is why the stream shares the batch agg_sprt oracle
+    * VERBATIM (the stream_page_hinkley discipline). */
+  private def sprtFold = new OrderedFold[String, SprtEvent, (Long, Long), SprtOut](
+    "cums", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), () => (0L, 0L),
+    Ordering.by((e: SprtEvent) => (e.us, e.dayi)), perRow { case (_, (n, k), e) =>
+      ((n + 1L, k + e.succ), SprtOut(e.event_type, e.dayi, n + 1L, k + e.succ))
+    })
+
+  /** [[sprtFold]] end-to-end: the sequential test as a live stream,
     * then the SAME daily rollup as the batch twin — one shared oracle. */
   private def sprtTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("event_type"), expr("unix_micros(ts)").as("us"),
-          expr("unix_micros(ts) DIV 86400000000").as("dayi"),
-          when(graft.U.cents(col("value")) >= 5000L, 1L).otherwise(0L)
-            .as("succ"))
-        .as[SprtEvent]
-        .groupByKey(_.event_type)
-        .transformWithState(new SprtProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(sprtFold, in.select(col("event_type"),
+        expr("unix_micros(ts)").as("us"),
+        expr("unix_micros(ts) DIV 86400000000").as("dayi"),
+        when(U.cents(col("value")) >= 5000L, 1L).otherwise(0L).as("succ")))(
+        _.event_type)
     }.groupBy(col("event_type"), col("dayi"))
       .agg(max(col("cum_n")).as("cum_n"), max(col("cum_k")).as("cum_k"))
       .withColumn("llr", col("cum_k").cast("double") * log(lit(0.5) / lit(0.4)) +
@@ -1086,25 +801,56 @@ object StreamingQueries {
           .otherwise("continue").as("decision"))
       .orderBy("event_type", "dayi")
 
-  /** [[TokenQuotaProcessor]] end-to-end: the per-source token budget
+  /** Streaming per-source token-quota admission — the crawl-ingest budget
+    * enforcer: each source's state is its running arrived-token total, and
+    * a document is admitted while the running total (including itself)
+    * stays within the fixed budget — the prefix-quota rule, whose verdict
+    * depends only on arrival ORDER (the staged replay's doc_id contract),
+    * not on batch boundaries, which is what makes the stream exactly
+    * oracle-able as a per-source window cumsum. State is one Long per
+    * source regardless of corpus size. */
+  private val BudgetTokens = 2000L
+  private def tokenQuotaFold = new OrderedFold[String, QuotaEvent, Long, QuotaOut](
+    "cumTokens", Encoders.scalaLong, () => 0L,
+    Ordering.by((e: QuotaEvent) => e.doc_id), perRow { (_, cum0, e) =>
+      val cum = cum0 + e.n_tokens
+      (cum, QuotaOut(e.doc_id, e.source, e.n_tokens, cum, cum <= BudgetTokens))
+    })
+
+  /** [[tokenQuotaFold]] end-to-end: the per-source token budget
     * enforced ON THE STREAM over the staged documents replay (the
     * stream_neardup staging), token counts from the shared whitespace
     * tokenizer, output one admission verdict per document. */
   private def tokenQuotaStream(s: SparkSession, d: String): DataFrame =
     runStream(s, "append", RocksDb) {
       import s.implicits._
-      replaySource(s, stageDocs(s, d))
+      foldByKey(tokenQuotaFold, replaySource(s, stageDocs(s, d))
         .select(col("doc_id"), col("source"),
           size(graft.llm.TextUtil.tokens(col("text"))).cast("long")
-            .as("n_tokens"))
-        .as[QuotaEvent]
-        .groupByKey(_.source)
-        .transformWithState(new TokenQuotaProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+            .as("n_tokens")))(_.source)
     }.orderBy("doc_id")
 
-  /** [[CusumProcessor]] end-to-end: the tabular CUSUM recursion as a
+  /** Streaming twin of the batch `ts_cusum_alarm` tabular CUSUM: the S⁺/S⁻
+    * recursion runs NATIVELY here (max(0, prev + d) per event — the state
+    * is exactly (cum, running-min) per side, 4 Longs per type), where the
+    * batch query needed the closed-form window identity. Batches arrive in
+    * event-time order (staged replay) and rows sort within a batch, so the
+    * replay equals the batch ordered scan and both queries share ONE oracle
+    * ([[graft.operators.TimeSeries.cusumAlarmSql]]). n-scaled Long domain:
+    * |cum| ≤ n·max|x|·rows — fine to ~1e6 rows/type; the batch twin's
+    * Decimal(38,0) is the 100 TB path. */
+  private def cusumFold = new OrderedFold[String, CEvent, CuState, COut]("cusum",
+    Encoders.product[CuState], () => CuState(0L, 0L, 0L, 0L),
+    byTs[CEvent](_.ts, _.event_id), perRow { (key, c, e) =>
+      val cp = c.cp + e.n * (e.vc - 500L) - e.sx
+      val cm = c.cm + e.sx - e.n * (e.vc + 500L)
+      val next = CuState(cp, math.min(c.minp, cp), cm, math.min(c.minm, cm))
+      val sp = cp - math.min(0L, next.minp)
+      val sm = cm - math.min(0L, next.minm)
+      (next, COut(key, micros(e.ts), e.n, sp > e.n * 5000L, sm > e.n * 5000L))
+    })
+
+  /** [[cusumFold]] end-to-end: the tabular CUSUM recursion as a
     * stateful stream, per-type stats from a batch-side broadcast (the
     * stream-static join every threshold alarm runs), then the SAME
     * per-type rollup as the batch twin — one shared oracle. */
@@ -1114,14 +860,9 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n"), sum(vc).as("sx"))
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.join(broadcast(stats), col("event_type") === col("et"))
+      foldByKey(cusumFold, in.join(broadcast(stats), col("event_type") === col("et"))
         .select(col("event_id"), col("event_type"), col("ts"),
-          U.cents(col("value")).as("vc"), col("n"), col("sx"))
-        .as[CEvent]
-        .groupByKey(_.event_type)
-        .transformWithState(new CusumProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+          U.cents(col("value")).as("vc"), col("n"), col("sx")))(_.event_type)
     }.groupBy(col("event_type"))
       .agg(max(col("n")).as("n"),
         sum(when(col("hi"), 1L).otherwise(0L)).as("n_alarms_high"),
@@ -1136,7 +877,7 @@ object StreamingQueries {
     * next arrival, trailing idles alert when the (ms-granular) watermark
     * passes last+30min, including Spark's extra pending-timer batch after
     * AvailableNow drains. Relies on the staged replay's event-time file
-    * order (the [[SessionizeProcessor]] assumption): a timer can never
+    * order (the [[sessionizeFold]] assumption): a timer can never
     * fire before the gap it guards is decidable, because every event in a
     * later file is later than every event before it. Exactly oracle-able:
     * gaps from lag(), trailing idles from the ms-floored watermark
@@ -1165,17 +906,39 @@ object StreamingQueries {
       .orderBy("user_id", "idle_since")
   }
 
-  /** [[SessionizeProcessor]] end-to-end: custom-state session windows whose
+  /** Streaming sessionization through `transformWithState` custom state
+    * (gap logic in the fold's state, not the built-in session_window):
+    * batches arrive in event-time order, so each key's open session either
+    * extends or closes on gap>30min exactly as the batch lag-gap pass
+    * would. Every touched session emits its CURRENT summary each batch;
+    * the consumer keeps each session's final (max-n) emission, which
+    * equals the batch answer => full oracle — unlike watermark-finalized
+    * session windows, no session is lost to end-of-stream. */
+  private def sessionizeFold = new OrderedFold[Long, SEvent, SessState, SessOut](
+    "sess", Encoders.product[SessState], () => SessState(0L, 0L, 0L, 0L, 0L),
+    Ordering.by((e: SEvent) => (micros(e.ts), e.event_id)), { (key, s0, rows) =>
+      def fin(c: SessState) = SessOut(key, c.sessionId, c.startUs, c.lastUs, c.n, c.cents)
+      val out = Vector.newBuilder[SessOut]
+      var cur = s0
+      for (e <- rows) {
+        val t = micros(e.ts)
+        if (cur.n > 0L && t - cur.lastUs <= 1800000000L)
+          cur = cur.copy(lastUs = t, n = cur.n + 1, cents = cur.cents + e.cents)
+        else {
+          if (cur.n > 0L) out += fin(cur) // closed by gap: final summary
+          cur = SessState(cur.sessionId + 1, t, t, 1L, e.cents)
+        }
+      }
+      if (cur.n > 0L) out += fin(cur)
+      (cur, out.result().iterator)
+    })
+
+  /** [[sessionizeFold]] end-to-end: custom-state session windows whose
     * kept emissions reproduce the batch lag-gap sessionization exactly. */
   private def sessionizeTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("event_id"), col("user_id"), col("ts"),
-          graft.U.cents(col("value")).as("cents")).as[SEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new SessionizeProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(sessionizeFold, centsEvents(in))(_.user_id)
     }.distinct() // a session closed with no growth re-emits its last summary
       .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"), col("session_id"))
@@ -1344,20 +1107,31 @@ object StreamingQueries {
         .limit(3)
     }.orderBy(col("spend_cents").desc, col("event_type"))
 
-  /** [[GapProcessor]] end-to-end: per-user sensor-dropout gaps LIVE —
+  /** Live sensor-dropout detector behind the streaming gap monitor — ONE
+    * Long of state per user (the last-seen event time): a gap over the
+    * 2-hour threshold emits the moment the closing event arrives, exactly
+    * the batch `ts_gap_detect` lag-window rows (which is why the twin
+    * shares that oracle VERBATIM). The alert a maintenance pipeline wants
+    * live, not at the nightly rollup. */
+  private def gapFold = new OrderedFold[Long, GapEvent, Long, GapOut]("last_us",
+    Encoders.scalaLong, () => Long.MinValue,
+    Ordering.by((e: GapEvent) => (e.us, e.event_id)), { (key, s0, rows) =>
+      val lasts = rows.scanLeft(s0)((_, e) => e.us) // lasts(i): before row i
+      (lasts.last, rows.iterator.zip(lasts.iterator).collect {
+        case (e, last) if last != Long.MinValue && e.us - last > 7200000000L =>
+          GapOut(key, last, e.us)
+      })
+    })
+
+  /** [[gapFold]] end-to-end: per-user sensor-dropout gaps LIVE —
     * exactly the batch `ts_gap_detect` rows, emitted the moment the
     * closing event arrives (one Long of state per user; verbatim-shared
     * oracle). */
   private def gapDetectTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("user_id"), expr("unix_micros(ts)").as("us"),
-          col("event_id"))
-        .as[GapEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new GapProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(gapFold, in.select(col("user_id"),
+        expr("unix_micros(ts)").as("us"), col("event_id")))(_.user_id)
     }.select(col("user_id"),
       timestamp_micros(col("prev_us")).as("gap_start"),
       timestamp_micros(col("us")).as("gap_end"),
@@ -1365,52 +1139,81 @@ object StreamingQueries {
         .as("gap_seconds"))
       .orderBy("user_id", "gap_start")
 
-  /** [[DrawdownProcessor]] end-to-end: the per-user running-peak
+  /** Live per-user running-peak tracker behind the streaming drawdown
+    * monitor — ONE Long of state per user: rows ride the staged replay's
+    * event-time order (sorted per batch on (us, event_id), state carries
+    * the peak across batches), each event emits its running peak, and the
+    * post-stream projection divides to currency — so the output is
+    * row-for-row the batch `ts_drawdown` window, which is why the twin
+    * shares that oracle VERBATIM. */
+  private def drawdownFold = new OrderedFold[Long, DrawEvent, Long, DrawOut]("peak",
+    Encoders.scalaLong, () => Long.MinValue,
+    Ordering.by((e: DrawEvent) => (e.us, e.event_id)), perRow { (key, peak, e) =>
+      val p = math.max(peak, e.c)
+      (p, DrawOut(key, e.event_id, e.c, p))
+    })
+
+  /** [[drawdownFold]] end-to-end: the per-user running-peak
     * drawdown LIVE — the risk/degradation trajectory `ts_drawdown`
-    * computes in batch, emitted per event as it arrives. Exactly the
-    * batch window row-for-row (one Long of state per user), so the twin
-    * shares the `ts_drawdown` oracle VERBATIM. */
+    * computes in batch, emitted per event as it arrives. */
   private def drawdownTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("user_id"), expr("unix_micros(ts)").as("us"),
-          col("event_id"), graft.U.cents(col("value")).as("c"))
-        .as[DrawEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new DrawdownProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(drawdownFold, in.select(col("user_id"),
+        expr("unix_micros(ts)").as("us"), col("event_id"),
+        U.cents(col("value")).as("c")))(_.user_id)
     }.select(col("user_id"), col("event_id"),
       (col("peak_c") / lit(100.0)).cast(DoubleType).as("running_peak"),
       ((col("peak_c") - col("c")) / lit(100.0)).cast(DoubleType)
         .as("drawdown"))
       .orderBy("event_id")
 
-  /** [[EwmaProcessor]] end-to-end: the per-user EWMA maintained LIVE on
-    * the stream, finals matching the batch ts_ewma fold bit-for-bit.
-    * Each trigger's rows sort by (event time, event_id) and the staged
-    * replay is event-time-ordered across batches, so the stream applies
-    * the IDENTICAL double-op chain in the identical order as the batch
-    * list fold — which is why it shares the ts_ewma oracle VERBATIM
-    * (the stream_sprt discipline). State is one (count, Double) per
-    * user; the running emission per batch rolls up by the monotone
-    * count. */
+  /** Per-user EWMA (α=0.2) live on the stream — one (count, accumulator)
+    * state per user, seeded with the user's first value exactly like the
+    * batch fold, each batch emitting the running final so the rollup keeps
+    * the row with the highest monotone count. The double chain is
+    * order-sensitive, so rows sort by (event time, event_id) within the
+    * batch and ride the staged replay's event-time file order across
+    * batches — the stream applies the IDENTICAL double-op chain in the
+    * identical order as the batch list fold, which is why it shares the
+    * ts_ewma oracle VERBATIM (the stream_sprt discipline). */
+  private def ewmaFold = new OrderedFold[Long, EwmaEvent, (Long, Double), EwmaOut](
+    "acc", Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble), () => (0L, 0.0),
+    Ordering.by((e: EwmaEvent) => (e.us, e.event_id)), { (key, s0, rows) =>
+      val (n, acc) = rows.foldLeft(s0) { case ((n, acc), e) =>
+        (n + 1L, if (n == 0L) e.value else 0.2 * e.value + 0.8 * acc)
+      }
+      ((n, acc), Iterator.single(EwmaOut(key, n, acc)))
+    })
+
+  /** [[ewmaFold]] end-to-end: the per-user EWMA maintained LIVE on
+    * the stream, finals matching the batch ts_ewma fold bit-for-bit; the
+    * running emission per batch rolls up by the monotone count. */
   private def ewmaTws(s: SparkSession, d: String): DataFrame =
     replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("user_id"), expr("unix_micros(ts)").as("us"),
-          col("event_id"), col("value"))
-        .as[EwmaEvent]
-        .groupByKey(_.user_id)
-        .transformWithState(new EwmaProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(ewmaFold, in.select(col("user_id"),
+        expr("unix_micros(ts)").as("us"), col("event_id"), col("value")))(
+        _.user_id)
     }.groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("ewma"))).as("m"))
       .select(col("user_id"), col("m.n").as("n"), col("m.ewma").as("ewma"))
       .orderBy("user_id")
 
-  /** [[SrmFirstSeen]] end-to-end: the sample-ratio-mismatch guardrail
+  /** First-sight detector behind the streaming SRM guardrail — one Boolean
+    * of RocksDB state per (type, user) (the stream_dedup state
+    * discipline): a key emits exactly one row, tagged with the day of its
+    * first arrival. Batches ride the staged replay's event-time order and
+    * the batch's earliest row is taken, so first-sight day == the batch
+    * MIN(day) — what makes the running rollup exactly oracle-able. */
+  private def srmFirstSeenFold = new OrderedFold[(String, Long), SrmEvent, Boolean, SrmOut](
+    "seen", Encoders.scalaBoolean, () => false, Ordering.by((e: SrmEvent) => e.us),
+    { (key, seen, rows) =>
+      (true, if (seen) Iterator.empty
+        else Iterator.single(SrmOut(key._1, rows.head.dayi, key._2 % 2)))
+    })
+
+  /** [[srmFirstSeenFold]] end-to-end: the sample-ratio-mismatch guardrail
     * LIVE per day — each (type, user) admits once with its first-arrival
     * day, the post-replay rollup cumulates per-arm user counts over
     * days, and the running one-df chi-square (exact micro, the agg_srm
@@ -1419,14 +1222,10 @@ object StreamingQueries {
   private def srmTws(s: SparkSession, d: String): DataFrame = {
     val firsts = replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.select(col("event_type"), col("user_id"),
-          expr("unix_micros(ts)").as("us"),
-          expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-        .as[SrmEvent]
-        .groupByKey(e => (e.event_type, e.user_id))
-        .transformWithState(new SrmFirstSeen,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+      foldByKey(srmFirstSeenFold, in.select(col("event_type"), col("user_id"),
+        expr("unix_micros(ts)").as("us"),
+        expr("unix_micros(ts) DIV 86400000000").as("dayi")))(
+        e => (e.event_type, e.user_id))
     }
     val w = Window.partitionBy(col("event_type")).orderBy(col("dayi"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1443,8 +1242,33 @@ object StreamingQueries {
       .orderBy("event_type", "dayi")
   }
 
+  /** Live band-histogram tracker behind the streaming PSI drift monitor —
+    * ten Longs of state per event type: rows ride the staged replay's
+    * event-time order, a day boundary closes the previous day with a
+    * 10-band cumulative snapshot, and each batch also emits the current
+    * (possibly partial) day — the epilogue keeps the LAST emission per
+    * (type, day, band) (counts are monotone, max = final), so every
+    * observed day ends with its exact cumulative histogram and the PSI
+    * trajectory is exactly oracle-able. */
+  private def psiBandFold = new OrderedFold[String, PsiEvent, PsiState, PsiSnap](
+    "bands", Encoders.product[PsiState], () => PsiState(Array.fill(10)(0L), Long.MinValue),
+    Ordering.by((e: PsiEvent) => (e.us, e.event_id)), { (key, s0, rows) =>
+      val counts = s0.counts
+      var day = s0.curDay
+      val out = Vector.newBuilder[PsiSnap]
+      def snap(): Unit =
+        (0 until 10).foreach(b => out += PsiSnap(key, day, b.toLong, counts(b)))
+      for (e <- rows) {
+        if (day != Long.MinValue && e.dayi > day) snap()
+        day = e.dayi
+        counts(e.band.toInt) += 1L
+      }
+      if (day != Long.MinValue) snap()
+      (PsiState(counts, day), out.result().iterator)
+    })
+
   /** The PSI drift monitor LIVE — the third member of the streaming
-    * guardrail trio (stream_srm, stream_sprt): [[PsiBandTracker]] keeps
+    * guardrail trio (stream_srm, stream_sprt): [[psiBandFold]] keeps
     * one 10-band histogram per event type in RocksDB state; the epilogue
     * fixes the reference window at the batch split day (the agg_psi
     * design), differences each post day's cumulative snapshot against
@@ -1454,16 +1278,11 @@ object StreamingQueries {
   private def psiTws(s: SparkSession, d: String): DataFrame = {
     val snaps0 = replayEvents(s, d, "append", RocksDb) { in =>
       import in.sparkSession.implicits._
-      in.withColumn("vc", U.cents(col("value")))
+      foldByKey(psiBandFold, in.withColumn("vc", U.cents(col("value")))
         .select(col("event_type"), expr("unix_micros(ts)").as("us"),
           col("event_id"),
           expr("least(9, vc DIV 1000)").as("band"),
-          expr("unix_micros(ts) DIV 86400000000").as("dayi"))
-        .as[PsiEvent]
-        .groupByKey(_.event_type)
-        .transformWithState(new PsiBandTracker,
-          TimeMode.None(), OutputMode.Append())
-        .toDF()
+          expr("unix_micros(ts) DIV 86400000000").as("dayi")))(_.event_type)
     }
     val snaps = U.track(snaps0
       .groupBy(col("event_type"), col("dayi"), col("band"))
@@ -1544,7 +1363,7 @@ object StreamingQueries {
         "CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id " +
         "ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens FROM t) " +
         "SELECT doc_id, source, n_tokens, cum_tokens, " +
-        s"cum_tokens <= ${TokenQuotaProcessor.BudgetTokens} AS admitted " +
+        s"cum_tokens <= $BudgetTokens AS admitted " +
         "FROM c ORDER BY doc_id"),
     // the batch MinHash banding re-stated per doc: prior = min smaller-id
     // bucket-mate over the doc's 4 bands — the replay's final state is

@@ -422,6 +422,29 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("U.stageOnce writes a dir once, and not at all once its marker exists") {
+    val root = graft.U.scratch(sfDir, s"stage_once_${System.nanoTime}")
+    val marker = "_GRAFT_STAGED_v1"
+    var writes = 0
+    def stage(dir: String) = graft.U.stageOnce(dir, marker) {
+      writes += 1
+      Seq(1L, 2L).toDF("v").write.mode("overwrite").parquet(dir)
+    }
+    stage(s"$root/a")
+    stage(s"$root/a")
+    assert(writes == 1, "a staged dir is written once per JVM")
+    // a dir an earlier JVM finished: its marker exists, so no write
+    val done = java.nio.file.Paths.get(root, "b")
+    java.nio.file.Files.createDirectories(done)
+    java.nio.file.Files.write(done.resolve(marker), Array.emptyByteArray)
+    stage(done.toString)
+    assert(writes == 1, "a marked dir is not rewritten")
+    // the marker stays out of Spark's file listing
+    assert(spark.read.parquet(s"$root/a").count() == 2L)
+    assert(spark.read.option("recursiveFileLookup", "true").parquet(root)
+      .count() == 2L)
+  }
+
   test("one conf scope and one memory-sink runner: no copies in src/main") {
     // (start, end) of `def name` up to its balanced closing brace
     def defSpan(code: String, name: String): (Int, Int) = {
@@ -461,5 +484,19 @@ class StreamingSpec extends SparkTestBase {
       }.map(rel)
     assert(sinkHits.isEmpty, s"memory sink started outside " +
       s"StreamingQueries.runStream in $sinkHits — route the replay through it")
+    // a class header: no brace and no other `class` before its `extends`
+    val processor =
+      """class\s+(\w+)(?:(?!\bclass\b)[^{}])*?extends\s+StatefulProcessor\b""".r
+    val processors = files.flatMap(p =>
+      processor.findAllMatchIn(java.nio.file.Files.readString(p)).map(_.group(1)))
+    assert(processors.sorted == Seq("IdleTimeoutProcessor", "OrderedFold"),
+      s"StatefulProcessor subclasses $processors — a keyed replay state is " +
+        "an OrderedFold value, not a new processor")
+    val memo = """mutable\.Set\[String\]\(\)""".r
+    val memoHits = files.map(p => rel(p) ->
+      memo.findAllMatchIn(java.nio.file.Files.readString(p)).size)
+      .filter(_._2 > 0)
+    assert(memoHits == Seq("graft/U.scala" -> 1), s"staging memos $memoHits " +
+      "— stage a scratch dir through U.stageOnce")
   }
 }

@@ -409,8 +409,9 @@ class StressSpec extends SparkTestBase {
   test("stream_neardup state path at 100k docs: batch parity + bounded state") {
     // the 220k-edge StressSpec recipe applied to streaming (r10 verdict
     // #2): a synthetic 100k-doc corpus with planted dups replays through
-    // NearDupProcessor on RocksDB, and the stream's rollup must equal the
-    // batch banding verdict ROW FOR ROW at that size. Planted structure:
+    // the near-dup OrderedFold on RocksDB, and the stream's rollup must
+    // equal the batch banding verdict ROW FOR ROW at that size. Planted
+    // structure:
     //   - every i % 20 == 19 is an EXACT copy of doc i-1 (all 4 bands
     //     collide — guaranteed detections),
     //   - every i % 20 == 9 is a NEAR copy of doc i-1 (last token swapped
